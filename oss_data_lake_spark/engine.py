@@ -3148,30 +3148,24 @@ class Engine:
         names = vc.names()
         if not names:
             return []
-        from oss_data_lake_spark.sources.snapshots import _literal_spans
+        from oss_data_lake_spark.sources.snapshots import (
+            _literal_spans,
+            temp_view_exists,
+        )
         from oss_data_lake_spark.sources.views import referenced_views
 
         created: list[str] = []
-        try:
-            existing = {
-                v.name
-                for v in self.spark.catalog.listTables()
-                if v.isTemporary
-            }
-        except Exception:
-            existing = set()
         for name in referenced_views(text, names, _literal_spans):
             if name in _stack:
                 raise ValueError(
                     f"view cycle detected: {' -> '.join(_stack + (name,))}"
                 )
-            if name in existing:
+            if temp_view_exists(self.spark, name):
                 continue
             body = vc.get(name)
             created.extend(self._expand_views(body, _stack + (name,)))
             self._plan_view_body(name, body).createOrReplaceTempView(name)
             created.append(name)
-            existing.add(name)
         return created
 
     def sql_script(self, script: str) -> DataFrame | None:

@@ -8,6 +8,11 @@ Deliberate configs (SURVEY.md §4 "Engine configs to set deliberately"):
 - ``spark.sql.ansi.enabled=false`` — the notebook uses
   ``pd.to_numeric(errors="coerce")`` (null-on-error) semantics
   (reference notebooks/test_airflow_yfinance.ipynb:160); non-ANSI casts match.
+- ``spark.sql.parser.escapedStringLiterals=false`` (the default, pinned
+  even against ``extra_conf``) —
+  backslash escapes in SQL string literals are processed; the engine's
+  SQL-text regexes (``Engine._TRY_INT_PAT``) double their backslashes for
+  that mode and would change meaning under the legacy escape mode.
 - AQE on (+ skew join) — runtime re-planning replaces Trino's CBO role.
 - ``spark.sql.shuffle.partitions`` sized to local cores, not the 200 default:
   at 100 TB on a real cluster this is instead sized so that a shuffle
@@ -60,6 +65,9 @@ def get_spark(
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # pinned after extra_conf: the escape mode is part of the engine's
+    # SQL-text contract, not a tuning knob
+    builder = builder.config("spark.sql.parser.escapedStringLiterals", "false")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -94,6 +94,27 @@ def _parse_type(ddl: str) -> T.DataType:
     return T._parse_datatype_string(ddl)
 
 
+def _quote_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` as CAST target text. ``simpleString`` leaves struct field
+    names bare (a name with a space or colon would not parse) and drops
+    their NOT NULL; array/map element nullability has no SQL spelling."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{_quote_ident(f.name)}:{_sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
 # ------------------------------------------------ hidden partitioning
 #
 # Iceberg's partition TRANSFORMS (spec §Partition Transforms): a table
@@ -339,7 +360,7 @@ class SnapshotTable:
         protocol: CommitProtocol | None = None,
     ):
         self.spark = spark
-        # canonicalize: `_rel_file_col` derives tombstone coordinates from
+        # canonicalize: `_rel_file_sql` derives tombstone coordinates from
         # a string-length offset over `_metadata.file_path`, so a
         # non-canonical path (trailing slash, `..`, `//`) would silently
         # mismatch file coordinates at scan time
@@ -3050,6 +3071,8 @@ class SnapshotTable:
                 )
         parts: list[DataFrame] = []
         for kind, a, b in entries:
+            # the part's schema when known without asking the JVM
+            have = None
             if kind == "pgroup":
                 schema_json, spec, (dead, renames) = a
                 part = self._read_partitioned_group(schema_json, spec, b)
@@ -3060,20 +3083,21 @@ class SnapshotTable:
                 schema_or_dir, (dead, renames) = a
                 # unpartitioned same-schema dirs/files: one reader call,
                 # explicit schema, no partition discovery needed
-                part = self.spark.read.schema(
-                    T.StructType.fromJson(schema_or_dir)
-                ).parquet(*b)
+                have = T.StructType.fromJson(schema_or_dir)
+                part = self.spark.read.schema(have).parquet(*b)
             if dead:
                 # field-id projection: columns whose id left the schema
                 # are invisible even to a re-added same-name column
                 part = part.drop(*dead)
+                have = None
             if renames:
                 # field-id projection: write-time names → current names
                 part = part.withColumnsRenamed(renames)
+                have = None
             parts.append(
-                self._align_with_meta(part, target, fill=init_fill)
-                if with_meta
-                else self._align(part, target, fill=init_fill)
+                self._align(
+                    part, target, fill=init_fill, have=have, meta=with_meta
+                )
             )
         return parts
 
@@ -3147,7 +3171,7 @@ class SnapshotTable:
                     if v != r:
                         val = F.when(raw == F.lit(r), F.lit(v)).otherwise(val)
             part = part.withColumn(c, val.cast(field.dataType))
-        # no projection here: downstream _align(_with_meta) selects the
+        # no projection here: downstream _align selects the
         # target order, and a select would drop `_metadata` access
         return part
 
@@ -4242,27 +4266,50 @@ class SnapshotTable:
         s = self._manifest(v).get("schema")
         return T.StructType.fromJson(s) if s else None
 
-    @staticmethod
-    def _fill_expr(f: T.StructField, fill: dict | None) -> F.Column:
-        """What an ABSENT column reads as: its INITIAL DEFAULT when one
-        is declared (Iceberg v3 — the file predates the column), NULL
-        otherwise."""
-        lit = (fill or {}).get(f.name)
-        base = F.expr(lit) if lit is not None else F.lit(None)
-        return base.cast(f.dataType).alias(f.name)
-
-    @staticmethod
     def _align(
-        df: DataFrame, target: T.StructType, fill: dict | None = None
+        self,
+        df: DataFrame,
+        target: T.StructType,
+        fill: dict | None = None,
+        *,
+        have: T.StructType | None = None,
+        meta: bool = False,
     ) -> DataFrame:
-        cols = []
-        present = set(df.columns)
+        """``df`` projected onto ``target`` in target order, each column
+        cast to its target type. A column ``df`` lacks reads its
+        ``fill`` expression (the INITIAL DEFAULT: the file predates the
+        column), NULL otherwise. ``meta`` appends the delete-vector
+        coordinates ``__dv_file`` / ``__dv_pos``.
+
+        ``have`` is ``df``'s schema when the caller knows it without a
+        JVM analysis call. A df matching ``target`` name for name and
+        type for type, in order, comes back unchanged; otherwise the
+        projection is one ``selectExpr`` (a Column chain costs several
+        py4j round trips per column)."""
+        have = df.schema if have is None else have
+        if not meta and [(f.name, f.dataType) for f in have.fields] == [
+            (f.name, f.dataType) for f in target.fields
+        ]:
+            return df
+        types = {f.name: f.dataType for f in have.fields}
+        exprs = []
         for f in target.fields:
-            if f.name in present:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+            q = _quote_ident(f.name)
+            if f.name not in types:
+                lit = (fill or {}).get(f.name)
+                value = "NULL" if lit is None else f"({lit})"
+            elif types[f.name] == f.dataType:
+                exprs.append(q)
+                continue
             else:
-                cols.append(SnapshotTable._fill_expr(f, fill))
-        return df.select(*cols)
+                value = q
+            exprs.append(f"CAST({value} AS {_sql_type(f.dataType)}) AS {q}")
+        if meta:
+            exprs += [
+                f"{self._rel_file_sql()} AS __dv_file",
+                "_metadata.row_index AS __dv_pos",
+            ]
+        return df.selectExpr(*exprs)
 
     # ---------------------------------- merge-on-read delete vectors
     #
@@ -4275,32 +4322,13 @@ class SnapshotTable:
     # deletes and clears the vectors. Positions never touch the driver —
     # the tombstone write is a distributed filter+projection.
 
-    def _file_uri_prefix(self) -> str:
-        """What ``_metadata.file_path`` prefixes this table's files with
-        (local paths canonicalize to ``file:`` URIs)."""
-        return self.path if "://" in self.path else f"file:{self.path}"
-
-    def _rel_file_col(self) -> F.Column:
+    def _rel_file_sql(self) -> str:
         """``_metadata.file_path`` → table-relative file path (the same
         coordinates manifests use), computed identically at tombstone
-        write and scan time so the anti-join compares like with like."""
-        return F.expr(
-            f"substring(_metadata.file_path, {len(self._file_uri_prefix()) + 2})"
-        )
-
-    def _align_with_meta(
-        self, df: DataFrame, target: T.StructType, fill: dict | None = None
-    ) -> DataFrame:
-        cols = []
-        present = set(df.columns)
-        for f in target.fields:
-            if f.name in present:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(self._fill_expr(f, fill))
-        cols.append(self._rel_file_col().alias("__dv_file"))
-        cols.append(F.col("_metadata.row_index").alias("__dv_pos"))
-        return df.select(*cols)
+        write and scan time so the anti-join compares like with like.
+        Local paths canonicalize to ``file:`` URIs."""
+        prefix = self.path if "://" in self.path else f"file:{self.path}"
+        return f"substring(_metadata.file_path, {len(prefix) + 2})"
 
     def _read_delete_vectors(self, dv_dirs: list[str]) -> DataFrame:
         return self.spark.read.schema("file string, pos long").parquet(
@@ -7128,6 +7156,16 @@ def extract_prunable_predicates(
     return out
 
 
+def temp_view_exists(spark: SparkSession, name: str) -> bool:
+    """Whether ``name`` is bound to a session temp view, resolved the way
+    the analyzer resolves it (case-insensitive unless
+    ``spark.sql.caseSensitive``). One question to the session catalog,
+    where ``spark.catalog.listTables()`` would list every table and view
+    in the session."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    return catalog.getTempView(name).isDefined()
+
+
 def sql_with_time_travel(
     spark: SparkSession, text: str, tables: dict[str, "SnapshotTable"]
 ) -> DataFrame:
@@ -7314,10 +7352,7 @@ def sql_with_time_travel(
                     lambda _m, _v=view: _v,
                     rewritten,
                 )
-            if any(
-                v.name == view and v.isTemporary
-                for v in spark.catalog.listTables()
-            ):
+            if temp_view_exists(spark, view):
                 raise ValueError(
                     f"a temp view named '{view}' already exists in "
                     f"this session; it would shadow (and be destroyed "

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pathlib
+import warnings
 
 import pytest
 
@@ -25,10 +26,46 @@ _SLOW_TIER = frozenset(
 )
 
 
+def stale_slow_entries(
+    tier: frozenset, collected: set, args: list, rootdir: pathlib.Path
+) -> list[str]:
+    """slow_tier.txt entries that name no collected test: the entry's
+    module was collected but the test was not (renamed or
+    re-parameterized), or the module file is gone. A run narrowed to
+    node ids (``file.py::test``) collects partial modules, so it checks
+    nothing."""
+    if any("::" in a for a in args):
+        return []
+    files = {nid.split("::", 1)[0] for nid in collected}
+    return sorted(
+        e
+        for e in tier - collected
+        if e.split("::", 1)[0] in files
+        or not (rootdir / e.split("::", 1)[0]).exists()
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in _SLOW_TIER:
             item.add_marker(pytest.mark.slow)
+    # a slow test renamed without its slow_tier.txt entry would silently
+    # rejoin the default tier
+    stale = stale_slow_entries(
+        _SLOW_TIER,
+        {item.nodeid for item in items},
+        config.args,
+        config.rootpath,
+    )
+    if stale:
+        warnings.warn(
+            pytest.PytestWarning(
+                f"{len(stale)} tests/slow_tier.txt entries match no "
+                f"collected test (renamed or removed?): "
+                + ", ".join(stale[:10])
+                + (" ..." if len(stale) > 10 else "")
+            )
+        )
 
 
 @pytest.fixture(scope="session")
