@@ -2021,6 +2021,17 @@ class Engine:
         "^[\\\\x00-\\\\x20\\\\x7f]*[+-]?[0-9]+[\\\\x00-\\\\x20\\\\x7f]*$"
     )
 
+    # Spark builtins that draw a new value on each evaluation. The guard
+    # spells <expr> three times, so each spelling would draw its own
+    # value (the regex would judge one row value and the cast another):
+    # an expr calling one keeps plain try_cast, which evaluates it once.
+    _NONDETERMINISTIC_CALL = re.compile(
+        r"\b(?:rand|randn|random|randstr|uniform|uuid|shuffle|"
+        r"monotonically_increasing_id|spark_partition_id|"
+        r"input_file_name|input_file_block_(?:start|length))\s*\(",
+        re.IGNORECASE,
+    )
+
     def _try_cast_int_guard(self, body: str) -> str | None:
         """For CAST-body text `<expr> AS <integral type>`, return the
         exception-free guarded rewrite; None to keep plain try_cast."""
@@ -2039,7 +2050,11 @@ class Engine:
             return None
         expr = body[:as_pos].strip()
         ty = body[as_pos + 2:].strip()
-        if not expr or ty.upper() not in self._TRY_INT_TARGETS:
+        if (
+            not expr
+            or ty.upper() not in self._TRY_INT_TARGETS
+            or self._NONDETERMINISTIC_CALL.search(masked[:as_pos])
+        ):
             return None
         return (
             f"CASE WHEN typeof({expr}) = 'string' AND NOT "

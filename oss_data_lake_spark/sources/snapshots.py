@@ -3718,18 +3718,14 @@ class SnapshotTable:
             return None  # uncastable literal: no pruning
         return row["b"]
 
-    def _plan_partition_dir(
-        self, manifest: dict, d: str, admit
-    ) -> tuple[list[str], int]:
-        """Per-dir partition-column plan: every (visible) file judged by
-        its path-derived synthetic entry through ``admit``; returns
-        ``(kept_files, universe_size)``."""
-        stats = self.dir_stats(manifest, d) or {}
-        vis = self._visible_files(manifest, d)
-        universe = (
-            self._stats_universe(d, stats) if vis is None else sorted(vis)
-        )
-        return [f for f in universe if admit(f)], len(universe)
+    # Predicate forms plan_pruned accepts:
+    #   (col, lo, hi)                       range (lo == hi → eq + bloom)
+    #   {"col": c, "in": [v1, v2, ...]}     IN list: a file survives if
+    #                                       ANY value's eq test admits it
+    #   {"col": c, "null": True|False}      IS NULL / IS NOT NULL
+    # ``_as_test`` normalizes them into the planner's tests:
+    # ("range", c, lo, hi), ("eq", c, v), ("in", c, values) and
+    # ("null", c, want_null).
 
     def plan_range_scan(
         self,
@@ -3743,97 +3739,194 @@ class SnapshotTable:
         ``selection[rel_dir]`` is the rel-file list to read, or ``None``
         meaning "whole directory" (no stats recorded — never skipped).
         Skips only files whose manifest bounds PROVE no row can match;
-        soundness lives in ``skipping.file_may_match``."""
-        from oss_data_lake_spark.sources import skipping
+        soundness lives in ``skipping.file_may_match``. Range-only: a
+        point range gets no bloom check (``plan_pruned`` adds it)."""
+        return self._plan([("range", column, lower, upper)], version)
 
+    def plan_eq_scan(
+        self, column: str, value, version: int | None = None
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """File-skipping plan for ``column = value``: min/max bounds AND
+        the per-file bloom (when recorded) must both admit the probe.
+        Same return shape as ``plan_range_scan``."""
+        return self._plan([("eq", column, value)], version)
+
+    def plan_null_scan(
+        self, column: str, want_null: bool, version: int | None = None
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """File-skipping plan for ``column IS [NOT] NULL`` from the
+        recorded per-file null counts: a zero-null file cannot match
+        ``IS NULL``; an all-null (or empty) file cannot match
+        ``IS NOT NULL``. Missing stats → must read."""
+        return self._plan([("null", column, want_null)], version)
+
+    def plan_pruned(
+        self,
+        preds: list,
+        version: int | None = None,
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """Multi-predicate scan plan: a file survives only if EVERY
+        predicate admits it (conjunction semantics). Predicate forms
+        documented above ``plan_range_scan``. Same return shape."""
+        return self._plan([_as_test(p) for p in preds], version)
+
+    def _plan(
+        self, tests: list[tuple], version: int | None
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """The scan planner behind every ``plan_*`` entry point: one
+        manifest read, then per data dir one stats resolution and at
+        most one file universe. A file is kept only if every test
+        admits it; a dir no test can restrict stays ``None`` (whole)."""
         v = version if version is not None else self.current_version()
         if v is None:
             raise ValueError(f"no snapshots at {self.path}")
         manifest = self._manifest(v)
-        ctype = self._column_type(v, column)
-        lo = skipping.encode_bound(lower, ctype) if lower is not None else None
-        hi = skipping.encode_bound(upper, ctype) if upper is not None else None
+        # column → Spark simpleString type from the snapshot schema: a
+        # column without one encodes its bounds by the default heuristic
+        schema = manifest.get("schema")
+        ctypes = {
+            f.name: f.dataType.simpleString()
+            for f in (T.StructType.fromJson(schema).fields if schema else [])
+        }
         selection: dict[str, list[str] | None] = {}
         n_sel = n_skip = 0
         for d in manifest["data_dirs"]:
-            col_d = self._dir_stat_name(manifest, d, column)
-            if (lo is not None or hi is not None) and col_d in (
-                manifest.get("partition_specs", {}).get(d) or []
-            ):
-                # PARTITION column: per-file value derived from the path
-                # segment — prunes even without footer stats
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=col_d: skipping.file_may_match(
-                        self._partition_stats_entry(f, _c, ctype), lo, hi
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            pcol, tr = self._transform_for(manifest, d, col_d)
-            if (lo is not None or hi is not None) and tr is not None:
-                # HIDDEN partitioning: push the source bounds through a
-                # monotone transform onto the hidden column's segments
-                plo = (
-                    self._transform_bound(tr, lower)
-                    if lower is not None
-                    else None
-                )
-                phi = (
-                    self._transform_bound(tr, upper)
-                    if upper is not None
-                    else None
-                )
-                if (lower is None or plo is not None) and (
-                    upper is None or phi is not None
-                ):
-                    ptype = self._transform_ptype(tr)
-                    elo = (
-                        skipping.encode_bound(plo, ptype)
-                        if plo is not None
-                        else None
-                    )
-                    ehi = (
-                        skipping.encode_bound(phi, ptype)
-                        if phi is not None
-                        else None
-                    )
-                    if elo is not None or ehi is not None:
-                        keep, n_univ = self._plan_partition_dir(
-                            manifest, d,
-                            lambda f, _c=pcol, _t=ptype, _l=elo, _h=ehi:
-                            skipping.file_may_match(
-                                self._partition_stats_entry(f, _c, _t),
-                                _l, _h,
-                            ),
-                        )
-                        selection[d] = keep
-                        n_sel += len(keep)
-                        n_skip += n_univ - len(keep)
-                        continue
             stats = self.dir_stats(manifest, d)
-            if not stats or (lo is None and hi is None):
-                # no stats, or an unbounded scan (no predicate to prune
-                # with — the all-null skip rule must not fire): whole dir
+            admits = list(filter(None, (
+                self._file_test(manifest, d, stats, ctypes, t) for t in tests
+            )))
+            if not admits:
                 selection[d] = None
                 continue
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            keep = [
-                f
-                for f in universe
-                if skipping.file_may_match(
-                    stats.get(f, {}).get(col_d), lo, hi
-                )
-            ]
+            universe = self._dir_universe(manifest, d, stats)
+            keep = [f for f in universe if all(a(f) for a in admits)]
             selection[d] = keep
             n_sel += len(keep)
             n_skip += len(universe) - len(keep)
         return selection, n_sel, n_skip
+
+    def _file_test(
+        self, manifest: dict, d: str, stats: dict | None, ctypes: dict,
+        test: tuple,
+    ):
+        """One test over dir ``d``'s files: a function ``rel_file → may
+        match``, or None when the test cannot restrict the dir. First
+        applicable source wins: a Hive partition column's path segment,
+        a hidden transform's segment, else the footer stats (min/max,
+        plus the bloom for equality and the null counts for IS NULL)."""
+        from oss_data_lake_spark.sources import skipping
+
+        kind, column, *args = test
+        if kind == "in":
+            per_value = [
+                self._file_test(manifest, d, stats, ctypes, ("eq", column, x))
+                for x in args[0]
+            ]
+            if not per_value or any(t is None for t in per_value):
+                return None
+            return lambda f: any(t(f) for t in per_value)
+        ctype = ctypes.get(column)
+        col_d = self._dir_stat_name(manifest, d, column)
+        pcol, tr = self._transform_for(manifest, d, col_d)
+        hive = col_d in (manifest.get("partition_specs", {}).get(d) or [])
+
+        def segments(c, t, admit):
+            # partition column (Hive or hidden): each file's value comes
+            # from its path segment — prunes even without footer stats
+            return lambda f: admit(self._partition_stats_entry(f, c, t))
+
+        def footers(admit):
+            return (lambda f: admit(stats.get(f, {}))) if stats else None
+
+        if kind == "null":
+            admit = (
+                skipping.file_may_contain_null
+                if args[0]
+                else skipping.file_may_contain_nonnull
+            )
+            if hive:
+                return segments(col_d, ctype, admit)
+            if tr is not None:
+                # every transform is NULL-PRESERVING (NULL source →
+                # null partition segment), so the source's IS [NOT]
+                # NULL maps 1:1 onto the hidden column's segments
+                return segments(pcol, self._transform_ptype(tr), admit)
+            return footers(lambda cols: admit(cols.get(col_d)))
+        if kind == "eq":
+            value = args[0]
+            enc = skipping.encode_bound(value, ctype)
+            if enc is not None and hive:
+                return segments(
+                    col_d, ctype,
+                    lambda s: skipping.file_may_match(s, enc, enc),
+                )
+            if tr is not None and value is not None:
+                # HIDDEN partitioning: a point probe maps exactly —
+                # monotone transforms via the bound map, bucket via the
+                # writer's own hash expression
+                if tr["kind"] == "bucket":
+                    pval = self._bucket_value(tr, value)
+                else:
+                    pval = self._transform_bound(tr, value)
+                ptype = self._transform_ptype(tr)
+                penc = skipping.encode_bound(pval, ptype)
+                if penc is not None:
+                    return segments(
+                        pcol, ptype,
+                        lambda s: skipping.file_may_match(s, penc, penc),
+                    )
+            if enc is None:
+                return None
+            return footers(
+                lambda cols: skipping.file_may_match(
+                    cols.get(col_d), enc, enc
+                )
+                and skipping.bloom_may_contain(
+                    cols.get(f"bloom:{col_d}"), value, ctype
+                )
+            )
+        lower, upper = args
+        lo = skipping.encode_bound(lower, ctype)
+        hi = skipping.encode_bound(upper, ctype)
+        if lo is None and hi is None:
+            # unbounded: no predicate to prune with — the all-null skip
+            # rule must not fire
+            return None
+        if hive:
+            return segments(
+                col_d, ctype, lambda s: skipping.file_may_match(s, lo, hi)
+            )
+        if tr is not None:
+            # HIDDEN partitioning: push the source bounds through a
+            # monotone transform onto the hidden column's segments
+            plo, phi = (
+                None if b is None else self._transform_bound(tr, b)
+                for b in (lower, upper)
+            )
+            if (lower is None or plo is not None) and (
+                upper is None or phi is not None
+            ):
+                ptype = self._transform_ptype(tr)
+                elo = skipping.encode_bound(plo, ptype)
+                ehi = skipping.encode_bound(phi, ptype)
+                if elo is not None or ehi is not None:
+                    return segments(
+                        pcol, ptype,
+                        lambda s: skipping.file_may_match(s, elo, ehi),
+                    )
+        return footers(
+            lambda cols: skipping.file_may_match(cols.get(col_d), lo, hi)
+        )
+
+    def _dir_universe(
+        self, manifest: dict, d: str, stats: dict | None
+    ) -> list[str]:
+        """The files of dir ``d`` in this snapshot: its visible subset
+        when the manifest records one, else the stats universe."""
+        vis = self._visible_files(manifest, d)
+        if vis is not None:
+            return sorted(vis)
+        return self._stats_universe(d, stats or {})
 
     def _stats_universe(self, rel_dir: str, stats: dict) -> list[str]:
         """The FILE UNIVERSE a pruned scan of ``rel_dir`` plans against:
@@ -3886,87 +3979,6 @@ class SnapshotTable:
             pred = up if pred is None else (pred & up)
         return out.filter(pred) if pred is not None else out
 
-    def plan_eq_scan(
-        self, column: str, value, version: int | None = None
-    ) -> tuple[dict[str, list[str] | None], int, int]:
-        """File-skipping plan for ``column = value``: min/max bounds AND
-        the per-file bloom (when recorded) must both admit the probe.
-        Same return shape as ``plan_range_scan``."""
-        from oss_data_lake_spark.sources import skipping
-
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
-        ctype = self._column_type(v, column)
-        enc = skipping.encode_bound(value, ctype)
-        selection: dict[str, list[str] | None] = {}
-        n_sel = n_skip = 0
-        for d in manifest["data_dirs"]:
-            col_d = self._dir_stat_name(manifest, d, column)
-            if enc is not None and col_d in (
-                manifest.get("partition_specs", {}).get(d) or []
-            ):
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=col_d: skipping.file_may_match(
-                        self._partition_stats_entry(f, _c, ctype), enc, enc
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            pcol, tr = self._transform_for(manifest, d, col_d)
-            if tr is not None and value is not None:
-                # HIDDEN partitioning: a point probe maps exactly —
-                # monotone transforms via the bound map, bucket via the
-                # writer's own hash expression
-                if tr["kind"] == "bucket":
-                    pval = self._bucket_value(tr, value)
-                else:
-                    pval = self._transform_bound(tr, value)
-                ptype = self._transform_ptype(tr)
-                penc = (
-                    skipping.encode_bound(pval, ptype)
-                    if pval is not None
-                    else None
-                )
-                if penc is not None:
-                    keep, n_univ = self._plan_partition_dir(
-                        manifest, d,
-                        lambda f, _c=pcol, _t=ptype, _e=penc:
-                        skipping.file_may_match(
-                            self._partition_stats_entry(f, _c, _t), _e, _e
-                        ),
-                    )
-                    selection[d] = keep
-                    n_sel += len(keep)
-                    n_skip += n_univ - len(keep)
-                    continue
-            stats = self.dir_stats(manifest, d)
-            if not stats or enc is None:
-                selection[d] = None
-                continue
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            keep = [
-                f
-                for f in universe
-                if skipping.file_may_match(
-                    stats.get(f, {}).get(col_d), enc, enc
-                )
-                and skipping.bloom_may_contain(
-                    stats.get(f, {}).get(f"bloom:{col_d}"), value, ctype
-                )
-            ]
-            selection[d] = keep
-            n_sel += len(keep)
-            n_skip += len(universe) - len(keep)
-        return selection, n_sel, n_skip
-
     def read_eq(self, column: str, value, version: int | None = None) -> DataFrame:
         """Point lookup ``column = value`` opening only files whose bounds
         and bloom admit the probe; the exact equality filter still applies
@@ -4011,160 +4023,6 @@ class SnapshotTable:
                     out.add(ren.get(src, src))
         return out
 
-    def plan_null_scan(
-        self, column: str, want_null: bool, version: int | None = None
-    ) -> tuple[dict[str, list[str] | None], int, int]:
-        """File-skipping plan for ``column IS [NOT] NULL`` from the
-        recorded per-file null counts: a zero-null file cannot match
-        ``IS NULL``; an all-null (or empty) file cannot match
-        ``IS NOT NULL``. Missing stats → must read."""
-        from oss_data_lake_spark.sources import skipping
-
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
-        admit = (
-            skipping.file_may_contain_null
-            if want_null
-            else skipping.file_may_contain_nonnull
-        )
-        selection: dict[str, list[str] | None] = {}
-        n_sel = n_skip = 0
-        for d in manifest["data_dirs"]:
-            col_d = self._dir_stat_name(manifest, d, column)
-            pcol, tr = self._transform_for(manifest, d, col_d)
-            if col_d in (manifest.get("partition_specs", {}).get(d) or []):
-                ctype = self._column_type(v, column)
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=col_d: admit(
-                        self._partition_stats_entry(f, _c, ctype)
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            if tr is not None:
-                # every transform is NULL-PRESERVING (NULL source →
-                # null partition segment), so the source's IS [NOT]
-                # NULL maps 1:1 onto the hidden column's segments
-                ptype = self._transform_ptype(tr)
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=pcol, _t=ptype: admit(
-                        self._partition_stats_entry(f, _c, _t)
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            stats = self.dir_stats(manifest, d)
-            if not stats:
-                selection[d] = None
-                continue
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            keep = [
-                f for f in universe if admit(stats.get(f, {}).get(col_d))
-            ]
-            selection[d] = keep
-            n_sel += len(keep)
-            n_skip += len(universe) - len(keep)
-        return selection, n_sel, n_skip
-
-    # Predicate forms plan_pruned accepts:
-    #   (col, lo, hi)                       range (lo == hi → eq + bloom)
-    #   {"col": c, "in": [v1, v2, ...]}     IN list: the UNION of the
-    #                                       per-value eq plans (each
-    #                                       bloom-powered)
-    #   {"col": c, "null": True|False}      IS NULL / IS NOT NULL
-
-    def _plan_one(
-        self, pred, v: int
-    ) -> dict[str, list[str] | None]:
-        if isinstance(pred, dict):
-            if "in" in pred:
-                sels = [
-                    self.plan_eq_scan(pred["col"], val, version=v)[0]
-                    for val in pred["in"]
-                ]
-                return self._union_selections(sels, v)
-            return self.plan_null_scan(pred["col"], pred["null"], version=v)[0]
-        column, lo, hi = pred
-        if lo is not None and lo == hi:
-            # point predicate: the eq plan adds per-file BLOOM pruning on
-            # top of the min/max bounds — the lever for `WHERE id = x` on
-            # columns the layout doesn't cluster
-            return self.plan_eq_scan(column, lo, version=v)[0]
-        return self.plan_range_scan(column, lo, hi, version=v)[0]
-
-    def _union_selections(
-        self, sels: list[dict[str, list[str] | None]], v: int
-    ) -> dict[str, list[str] | None]:
-        """Disjunctive combine (IN lists): a file survives if ANY branch
-        admits it; a dir read whole by any branch stays whole."""
-        manifest = self._manifest(v)
-        out: dict[str, list[str] | None] = {}
-        for d in manifest["data_dirs"]:
-            per_dir = [s.get(d) for s in sels]
-            if not sels or any(p is None for p in per_dir):
-                out[d] = None
-                continue
-            seen: set[str] = set()
-            for p in per_dir:
-                seen.update(p)
-            out[d] = sorted(seen)
-        return out
-
-    def plan_pruned(
-        self,
-        preds: list,
-        version: int | None = None,
-    ) -> tuple[dict[str, list[str] | None], int, int]:
-        """Multi-predicate scan plan: the INTERSECTION of each
-        predicate's plan (conjunction semantics) — a file survives only
-        if every predicate admits it. Predicate forms documented at
-        ``_plan_one``. Same return shape as ``plan_range_scan``."""
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        merged: dict[str, list[str] | None] | None = None
-        for pred in preds:
-            sel = self._plan_one(pred, v)
-            if merged is None:
-                merged = sel
-                continue
-            for d, files in sel.items():
-                cur = merged.get(d)
-                if files is None:
-                    continue  # this predicate doesn't restrict the dir
-                if cur is None:
-                    merged[d] = files
-                else:
-                    fset = set(files)
-                    merged[d] = [f for f in cur if f in fset]
-        if merged is None:
-            manifest = self._manifest(v)
-            merged = {d: None for d in manifest["data_dirs"]}
-        n_sel = sum(len(f) for f in merged.values() if f is not None)
-        n_skip = 0
-        manifest = self._manifest(v)
-        for d, files in merged.items():
-            if files is None:
-                continue
-            stats = self.dir_stats(manifest, d) or {}
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            n_skip += len(universe) - len(files)
-        return merged, n_sel, n_skip
-
     def read_pruned(
         self,
         preds: list[tuple[str, object, object]],
@@ -4180,19 +4038,6 @@ class SnapshotTable:
         v = version if version is not None else self.current_version()
         selection, _n_sel, _n_skip = self.plan_pruned(preds, version=v)
         return self._read_selection(v, selection)
-
-    def _column_type(self, version: int, column: str) -> str | None:
-        """The column's Spark simpleString type from the snapshot schema
-        (None when unknown — bound encoding then uses its default
-        heuristic; stats for unknown columns are typically absent anyway,
-        so the file is read)."""
-        target = self.schema(version)
-        if target is None:
-            return None
-        for f in target.fields:
-            if f.name == column:
-                return f.dataType.simpleString()
-        return None
 
     def _read_selection(
         self, version: int, selection: dict[str, list[str] | None]
@@ -4391,15 +4236,9 @@ class SnapshotTable:
                 raise ValueError("MoR delete needs a schema-carrying snapshot")
             manifest = self._manifest(v)
             self._require_local_dirs(manifest, "merge-on-read DELETE")
-            if prune_preds:
-                selection, n_sel, n_skip = self.plan_pruned(prune_preds, version=v)
-            elif prune_column is not None:
-                selection, n_sel, n_skip = self.plan_range_scan(
-                    prune_column, prune_lower, prune_upper, version=v
-                )
-            else:
-                selection = {d: None for d in manifest["data_dirs"]}
-                n_sel, n_skip = 0, 0
+            selection, n_sel, n_skip = self._dml_plan(
+                v, prune_preds, prune_column, prune_lower, prune_upper
+            )
             parts = self._scan_parts(
                 manifest, target, selection=selection, with_meta=True
             )
@@ -4497,15 +4336,9 @@ class SnapshotTable:
                 raise ValueError("MoR update needs a schema-carrying snapshot")
             manifest = self._manifest(v)
             self._require_local_dirs(manifest, "merge-on-read UPDATE")
-            if prune_preds:
-                selection, n_sel, n_skip = self.plan_pruned(prune_preds, version=v)
-            elif prune_column is not None:
-                selection, n_sel, n_skip = self.plan_range_scan(
-                    prune_column, prune_lower, prune_upper, version=v
-                )
-            else:
-                selection = {d: None for d in manifest["data_dirs"]}
-                n_sel, n_skip = 0, 0
+            selection, n_sel, n_skip = self._dml_plan(
+                v, prune_preds, prune_column, prune_lower, prune_upper
+            )
             parts = self._scan_parts(
                 manifest, target, selection=selection, with_meta=True
             )
@@ -4795,7 +4628,7 @@ class SnapshotTable:
             fids = manifest.get("field_ids") or {}
             id2cur = {i: n for n, i in fids.items()}
             cur_name = id2cur.get(entry["ids"][0], entry["cols"][0])
-            insel = self._plan_one({"col": cur_name, "in": keys}, mv)
+            insel = self._plan([("in", cur_name, keys)], mv)[0]
         except (OSError, ValueError, KeyError):
             return sel  # pruning is best-effort; the scan stays sound
         for d, files in insel.items():
@@ -4825,8 +4658,8 @@ class SnapshotTable:
                 continue
             oset = set(ovis)
             if files is None:
-                files = self._stats_universe(
-                    d, self.dir_stats(scanned, d) or {}
+                files = self._dir_universe(
+                    scanned, d, self.dir_stats(scanned, d)
                 )
             out[d] = [f for f in files if f in oset]
         return out
@@ -5297,15 +5130,6 @@ class SnapshotTable:
         if str(c.get("mode", "")).startswith("compact"):
             return []  # dataChange=false: same rows, different files
         p_dirs, c_dirs = list(p["data_dirs"]), list(c["data_dirs"])
-
-        def universe(m: dict, d: str) -> list[str]:
-            vis = self._visible_files(m, d)
-            if vis is not None:
-                return list(vis)
-            return self._stats_universe(
-                d, self.dir_stats(m, d) or {}
-            )
-
         removed_sel: dict[str, list[str] | None] = {d: [] for d in p_dirs}
         added_sel: dict[str, list[str] | None] = {d: [] for d in c_dirs}
         c_set = set(c_dirs)
@@ -5313,12 +5137,13 @@ class SnapshotTable:
             if d not in c_set:
                 removed_sel[d] = self._visible_files(p, d)  # None = whole
                 continue
-            cvis = self._visible_files(c, d)
-            pvis = self._visible_files(p, d)
-            if cvis is None and pvis is None:
+            if (
+                self._visible_files(c, d) is None
+                and self._visible_files(p, d) is None
+            ):
                 continue
-            cfiles = set(universe(c, d)) if cvis is None else set(cvis)
-            pfiles = set(universe(p, d)) if pvis is None else set(pvis)
+            cfiles = set(self._dir_universe(c, d, self.dir_stats(c, d)))
+            pfiles = set(self._dir_universe(p, d, self.dir_stats(p, d)))
             removed_sel[d] = sorted(pfiles - cfiles)
             added_sel[d] = sorted(cfiles - pfiles)
         p_set = set(p_dirs)
@@ -5916,6 +5741,27 @@ class SnapshotTable:
             stats_for, bloom_for,
         )
 
+    def _dml_plan(
+        self, v: int, prune_preds, prune_column, prune_lower, prune_upper
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """The candidate files of a row-level DML at ``v``: the SQL-text
+        conjuncts (``prune_preds``), else the ``prune_column`` range
+        (range-only, as ``plan_range_scan``), else the whole table. A
+        whole-table plan reports the REAL file count, not 0/0 —
+        operation metrics are what cost monitoring reads."""
+        if prune_preds:
+            return self.plan_pruned(prune_preds, version=v)
+        if prune_column is not None:
+            return self.plan_range_scan(
+                prune_column, prune_lower, prune_upper, version=v
+            )
+        manifest = self._manifest(v)
+        n_sel = sum(
+            len(self._dir_universe(manifest, d, self.dir_stats(manifest, d)))
+            for d in manifest["data_dirs"]
+        )
+        return {d: None for d in manifest["data_dirs"]}, n_sel, 0
+
     def _rewrite_where(
         self,
         transform,
@@ -5938,37 +5784,9 @@ class SnapshotTable:
                     "row-level DML needs a schema-carrying snapshot "
                     "(legacy manifest: recommit first)"
                 )
-            if prune_preds:
-                # multi-conjunct pruning (the SQL-text path): intersect
-                # every predicate's range plan
-                selection, n_sel, n_skip = self.plan_pruned(
-                    prune_preds, version=v
-                )
-            elif prune_column is not None:
-                selection, n_sel, n_skip = self.plan_range_scan(
-                    prune_column, prune_lower, prune_upper, version=v
-                )
-            else:
-                from oss_data_lake_spark.sources.skipping import (
-                    _iter_parquet_files,
-                )
-
-                manifest = self._manifest(v)
-                selection = {d: None for d in manifest["data_dirs"]}
-                # whole-table rewrite: report the REAL file count, not
-                # 0/0 — operation metrics are what cost monitoring reads
-                n_sel, n_skip = 0, 0
-                for d in manifest["data_dirs"]:
-                    vis = self._visible_files(manifest, d)
-                    if vis is not None:
-                        n_sel += len(vis)
-                    else:
-                        n_sel += sum(
-                            1
-                            for _ in _iter_parquet_files(
-                                os.path.join(self.path, d)
-                            )
-                        )
+            selection, n_sel, n_skip = self._dml_plan(
+                v, prune_preds, prune_column, prune_lower, prune_upper
+            )
             candidates = self._read_selection(v, selection)
             replacement = self._align(transform(candidates), target)
             if tag != "delete":  # deletes can't create violating rows
@@ -6067,19 +5885,22 @@ class SnapshotTable:
             dir_files: dict[str, list[str]] = {}
             for d in manifest["data_dirs"]:
                 sel = selection.get(d)
-                vis = self._visible_files(manifest, d)
                 if sel is None:
                     continue  # whole dir was rewritten: no longer visible
                 if sel == []:
                     dirs.append(d)
+                    vis = self._visible_files(manifest, d)
                     if vis is not None:
                         dir_files[d] = vis
                     continue
-                if vis is None:
-                    stats = self.dir_stats(manifest, d) or {}
-                    vis = self._stats_universe(d, stats)
                 removed = set(sel)
-                new_vis = [f for f in vis if f not in removed]
+                new_vis = [
+                    f
+                    for f in self._dir_universe(
+                        manifest, d, self.dir_stats(manifest, d)
+                    )
+                    if f not in removed
+                ]
                 if not new_vis:
                     continue  # every remaining file rewritten
                 dirs.append(d)
@@ -7067,9 +6888,25 @@ def _preds_from_conjuncts(
     return preds
 
 
+def _as_test(pred) -> tuple:
+    """A ``plan_pruned`` predicate → the planner's test tuple (forms
+    above ``SnapshotTable.plan_range_scan``). A point range becomes an
+    equality: the eq test adds per-file BLOOM pruning on top of the
+    min/max bounds — the lever for ``WHERE id = x`` on columns the
+    layout doesn't cluster."""
+    if isinstance(pred, dict):
+        if "in" in pred:
+            return ("in", pred["col"], pred["in"])
+        return ("null", pred["col"], pred["null"])
+    column, lo, hi = pred
+    if lo is not None and lo == hi:
+        return ("eq", column, lo)
+    return ("range", column, lo, hi)
+
+
 def _build_pred(rex: "re.Pattern[str]", m: "re.Match[str]", col: str):
-    """One matched conjunct → a ``plan_pruned`` predicate (forms at
-    ``SnapshotTable._plan_one``)."""
+    """One matched conjunct → a ``plan_pruned`` predicate (forms above
+    ``SnapshotTable.plan_range_scan``)."""
     if rex is _BETWEEN_RE:
         return (col, _parse_sql_literal(m.group(2)), _parse_sql_literal(m.group(3)))
     if rex is _CMP_RE:

@@ -68,6 +68,24 @@ def pytest_collection_modifyitems(config, items):
         )
 
 
+_deselected_slow = 0
+
+
+def pytest_deselected(items):
+    global _deselected_slow
+    _deselected_slow += sum(1 for i in items if i.get_closest_marker("slow"))
+
+
+def pytest_terminal_summary(terminalreporter):
+    # pytest.ini deselects the slow tier by default; say so, so a green
+    # default run is not mistaken for the whole suite
+    if _deselected_slow:
+        terminalreporter.write_line(
+            f"slow tier: {_deselected_slow} tests deselected by default; "
+            f"run them with -m slow (everything: -m 'slow or not slow')"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", cpus="8")

@@ -236,3 +236,19 @@ def test_non_canonical_table_path_canonicalized(spark, tmp_path):
     )
     assert t.read().count() == 30
     assert t.read().where("k < 10").count() == 0
+
+
+def test_unpruned_mor_dml_counts_scanned_files(spark, tmp_path):
+    # with no prune hint the MoR scan reads every visible file and must
+    # say so, as the copy-on-write delete_where's files_rewritten does
+    # (it used to report 0 scanned)
+    t = SnapshotTable(spark, str(tmp_path / "w"))
+    df = spark.createDataFrame([Row(k=i, v=float(i)) for i in range(60)])
+    t.commit_clustered(df, cluster_by="k", n_files=6, stats_for=["k"])
+    assert len(_data_files(t)) == 6
+    info = t.delete_where_mor("v > 4.0")
+    assert (info["files_scanned"], info["files_skipped"]) == (6, 0)
+    info = t.update_where_mor("v < 2.0", {"v": "v + 100"})
+    assert (info["files_scanned"], info["files_skipped"]) == (6, 0)
+    got = sorted(r.v for r in t.read().collect())
+    assert got == [2.0, 3.0, 4.0, 100.0, 101.0]
