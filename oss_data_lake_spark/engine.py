@@ -22,6 +22,15 @@ from oss_data_lake_spark.plans.audit import explain_str
 from oss_data_lake_spark.session import get_spark
 from oss_data_lake_spark.sources.loaders import register_views
 from oss_data_lake_spark.sources.tables import Warehouse
+from oss_data_lake_spark.sqltext import (
+    _LITERAL_RE,
+    _depths,
+    _literal_spans,
+    _masked,
+    _sub_outside_literals,
+    close_paren,
+    split_top,
+)
 
 
 class Engine:
@@ -217,8 +226,6 @@ class Engine:
     def _param_positions(text: str) -> list[int]:
         """Offsets of the `?` parameter markers — found on the masked
         text, so literal/comment bytes can never register as one."""
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         return [i for i, ch in enumerate(_masked(text)) if ch == "?"]
 
     @staticmethod
@@ -226,25 +233,11 @@ class Engine:
         """Depth-0 comma split outside literals — each piece is one
         parameter EXPRESSION spliced verbatim (Trino evaluates these;
         literals, the overwhelmingly common case, splice exactly)."""
-        from oss_data_lake_spark.sources.snapshots import _depths, _masked
-
-        masked = _masked(args_text)
-        depths = _depths(masked)
-        out, start = [], 0
-        for i, ch in enumerate(masked):
-            if ch == "," and depths[i] == 0:
-                out.append(args_text[start:i].strip())
-                start = i + 1
-        out.append(args_text[start:].strip())
-        return [a for a in out if a]
+        return [a.strip() for a in split_top(args_text) if a.strip()]
 
     def _handle_prepared_statement(self, text: str) -> DataFrame | None:
         m = self._EXEC_IMMEDIATE_RE.match(text)
         if m:
-            from oss_data_lake_spark.sources.snapshots import (
-                _literal_spans,
-            )
-
             # the statement literal starts exactly at the match end —
             # located by span so a body containing quotes (or the text
             # "EXECUTE IMMEDIATE" itself) can never confuse the scan
@@ -1218,20 +1211,13 @@ class Engine:
         from oss_data_lake_spark.operators.match_recognize import (
             match_recognize,
         )
-        from oss_data_lake_spark.sources.snapshots import _masked
 
         masked = _masked(text)
         m = self._MR_HEAD_RE.match(masked)
         if m is None:
             return None
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = close_paren(masked, m.end())
+        if i is None:
             raise ValueError("MATCH_RECOGNIZE: unbalanced parentheses")
         src = text[m.start(1): m.end(1)].strip()
         body, bmask = text[m.end(): i - 1], masked[m.end(): i - 1]
@@ -1274,15 +1260,8 @@ class Engine:
         # DEFINE — search just that gap
         pclose = len(bmask)
         if marks["pattern"] >= 0:
-            d0, i0 = 0, bmask.index("(", marks["pattern"])
-            for i0 in range(i0, len(bmask)):
-                if bmask[i0] == "(":
-                    d0 += 1
-                elif bmask[i0] == ")":
-                    d0 -= 1
-                    if d0 == 0:
-                        pclose = i0 + 1
-                        break
+            popen = bmask.index("(", marks["pattern"])
+            pclose = close_paren(bmask, popen + 1) or len(bmask)
         marks["define"] = _sect(r"\bDEFINE\b", pclose)
         marks["subset"] = _sect(
             r"\bSUBSET\b", pclose,
@@ -1319,18 +1298,16 @@ class Engine:
         ):
             raise ValueError("MATCH_RECOGNIZE: clauses out of order")
 
-        def _slice(start_kw: str, start: int) -> tuple[str, str]:
+        def _slice(start_kw: str, start: int) -> str:
             nxt = min(
                 (v for v in marks.values() if v > start), default=len(body)
             )
-            seg = body[start:nxt]
-            segm = bmask[start:nxt]
-            cut = re.match(start_kw, segm, re.IGNORECASE)
-            return seg[cut.end():], segm[cut.end():]
+            cut = re.match(start_kw, bmask[start:nxt], re.IGNORECASE)
+            return body[start + cut.end(): nxt]
 
-        pb_txt, _ = _slice(r"PARTITION\s+BY", marks["partition"])
+        pb_txt = _slice(r"PARTITION\s+BY", marks["partition"])
         partition_by = [c.strip() for c in pb_txt.split(",") if c.strip()]
-        ob_txt, _ = _slice(r"ORDER\s+BY", marks["order"])
+        ob_txt = _slice(r"ORDER\s+BY", marks["order"])
         ob = ob_txt.strip()
         om = re.fullmatch(r"(\w+)(?:\s+ASC)?", ob, re.IGNORECASE)
         if not om:
@@ -1340,28 +1317,10 @@ class Engine:
             )
         order_by = om.group(1)
 
-        def _depth0_commas(segm: str) -> list[int]:
-            d, out = 0, []
-            for j, ch in enumerate(segm):
-                if ch == "(":
-                    d += 1
-                elif ch == ")":
-                    d -= 1
-                elif ch == "," and d == 0:
-                    out.append(j)
-            return out
-
-        def _split(seg: str, segm: str) -> list[str]:
-            cuts = [-1] + _depth0_commas(segm) + [len(seg)]
-            return [
-                seg[a + 1: b].strip()
-                for a, b in zip(cuts, cuts[1:])
-                if seg[a + 1: b].strip()
-            ]
-
-        ms_txt, ms_mask = _slice(r"MEASURES", marks["measures"])
         measures: dict[str, str] = {}
-        for item in _split(ms_txt, ms_mask):
+        for item in self._split_using_args(
+            _slice(r"MEASURES", marks["measures"])
+        ):
             am = re.match(
                 r"^(.+?)\s+AS\s+(\w+)$", item, re.IGNORECASE | re.DOTALL
             )
@@ -1372,20 +1331,12 @@ class Engine:
             measures[am.group(2)] = am.group(1).strip()
 
         # PATTERN ( ... ): balanced slice of the body
-        pstart = marks["pattern"]
-        popen = bmask.index("(", pstart)
-        d, j = 1, popen + 1
-        while j < len(bmask) and d:
-            if bmask[j] == "(":
-                d += 1
-            elif bmask[j] == ")":
-                d -= 1
-            j += 1
-        pattern = body[popen + 1: j - 1].strip()
+        pattern = body[popen + 1: pclose - 1].strip()
 
-        df_txt, df_mask = _slice(r"DEFINE", marks["define"])
         defines: dict[str, str] = {}
-        for item in _split(df_txt, df_mask):
+        for item in self._split_using_args(
+            _slice(r"DEFINE", marks["define"])
+        ):
             dm = re.match(
                 r"^(\w+)\s+AS\s+(.+)$", item, re.IGNORECASE | re.DOTALL
             )
@@ -1467,8 +1418,6 @@ class Engine:
     )
 
     def _translate_trino_ctas(self, text: str) -> str:
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         masked = _masked(text)
         m = self._TRINO_CTAS_HEAD_RE.match(masked)
         if m is None:
@@ -1477,14 +1426,8 @@ class Engine:
         props = None
         wm = re.compile(r"\s*WITH\s*\(", re.IGNORECASE).match(masked, i)
         if wm:
-            depth, j = 1, wm.end()
-            while j < len(masked) and depth:
-                if masked[j] == "(":
-                    depth += 1
-                elif masked[j] == ")":
-                    depth -= 1
-                j += 1
-            if depth:
+            j = close_paren(masked, wm.end())
+            if j is None:
                 return text  # unbalanced: the parser reports it
             props = text[wm.end(): j - 1]
             i = j
@@ -1557,21 +1500,13 @@ class Engine:
         )
 
     def _translate_trino_create(self, text: str) -> str:
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         text = self._translate_trino_ctas(text)
         masked = _masked(text)
         m = self._TRINO_CREATE_RE.match(masked)
         if m is None:
             return text
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = close_paren(masked, m.end())
+        if i is None:
             return text
         cols, tail = text[m.end(): i - 1], text[i:].strip().rstrip(";")
         tail_masked = masked[i:].strip().rstrip(";")
@@ -1581,22 +1516,12 @@ class Engine:
         # apply ONLY in type position: the leading token of each entry is
         # the column NAME, and a column literally named real / varchar /
         # varbinary must never be rewritten into a type token (round-11
-        # ADVICE). cols and cols_masked are same-length aligned, so comma
-        # positions found in the masked text index both.
-        cols_masked = masked[m.end(): i - 1]
-        starts, depth = [0], 0
-        for j, ch in enumerate(cols_masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                starts.append(j + 1)
-        starts.append(len(cols_masked) + 1)
+        # ADVICE). A double-quoted name is blanked in the masked entry,
+        # so the name probe sees backtick and bare names only.
         parts = []  # (name-prefix, type-body, masked type-body)
-        for a, b in zip(starts, starts[1:]):
-            ent, ent_m = cols[a: b - 1], cols_masked[a: b - 1]
-            idm = re.match(r'\s*(?:"[^"]*"|`[^`]*`|\w+)', ent_m)
+        for ent in split_top(cols):
+            ent_m = _masked(ent)
+            idm = re.match(r"\s*(?:`[^`]*`|\w+)", ent_m)
             cut = idm.end() if idm else 0
             parts.append((ent[:cut], ent[cut:], ent_m[cut:]))
         has_trino_type = any(
@@ -1772,10 +1697,6 @@ class Engine:
             r"current_(catalog|schema)", text, re.IGNORECASE
         ):
             return text
-        from oss_data_lake_spark.sources.snapshots import (
-            _sub_outside_literals,
-        )
-
         cur = self._current_schema
         if cur and "." in cur:
             cat, sch = cur.split(".", 1)
@@ -1951,26 +1872,6 @@ class Engine:
                 k = j
         return "".join(out)
 
-    @staticmethod
-    def _split_top_args(s: str) -> list[str]:
-        """Split a function argument string on TOP-LEVEL commas (paren
-        depth 0 on the masked view — commas inside nested calls and
-        string literals stay put)."""
-        from oss_data_lake_spark.sources.snapshots import _masked
-
-        masked = _masked(s)
-        args, depth, start = [], 0, 0
-        for i, ch in enumerate(masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                args.append(s[start:i])
-                start = i + 1
-        args.append(s[start:])
-        return args
-
     _STR_LIT_RE = re.compile(r"^\s*'((?:[^']|'')*)'\s*$")
 
     # -- Trino's TRY(expr) (NULL instead of error; Trino 467 functions
@@ -2035,17 +1936,13 @@ class Engine:
     def _try_cast_int_guard(self, body: str) -> str | None:
         """For CAST-body text `<expr> AS <integral type>`, return the
         exception-free guarded rewrite; None to keep plain try_cast."""
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         masked = _masked(body)
-        depth, as_pos = 0, -1
-        for m in re.finditer(r"[()]|\bAS\b", masked, re.IGNORECASE):
-            if m.group() == "(":
-                depth += 1
-            elif m.group() == ")":
-                depth -= 1
-            elif depth == 0:
-                as_pos = m.start()  # last depth-0 AS = CAST's own
+        depths = _depths(masked)
+        as_pos = max(  # the last depth-0 AS is CAST's own
+            (m.start() for m in re.finditer(r"\bAS\b", masked, re.IGNORECASE)
+             if depths[m.start()] == 0),
+            default=-1,
+        )
         if as_pos < 0:
             return None
         expr = body[:as_pos].strip()
@@ -2065,22 +1962,14 @@ class Engine:
     def _translate_try(self, argtext: str, args: list[str]) -> str:
         if len(args) != 1 or not args[0].strip():
             raise ValueError("TRY takes exactly one expression")
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         inner = args[0].strip()
         masked = _masked(inner)
         for head, target in (("CAST", "try_cast"),
                              ("ELEMENT_AT", "try_element_at")):
             hm = re.match(rf"^{head}\s*\(", masked, re.IGNORECASE)
             if hm:
-                depth, j = 1, hm.end()
-                while j < len(masked) and depth:
-                    if masked[j] == "(":
-                        depth += 1
-                    elif masked[j] == ")":
-                        depth -= 1
-                    j += 1
-                if depth == 0 and not masked[j:].strip():
+                j = close_paren(masked, hm.end())
+                if j is not None and not masked[j:].strip():
                     # the whole body IS the call — rewrap as try_*
                     body = inner[hm.end(): j - 1]
                     if head == "CAST":
@@ -2090,13 +1979,9 @@ class Engine:
                     return f"{target}({body})"
         ops = []
         prev_sig = ""  # last non-space char seen (for unary detection)
-        depth = 0
+        depths = _depths(masked)
         for k, ch in enumerate(masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and ch in "+-*/":
+            if depths[k] == 0 and ch in "+-*/":
                 # a sign directly after nothing, an operator, a comma,
                 # or an open paren is unary, not a binary operator
                 if ch in "+-" and (prev_sig == "" or prev_sig in "+-*/(,"):
@@ -2128,7 +2013,7 @@ class Engine:
             f"equivalent"
         )
 
-    def _translate_trino_functions(self, text: str, _from: int = 0) -> str:
+    def _translate_trino_functions(self, text: str) -> str:
         if not re.search(
             r"approx_distinct|date_diff|date_add|strpos|format"
             r"|date_parse|day_of_|\bdow\b|\bdoy\b|week|\byow\b"
@@ -2137,24 +2022,17 @@ class Engine:
             text, re.IGNORECASE,
         ):
             return text
-        from oss_data_lake_spark.sources.snapshots import _masked
+        return self._rewrite_sites(
+            text, self._TRINO_FN_RE, self._trino_function_site
+        )
 
-        masked = _masked(text)
-        m = self._TRINO_FN_RE.search(masked, _from)
-        if m is None:
-            return text
+    def _trino_function_site(self, text: str, masked: str, m) -> tuple | None:
         fname = m.group(1).upper()
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            return text  # unbalanced: the parser reports it
+        i = close_paren(masked, m.end())
+        if i is None:
+            return None  # unbalanced: the parser reports it
         argtext = text[m.end(): i - 1]
-        args = self._split_top_args(argtext)
+        args = split_top(argtext)
 
         def unit_of(a: str) -> str:
             lm = self._STR_LIT_RE.match(a)
@@ -2259,10 +2137,8 @@ class Engine:
             # this call passes through untouched (e.g. Spark's own
             # 2-arg date_add) — but its ARGUMENTS may still contain
             # Trino spellings, so rescan from just after the name
-            return self._translate_trino_functions(text, m.end())
-        return self._translate_trino_functions(
-            text[: m.start()] + repl + text[i:], m.start()
-        )
+            return m.end(), None
+        return i, repl
 
     # -- AT TIME ZONE (ANSI <datetime factor>; Trino evaluates it by
     # coercing a zoneless timestamp with the SESSION zone, then
@@ -2284,18 +2160,12 @@ class Engine:
         re.IGNORECASE,
     )
 
-    def _translate_at_time_zone(self, text: str, _from: int = 0) -> str:
+    def _translate_at_time_zone(self, text: str) -> str:
         if not re.search(r"\bTIME\s+ZONE\b", text, re.IGNORECASE):
             return text
-        from oss_data_lake_spark.sources.snapshots import (
-            _literal_spans,
-            _masked,
-        )
+        return self._rewrite_sites(text, self._AT_TZ_RE, self._at_tz_site)
 
-        masked = _masked(text)
-        m = self._AT_TZ_RE.search(masked, _from)
-        if m is None:
-            return text
+    def _at_tz_site(self, text: str, masked: str, m) -> tuple:
         # the operand is the RAW span up to the AT keyword: a typed
         # literal (`timestamp'2020-01-01 00:00:00' AT TIME ZONE ...`)
         # is blanked in the masked view, so the identifier group alone
@@ -2348,19 +2218,14 @@ class Engine:
         zstart = m.end()
         while zstart < len(text) and text[zstart].isspace():
             zstart += 1
-        span = next(
-            (s for s in _literal_spans(text) if s[0] == zstart), None
-        )
-        if span is None or zstart >= len(text) or text[zstart] != "'":
+        zm = _LITERAL_RE.match(text, zstart)
+        if zm is None or text[zstart] != "'":
             raise ValueError(
                 "AT TIME ZONE: the zone must be a string literal "
                 "('America/New_York', 'UTC', '+05:30', ...)"
             )
-        zone = text[span[0]: span[1]]
-        repl = f"convert_timezone(current_timezone(), {zone}, {operand})"
-        return self._translate_at_time_zone(
-            text[: m.start()] + repl + text[span[1]:], m.start()
-        )
+        repl = f"convert_timezone(current_timezone(), {zm[0]}, {operand})"
+        return zm.end(), repl
 
     # ANSI row-limiting (SQL:2008 <fetch first clause>; Trino and
     # DBeaver-class BI tools emit it for paging): `OFFSET n ROWS` /
@@ -2381,10 +2246,6 @@ class Engine:
     )
 
     def _translate_fetch_offset(self, text: str) -> str:
-        from oss_data_lake_spark.sources.snapshots import (
-            _sub_outside_literals,
-        )
-
         if not re.search(r"\b(FETCH|OFFSET)\b", text, re.IGNORECASE):
             return text
 
@@ -2524,26 +2385,19 @@ class Engine:
             return guarded
         return f"(CASE WHEN {cnt} = 0 THEN NULL ELSE ({s}) / {cnt} END)"
 
-    def _translate_window_exclude(self, text: str, _from: int = 0) -> str:
-        from oss_data_lake_spark.sources.snapshots import _masked
+    def _translate_window_exclude(self, text: str) -> str:
+        return self._rewrite_sites(
+            text, self._WIN_EXCLUDE_RE, self._window_exclude_site
+        )
 
-        masked = _masked(text)
-        m = self._WIN_EXCLUDE_RE.search(masked, _from)
-        if m is None:
-            return text
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            return text  # unbalanced: the parser reports it
+    def _window_exclude_site(self, text: str, masked: str, m) -> tuple | None:
+        i = close_paren(masked, m.end())
+        if i is None:
+            return None  # unbalanced: the parser reports it
         body, body_m = text[m.end(): i - 1], masked[m.end(): i - 1]
         em = self._EXCLUDE_TAIL_RE.match(body_m)
         if em is None:
-            return self._translate_window_exclude(text, i)
+            return i, None
         mode = re.sub(r"\s+", " ", em.group(2).upper())
         wbody = body[: em.end(1)].strip()
         if mode == "NO OTHERS":  # the default, spelled out
@@ -2557,9 +2411,7 @@ class Engine:
             repl = self._exclude_rewrite(
                 m.group(1), text[m.start(3): m.end(3)], wbody, mode
             )
-        return self._translate_window_exclude(
-            text[: m.start()] + repl + text[i:], m.start()
-        )
+        return i, repl
 
     # SQL/JSON standard functions (SQL:2016 §6.27; Trino 467 ships
     # json_value / json_query / json_exists) mapped onto Spark's JSON
@@ -2587,23 +2439,16 @@ class Engine:
         re.IGNORECASE | re.DOTALL,
     )
 
-    def _translate_sql_json(self, text: str, _from: int = 0) -> str:
-        from oss_data_lake_spark.sources.snapshots import _masked
+    def _translate_sql_json(self, text: str) -> str:
+        return self._rewrite_sites(
+            text, self._SQL_JSON_RE, self._sql_json_site
+        )
 
-        masked = _masked(text)
-        m = self._SQL_JSON_RE.search(masked, _from)
-        if m is None:
-            return text
+    def _sql_json_site(self, text: str, masked: str, m) -> tuple | None:
         fname = m.group(1).upper()
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            return text  # unbalanced: the parser reports it
+        i = close_paren(masked, m.end())
+        if i is None:
+            return None  # unbalanced: the parser reports it
         args = self._split_using_args(text[m.end(): i - 1])
         if len(args) < 2:
             raise ValueError(f"{fname}: needs (json_expr, 'path')")
@@ -2637,33 +2482,22 @@ class Engine:
             repl = f"CAST({base} AS {ret_type})"
         else:
             repl = base
-        return self._translate_sql_json(
-            text[: m.start()] + repl + text[i:], m.start()
+        return i, repl
+
+    def _translate_quantified(self, text: str) -> str:
+        return self._rewrite_sites(
+            text, self._QUANT_RE, self._quantified_site
         )
 
-    def _translate_quantified(self, text: str, _from: int = 0) -> str:
-        from oss_data_lake_spark.sources.snapshots import _masked
-
-        masked = _masked(text)
-        m = self._QUANT_RE.search(masked, _from)
-        if m is None:
-            return text
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            return text  # unbalanced: the parser reports it
+    def _quantified_site(self, text: str, masked: str, m) -> tuple | None:
+        i = close_paren(masked, m.end())
+        if i is None:
+            return None  # unbalanced: the parser reports it
         sub = text[m.end(): i - 1]
-        if not re.match(
-            r"^\s*(SELECT|WITH|VALUES|TABLE)\b", _masked(sub), re.IGNORECASE
-        ):
+        if not self._QUERY_HEAD_RE.match(masked[m.end(): i - 1]):
             # an any()/some() boolean-aggregate call, not a subquery —
             # keep scanning to the right of this site
-            return self._translate_quantified(text, i)
+            return i, None
         lhs = text[m.start(1): m.end(1)].strip()
         # compound-LHS guard: if the char before the matched LHS is an
         # expression-continuation token, the regex bound only the TAIL of
@@ -2683,11 +2517,37 @@ class Engine:
                 f"left-hand side, e.g. (a || b) = ANY (...)"
             )
         repl = self._quantified_case(lhs, m.group(2), m.group(3), sub)
-        # restart at the splice: the replacement embeds the subquery
-        # text, whose own quantified comparisons (if any) still match
-        return self._translate_quantified(
-            text[: m.start()] + repl + text[i:], m.start()
-        )
+        # the replacement embeds the subquery text, whose own quantified
+        # comparisons (if any) match on the rescan from the splice
+        return i, repl
+
+    @staticmethod
+    def _rewrite_sites(text: str, pattern, site, done=None) -> str:
+        """Rewrite the call sites ``pattern`` finds in the masked text,
+        left to right, in one loop. ``site(text, masked, m)`` returns
+        None to stop (unbalanced parens: the parser reports them),
+        ``(end, None)`` to keep the site and search on from ``end``, or
+        ``(end, repl)`` to splice ``repl`` over ``text[m.start():end]``
+        and search on from the splice start, so the replacement is
+        scanned again. The site's start and ``end`` lie outside
+        literals, so the masked copy is spliced alongside the text and
+        only ``repl`` is masked. ``done(masked)`` runs once the search
+        finds no more sites."""
+        masked, pos = _masked(text), 0
+        while (m := pattern.search(masked, pos)) is not None:
+            step = site(text, masked, m)
+            if step is None:
+                return text
+            end, repl = step
+            if repl is None:
+                pos = end
+                continue
+            pos = m.start()
+            text = text[:pos] + repl + text[end:]
+            masked = masked[:pos] + _masked(repl) + masked[end:]
+        if done is not None:
+            done(masked)
+        return text
 
     def _translate_chain(self, text: str) -> str:
         """The full literal-safe dialect chain, in dependency order.
@@ -2756,14 +2616,11 @@ class Engine:
     )
     _UNNEST_ON_TRUE_RE = re.compile(r"\s*ON\s+TRUE\b", re.IGNORECASE)
 
-    def _translate_unnest(self, text: str, _from: int = 0) -> str:
+    def _translate_unnest(self, text: str) -> str:
         if not re.search(r"\bUNNEST\b", text, re.IGNORECASE):
             return text
-        from oss_data_lake_spark.sources.snapshots import _masked
 
-        masked = _masked(text)
-        m = self._UNNEST_RE.search(masked, _from)
-        if m is None:
+        def refuse_stray(masked: str) -> None:
             # any UNNEST( left outside the handled join forms would hit
             # Spark's parser with an unhelpful error — refuse with the
             # supported grammar instead (a masked scan: UNNEST inside a
@@ -2775,30 +2632,18 @@ class Engine:
                     "form, or LEFT JOIN UNNEST(...) AS t(...) ON TRUE "
                     "— other placements have no Spark equivalent"
                 )
-            return text
+
+        return self._rewrite_sites(
+            text, self._UNNEST_RE, self._unnest_site, refuse_stray
+        )
+
+    def _unnest_site(self, text: str, masked: str, m) -> tuple | None:
         join_kw = m.group(1)
         is_left = join_kw.upper().lstrip().startswith("LEFT")
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:  # unbalanced: leave the text for the parser to flag
-            return text
-        args_raw = text[m.end(): i - 1]
-        args_masked = masked[m.end(): i - 1]
-        exprs, start, d = [], 0, 0
-        for j, ch in enumerate(args_masked):
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-            elif ch == "," and d == 0:
-                exprs.append(args_raw[start:j].strip())
-                start = j + 1
-        exprs.append(args_raw[start:].strip())
+        i = close_paren(masked, m.end())
+        if i is None:  # unbalanced: leave the text for the parser to flag
+            return None
+        exprs = [e.strip() for e in split_top(text[m.end(): i - 1])]
         if len(exprs) > 1:
             raise ValueError(
                 f"UNNEST with {len(exprs)} arguments zips the arrays "
@@ -2820,15 +2665,9 @@ class Engine:
             )
         ordinality = tm.group(1) is not None
         alias = tm.group(2)
-        depth, j = 1, tm.end()
-        while j < len(masked) and depth:
-            if masked[j] == "(":
-                depth += 1
-            elif masked[j] == ")":
-                depth -= 1
-            j += 1
-        if depth:
-            return text
+        j = close_paren(masked, tm.end())
+        if j is None:
+            return None
         cols_text = masked[tm.end(): j - 1]
         cols = [c.strip() for c in cols_text.split(",")]
         if not all(re.fullmatch(r"[A-Za-z_]\w*", c) for c in cols):
@@ -2876,11 +2715,9 @@ class Engine:
             repl = f"LEFT OUTER JOIN {lateral} ON true"
         else:
             repl = f"CROSS JOIN {lateral}"
-        # restart at the splice point: the replacement contains no
-        # UNNEST token, so the rescan can only advance
-        return self._translate_unnest(
-            text[: m.start()] + repl + text[end:], m.start()
-        )
+        # the replacement contains no UNNEST token, so the rescan from
+        # the splice can only advance
+        return end, repl
 
     # -- Trino inline SQL routines (`WITH FUNCTION name(...) RETURNS
     # ... SELECT ...`, Trino 458+): a DOCUMENTED NON-GOAL, same class
@@ -2895,20 +2732,14 @@ class Engine:
     )
 
     def _refuse_inline_sql_routine(self, text: str) -> None:
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         masked = _masked(text)
         m = self._WITH_FUNCTION_RE.match(masked)
         if m is None:
             return
-        depth, i = 1, m.end()
-        while i < len(masked) and depth:
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-            i += 1
-        if re.match(r"\s*RETURNS\b", masked[i:], re.IGNORECASE):
+        i = close_paren(masked, m.end())
+        if i is not None and re.match(
+            r"\s*RETURNS\b", masked[i:], re.IGNORECASE
+        ):
             raise ValueError(
                 "inline SQL routines (WITH FUNCTION ... RETURNS ...) "
                 "are not supported — define the expression inline or "
@@ -2917,19 +2748,11 @@ class Engine:
             )
 
     def _translate_tablesample(self, text: str) -> str:
-        from oss_data_lake_spark.sources.snapshots import _masked
-
         masked = _masked(text)
         out, pos = [], 0
         for m in self._TABLESAMPLE_RE.finditer(masked):
-            depth, i = 1, m.end()
-            while i < len(masked) and depth:
-                if masked[i] == "(":
-                    depth += 1
-                elif masked[i] == ")":
-                    depth -= 1
-                i += 1
-            if depth:  # unbalanced: leave the text for the parser to flag
+            i = close_paren(masked, m.end())
+            if i is None:  # unbalanced: leave the text for the parser to flag
                 continue
             arg = text[m.end(): i - 1].strip()
             out.append(text[pos: m.start()])
@@ -3163,14 +2986,11 @@ class Engine:
         names = vc.names()
         if not names:
             return []
-        from oss_data_lake_spark.sources.snapshots import (
-            _literal_spans,
-            temp_view_exists,
-        )
+        from oss_data_lake_spark.sources.snapshots import temp_view_exists
         from oss_data_lake_spark.sources.views import referenced_views
 
         created: list[str] = []
-        for name in referenced_views(text, names, _literal_spans):
+        for name in referenced_views(text, names):
             if name in _stack:
                 raise ValueError(
                     f"view cycle detected: {' -> '.join(_stack + (name,))}"

@@ -187,11 +187,15 @@ from oss_data_lake_spark.sources.snapshots import (
     _IN_RE,
     _ANY_LIT_RE,
     _conjunct_spans,
-    _depths,
-    _masked,
     _coerce_key_value,
     _parse_sql_literal,
     _preds_from_conjuncts,
+)
+from oss_data_lake_spark.sqltext import (
+    _depths,
+    _masked,
+    close_paren,
+    split_top,
 )
 
 _DELETE_RE = re.compile(
@@ -288,23 +292,10 @@ def _parse_duration_ms(v: str, where: str) -> int:
 def _parse_exec_args(argtext: str | None, where: str) -> dict[str, str]:
     if not argtext or not argtext.strip():
         return {}
-    from oss_data_lake_spark.sources.snapshots import _masked
-
-    # split at UNMASKED depth-0 commas only: a quoted value containing
-    # a comma is one argument, not a mis-split pair (round-13 ADVICE)
-    masked = _masked(argtext)
-    parts, start, depth = [], 0, 0
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(argtext[start:i])
-            start = i + 1
-    parts.append(argtext[start:])
     out: dict[str, str] = {}
-    for part in parts:
+    # a quoted value containing a comma is one argument, not a
+    # mis-split pair
+    for part in split_top(argtext):
         am = _EXEC_ARG_RE.match(part)
         if am is None:
             raise ValueError(
@@ -468,30 +459,14 @@ def split_statements(script: str) -> list[str]:
     """Split a SQL script on semicolons — only at paren depth 0 and
     outside string literals/comments (the masked-text discipline every
     structural split here uses). Empty statements vanish."""
-    masked = _masked(script)
-    depths = _depths(masked)
-    out, start = [], 0
-    for i, ch in enumerate(masked):
-        if ch == ";" and depths[i] == 0:
-            out.append(script[start:i])
-            start = i + 1
-    out.append(script[start:])
-    return [s for s in (p.strip() for p in out) if s]
+    return [s for s in (p.strip() for p in split_top(script, ";")) if s]
 
 
 def _split_assignments(set_text: str) -> dict[str, str]:
     """``a = expr, b = expr`` split at paren-depth-0 commas (function
     arguments keep their commas)."""
-    masked = _masked(set_text)
-    depths = _depths(masked)
-    parts, start = [], 0
-    for i, ch in enumerate(masked):
-        if ch == "," and depths[i] == 0:
-            parts.append(set_text[start:i])
-            start = i + 1
-    parts.append(set_text[start:])
     out: dict[str, str] = {}
-    for p in parts:
+    for p in split_top(set_text):
         m = re.match(r"^\s*([A-Za-z_]\w*)\s*=\s*(.+?)\s*$", p, re.DOTALL)
         if not m:
             raise ValueError(f"cannot parse UPDATE assignment: {p.strip()!r}")
@@ -500,17 +475,10 @@ def _split_assignments(set_text: str) -> dict[str, str]:
 
 
 def _split_exprs(text: str) -> list[str]:
-    """Comma-split at paren depth 0 outside literals (VALUES lists —
-    function arguments and quoted commas stay intact)."""
-    masked = _masked(text)
-    depths = _depths(masked)
-    parts, start = [], 0
-    for i, ch in enumerate(masked):
-        if ch == "," and depths[i] == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
+    """Comma-split at paren depth 0 outside literals, pieces stripped and
+    empties dropped (VALUES lists, SELECT items, PARTITIONED BY entries —
+    function arguments, bucket(4, k) and quoted commas stay intact)."""
+    return [p.strip() for p in split_top(text) if p.strip()]
 
 
 _IDENT_RE = re.compile(r"(?<![\w.'\"])([A-Za-z_]\w*)(?![\w(])")
@@ -640,14 +608,11 @@ def _run_merge(
 
     # ---- source: (subquery) [AS] alias | name [[AS] alias]
     if src_spec.startswith("("):
-        ms, dd = _masked(src_spec), _depths(_masked(src_spec))
-        close = next(
-            (i for i, ch in enumerate(ms) if ch == ")" and dd[i] == 1), None
-        )
+        close = close_paren(_masked(src_spec), 1)
         if close is None:
             raise ValueError("unbalanced parens in MERGE source")
-        src_df = sql_with_time_travel(spark, src_spec[1:close], tables)
-        alias_part = src_spec[close + 1:].strip()
+        src_df = sql_with_time_travel(spark, src_spec[1: close - 1], tables)
+        alias_part = src_spec[close:].strip()
         am = re.match(r"^(?:AS\s+)?([A-Za-z_]\w*)$", alias_part, re.IGNORECASE)
         src_alias = am.group(1) if am else None
     else:
@@ -946,20 +911,6 @@ _CREATE_RE = re.compile(
 )
 
 
-def _split_part_entries(part: str | None) -> list[str]:
-    """Depth-0 comma split of a PARTITIONED BY spec (bucket(4, k)
-    keeps its own comma); shared by the column-list and CTAS paths."""
-    if not part:
-        return []
-    pmasked = _masked(part)
-    pdepths = _depths(pmasked)
-    entries, start = [], 0
-    for i, ch in enumerate(pmasked):
-        if ch == "," and pdepths[i] == 0:
-            entries.append(part[start:i].strip())
-            start = i + 1
-    entries.append(part[start:].strip())
-    return [x for x in entries if x]
 # column-list CREATE TABLE (no AS): an EMPTY snapshot table with a
 # declared schema, optional partition layout, and column DEFAULTs
 _CREATE_COLS_RE = re.compile(
@@ -1170,22 +1121,6 @@ _MV_DEF_PROP = "mv.definition"
 _MV_PRES_PROP = "mv.presentation"
 
 
-def _split_select_items(text: str) -> list[str]:
-    """Top-level comma split of a SELECT list (commas inside call
-    parentheses stay put)."""
-    items, depth, start = [], 0, 0
-    for i, ch in enumerate(text):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(text[start:i].strip())
-            start = i + 1
-    items.append(text[start:].strip())
-    return [x for x in items if x]
-
-
 def _parse_mv_select(select_text: str) -> dict:
     """The restricted MV grammar → an IncrementalAggregate definition +
     a presentation projection (state columns → the SELECT's shape)."""
@@ -1219,7 +1154,7 @@ def _parse_mv_select(select_text: str) -> dict:
         seen_aliases.add(alias)
         return alias
 
-    for item in _split_select_items(items_txt):
+    for item in _split_exprs(items_txt):
         if re.fullmatch(r"[A-Za-z_]\w*", item):
             if item not in group_by:
                 raise ValueError(
@@ -1298,47 +1233,34 @@ def _parse_column_defs(
     (to_date(ts))`` → ({name: type_ddl}, {name: default_sql},
     {name: generated_sql}); commas inside type/expression parens are not
     separators, and keywords inside string literals stay data."""
-    masked = _masked(defs)
-    depths = _depths(masked)
-    parts, start = [], 0
-    for i, ch in enumerate(masked):
-        if ch == "," and depths[i] == 0:
-            parts.append((defs[start:i], masked[start:i]))
-            start = i + 1
-    parts.append((defs[start:], masked[start:]))
     out: dict[str, str] = {}
     dflt: dict[str, str] = {}
     gens: dict[str, str] = {}
-    for p, pm in parts:
+    for p in split_top(defs):
         m = re.match(r"^\s*([A-Za-z_]\w*)\s+(.+?)\s*$", p, re.DOTALL)
         if not m:
             raise ValueError(f"cannot parse column definition: {p.strip()!r}")
         name, rest = m.group(1), m.group(2)
+        rmask = _masked(rest)
         gm = re.search(
-            r"\bGENERATED\s+ALWAYS\s+AS\s*\(", pm[m.start(2):], re.IGNORECASE
+            r"\bGENERATED\s+ALWAYS\s+AS\s*\(", rmask, re.IGNORECASE
         )
         if gm:
             # the expression is the balanced paren group after AS
-            tail = rest[gm.end() - 1:]
-            tmask = pm[m.start(2):][gm.end() - 1:]
-            td = _depths(tmask)
-            close = next(
-                (i for i, ch in enumerate(tmask) if ch == ")" and td[i] == 1),
-                None,
-            )
+            close = close_paren(rmask, gm.end())
             if close is None:
                 raise ValueError(
                     f"unbalanced GENERATED ALWAYS AS parens for '{name}'"
                 )
-            expr = tail[1:close].strip()
+            expr = rest[gm.end(): close - 1].strip()
             if not expr:
                 raise ValueError(
                     f"empty GENERATED expression for column '{name}'"
                 )
-            if tail[close + 1:].strip():
+            if rest[close:].strip():
                 raise ValueError(
                     f"unexpected text after GENERATED ALWAYS AS (...) "
-                    f"for '{name}': {tail[close + 1:].strip()!r}"
+                    f"for '{name}': {rest[close:].strip()!r}"
                 )
             gens[name] = expr
             rest = rest[: gm.start()].strip()
@@ -1494,7 +1416,7 @@ def dispatch_statement(
         etypes = {f.name: f.dataType for f in empty.schema.fields}
         for cname, lit in defaults.items():
             validate_default(spark, lit, etypes[cname])
-        entries = _split_part_entries(part)
+        entries = _split_exprs(part or "")
         t = engine.register_snapshot_table(
             name, engine.snapshot_table_path(name)
         )
@@ -1524,7 +1446,7 @@ def dispatch_statement(
     m = _CREATE_RE.match(text)
     if m and engine is not None:
         or_replace, if_not_exists, name, part_spec, query = m.groups()
-        ctas_entries = _split_part_entries(part_spec)
+        ctas_entries = _split_exprs(part_spec or "")
         if getattr(engine, "view_exists", lambda _n: False)(name):
             raise ValueError(
                 f"a view named '{name}' exists; a table cannot shadow it"
@@ -2356,13 +2278,7 @@ def dispatch_statement(
         body = m.group(2)
         # split SET-list from WHERE on the MASKED text: a 'WHERE' inside
         # a string literal or parens is data, not the clause boundary
-        masked_body = _masked(body)
-        body_depths = _depths(masked_body)
-        wheres = [
-            w
-            for w in re.finditer(r"\bWHERE\b", masked_body, re.IGNORECASE)
-            if body_depths[w.start()] == 0
-        ]
+        wheres = _depth0_matches(r"\bWHERE\b", body)
         if wheres:
             set_text = body[: wheres[0].start()]
             cond = body[wheres[0].end():].strip()
@@ -2413,15 +2329,10 @@ def dispatch_statement(
         # literal inside the condition is not the boundary (the
         # module's masked-scan contract)
         body = m.group(2)
-        bmask = _masked(body)
-        bdepths = _depths(bmask)
         split = next(
             (
                 w.start()
-                for w in re.finditer(
-                    r"\b(?:SELECT|VALUES)\b", bmask, re.IGNORECASE
-                )
-                if bdepths[w.start()] == 0
+                for w in _depth0_matches(r"\b(?:SELECT|VALUES)\b", body)
             ),
             None,
         )

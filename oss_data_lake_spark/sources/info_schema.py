@@ -48,6 +48,8 @@ import itertools
 import re
 from typing import TYPE_CHECKING
 
+from oss_data_lake_spark.sqltext import _masked, _sub_outside_literals
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
@@ -284,11 +286,6 @@ def expand_information_schema(engine, text: str) -> tuple[str, list[str]]:
     text, so the spelling inside a string literal or comment is data."""
     if "information_schema" not in text.lower():
         return text, []
-    from oss_data_lake_spark.sources.snapshots import (
-        _masked,
-        _sub_outside_literals,
-    )
-
     if _IS_WRITE_TARGET_RE.match(_masked(text)):
         raise ValueError(
             "information_schema is reserved and read-only — it cannot be "

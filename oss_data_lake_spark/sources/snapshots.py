@@ -67,6 +67,13 @@ from oss_data_lake_spark.sources.catalog import (
     CommitProtocol,
     LocalFsCommitProtocol,
 )
+from oss_data_lake_spark.sqltext import (
+    _depths,
+    _literal_spans,
+    _masked,
+    _starts_in_literal,
+    _sub_outside_literals,
+)
 
 # Iceberg's safe type promotions (spec §Schemas: int→long, float→double,
 # decimal precision widening — we support the primitive pair plus the
@@ -6622,44 +6629,6 @@ def snapshot_view(
     return view_name
 
 
-_LITERAL_RE = re.compile(
-    # single-quoted strings ('' and \' escapes), double-quoted strings
-    # (Spark's default non-ANSI mode reads them as literals; in ANSI mode
-    # they are identifiers — not rewriting inside either is sound),
-    # line comments, block comments
-    r"'(?:[^'\\]|\\.|'')*'"
-    r'|"(?:[^"\\]|\\.)*"'
-    r"|--[^\n]*"
-    r"|/\*.*?\*/",
-    re.DOTALL,
-)
-
-
-def _literal_spans(text: str) -> list[tuple[int, int]]:
-    """Spans of SQL string literals and comments. AS-OF-shaped text INSIDE
-    one is data — a rewrite that fired there would silently change
-    predicate values (or trip over commented-out SQL). The guard is on
-    match START position, not segment splitting, because the timestamp
-    form's own ``'<iso>'`` argument is itself a literal the clause regex
-    must be allowed to consume."""
-    return [m.span() for m in _LITERAL_RE.finditer(text)]
-
-
-def _starts_in_literal(pos: int, spans: list[tuple[int, int]]) -> bool:
-    return any(a < pos < b for a, b in spans)
-
-
-def _sub_outside_literals(pattern: "re.Pattern[str]", repl, text: str) -> str:
-    spans = _literal_spans(text)
-
-    def guarded(m: "re.Match[str]") -> str:
-        if _starts_in_literal(m.start(), spans):
-            return m.group(0)
-        return repl(m)
-
-    return pattern.sub(guarded, text)
-
-
 # ------------------------------------------- SQL-text predicate pruning
 #
 # The reference's primary persona is a BI tool issuing plain SQL
@@ -6719,33 +6688,6 @@ _NULL_RE = re.compile(
 _ANY_LIT_RE = re.compile(_ANY_LIT, re.IGNORECASE)
 _AND_RE = re.compile(r"\bAND\b", re.IGNORECASE)
 _BETWEEN_KW_RE = re.compile(r"\bBETWEEN\b", re.IGNORECASE)
-
-
-def _masked(text: str) -> str:
-    """``text`` with string literals and comments blanked (same length):
-    structural scans — keywords, parens, name references — must not see
-    inside literals. Predicate VALUES are read from the original text at
-    the same offsets."""
-    out = list(text)
-    for a, b in _literal_spans(text):
-        for i in range(a, b):
-            if out[i] not in "\n":
-                out[i] = " "
-    return "".join(out)
-
-
-def _depths(masked: str) -> list[int]:
-    """Paren depth BEFORE each character position."""
-    depths = []
-    d = 0
-    for ch in masked:
-        depths.append(d)
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d = max(0, d - 1)
-    depths.append(d)
-    return depths
 
 
 def _parse_sql_literal(tok: str):

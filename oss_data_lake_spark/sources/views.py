@@ -31,6 +31,8 @@ import os
 import re
 import tempfile
 
+from oss_data_lake_spark.sqltext import _literal_spans
+
 _VIEW_NAME_RE = re.compile(r"^[A-Za-z_][\w.]*$")
 
 
@@ -106,11 +108,11 @@ class ViewCatalog:
             raise ValueError(f"view '{name}' does not exist")
 
 
-def referenced_views(text: str, names: list[str], literal_spans) -> list[str]:
+def referenced_views(text: str, names: list[str]) -> list[str]:
     """View names from ``names`` referenced by ``text`` outside string
     literals — the same masked-scan discipline every statement rewrite
     here uses (``'... FROM v'`` inside a literal stays data)."""
-    spans = literal_spans(text)
+    spans = _literal_spans(text)
     hits = []
     for name in names:
         for m in re.finditer(rf"\b{re.escape(name)}\b", text):

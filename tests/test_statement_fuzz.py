@@ -6,7 +6,8 @@ AS-OF-shaped text could misroute a statement before Spark's parser sees
 it. These properties pin the masked-scan discipline:
 
 - pure-string invariants of ``_masked`` / ``_literal_spans`` /
-  ``split_statements`` over generated literal/code interleavings;
+  ``split_statements`` / ``split_top`` / ``close_paren`` over generated
+  literal/code interleavings;
 - rewrite guards: AS-OF / ``t$files`` / ``table_changes`` shaped text
   INSIDE a literal stays data, verbatim;
 - a DIFFERENTIAL harness where Spark itself is the oracle: random WHERE
@@ -32,10 +33,13 @@ from pyspark.sql import functions as F
 
 from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.sources.dml_sql import split_statements
-from oss_data_lake_spark.sources.snapshots import (
-    SnapshotTable,
+from oss_data_lake_spark.sources.snapshots import SnapshotTable
+from oss_data_lake_spark.sqltext import (
+    _depths,
     _literal_spans,
     _masked,
+    close_paren,
+    split_top,
 )
 
 # ----------------------------------------------------------- generators
@@ -74,7 +78,7 @@ def _quote(p: str) -> str:
 # code fragments that are structurally meaningful to the masker
 _code = st.sampled_from([
     "SELECT k FROM t", " WHERE k = 1", " AND d < 2.5", " OR s IS NULL",
-    " GROUP BY k", " ORDER BY k", " LIMIT 3", " (", " )", " ",
+    " GROUP BY k", " ORDER BY k", " LIMIT 3", " (", " )", " ", " ,",
     "UPDATE t SET", "DELETE FROM t",
 ])
 
@@ -138,8 +142,6 @@ def test_split_statements_never_splits_inside_literals(cases):
     # reconstruction: concatenating the pieces equals the script with
     # the masked depth-0 separators and whitespace removed — no literal
     # content is ever lost or truncated by the split
-    from oss_data_lake_spark.sources.dml_sql import _depths
-
     depths = _depths(masked)
     kept = "".join(
         ch
@@ -148,6 +150,59 @@ def test_split_statements_never_splits_inside_literals(cases):
     )
     squash = lambda s: "".join(s.split())  # noqa: E731
     assert squash("".join(out)) == squash(kept)
+
+
+def _in_literal(i: int, spans: list[tuple[int, int]]) -> bool:
+    return any(a <= i < b for a, b in spans)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(interleaved(), min_size=1, max_size=5),
+       st.sampled_from([",", ";"]))
+def test_split_top_cuts_only_depth0_code_separators(cases, sep):
+    text = sep.join(t for t, _l in cases)
+    pieces = split_top(text, sep)
+    # the pieces rejoined with the separator give back the input
+    assert sep.join(pieces) == text
+    spans = _literal_spans(text)
+    depths = _depths(_masked(text))
+    cuts, pos = [], 0
+    for piece in pieces[:-1]:
+        pos += len(piece)
+        cuts.append(pos)
+        pos += 1
+    # every cut is a separator outside literals/comments at depth 0 …
+    for c in cuts:
+        assert text[c] == sep and not _in_literal(c, spans), (text, c)
+        assert depths[c] == 0, (text, c)
+    # … and every such separator is a cut
+    assert cuts == [
+        i for i, ch in enumerate(text)
+        if ch == sep and depths[i] == 0 and not _in_literal(i, spans)
+    ]
+
+
+@settings(max_examples=300, deadline=None)
+@given(interleaved())
+def test_close_paren_lands_on_the_matching_code_paren(case):
+    text, _lits = case
+    masked = _masked(text)
+    spans = _literal_spans(text)
+    depths = _depths(masked)
+    for p, ch in enumerate(masked):
+        if ch != "(":
+            continue
+        j = close_paren(masked, p + 1)
+        inside = depths[p + 1:]
+        if j is None:
+            # unbalanced: the depth never drops back to the open's level
+            assert min(inside) > depths[p], (text, p)
+            continue
+        # a `)` outside literals, back at the open paren's depth, with
+        # the depth never dropping to that level in between
+        assert text[j - 1] == ")" and not _in_literal(j - 1, spans)
+        assert depths[j] == depths[p], (text, p, j)
+        assert min(depths[p + 1: j]) > depths[p], (text, p, j)
 
 
 @settings(max_examples=200, deadline=None)

@@ -867,3 +867,43 @@ class TestLambdaMatchAndJsonPassthrough:
             "'json_parse(z)' AS t"
         ).collect()[0]
         assert (row.s, row.t) == ("any_match(x, y)", "json_parse(z)")
+
+
+# -- the translator chain is one loop per translator, not one recursion
+# level per call site: a statement's call-site count bounds neither the
+# stack depth nor the times the whole text is masked again
+
+def _strpos_statement(n: int) -> tuple[str, str]:
+    sites = [f"strpos(name,'x{k}') AS c{k}" for k in range(n)]
+    want = [f"locate('x{k}', name) AS c{k}" for k in range(n)]
+    return (
+        f"SELECT {', '.join(sites)} FROM t",
+        f"SELECT {', '.join(want)} FROM t",
+    )
+
+
+def test_many_call_sites_translate_without_recursion(eng):
+    text, want = _strpos_statement(1200)
+    assert eng._translate_chain(text) == want
+
+
+def test_chain_masks_each_statement_a_bounded_number_of_times(
+    eng, monkeypatch
+):
+    """Every mask and literal scan reads the text through
+    ``sqltext._LITERAL_RE``; count the characters it is handed."""
+    from oss_data_lake_spark import sqltext
+
+    class Counting:
+        def __init__(self, rx):
+            self.rx, self.chars = rx, 0
+
+        def finditer(self, text, *args):
+            self.chars += len(text)
+            return self.rx.finditer(text, *args)
+
+    counting = Counting(sqltext._LITERAL_RE)
+    monkeypatch.setattr(sqltext, "_LITERAL_RE", counting)
+    text, want = _strpos_statement(500)
+    assert eng._translate_chain(text) == want
+    assert counting.chars <= 20 * len(text), counting.chars / len(text)
