@@ -7,7 +7,7 @@ oracle entry gets the driver's weaker rows-only check).
 Two registries:
 
 - ``all_queries()`` / ``all_oracles()`` — EVERY fine-grained query. This is
-  what pytest's oracle-parity suite verifies and what bench.py draws from.
+  what pytest's oracle-parity suite verifies.
 - ``driver_queries()`` / ``driver_oracles()`` — the ≤50-entry registry the
   driver sees. The driver's CORRECTNESS pass verifies only the FIRST 50
   registry entries (hard count cap — rounds 1 and 2 both recorded exactly

@@ -12,10 +12,10 @@ is asserted at runtime in ``operators.driver_queries``); the driver
 registry itself must stay ≤ 50 entries.
 
 The consolidation keeps every fine-grained query and oracle in its module
-(pytest's oracle-parity suite still verifies ALL of them individually, and
-bench.py still times them), while the DRIVER registry replaces groups of
-related tier-A/B coverage queries with composite queries: each member's
-result is projected onto one shared long-format schema
+(pytest's oracle-parity suite still verifies ALL of them individually),
+while the DRIVER registry replaces groups of related tier-A/B coverage
+queries with composite queries: each member's result is projected onto
+one shared long-format schema
 
     (section, k1, k2, v1, v2, v3, v4, s1)
 

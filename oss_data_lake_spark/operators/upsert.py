@@ -734,8 +734,8 @@ M11_MAX_MOD = 97
 
 def subquery_dml_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """m11: DML with SUBQUERY conditions (Trino parity, round 8 —
-    ``delete_where_subquery`` / ``update_where_subquery`` routed by the
-    SQL layer): against a snapshot of orders,
+    ``delete_where`` / ``update_where`` with the SQL layer's ``run_sql``):
+    against a snapshot of orders,
 
     1. ``DELETE ... WHERE o_custkey IN (SELECT c_custkey FROM customers
        WHERE c_acctbal < 0)`` — a semi-join delete keyed by another

@@ -552,11 +552,30 @@ def _rewrite_scoped(
     return out
 
 
+# the result columns a row-level DML can report, in output order: each
+# writer's info carries its own subset (copy-on-write: rewritten/skipped
+# files; position deletes: scanned/skipped files and mode; equality
+# deletes: keys and mode; the merge-on-read upsert: mode)
+_RESULT_COLUMNS = (
+    ("version", "long"), ("files_rewritten", "long"),
+    ("files_scanned", "long"), ("files_skipped", "long"),
+    ("n_keys", "long"), ("mode", "string"),
+)
+
+
 def _metrics_df(spark: SparkSession, info: dict) -> DataFrame:
+    cols = [(k, t) for k, t in _RESULT_COLUMNS if k in info]
     return spark.createDataFrame(
-        [(info["version"], info["files_rewritten"], info["files_skipped"])],
-        "version long, files_rewritten long, files_skipped long",
+        [tuple(info[k] for k, _ in cols)],
+        ", ".join(f"{k} {t}" for k, t in cols),
     )
+
+
+def _merge_on_read(t: SnapshotTable) -> bool:
+    """Whether row-level DML on ``t`` writes delete files instead of
+    rewriting data files (``delete.mode = merge-on-read``); read once
+    per statement."""
+    return t.properties().get("delete.mode") == "merge-on-read"
 
 
 def _require(tables: dict[str, SnapshotTable], name: str, stmt: str):
@@ -853,7 +872,7 @@ def _run_merge(
                 pass  # best effort: the original error still raises
 
     if (
-        t.properties().get("delete.mode") == "merge-on-read"
+        _merge_on_read(t)
         and when_matched == "update"
         and when_not_matched == "insert"
         and matched_condition is None
@@ -874,9 +893,7 @@ def _run_merge(
         except Exception:
             _rollback_evolution()
             raise
-        return spark.createDataFrame(
-            [(info["version"], info["mode"])], "version long, mode string"
-        )
+        return _metrics_df(spark, info)
     try:
         info = t.merge_rows(
             src_df,
@@ -2211,6 +2228,7 @@ def dispatch_statement(
     if m:
         t = _require(tables, m.group(1), "DELETE FROM")
         cond = m.group(2) or "true"
+        stats = t.stats_columns()
         if _SUBQUERY_RE.search(_masked(cond)):
             # Trino accepts subqueries in DML conditions; always a
             # copy-on-write rewrite (a tombstone write would still have
@@ -2219,18 +2237,17 @@ def dispatch_statement(
                 sql_with_time_travel,
             )
 
-            info = t.delete_where_subquery(
+            info = t.delete_where(
                 cond,
-                lambda q: sql_with_time_travel(spark, q, tables),
-                stats_for=sorted(t.stats_columns()),
+                prune_preds=subquery_free_conjunct_ranges(cond, stats)
+                or None,
+                stats_for=sorted(stats),
+                run_sql=lambda q: sql_with_time_travel(spark, q, tables),
                 alias=m.group(1),
-                prune_preds=subquery_free_conjunct_ranges(
-                    cond, t.stats_columns()
-                ) or None,
             )
             return _metrics_df(spark, info)
-        preds = conjunct_ranges(cond, t.stats_columns())
-        if t.properties().get("delete.mode") == "merge-on-read":
+        preds = conjunct_ranges(cond, stats)
+        if _merge_on_read(t):
             schema = t.schema()
             probe = eq_delete_probe(
                 cond, {f.name for f in schema.fields} if schema else set()
@@ -2256,20 +2273,12 @@ def dispatch_statement(
             if probe is not None:
                 # scan-free keyed delete: just the key tuples land
                 info = t.delete_where_eq(cols, rows)
-                return spark.createDataFrame(
-                    [(info["version"], info["n_keys"], info["mode"])],
-                    "version long, n_keys long, mode string",
-                )
-            info = t.delete_where_mor(cond, prune_preds=preds)
-            return spark.createDataFrame(
-                [(info["version"], info["files_scanned"],
-                  info["files_skipped"], info["mode"])],
-                "version long, files_scanned long, files_skipped long, "
-                "mode string",
+            else:
+                info = t.delete_where_mor(cond, prune_preds=preds)
+        else:
+            info = t.delete_where(
+                cond, prune_preds=preds, stats_for=sorted(stats)
             )
-        info = t.delete_where(
-            cond, prune_preds=preds, stats_for=sorted(t.stats_columns())
-        )
         return _metrics_df(spark, info)
 
     m = _UPDATE_RE.match(text)
@@ -2285,38 +2294,33 @@ def dispatch_statement(
         else:
             set_text, cond = body, "true"
         assigns = _split_assignments(set_text)
+        stats = t.stats_columns()
         if _SUBQUERY_RE.search(_masked(cond)):
             from oss_data_lake_spark.sources.snapshots import (
                 sql_with_time_travel,
             )
 
-            info = t.update_where_subquery(
+            info = t.update_where(
                 cond,
                 assigns,
-                lambda q: sql_with_time_travel(spark, q, tables),
-                stats_for=sorted(t.stats_columns()),
+                prune_preds=subquery_free_conjunct_ranges(cond, stats)
+                or None,
+                stats_for=sorted(stats),
+                run_sql=lambda q: sql_with_time_travel(spark, q, tables),
                 alias=m.group(1),
-                prune_preds=subquery_free_conjunct_ranges(
-                    cond, t.stats_columns()
-                ) or None,
             )
-            return _metrics_df(spark, info)
-        preds = conjunct_ranges(cond, t.stats_columns())
-        if t.properties().get("delete.mode") == "merge-on-read":
+        elif _merge_on_read(t):
             info = t.update_where_mor(
-                cond, assigns, prune_preds=preds,
-                stats_for=sorted(t.stats_columns()),
+                cond, assigns,
+                prune_preds=conjunct_ranges(cond, stats),
+                stats_for=sorted(stats),
             )
-            return spark.createDataFrame(
-                [(info["version"], info["files_scanned"],
-                  info["files_skipped"], info["mode"])],
-                "version long, files_scanned long, files_skipped long, "
-                "mode string",
+        else:
+            info = t.update_where(
+                cond, assigns,
+                prune_preds=conjunct_ranges(cond, stats),
+                stats_for=sorted(stats),
             )
-        info = t.update_where(
-            cond, assigns, prune_preds=preds,
-            stats_for=sorted(t.stats_columns()),
-        )
         return _metrics_df(spark, info)
 
     m = _INSERT_REPLACE_RE.match(text)

@@ -52,7 +52,9 @@ parquet reader over the manifest's directories.
 from __future__ import annotations
 
 import datetime
+import functools
 import json
+import operator
 import os
 import re
 import time
@@ -1217,13 +1219,12 @@ class SnapshotTable:
     #     VALIDATED row-wise (null-safe equality, one batched pass with
     #     the CHECK constraints' cost shape) — an inconsistent write
     #     refuses, never silently lands,
-    #   - copy-on-write UPDATE recomputes fired rows after assignments
-    #     (Delta's recompute); assigning a generated column directly
-    #     refuses,
-    #   - merge-on-read / subquery UPDATE and MERGE refuse assignments
-    #     to a generated column OR its input columns (conservative: the
-    #     recompute projection is a CoW-path feature; the error names
-    #     the copy-on-write escape),
+    #   - UPDATE recomputes fired rows after assignments (Delta's
+    #     recompute), subquery conditions included; assigning a
+    #     generated column directly refuses,
+    #   - merge-on-read UPDATE and MERGE refuse assignments to a
+    #     generated column OR its input columns (conservative; the error
+    #     names the copy-on-write escape),
     #   - RENAME of the column or any input refuses (the stored
     #     expression is text); DROP COLUMN of an input refuses while
     #     the rule exists; dropping the generated column drops the
@@ -1231,9 +1232,13 @@ class SnapshotTable:
 
     def generated_columns(self, version: int | None = None) -> dict[str, str]:
         """``{name: sql_expr}`` for GENERATED ALWAYS AS columns."""
+        return self._generated_of(self.column_defaults(version))
+
+    @staticmethod
+    def _generated_of(column_defaults: dict | None) -> dict[str, str]:
         return {
             n: e["generated"]
-            for n, e in self.column_defaults(version).items()
+            for n, e in (column_defaults or {}).items()
             if e.get("generated") is not None
         }
 
@@ -1243,9 +1248,17 @@ class SnapshotTable:
         """``{generated_name: {input column names}}`` — schema columns
         the stored expression references (masked word scan)."""
         schema = self.schema(version)
-        names = {f.name for f in schema.fields} if schema else set()
+        return self._generated_inputs(
+            self.generated_columns(version),
+            {f.name for f in schema.fields} if schema else set(),
+        )
+
+    @staticmethod
+    def _generated_inputs(
+        gens: dict[str, str], names: set[str]
+    ) -> dict[str, set[str]]:
         out: dict[str, set[str]] = {}
-        for g, expr in self.generated_columns(version).items():
+        for g, expr in gens.items():
             words = set(re.findall(r"[A-Za-z_]\w*", _masked(expr)))
             out[g] = (words & names) - {g}
         return out
@@ -2788,26 +2801,7 @@ class SnapshotTable:
         v = version if version is not None else self.current_version()
         if v is None:
             raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
-        target = self.schema(v)
-        if target is None:  # pre-evolution manifest
-            return self.spark.read.parquet(
-                *[os.path.join(self.path, d) for d in manifest["data_dirs"]]
-            )
-        dv_dirs = manifest.get("delete_dirs", [])
-        need_meta = bool(dv_dirs or manifest.get("eq_deletes"))
-        parts = self._scan_parts(manifest, target, with_meta=need_meta)
-        if not parts:
-            return self.spark.createDataFrame([], target)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if need_meta:
-            if dv_dirs:
-                out = self._apply_delete_vectors_keep_meta(out, dv_dirs)
-            out = self._apply_eq_deletes(out, manifest)
-            out = out.drop("__dv_file", "__dv_pos")
-        return out
+        return self._read_selection(v, None)
 
     # ------------------------------------------------ field-ID indirection
     #
@@ -3224,7 +3218,9 @@ class SnapshotTable:
         v = version if version is not None else self.current_version()
         if v is None:
             return []
-        m = self._manifest(v)
+        return self._partition_by_of(self._manifest(v))
+
+    def _partition_by_of(self, m: dict) -> list[str]:
         declared = m.get("declared_partition_by")
         if declared is not None:
             return list(declared)
@@ -3740,6 +3736,7 @@ class SnapshotTable:
         lower=None,
         upper=None,
         version: int | None = None,
+        manifest: dict | None = None,
     ) -> tuple[dict[str, list[str] | None], int, int]:
         """File-skipping scan plan for ``column BETWEEN lower AND upper``:
         returns ``(selection, files_selected, files_skipped)`` where
@@ -3747,8 +3744,10 @@ class SnapshotTable:
         meaning "whole directory" (no stats recorded — never skipped).
         Skips only files whose manifest bounds PROVE no row can match;
         soundness lives in ``skipping.file_may_match``. Range-only: a
-        point range gets no bloom check (``plan_pruned`` adds it)."""
-        return self._plan([("range", column, lower, upper)], version)
+        point range gets no bloom check (``plan_pruned`` adds it).
+        ``manifest``, when given, is the already-read manifest to plan
+        against (``version`` is then not consulted)."""
+        return self._plan([("range", column, lower, upper)], version, manifest)
 
     def plan_eq_scan(
         self, column: str, value, version: int | None = None
@@ -3771,23 +3770,28 @@ class SnapshotTable:
         self,
         preds: list,
         version: int | None = None,
+        manifest: dict | None = None,
     ) -> tuple[dict[str, list[str] | None], int, int]:
         """Multi-predicate scan plan: a file survives only if EVERY
         predicate admits it (conjunction semantics). Predicate forms
-        documented above ``plan_range_scan``. Same return shape."""
-        return self._plan([_as_test(p) for p in preds], version)
+        documented above ``plan_range_scan``. Same return shape and
+        ``manifest`` contract."""
+        return self._plan([_as_test(p) for p in preds], version, manifest)
 
     def _plan(
-        self, tests: list[tuple], version: int | None
+        self, tests: list[tuple], version: int | None,
+        manifest: dict | None = None,
     ) -> tuple[dict[str, list[str] | None], int, int]:
-        """The scan planner behind every ``plan_*`` entry point: one
-        manifest read, then per data dir one stats resolution and at
-        most one file universe. A file is kept only if every test
-        admits it; a dir no test can restrict stays ``None`` (whole)."""
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
+        """The scan planner behind every ``plan_*`` entry point: at most
+        one manifest read (none when the caller passes ``manifest``),
+        then per data dir one stats resolution and at most one file
+        universe. A file is kept only if every test admits it; a dir no
+        test can restrict stays ``None`` (whole)."""
+        if manifest is None:
+            v = version if version is not None else self.current_version()
+            if v is None:
+                raise ValueError(f"no snapshots at {self.path}")
+            manifest = self._manifest(v)
         # column → Spark simpleString type from the snapshot schema: a
         # column without one encodes its bounds by the default heuristic
         schema = manifest.get("schema")
@@ -4047,17 +4051,17 @@ class SnapshotTable:
         return self._read_selection(v, selection)
 
     def _read_selection(
-        self, version: int, selection: dict[str, list[str] | None]
+        self, version: int, selection: dict[str, list[str] | None] | None
     ) -> DataFrame:
-        """Union the scans of a pruned file selection, projected onto the
-        snapshot schema (empty selection → empty frame with that schema).
-        Same-schema unpartitioned dirs fold into one scan (_scan_parts)."""
+        """The live rows of a pruned file selection (None = every visible
+        file), projected onto the snapshot schema (empty selection →
+        empty frame with that schema)."""
         manifest = self._manifest(version)
-        target = self.schema(version)
-        if target is None:
+        schema = manifest.get("schema")
+        if schema is None:
             # pre-schema legacy manifest: such manifests never carry
             # stats, so every dir is whole (or the plan is vacuous)
-            if not all(v is None for v in selection.values()):
+            if selection and not all(v is None for v in selection.values()):
                 raise ValueError(
                     "pruned scan on a pre-schema manifest: no schema to "
                     "shape the result"
@@ -4065,22 +4069,77 @@ class SnapshotTable:
             return self.spark.read.parquet(
                 *[os.path.join(self.path, d) for d in manifest["data_dirs"]]
             )
+        target = T.StructType.fromJson(schema)
+        out = self._live_rows(manifest, target, selection)
+        return self.spark.createDataFrame([], target) if out is None else out
+
+    def _live_rows(
+        self,
+        manifest: dict,
+        target: T.StructType,
+        selection: dict[str, list[str] | None] | None = None,
+        keep_meta: bool = False,
+    ) -> DataFrame | None:
+        """The rows ``manifest`` shows of its ``selection`` (None = every
+        visible file), aligned onto ``target``: the scan parts unioned
+        (same-schema unpartitioned dirs fold into one scan), then the
+        manifest's delete vectors and equality deletes anti-joined out.
+        ``keep_meta`` keeps the ``__dv_file`` / ``__dv_pos`` coordinates;
+        otherwise they are read only when a delete needs them. None when
+        the selection leaves no file to scan."""
         dv_dirs = manifest.get("delete_dirs", [])
-        need_meta = bool(dv_dirs or manifest.get("eq_deletes"))
+        eqs = manifest.get("eq_deletes", [])
+        need_meta = keep_meta or bool(dv_dirs or eqs)
         parts = self._scan_parts(
             manifest, target, selection=selection, with_meta=need_meta
         )
         if not parts:
-            return self.spark.createDataFrame([], target)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if need_meta:
-            if dv_dirs:
-                out = self._apply_delete_vectors_keep_meta(out, dv_dirs)
-            out = self._apply_eq_deletes(out, manifest)
+            return None
+        out = functools.reduce(DataFrame.unionByName, parts)
+        if dv_dirs:
+            # AQE picks broadcast when the vectors are small (the usual
+            # case)
+            dv = self._read_delete_vectors(dv_dirs)
+            out = out.join(
+                dv,
+                (out["__dv_file"] == dv["file"])
+                & (out["__dv_pos"] == dv["pos"]),
+                "left_anti",
+            )
+        for e in eqs:
+            # a row drops iff its key tuple matches AND its source file
+            # lives in one of the delete's ``applies_dirs`` (rows
+            # appended after the delete are exempt — the sequencing rule)
+            if not e.get("applies_dirs"):
+                continue
+            keys, on = self._eq_key_join(out, manifest, e)
+            app = functools.reduce(operator.or_, [
+                out["__dv_file"].startswith(d + "/")
+                for d in e["applies_dirs"]
+            ])
+            out = out.join(keys, on & app, "left_anti")
+        if need_meta and not keep_meta:
             out = out.drop("__dv_file", "__dv_pos")
         return out
+
+    def _eq_key_join(
+        self, out: DataFrame, manifest: dict, entry: dict
+    ) -> tuple[DataFrame, F.Column]:
+        """``(keys, condition)`` joining ``out`` to one equality delete's
+        key file: the keys are explicitly broadcast (CDC-batch-sized by
+        design), and each key column is matched through its field id to
+        its CURRENT name, so a rename cannot detach the delete."""
+        keys = self.spark.read.parquet(
+            os.path.join(self.path, entry["dir"])
+        ).select(
+            *[F.col(w).alias(f"__eq_{j}") for j, w in enumerate(entry["cols"])]
+        ).distinct()
+        id2cur = {i: n for n, i in (manifest.get("field_ids") or {}).items()}
+        on = functools.reduce(operator.and_, [
+            out[id2cur.get(i, w)] == keys[f"__eq_{j}"]
+            for j, (w, i) in enumerate(zip(entry["cols"], entry["ids"]))
+        ])
+        return F.broadcast(keys), on
 
     def _read_dir(
         self, manifest: dict, rel_dir: str, files: list[str] | None = None
@@ -4187,16 +4246,6 @@ class SnapshotTable:
             *[os.path.join(self.path, d) for d in dv_dirs]
         )
 
-    def _apply_delete_vectors(self, out: DataFrame, dv_dirs: list[str]) -> DataFrame:
-        """Anti-join the (meta-carrying) scan against the tombstones;
-        AQE picks broadcast when the vectors are small (the usual case)."""
-        dv = self._read_delete_vectors(dv_dirs)
-        return out.join(
-            dv,
-            (out["__dv_file"] == dv["file"]) & (out["__dv_pos"] == dv["pos"]),
-            "left_anti",
-        ).drop("__dv_file", "__dv_pos")
-
     @staticmethod
     def _recordable_dv_candidates(
         selection: dict, cap: int = 256
@@ -4217,238 +4266,6 @@ class SnapshotTable:
             out[d] = list(fl)
         return out
 
-    def delete_where_mor(
-        self,
-        condition: "str | F.Column",
-        prune_column: str | None = None,
-        prune_lower=None,
-        prune_upper=None,
-        prune_preds: list | None = None,
-    ) -> dict:
-        """MERGE-ON-READ ``DELETE``: write (file, position) tombstones for
-        the matching rows instead of rewriting their files. Same pruning
-        contract as ``delete_where``; cost is one pruned scan + a tiny
-        parquet write, independent of how large the candidate FILES are.
-        Readers pay an anti-join until ``compact()`` materializes the
-        deletes. Returns ``{"version", "files_scanned", "files_skipped",
-        "mode": "merge-on-read"}``."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        last_err: Exception | None = None
-        for _attempt in range(self._DML_RETRIES):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"no snapshots at {self.path}")
-            target = self.schema(v)
-            if target is None:
-                raise ValueError("MoR delete needs a schema-carrying snapshot")
-            manifest = self._manifest(v)
-            self._require_local_dirs(manifest, "merge-on-read DELETE")
-            selection, n_sel, n_skip = self._dml_plan(
-                v, prune_preds, prune_column, prune_lower, prune_upper
-            )
-            parts = self._scan_parts(
-                manifest, target, selection=selection, with_meta=True
-            )
-            if not parts:
-                return {
-                    "version": v, "files_scanned": n_sel,
-                    "files_skipped": n_skip, "mode": "merge-on-read",
-                }
-            cand = parts[0]
-            for p in parts[1:]:
-                cand = cand.unionByName(p)
-            dv_dirs = manifest.get("delete_dirs", [])
-            if dv_dirs:
-                cand = self._apply_delete_vectors_keep_meta(cand, dv_dirs)
-            cand = self._apply_eq_deletes(cand, manifest)
-            tombstones = (
-                cand.filter(F.coalesce(cond, F.lit(False)))
-                .select(
-                    F.col("__dv_file").alias("file"),
-                    F.col("__dv_pos").alias("pos"),
-                )
-            )
-            new_dir = f"deletes/dv{v + 1}-{uuid.uuid4().hex[:8]}"
-            tombstones.write.mode("errorifexists").parquet(
-                os.path.join(self.path, new_dir)
-            )
-            dv_cands = self._recordable_dv_candidates(selection)
-
-            def build(parent: int | None, read_manifest) -> dict:
-                if parent != v:
-                    raise CommitConflict(
-                        f"planned against v{v}, head is v{parent}"
-                    )
-                m = dict(read_manifest(v))
-                if dv_cands is not None:
-                    m["dv_candidates"] = {
-                        **m.get("dv_candidates", {}), new_dir: dv_cands,
-                    }
-                m["delete_dirs"] = m.get("delete_dirs", []) + [new_dir]
-                m["version"] = v + 1
-                m["parent"] = v
-                m["mode"] = "delete_mor"
-                m["txn"] = None
-                m["txn_watermarks"] = self._txn_watermarks(v)
-                m["committed_at_ms"] = int(time.time() * 1000)
-                return m
-
-            try:
-                version = self.protocol.commit(build)
-                return {
-                    "version": version,
-                    "files_scanned": n_sel,
-                    "files_skipped": n_skip,
-                    "mode": "merge-on-read",
-                }
-            except CommitConflict as e:
-                last_err = e
-        raise CommitConflict(
-            f"MoR delete on {self.path} lost {self._DML_RETRIES} retries"
-        ) from last_err
-
-    def update_where_mor(
-        self,
-        condition: "str | F.Column",
-        assignments: dict[str, "str | F.Column"],
-        prune_column: str | None = None,
-        prune_lower=None,
-        prune_upper=None,
-        prune_preds: list | None = None,
-        stats_for: list[str] | None = None,
-    ) -> dict:
-        """MERGE-ON-READ ``UPDATE``: tombstone the matching rows and
-        append their updated versions — ONE atomic commit, zero candidate
-        files rewritten (Delta's deletion-vector update). Write volume is
-        O(matched rows), not O(candidate files). Assignments see the
-        pre-update row; constraints gate the updated rows."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        target_now = self.schema()
-        if target_now is not None:
-            unknown = set(assignments) - {f.name for f in target_now.fields}
-            if unknown:
-                raise ValueError(
-                    f"UPDATE assigns unknown columns: {sorted(unknown)}"
-                )
-        self._refuse_generated_assignments(
-            assignments, direct=True, inputs_too=True
-        )
-        last_err: Exception | None = None
-        for _attempt in range(self._DML_RETRIES):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"no snapshots at {self.path}")
-            target = self.schema(v)
-            if target is None:
-                raise ValueError("MoR update needs a schema-carrying snapshot")
-            manifest = self._manifest(v)
-            self._require_local_dirs(manifest, "merge-on-read UPDATE")
-            selection, n_sel, n_skip = self._dml_plan(
-                v, prune_preds, prune_column, prune_lower, prune_upper
-            )
-            parts = self._scan_parts(
-                manifest, target, selection=selection, with_meta=True
-            )
-            if not parts:
-                return {
-                    "version": v, "files_scanned": n_sel,
-                    "files_skipped": n_skip, "mode": "merge-on-read",
-                }
-            cand = parts[0]
-            for p in parts[1:]:
-                cand = cand.unionByName(p)
-            dv_dirs = manifest.get("delete_dirs", [])
-            if dv_dirs:
-                cand = self._apply_delete_vectors_keep_meta(cand, dv_dirs)
-            cand = self._apply_eq_deletes(cand, manifest)
-            matched = cand.filter(F.coalesce(cond, F.lit(False)))
-            out_cols = []
-            for f in target.fields:
-                a = assignments.get(f.name)
-                if a is None:
-                    out_cols.append(F.col(f.name))
-                else:
-                    expr = F.expr(a) if isinstance(a, str) else a
-                    out_cols.append(expr.cast(f.dataType).alias(f.name))
-            updated = matched.select(*out_cols)
-            cons = self.constraints(v)
-            if cons:
-                self._enforce(cons, updated, context="this update")
-            new_dv = f"deletes/dv{v + 1}-{uuid.uuid4().hex[:8]}"
-            matched.select(
-                F.col("__dv_file").alias("file"),
-                F.col("__dv_pos").alias("pos"),
-            ).write.mode("errorifexists").parquet(
-                os.path.join(self.path, new_dv)
-            )
-            new_data = f"data/u{v + 1}-{uuid.uuid4().hex[:8]}"
-            self._write_data_dir(updated, new_data)
-            own_stats = self._harvest_stats(new_data, stats_for, None)
-            dv_cands = self._recordable_dv_candidates(selection)
-
-            def build(parent: int | None, read_manifest) -> dict:
-                if parent != v:
-                    raise CommitConflict(
-                        f"planned against v{v}, head is v{parent}"
-                    )
-                m = dict(read_manifest(v))
-                if dv_cands is not None:
-                    m["dv_candidates"] = {
-                        **m.get("dv_candidates", {}), new_dv: dv_cands,
-                    }
-                m["delete_dirs"] = m.get("delete_dirs", []) + [new_dv]
-                m["data_dirs"] = m["data_dirs"] + [new_data]
-                m["partition_specs"] = {
-                    **m.get("partition_specs", {}), new_data: [],
-                }
-                m["dir_schemas"] = {
-                    **m.get("dir_schemas", {}), new_data: target.jsonValue(),
-                }
-                if m.get("field_ids"):
-                    m["dir_field_ids"] = {
-                        **m.get("dir_field_ids", {}),
-                        new_data: {
-                            f.name: m["field_ids"][f.name]
-                            for f in target.fields
-                            if f.name in m["field_ids"]
-                        },
-                    }
-                if own_stats:
-                    m["file_stats"] = {
-                        **m.get("file_stats", {}), new_data: own_stats,
-                    }
-                m["version"] = v + 1
-                m["parent"] = v
-                m["mode"] = "update_mor"
-                m["txn"] = None
-                m["txn_watermarks"] = self._txn_watermarks(v)
-                m["committed_at_ms"] = int(time.time() * 1000)
-                return m
-
-            try:
-                version = self.protocol.commit(build)
-                return {
-                    "version": version,
-                    "files_scanned": n_sel,
-                    "files_skipped": n_skip,
-                    "mode": "merge-on-read",
-                }
-            except CommitConflict as e:
-                last_err = e
-        raise CommitConflict(
-            f"MoR update on {self.path} lost {self._DML_RETRIES} retries"
-        ) from last_err
-
-    def _apply_delete_vectors_keep_meta(
-        self, out: DataFrame, dv_dirs: list[str]
-    ) -> DataFrame:
-        dv = self._read_delete_vectors(dv_dirs)
-        return out.join(
-            dv,
-            (out["__dv_file"] == dv["file"]) & (out["__dv_pos"] == dv["pos"]),
-            "left_anti",
-        )
-
     # ------------------------------------------------- equality deletes
     #
     # Iceberg v2's SECOND delete-file kind: where a position delete needs
@@ -4463,140 +4280,6 @@ class SnapshotTable:
     # each outstanding delete's broadcast keys against the applicable
     # dirs only; ``compact`` materializes and clears them (and the
     # tombstone-ratio policy triggers that automatically).
-
-    def delete_where_eq(
-        self, columns: "str | list[str]", keys
-    ) -> dict:
-        """Keyed DELETE as an equality-delete file: drop every CURRENT
-        row whose ``columns`` tuple appears in ``keys`` (a DataFrame of
-        key tuples, a list of scalars for one column, or a list of
-        tuples). No data file is read or written — one tiny parquet of
-        keys plus a metadata commit. Returns ``{"version", "n_keys",
-        "mode": "equality-delete"}``."""
-        cols = [columns] if isinstance(columns, str) else list(columns)
-        if not cols:
-            raise ValueError("equality delete needs at least one column")
-        if isinstance(keys, DataFrame):
-            key_df = keys.select(*cols).distinct()
-        else:
-            rows = [
-                tuple(k) if isinstance(k, (tuple, list)) else (k,)
-                for k in keys
-            ]
-            if not rows:
-                raise ValueError("equality delete needs at least one key")
-            target_now = self.schema()
-            if target_now is None:
-                raise ValueError(f"no snapshots at {self.path}")
-            ftypes = {f.name: f.dataType for f in target_now.fields}
-            missing = [c for c in cols if c not in ftypes]
-            if missing:
-                raise ValueError(f"no such columns: {missing}")
-            # SQL-parsed literals arrive as raw Python str/int/float
-            # (DELETE ... WHERE ts = TIMESTAMP '...' yields a str);
-            # coerce each value to the column's declared type so the
-            # typed createDataFrame below never trips Spark's verifier
-            rows = [
-                tuple(
-                    _coerce_key_value(v, ftypes[c])
-                    for v, c in zip(r, cols)
-                )
-                for r in rows
-            ]
-            key_df = self.spark.createDataFrame(
-                rows, T.StructType(
-                    [T.StructField(c, ftypes[c], True) for c in cols]
-                )
-            ).distinct()
-        last_err: Exception | None = None
-        for _attempt in range(self._DML_RETRIES):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"no snapshots at {self.path}")
-            manifest = self._manifest(v)
-            self._require_local_dirs(manifest, "equality DELETE")
-            fids = manifest.get("field_ids") or {}
-            ids = [fids.get(c) for c in cols]
-            if any(i is None for i in ids):
-                raise ValueError(
-                    f"equality delete on {cols}: not all columns carry "
-                    f"field ids (legacy manifest — recommit first)"
-                )
-            new_dir = f"deletes/eq{v + 1}-{uuid.uuid4().hex[:8]}"
-            key_df.coalesce(1).write.mode("errorifexists").parquet(
-                os.path.join(self.path, new_dir)
-            )
-            entry = {
-                "dir": new_dir,
-                "cols": cols,
-                "ids": ids,
-                "applies_dirs": list(manifest["data_dirs"]),
-            }
-            n_keys = key_df.count()
-
-            def build(parent: int | None, read_manifest) -> dict:
-                if parent != v:
-                    raise CommitConflict(
-                        f"planned against v{v}, head is v{parent}"
-                    )
-                m = dict(read_manifest(v))
-                m["eq_deletes"] = m.get("eq_deletes", []) + [entry]
-                m["version"] = v + 1
-                m["parent"] = v
-                m["mode"] = "delete_eq"
-                m["txn"] = None
-                m["txn_watermarks"] = self._txn_watermarks(v)
-                m["committed_at_ms"] = int(time.time() * 1000)
-                return m
-
-            try:
-                version = self.protocol.commit(build)
-                return {
-                    "version": version,
-                    "n_keys": n_keys,
-                    "mode": "equality-delete",
-                }
-            except CommitConflict as e:
-                last_err = e
-        raise CommitConflict(
-            f"equality delete on {self.path} lost {self._DML_RETRIES} retries"
-        ) from last_err
-
-    def _apply_eq_deletes(
-        self, out: DataFrame, manifest: dict
-    ) -> DataFrame:
-        """Anti-join the (meta-carrying) scan against every outstanding
-        equality delete: a row drops iff its key tuple matches AND its
-        source file lives in one of the delete's ``applies_dirs`` (rows
-        appended after the delete are exempt — the sequencing rule). Keys
-        are explicitly broadcast (CDC-batch-sized by design)."""
-        entries = manifest.get("eq_deletes", [])
-        if not entries:
-            return out
-        fids = manifest.get("field_ids") or {}
-        id2cur = {i: n for n, i in fids.items()}
-        for e in entries:
-            if not e.get("applies_dirs"):
-                continue
-            keys = self.spark.read.parquet(
-                os.path.join(self.path, e["dir"])
-            ).select(
-                *[
-                    F.col(w).alias(f"__eq_{j}")
-                    for j, w in enumerate(e["cols"])
-                ]
-            ).distinct()
-            cond = None
-            for j, (w, i) in enumerate(zip(e["cols"], e["ids"])):
-                cur = id2cur.get(i, w)
-                c = out[cur] == keys[f"__eq_{j}"]
-                cond = c if cond is None else (cond & c)
-            app = None
-            for d in e["applies_dirs"]:
-                s = out["__dv_file"].startswith(d + "/")
-                app = s if app is None else (app | s)
-            out = out.join(F.broadcast(keys), cond & app, "left_anti")
-        return out
 
     # past this many keys the IN-plan's O(keys x files) driver cost
     # stops paying for itself; the arm falls back to the whole applies
@@ -4635,7 +4318,7 @@ class SnapshotTable:
             fids = manifest.get("field_ids") or {}
             id2cur = {i: n for n, i in fids.items()}
             cur_name = id2cur.get(entry["ids"][0], entry["cols"][0])
-            insel = self._plan([("in", cur_name, keys)], mv)[0]
+            insel = self._plan([("in", cur_name, keys)], mv, manifest)[0]
         except (OSError, ValueError, KeyError):
             return sel  # pruning is best-effort; the scan stays sound
         for d, files in insel.items():
@@ -4673,16 +4356,18 @@ class SnapshotTable:
 
     def _eq_matched_rows(
         self, manifest: dict, entry: dict, target: T.StructType,
-        pre_state: bool,
         clip_to: dict | None = None,
         also_eqs: list | None = None,
         also_dvs: list | None = None,
     ) -> DataFrame:
         """Rows of ``manifest`` matched by ONE equality delete's keys
         within its ``applies_dirs`` — the change-feed primitive. The scan
-        applies the manifest's OWN delete state first (``pre_state``:
-        position vectors and, for resurrection reads, the other remaining
-        equality deletes), so already-removed rows never re-enter.
+        applies the manifest's OWN delete state first (position vectors
+        and the other remaining equality deletes), so already-removed
+        rows never re-enter. ``also_eqs``/``also_dvs``: sibling entries
+        changing in the SAME feed step, applied so each row
+        resurrects/deletes through exactly ONE arm (single-ownership —
+        dv arms and earlier eq arms outrank this one).
         Single-column deletes prune the applies scan through the key
         column's footer stats/blooms first (a file whose bounds exclude
         every key provably contributes no matched row), so the arm's
@@ -4691,147 +4376,20 @@ class SnapshotTable:
         sel = self._eq_arm_selection(manifest, entry)
         if clip_to is not None:
             sel = self._clip_selection_to(sel, manifest, clip_to)
-        scan = self._scan_parts(manifest, target, selection=sel, with_meta=True)
-        if not scan:
-            return self.spark.createDataFrame([], target)
-        out = scan[0]
-        for q in scan[1:]:
-            out = out.unionByName(q)
-        dv_dirs = list(manifest.get("delete_dirs", [])) + list(
-            also_dvs or []
-        )
-        if dv_dirs:
-            out = self._apply_delete_vectors_keep_meta(out, dv_dirs)
-        if pre_state:
-            others = dict(manifest)
-            # ``also_eqs``/``also_dvs``: sibling entries changing in the
-            # SAME feed step, applied so each row resurrects/deletes
-            # through exactly ONE arm (single-ownership — dv arms and
-            # earlier eq arms outrank this one)
-            others["eq_deletes"] = [
+        state = {
+            **manifest,
+            "delete_dirs": manifest.get("delete_dirs", []) + (also_dvs or []),
+            "eq_deletes": [
                 e for e in manifest.get("eq_deletes", [])
                 if e["dir"] != entry["dir"]
-            ] + list(also_eqs or [])
-            out = self._apply_eq_deletes(out, others)
-        keys = self.spark.read.parquet(
-            os.path.join(self.path, entry["dir"])
-        ).select(
-            *[F.col(w).alias(f"__eq_{j}") for j, w in enumerate(entry["cols"])]
-        ).distinct()
-        fids = manifest.get("field_ids") or {}
-        id2cur = {i: n for n, i in fids.items()}
-        cond = None
-        for j, (w, i) in enumerate(zip(entry["cols"], entry["ids"])):
-            cur = id2cur.get(i, w)
-            c = out[cur] == keys[f"__eq_{j}"]
-            cond = c if cond is None else (cond & c)
-        hit = out.join(F.broadcast(keys), cond, "left_semi")
+            ] + (also_eqs or []),
+        }
+        out = self._live_rows(state, target, sel)
+        if out is None:
+            return self.spark.createDataFrame([], target)
+        keys, on = self._eq_key_join(out, manifest, entry)
+        hit = out.join(keys, on, "left_semi")
         return hit.select(*[F.col(f.name) for f in target.fields])
-
-    def merge_rows_mor(
-        self,
-        source: DataFrame,
-        keys: list[str],
-        stats_for: list[str] | None = None,
-    ) -> dict:
-        """MERGE-ON-READ upsert (``WHEN MATCHED THEN UPDATE SET * /
-        WHEN NOT MATCHED THEN INSERT *``): ONE atomic commit writing an
-        equality-delete file on the source's key tuples plus the source
-        rows as a fresh data dir (exempt from the delete by sequencing).
-        Cost is O(source) — zero target files read or written: the
-        streaming-CDC-upsert primitive. Richer clause forms (DELETE
-        clauses, matched conditions) need the CoW ``merge_rows``."""
-        target_schema = self.schema()
-        if target_schema is None:
-            raise ValueError("merge_rows_mor needs a schema-carrying snapshot")
-        if self.generated_columns():
-            raise ValueError(
-                "merge-on-read upsert is not supported on a table with "
-                "GENERATED columns: the source rows would land "
-                "unvalidated — use copy-on-write MERGE with explicit "
-                "assignments, or INSERT INTO"
-            )
-        if set(source.columns) != set(f.name for f in target_schema.fields):
-            raise ValueError(
-                f"merge source schema mismatch: source={sorted(source.columns)}"
-                f" table={sorted(f.name for f in target_schema.fields)}"
-            )
-        src = self._align(source, target_schema)
-        last_err: Exception | None = None
-        for _attempt in range(self._DML_RETRIES):
-            v = self.current_version()
-            if v is None:
-                raise ValueError(f"no snapshots at {self.path}")
-            manifest = self._manifest(v)
-            self._require_local_dirs(manifest, "merge-on-read MERGE")
-            fids = manifest.get("field_ids") or {}
-            ids = [fids.get(k) for k in keys]
-            if any(i is None for i in ids):
-                raise ValueError(
-                    f"merge_rows_mor on {keys}: not all key columns carry "
-                    f"field ids (legacy manifest — recommit first)"
-                )
-            cons = self.constraints(v)
-            if cons:
-                self._enforce(cons, src, context="this merge")
-            eq_dir = f"deletes/eq{v + 1}-{uuid.uuid4().hex[:8]}"
-            src.select(*keys).distinct().coalesce(1).write.mode(
-                "errorifexists"
-            ).parquet(os.path.join(self.path, eq_dir))
-            data_dir = f"data/g{v + 1}-{uuid.uuid4().hex[:8]}"
-            self._write_data_dir(src, data_dir)
-            own_stats = self._harvest_stats(data_dir, stats_for, None)
-            entry = {
-                "dir": eq_dir,
-                "cols": list(keys),
-                "ids": ids,
-                "applies_dirs": list(manifest["data_dirs"]),
-            }
-
-            def build(parent: int | None, read_manifest) -> dict:
-                if parent != v:
-                    raise CommitConflict(
-                        f"planned against v{v}, head is v{parent}"
-                    )
-                m = dict(read_manifest(v))
-                m["eq_deletes"] = m.get("eq_deletes", []) + [entry]
-                m["data_dirs"] = m["data_dirs"] + [data_dir]
-                m["partition_specs"] = {
-                    **m.get("partition_specs", {}), data_dir: [],
-                }
-                m["dir_schemas"] = {
-                    **m.get("dir_schemas", {}),
-                    data_dir: target_schema.jsonValue(),
-                }
-                if m.get("field_ids"):
-                    m["dir_field_ids"] = {
-                        **m.get("dir_field_ids", {}),
-                        data_dir: {
-                            f.name: m["field_ids"][f.name]
-                            for f in target_schema.fields
-                            if f.name in m["field_ids"]
-                        },
-                    }
-                if own_stats:
-                    m["file_stats"] = {
-                        **m.get("file_stats", {}), data_dir: own_stats,
-                    }
-                m["version"] = v + 1
-                m["parent"] = v
-                m["mode"] = "merge_mor"
-                m["txn"] = None
-                m["txn_watermarks"] = self._txn_watermarks(v)
-                m["committed_at_ms"] = int(time.time() * 1000)
-                return m
-
-            try:
-                version = self.protocol.commit(build)
-                return {"version": version, "mode": "merge-on-read"}
-            except CommitConflict as e:
-                last_err = e
-        raise CommitConflict(
-            f"MoR merge on {self.path} lost {self._DML_RETRIES} retries"
-        ) from last_err
 
     def version_as_of(self, ts_ms: int) -> int:
         """The snapshot visible at epoch-millis ``ts_ms``: the LARGEST
@@ -5171,37 +4729,15 @@ class SnapshotTable:
         # already tombstoned or equality-deleted — they were never
         # visible)
         if any(s is None or s for s in removed_sel.values()):
-            p_dvs = p.get("delete_dirs", [])
-            meta = bool(p_dvs or p.get("eq_deletes"))
-            scan = self._scan_parts(
-                p, target, selection=removed_sel, with_meta=meta
-            )
-            if scan:
-                rm = scan[0]
-                for q in scan[1:]:
-                    rm = rm.unionByName(q)
-                if p_dvs:
-                    rm = self._apply_delete_vectors_keep_meta(rm, p_dvs)
-                if meta:
-                    rm = self._apply_eq_deletes(rm, p)
+            rm = self._live_rows(p, target, removed_sel)
+            if rm is not None:
                 parts.append(stamp(rm, "delete"))
         # files that BECAME visible → inserts (minus rows the child
         # already tombstones — e.g. a later feed pair's dv target;
         # equality deletes are dir-aware, so fresh dirs pass untouched)
         if any(s is None or s for s in added_sel.values()):
-            c_dvs = c.get("delete_dirs", [])
-            meta = bool(c_dvs or c.get("eq_deletes"))
-            scan = self._scan_parts(
-                c, target, selection=added_sel, with_meta=meta
-            )
-            if scan:
-                ad = scan[0]
-                for q in scan[1:]:
-                    ad = ad.unionByName(q)
-                if c_dvs:
-                    ad = self._apply_delete_vectors_keep_meta(ad, c_dvs)
-                if meta:
-                    ad = self._apply_eq_deletes(ad, c)
+            ad = self._live_rows(c, target, added_sel)
+            if ad is not None:
                 parts.append(stamp(ad, "insert"))
         # delete vectors that ARRIVED → deletes of surviving-file rows
         new_dvs = [
@@ -5253,7 +4789,7 @@ class SnapshotTable:
             parts.append(
                 stamp(
                     self._eq_matched_rows(
-                        p, e, target, pre_state=True, clip_to=c,
+                        p, e, target, clip_to=c,
                         also_eqs=arrived[:i],
                     ),
                     "delete",
@@ -5264,7 +4800,7 @@ class SnapshotTable:
             parts.append(
                 stamp(
                     self._eq_matched_rows(
-                        c, e, target, pre_state=True, clip_to=p,
+                        c, e, target, clip_to=p,
                         also_eqs=departed[:i],
                         also_dvs=gone_dvs,
                     ),
@@ -5319,18 +4855,15 @@ class SnapshotTable:
                         break
         if clip_to is not None:
             sel = self._clip_selection_to(sel, manifest, clip_to)
-        scan = self._scan_parts(manifest, target, selection=sel, with_meta=True)
-        if not scan:
-            return self.spark.createDataFrame([], target)
-        out = scan[0]
-        for q in scan[1:]:
-            out = out.unionByName(q)
         # the manifest's OWN equality deletes apply first: a row they
         # suppress is not visible on this side, so a vector that targets
         # it must not emit it (rollback to a version with outstanding
         # equality deletes — differential-found)
-        if manifest.get("eq_deletes"):
-            out = self._apply_eq_deletes(out, manifest)
+        out = self._live_rows(
+            {**manifest, "delete_dirs": []}, target, sel, keep_meta=True
+        )
+        if out is None:
+            return self.spark.createDataFrame([], target)
         hit = out.join(
             dv,
             (out["__dv_file"] == dv["file"]) & (out["__dv_pos"] == dv["pos"]),
@@ -5338,25 +4871,44 @@ class SnapshotTable:
         )
         return hit.select(*[F.col(f.name) for f in target.fields])
 
-    # ----------------------------------- row-level DML (copy-on-write)
+    # ------------------------------------------------------ row-level DML
     #
     # The Trino-over-Iceberg-v2 surface the reference engine exposes
     # (DELETE FROM / UPDATE / MERGE INTO, Trino 467 per reference
-    # docker-compose.yaml:153): committed files are never mutated.
-    # A rewrite (1) PRUNES the candidate file set through the manifest
-    # stats — only files whose bounds intersect the predicate are read,
-    # (2) rewrites the candidates' surviving/updated rows into a fresh
-    # data dir, and (3) publishes ONE atomic snapshot in which the
-    # candidate files are no longer visible (``dir_files`` shrink) and the
-    # replacement dir is. Non-candidate files are untouched — at 100 TB a
-    # keyed DELETE rewrites the few files the stats admit, not the table.
-    # Optimistic concurrency: the plan/rewrite runs lock-free against a
-    # pinned version; the metadata tail re-checks the head under the
-    # commit lock and retries the whole rewrite on conflict (Iceberg's
-    # validate-and-retry loop). A failed attempt's data dir is
-    # unreferenced garbage for ``vacuum``.
+    # docker-compose.yaml:153): committed files are never mutated. Every
+    # DELETE, UPDATE, MERGE and REPLACE WHERE entry point below is a thin
+    # wrapper over ONE core:
+    #
+    # - ``_row_dml`` is the optimistic attempt loop. Each attempt pins the
+    #   head version and reads its manifest ONCE — schema, constraints,
+    #   partition layout, sort order, generated columns, txn watermarks
+    #   and the delete state all come from that dict. It plans the
+    #   candidate files through ``_dml_plan`` (manifest stats prune them:
+    #   at 100 TB a keyed DELETE touches the few files the stats admit,
+    #   not the table), runs one writer, and publishes.
+    # - ``_match`` is the matcher: one fire flag per candidate row, from a
+    #   Column condition or, for subquery conditions, from SQL over a temp
+    #   view. UPDATE's assignments are one projection over that flag
+    #   (``_assign``), GENERATED recompute included.
+    # - Three writers write their files and return a manifest edit plus
+    #   the statement's result info: the copy-on-write rewrite
+    #   (``_write_rewrite``: replacement rows into a fresh data dir, the
+    #   candidate files leave visibility), position deletes
+    #   (``_write_positions``: (file, pos) tombstones, plus the updated
+    #   rows for UPDATE) and equality deletes (``_write_eq``: one key
+    #   file, plus the source rows for the MERGE upsert). The last two
+    #   are merge-on-read: readers anti-join the deletes until
+    #   ``compact`` materializes them.
+    # - ``_publish_dml`` is the one commit build: it refuses a head that
+    #   moved since the pin, applies the edit to the pinned manifest and
+    #   stamps the snapshot fields. A lost race raises ``CommitConflict``
+    #   and the loop replans against the new head (Iceberg's
+    #   validate-and-retry); a failed attempt's files are unreferenced
+    #   garbage for ``vacuum``.
 
     _DML_RETRIES = 3
+    # the matcher's fire-flag column on candidate rows
+    _FIRE = "__dml_fire"
 
     def delete_where(
         self,
@@ -5367,24 +4919,29 @@ class SnapshotTable:
         stats_for: list[str] | None = None,
         bloom_for: list[str] | None = None,
         prune_preds: list[tuple[str, object, object]] | None = None,
+        run_sql=None,
+        alias: str | None = None,
     ) -> dict:
         """``DELETE FROM t WHERE condition`` as a pruned copy-on-write
         rewrite. Rows where the condition is TRUE are removed; FALSE and
         NULL survive (SQL DELETE semantics). ``prune_column`` + bounds
-        restrict the rewrite to files whose manifest stats intersect
-        ``[lower, upper]`` — files outside provably contain no matching
+        (or ``prune_preds``) restrict the rewrite to files whose manifest
+        stats intersect them — files outside provably contain no matching
         row ONLY if the caller's bounds really cover the condition, so
         bounds must be implied by the condition (e.g. the condition's own
-        BETWEEN range). Returns ``{"version", "files_rewritten",
+        BETWEEN range, or the non-subquery conjuncts of a subquery
+        condition). ``run_sql`` / ``alias`` carry a subquery condition
+        (see ``_match``). Returns ``{"version", "files_rewritten",
         "files_skipped"}``."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
 
-        def transform(cand: DataFrame) -> DataFrame:
-            return cand.filter(~F.coalesce(cond, F.lit(False)))
+        def transform(cand: DataFrame, m: dict, target) -> DataFrame:
+            fired = self._match(cand, condition, run_sql, alias)
+            return fired.filter(~F.col(self._FIRE)).drop(self._FIRE)
 
         return self._rewrite_where(
-            transform, "delete", prune_column, prune_lower, prune_upper,
-            stats_for, bloom_for, prune_preds=prune_preds,
+            "delete", transform,
+            (prune_preds, prune_column, prune_lower, prune_upper),
+            stats_for, bloom_for,
         )
 
     def update_where(
@@ -5397,87 +4954,25 @@ class SnapshotTable:
         stats_for: list[str] | None = None,
         bloom_for: list[str] | None = None,
         prune_preds: list[tuple[str, object, object]] | None = None,
+        run_sql=None,
+        alias: str | None = None,
     ) -> dict:
         """``UPDATE t SET col = expr, ... WHERE condition`` as a pruned
         copy-on-write rewrite: candidate rows where the condition is TRUE
-        take the assigned expressions; FALSE/NULL rows pass through
-        unchanged. Assigned expressions see the PRE-update row (standard
-        SQL UPDATE: all assignments evaluate against the old values).
-        Same pruning contract and return shape as ``delete_where``."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        fire = F.coalesce(cond, F.lit(False))
-        gens = self.generated_columns()
-        self._refuse_generated_assignments(assignments, direct=True)
-        schema = self.schema() or T.StructType()
-        gtypes = {f.name: f.dataType for f in schema.fields}
+        take the assigned expressions (``_assign``); FALSE/NULL rows pass
+        through unchanged. Same pruning contract, subquery conditions and
+        return shape as ``delete_where``."""
 
-        def transform(cand: DataFrame) -> DataFrame:
-            # the fire flag materializes FIRST: assignments and the
-            # generated-column recompute below must both key off the
-            # PRE-update condition, not post-assignment values
-            flag = "__upd_fire"
-            tagged = cand.select("*", fire.alias(flag))
-            out_cols = []
-            for c in cand.columns:
-                a = assignments.get(c)
-                if a is None:
-                    out_cols.append(F.col(c))
-                else:
-                    expr = F.expr(a) if isinstance(a, str) else a
-                    out_cols.append(
-                        F.when(F.col(flag), expr)
-                        .otherwise(F.col(c))
-                        .alias(c)
-                    )
-            out = tagged.select(*out_cols, F.col(flag))
-            # Delta's recompute: fired rows re-derive their GENERATED
-            # columns from the post-assignment values (one extra
-            # projection, collapsed by Catalyst); unfired rows keep
-            # their already-valid committed values
-            for g, gexpr in gens.items():
-                out = out.withColumn(
-                    g,
-                    F.when(
-                        F.col(flag), F.expr(gexpr).cast(gtypes.get(g))
-                    ).otherwise(F.col(g)),
-                )
-            return out.drop(flag)
+        def transform(cand: DataFrame, m: dict, target) -> DataFrame:
+            self._check_assignments(assignments, m, target)
+            fired = self._match(cand, condition, run_sql, alias, assignments)
+            return self._assign(fired, assignments, m, target)
 
-        unknown = set(assignments) - set(f.name for f in schema.fields)
-        if unknown:
-            raise ValueError(f"UPDATE assigns unknown columns: {sorted(unknown)}")
         return self._rewrite_where(
-            transform, "update", prune_column, prune_lower, prune_upper,
-            stats_for, bloom_for, prune_preds=prune_preds,
+            "update", transform,
+            (prune_preds, prune_column, prune_lower, prune_upper),
+            stats_for, bloom_for,
         )
-
-    def _refuse_generated_assignments(
-        self, assignments: dict, direct: bool, inputs_too: bool = False
-    ) -> None:
-        """Shared guard: assigning a GENERATED column refuses everywhere;
-        paths without the recompute projection (merge-on-read / subquery
-        UPDATE, MERGE) also refuse assigning its INPUT columns."""
-        gens = self.generated_columns()
-        if not gens:
-            return
-        hit = sorted(set(assignments) & set(gens))
-        if hit:
-            raise ValueError(
-                f"cannot assign GENERATED column(s) {hit}: their values "
-                f"derive from other columns"
-            )
-        if inputs_too:
-            gin = self.generated_input_columns()
-            for g, inputs in gin.items():
-                bad = sorted(set(assignments) & inputs)
-                if bad:
-                    raise ValueError(
-                        f"this UPDATE path cannot assign {bad}: GENERATED "
-                        f"column '{g}' derives from them and only "
-                        f"copy-on-write UPDATE recomputes (set "
-                        f"delete.mode=copy-on-write, or avoid subquery "
-                        f"conditions on these columns)"
-                    )
 
     def replace_where(
         self,
@@ -5518,125 +5013,14 @@ class SnapshotTable:
         # commit — replace_where writes through its own path)
         df = self._apply_generated(df, self.current_version())
 
-        def transform(cand: DataFrame) -> DataFrame:
-            survivors = cand.filter(~F.coalesce(cond, F.lit(False)))
-            return survivors.unionByName(
-                df, allowMissingColumns=True
-            )
+        def transform(cand: DataFrame, m: dict, target) -> DataFrame:
+            fired = self._match(cand, cond)
+            survivors = fired.filter(~F.col(self._FIRE)).drop(self._FIRE)
+            return survivors.unionByName(df, allowMissingColumns=True)
 
         return self._rewrite_where(
-            transform, "replace_where", None, None, None,
-            stats_for, bloom_for, prune_preds=prune_preds,
-        )
-
-    # -------------------------------------------- subquery-condition DML
-    #
-    # Trino (the reference's engine) accepts subqueries in DML
-    # conditions — DELETE ... WHERE k IN (SELECT ...), EXISTS (...),
-    # scalar comparisons. A Spark Column expression cannot hold a
-    # subquery, so these route the candidate set through a TEMP VIEW and
-    # run the filter as a full SQL statement: Catalyst plans the
-    # subquery as a real (broadcast-able) semi/anti join — distributed,
-    # never a driver-side collect. The view is dropped as soon as the
-    # statement is analyzed (same contract as sql_with_time_travel).
-
-    def delete_where_subquery(
-        self,
-        condition: str,
-        run_sql,
-        stats_for: list[str] | None = None,
-        bloom_for: list[str] | None = None,
-        alias: str | None = None,
-        prune_preds: list | None = None,
-    ) -> dict:
-        """Copy-on-write DELETE whose WHERE contains subqueries.
-        ``prune_preds`` carries range plans from the NON-subquery
-        depth-0 conjuncts (``ds = '2024-01-01' AND k IN (SELECT …)``
-        must not rewrite every partition): a file where a conjunct
-        cannot hold has no row satisfying the conjunction, so skipping
-        it is sound — pruning only narrows the rewrite set.
-        ``run_sql(text) -> DataFrame`` executes statement text in the
-        session — the SQL layer passes ``sql_with_time_travel`` so inner
-        SELECTs see every registered snapshot table (and AS-OF clauses).
-        ``alias`` (the statement's target name) lets correlated
-        subqueries reference the candidate row as ``t.col``; an inner
-        ``FROM t`` still resolves to the table's pre-statement snapshot
-        (the alias is not in scope for an inner FROM — standard SQL).
-        NULL-condition rows survive, exactly like ``delete_where``."""
-
-        def transform(cand: DataFrame) -> DataFrame:
-            view = f"__dml_cand_{uuid.uuid4().hex[:8]}"
-            as_alias = f" AS {alias}" if alias and "." not in alias else ""
-            cand.createOrReplaceTempView(view)
-            try:
-                return run_sql(
-                    f"SELECT * FROM {view}{as_alias} "
-                    f"WHERE NOT coalesce(({condition}), false)"
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-
-        return self._rewrite_where(
-            transform, "delete", None, None, None, stats_for, bloom_for,
-            prune_preds=prune_preds,
-        )
-
-    def update_where_subquery(
-        self,
-        condition: str,
-        assignments: dict[str, str],
-        run_sql,
-        stats_for: list[str] | None = None,
-        bloom_for: list[str] | None = None,
-        alias: str | None = None,
-        prune_preds: list | None = None,
-    ) -> dict:
-        """Copy-on-write UPDATE whose WHERE contains subqueries; the
-        assignments evaluate against the PRE-update row (standard SQL),
-        FALSE/NULL-condition rows pass through unchanged.
-        ``prune_preds``: see ``delete_where_subquery`` — sound because
-        a file where a non-subquery conjunct cannot hold has no row the
-        update can fire on."""
-        schema = self.schema()
-        names = [f.name for f in schema.fields] if schema else []
-        unknown = set(assignments) - set(names)
-        if unknown:
-            raise ValueError(
-                f"UPDATE assigns unknown columns: {sorted(unknown)}"
-            )
-        self._refuse_generated_assignments(
-            assignments, direct=True, inputs_too=True
-        )
-
-        def transform(cand: DataFrame) -> DataFrame:
-            view = f"__dml_cand_{uuid.uuid4().hex[:8]}"
-            # ONE fire column carries the (possibly subquery-bearing)
-            # condition — N assignments must not plan N copies of the
-            # semi-join; a correlated alias stays valid because the
-            # subquery evaluates in the inner SELECT where it is bound
-            fire = "__dml_fire"
-            projections = [
-                (
-                    f"CASE WHEN {fire} THEN ({a}) ELSE `{c}` END AS `{c}`"
-                    if (a := assignments.get(c)) is not None
-                    else f"`{c}`"
-                )
-                for c in cand.columns
-            ]
-            as_alias = f" AS {alias}" if alias and "." not in alias else ""
-            cand.createOrReplaceTempView(view)
-            try:
-                return run_sql(
-                    f"SELECT {', '.join(projections)} FROM ("
-                    f"SELECT *, coalesce(({condition}), false) AS {fire} "
-                    f"FROM {view}{as_alias})"
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-
-        return self._rewrite_where(
-            transform, "update", None, None, None, stats_for, bloom_for,
-            prune_preds=prune_preds,
+            "replace_where", transform, (prune_preds, None, None, None),
+            stats_for, bloom_for,
         )
 
     def merge_rows(
@@ -5670,31 +5054,6 @@ class SnapshotTable:
         inherently whole-table — same in Delta)."""
         from oss_data_lake_spark.operators.upsert import merge
 
-        target_schema = self.schema()
-        if target_schema is None:
-            raise ValueError("merge_rows needs a schema-carrying snapshot")
-        # MERGE has no recompute projection: refuse touching a GENERATED
-        # column or its inputs through SET/VALUES (star forms copy the
-        # source row wholesale — commit-side validation would not run on
-        # this path, so the guard covers explicit assignments; star
-        # merges on generated-column tables refuse below)
-        if self.generated_columns():
-            for m in (matched_assignments, insert_values,
-                      not_matched_by_source_assignments):
-                if m:
-                    self._refuse_generated_assignments(
-                        m, direct=True, inputs_too=True
-                    )
-            if (when_matched == "update" and not matched_assignments) or (
-                when_not_matched == "insert" and not insert_values
-            ):
-                raise ValueError(
-                    "star-form MERGE (UPDATE SET * / INSERT *) is not "
-                    "supported on a table with GENERATED columns: the "
-                    "source row would overwrite derived values "
-                    "unvalidated — name the columns explicitly, or use "
-                    "INSERT INTO / UPDATE"
-                )
         # only the STAR forms need the full table schema from the source
         # (non-star clauses and BY SOURCE-only merges reference just
         # their named columns plus the keys)
@@ -5702,13 +5061,6 @@ class SnapshotTable:
             (when_matched == "update" and not matched_assignments)
             or (when_not_matched == "insert" and not insert_values)
         )
-        if star_shapes and set(source.columns) != set(
-            f.name for f in target_schema.fields
-        ):
-            raise ValueError(
-                f"merge source schema mismatch: source={sorted(source.columns)}"
-                f" table={sorted(f.name for f in target_schema.fields)}"
-            )
         whole_table = when_not_matched_by_source is not None
         if whole_table:
             lo = hi = None
@@ -5718,14 +5070,39 @@ class SnapshotTable:
                 F.min(skey0).alias("lo"), F.max(skey0).alias("hi")
             ).first()
             lo, hi = bounds["lo"], bounds["hi"]
-        # non-star clauses keep the source's OWN (possibly narrower)
-        # schema: the assignment/VALUES expressions reference it directly
-        src = self._align(source, target_schema) if star_shapes else source
 
-        def transform(cand: DataFrame) -> DataFrame:
+        def transform(cand: DataFrame, m: dict, target) -> DataFrame:
+            # MERGE has no recompute projection: refuse touching a
+            # GENERATED column or its inputs through SET/VALUES (star
+            # forms copy the source row wholesale, and commit-side
+            # validation does not run on this path, so star merges on
+            # generated-column tables refuse outright)
+            if self._generated_of(m.get("column_defaults")):
+                for a in (matched_assignments, insert_values,
+                          not_matched_by_source_assignments):
+                    if a:
+                        self._check_assignments(
+                            a, m, target, inputs_too=True
+                        )
+                if star_shapes:
+                    raise ValueError(
+                        "star-form MERGE (UPDATE SET * / INSERT *) is not "
+                        "supported on a table with GENERATED columns: the "
+                        "source row would overwrite derived values "
+                        "unvalidated — name the columns explicitly, or use "
+                        "INSERT INTO / UPDATE"
+                    )
+            names = {f.name for f in target.fields}
+            if star_shapes and set(source.columns) != names:
+                raise ValueError(
+                    f"merge source schema mismatch: "
+                    f"source={sorted(source.columns)} table={sorted(names)}"
+                )
+            # non-star clauses keep the source's OWN (possibly narrower)
+            # schema: the assignment/VALUES expressions reference it
             return merge(
                 cand,
-                src,
+                self._align(source, target) if star_shapes else source,
                 keys,
                 when_matched=when_matched,
                 matched_condition=matched_condition,
@@ -5743,126 +5120,178 @@ class SnapshotTable:
             )
 
         return self._rewrite_where(
-            transform, "merge",
-            None if whole_table else keys[0], lo, hi,
+            "merge", transform,
+            (None, None if whole_table else keys[0], lo, hi),
             stats_for, bloom_for,
         )
 
-    def _dml_plan(
-        self, v: int, prune_preds, prune_column, prune_lower, prune_upper
-    ) -> tuple[dict[str, list[str] | None], int, int]:
-        """The candidate files of a row-level DML at ``v``: the SQL-text
-        conjuncts (``prune_preds``), else the ``prune_column`` range
-        (range-only, as ``plan_range_scan``), else the whole table. A
-        whole-table plan reports the REAL file count, not 0/0 —
-        operation metrics are what cost monitoring reads."""
-        if prune_preds:
-            return self.plan_pruned(prune_preds, version=v)
-        if prune_column is not None:
-            return self.plan_range_scan(
-                prune_column, prune_lower, prune_upper, version=v
-            )
-        manifest = self._manifest(v)
-        n_sel = sum(
-            len(self._dir_universe(manifest, d, self.dir_stats(manifest, d)))
-            for d in manifest["data_dirs"]
-        )
-        return {d: None for d in manifest["data_dirs"]}, n_sel, 0
-
-    def _rewrite_where(
+    def delete_where_mor(
         self,
-        transform,
-        tag: str,
-        prune_column: str | None,
-        prune_lower,
-        prune_upper,
-        stats_for: list[str] | None,
-        bloom_for: list[str] | None,
-        prune_preds: list[tuple[str, object, object]] | None = None,
+        condition: "str | F.Column",
+        prune_column: str | None = None,
+        prune_lower=None,
+        prune_upper=None,
+        prune_preds: list | None = None,
     ) -> dict:
+        """MERGE-ON-READ ``DELETE``: position deletes for the matching
+        rows instead of rewriting their files. Same pruning contract as
+        ``delete_where``; cost is one pruned scan + a tiny parquet write,
+        independent of how large the candidate FILES are. Readers pay an
+        anti-join until ``compact()`` materializes the deletes. Returns
+        ``{"version", "files_scanned", "files_skipped", "mode":
+        "merge-on-read"}``."""
+        return self._row_dml(
+            "delete_mor",
+            functools.partial(self._write_positions, condition, None, None),
+            (prune_preds, prune_column, prune_lower, prune_upper),
+        )
+
+    def update_where_mor(
+        self,
+        condition: "str | F.Column",
+        assignments: dict[str, "str | F.Column"],
+        prune_column: str | None = None,
+        prune_lower=None,
+        prune_upper=None,
+        prune_preds: list | None = None,
+        stats_for: list[str] | None = None,
+    ) -> dict:
+        """MERGE-ON-READ ``UPDATE``: tombstone the matching rows and
+        append their updated versions — ONE atomic commit, zero candidate
+        files rewritten (Delta's deletion-vector update). Write volume is
+        O(matched rows), not O(candidate files). Assignments see the
+        pre-update row; constraints gate the updated rows. Same return
+        shape as ``delete_where_mor``."""
+        return self._row_dml(
+            "update_mor",
+            functools.partial(
+                self._write_positions, condition, assignments, stats_for
+            ),
+            (prune_preds, prune_column, prune_lower, prune_upper),
+        )
+
+    def delete_where_eq(
+        self, columns: "str | list[str]", keys
+    ) -> dict:
+        """Keyed DELETE as an equality-delete file: drop every CURRENT
+        row whose ``columns`` tuple appears in ``keys`` (a DataFrame of
+        key tuples, a list of scalars for one column, or a list of
+        tuples). No data file is read or written — one tiny parquet of
+        keys plus a metadata commit. Returns ``{"version", "n_keys",
+        "mode": "equality-delete"}``."""
+        cols = [columns] if isinstance(columns, str) else list(columns)
+        if not cols:
+            raise ValueError("equality delete needs at least one column")
+        if not isinstance(keys, DataFrame):
+            rows = [
+                tuple(k) if isinstance(k, (tuple, list)) else (k,)
+                for k in keys
+            ]
+            if not rows:
+                raise ValueError("equality delete needs at least one key")
+
+        def key_rows(m: dict, target) -> tuple[DataFrame, None]:
+            if isinstance(keys, DataFrame):
+                return keys.select(*cols).distinct(), None
+            ftypes = {f.name: f.dataType for f in target.fields}
+            missing = [c for c in cols if c not in ftypes]
+            if missing:
+                raise ValueError(f"no such columns: {missing}")
+            # SQL-parsed literals arrive as raw Python str/int/float
+            # (DELETE ... WHERE ts = TIMESTAMP '...' yields a str);
+            # coerce each value to the column's declared type so the
+            # typed createDataFrame below never trips Spark's verifier
+            typed = [
+                tuple(
+                    _coerce_key_value(v, ftypes[c])
+                    for v, c in zip(r, cols)
+                )
+                for r in rows
+            ]
+            return self.spark.createDataFrame(
+                typed, T.StructType(
+                    [T.StructField(c, ftypes[c], True) for c in cols]
+                )
+            ).distinct(), None
+
+        return self._row_dml(
+            "delete_eq",
+            functools.partial(
+                self._write_eq, cols, key_rows, "equality DELETE", None
+            ),
+        )
+
+    def merge_rows_mor(
+        self,
+        source: DataFrame,
+        keys: list[str],
+        stats_for: list[str] | None = None,
+    ) -> dict:
+        """MERGE-ON-READ upsert (``WHEN MATCHED THEN UPDATE SET * /
+        WHEN NOT MATCHED THEN INSERT *``): ONE atomic commit writing an
+        equality-delete file on the source's key tuples plus the source
+        rows as a fresh data dir (exempt from the delete by sequencing).
+        Cost is O(source) — zero target files read or written: the
+        streaming-CDC-upsert primitive. Richer clause forms (DELETE
+        clauses, matched conditions) need the CoW ``merge_rows``."""
+
+        def upsert_rows(m: dict, target) -> tuple[DataFrame, DataFrame]:
+            if self._generated_of(m.get("column_defaults")):
+                raise ValueError(
+                    "merge-on-read upsert is not supported on a table with "
+                    "GENERATED columns: the source rows would land "
+                    "unvalidated — use copy-on-write MERGE with explicit "
+                    "assignments, or INSERT INTO"
+                )
+            names = {f.name for f in target.fields}
+            if set(source.columns) != names:
+                raise ValueError(
+                    f"merge source schema mismatch: "
+                    f"source={sorted(source.columns)} table={sorted(names)}"
+                )
+            src = self._align(source, target)
+            cons = m.get("constraints")
+            if cons:
+                self._enforce(cons, src, context="this merge")
+            return src.select(*keys).distinct(), src
+
+        return self._row_dml(
+            "merge_mor",
+            functools.partial(
+                self._write_eq, list(keys), upsert_rows,
+                "merge-on-read MERGE", stats_for,
+            ),
+        )
+
+    # ------------------------------------------------------ the DML core
+
+    def _row_dml(self, tag: str, write, plan: tuple | None = None) -> dict:
+        """Run one row-level DML statement. Per attempt: pin the head
+        ``v`` and read its manifest ``m`` once; plan the candidate files
+        (``plan`` = ``(prune_preds, prune_column, lower, upper)`` for
+        ``_dml_plan``; None for a writer that reads no data); call
+        ``write(v, m, target, planned)``, which writes its files and
+        returns ``(edit, info)``; publish ``edit`` as snapshot ``v + 1``.
+        An ``edit`` of None commits nothing. Returns ``info`` with the
+        published (or pinned) ``version`` first."""
         last_err: Exception | None = None
         for _attempt in range(self._DML_RETRIES):
             v = self.current_version()
             if v is None:
                 raise ValueError(f"no snapshots at {self.path}")
-            target = self.schema(v)
-            if target is None:
+            m = self._manifest(v)
+            if m.get("schema") is None:
                 raise ValueError(
-                    "row-level DML needs a schema-carrying snapshot "
+                    f"{tag} needs a schema-carrying snapshot "
                     "(legacy manifest: recommit first)"
                 )
-            selection, n_sel, n_skip = self._dml_plan(
-                v, prune_preds, prune_column, prune_lower, prune_upper
-            )
-            candidates = self._read_selection(v, selection)
-            replacement = self._align(transform(candidates), target)
-            if tag != "delete":  # deletes can't create violating rows
-                cons = self.constraints(v)
-                if cons:
-                    self._enforce(cons, replacement, context=f"this {tag}")
-            new_dir = f"data/r{v + 1}-{uuid.uuid4().hex[:8]}"
-            # the replacement keeps the table's CURRENT partition layout
-            # (identity or hidden transform) — CoW DML must not erode a
-            # partitioned table into unpartitioned accretion
-            parsed = [
-                parse_partition_entry(c)
-                for c in self.current_partition_by(version=v)
-            ]
-            if not all(
-                (tr["source"] if tr else p) in replacement.columns
-                for p, tr in parsed
-            ):
-                parsed = []  # layout's source column gone: plain write
-            phys = [p for p, _ in parsed]
-            trs: dict[str, dict] = {}
-            write_df = replacement
-            dtypes = dict(replacement.dtypes)
-            for pcol, tr in parsed:
-                if tr is not None:
-                    tr = {**tr, "vtype": dtypes[tr["source"]]}
-                    trs[pcol] = tr
-                    write_df = write_df.withColumn(
-                        pcol, self._transform_expr(tr)
-                    )
-            # the replacement honors a declared sort order too (same
-            # contract as commit()): rewritten survivors come back out
-            # range-clustered with their stats, so CoW DML never erodes
-            # the WRITE ORDERED BY layout
-            so_cols = [
-                c
-                for c in self.current_sort_order(v)
-                if c in write_df.columns
-            ]
-            if so_cols:
-                so_keys = phys + [c for c in so_cols if c not in phys]
-                write_df = write_df.repartitionByRange(
-                    *[F.col(c) for c in so_keys]
-                ).sortWithinPartitions(*so_keys)
-                stats_for = list(
-                    dict.fromkeys(
-                        (stats_for or [])
-                        + [c for c in so_cols if c not in phys]
-                    )
-                )
-            self._write_data_dir(write_df, new_dir, phys or None)
-            own_stats = self._harvest_stats(
-                new_dir,
-                [c for c in (stats_for or []) if c not in set(phys)]
-                or None,
-                bloom_for,
-            )
+            target = T.StructType.fromJson(m["schema"])
+            planned = None if plan is None else self._dml_plan(m, *plan)
+            edit, info = write(v, m, target, planned)
+            if edit is None:
+                return {"version": v, **info}
             try:
-                version = self._publish_rewrite(
-                    v, selection, new_dir, target, own_stats, tag,
-                    new_spec=phys,
-                    new_transforms=trs,
-                    new_dir_schema=write_df.schema.jsonValue(),
-                )
-                return {
-                    "version": version,
-                    "files_rewritten": n_sel,
-                    "files_skipped": n_skip,
-                }
+                return {"version": self._publish_dml(v, m, tag, edit), **info}
             except CommitConflict as e:
                 last_err = e  # head moved: replan against the new head
         raise CommitConflict(
@@ -5870,42 +5299,243 @@ class SnapshotTable:
             f"retries to concurrent commits"
         ) from last_err
 
-    def _publish_rewrite(
-        self,
-        planned_version: int,
-        selection: dict[str, list[str] | None],
-        new_dir: str,
-        target: T.StructType,
-        own_stats: dict,
-        tag: str,
-        new_spec: list[str] | None = None,
-        new_transforms: dict | None = None,
-        new_dir_schema: dict | None = None,
-    ) -> int:
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent != planned_version:
-                raise CommitConflict(
-                    f"planned against v{planned_version}, head is v{parent}"
+    def _dml_plan(
+        self, m: dict, prune_preds, prune_column, prune_lower, prune_upper
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """The candidate files of a row-level DML in manifest ``m``: the
+        SQL-text conjuncts (``prune_preds``), else the ``prune_column``
+        range (range-only, as ``plan_range_scan``), else the whole table.
+        A whole-table plan reports the REAL file count, not 0/0 —
+        operation metrics are what cost monitoring reads."""
+        if prune_preds:
+            return self.plan_pruned(prune_preds, manifest=m)
+        if prune_column is not None:
+            return self.plan_range_scan(
+                prune_column, prune_lower, prune_upper, manifest=m
+            )
+        n_sel = sum(
+            len(self._dir_universe(m, d, self.dir_stats(m, d)))
+            for d in m["data_dirs"]
+        )
+        return {d: None for d in m["data_dirs"]}, n_sel, 0
+
+    def _match(
+        self, cand: DataFrame, condition, run_sql=None, alias=None,
+        assignments: dict | None = None,
+    ) -> DataFrame:
+        """The matcher: ``cand`` plus the fire flag ``_FIRE`` — TRUE where
+        the condition holds, FALSE where it is FALSE or NULL (SQL DML
+        semantics) — computed once per candidate row, and for an UPDATE
+        one ``__dml_set_<i>`` column per assignment (in ``assignments``
+        order) holding its value on fired rows. Every expression of the
+        statement is evaluated here, in the statement's scope.
+
+        A Spark Column cannot hold a subquery (Trino accepts ``k IN
+        (SELECT ...)``, ``EXISTS (...)`` and scalar comparisons in DML
+        statements), so with ``run_sql(text) -> DataFrame`` the condition
+        and assignments (SQL text) run as SQL over a temp view of the
+        candidates: Catalyst plans a subquery as a real (broadcast-able)
+        join, never a driver-side collect. The SQL layer passes
+        ``sql_with_time_travel``, so inner SELECTs see every registered
+        snapshot table (and AS-OF clauses). ``alias`` (the statement's
+        target name) lets correlated subqueries and assignments reference
+        the candidate row as ``t.col``; an inner ``FROM t`` still
+        resolves to the table's pre-statement snapshot (the alias is not
+        in scope for an inner FROM — standard SQL). The view is dropped
+        as soon as the statement is analyzed."""
+        values = list((assignments or {}).values())
+        if run_sql is None:
+            cond = F.expr(condition) if isinstance(condition, str) else condition
+            tagged = cand.select(
+                "*", F.coalesce(cond, F.lit(False)).alias(self._FIRE)
+            )
+            if not values:
+                return tagged
+            fire = F.col(self._FIRE)
+            return tagged.select("*", *[
+                F.when(fire, F.expr(a) if isinstance(a, str) else a)
+                .alias(f"__dml_set_{i}")
+                for i, a in enumerate(values)
+            ])
+        view = f"__dml_cand_{uuid.uuid4().hex[:8]}"
+        as_alias = f" AS {alias}" if alias and "." not in alias else ""
+        # the condition's fire flag materializes in the inner SELECT, so
+        # N assignments do not plan N copies of a subquery join
+        sql = (
+            f"SELECT *, coalesce(({condition}), false) AS {self._FIRE} "
+            f"FROM {view}{as_alias}"
+        )
+        if values:
+            sets = ", ".join(
+                f"CASE WHEN {self._FIRE} THEN ({a}) END AS __dml_set_{i}"
+                for i, a in enumerate(values)
+            )
+            sql = f"SELECT *, {sets} FROM ({sql}){as_alias}"
+        cand.createOrReplaceTempView(view)
+        try:
+            return run_sql(sql)
+        finally:
+            self.spark.catalog.dropTempView(view)
+
+    def _check_assignments(
+        self, assignments: dict, m: dict, target: T.StructType,
+        inputs_too: bool = False,
+    ) -> None:
+        """Refuse assignments to unknown columns and to a GENERATED column
+        (its value derives from other columns). ``inputs_too``: the
+        conservative paths (merge-on-read UPDATE, MERGE) also refuse
+        assigning a generated column's INPUT columns."""
+        names = {f.name for f in target.fields}
+        unknown = set(assignments) - names
+        if unknown:
+            raise ValueError(
+                f"UPDATE assigns unknown columns: {sorted(unknown)}"
+            )
+        gens = self._generated_of(m.get("column_defaults"))
+        hit = sorted(set(assignments) & set(gens))
+        if hit:
+            raise ValueError(
+                f"cannot assign GENERATED column(s) {hit}: their values "
+                f"derive from other columns"
+            )
+        if not inputs_too:
+            return
+        for g, inputs in self._generated_inputs(gens, names).items():
+            bad = sorted(set(assignments) & inputs)
+            if bad:
+                raise ValueError(
+                    f"this UPDATE path cannot assign {bad}: GENERATED "
+                    f"column '{g}' derives from them and only "
+                    f"copy-on-write UPDATE recomputes (set "
+                    f"delete.mode=copy-on-write)"
                 )
-            manifest = read_manifest(planned_version)
+
+    def _assign(
+        self, tagged: DataFrame, assignments: dict, m: dict,
+        target: T.StructType,
+    ) -> DataFrame:
+        """The UPDATE projection over the matcher's output: fired rows
+        take the assigned values (evaluated by ``_match`` against the
+        PRE-update row — standard SQL: every assignment sees the old
+        values) cast to the column type, then re-derive their GENERATED
+        columns from the post-assignment values (Delta's recompute);
+        unfired rows keep their committed values. Returns the ``target``
+        columns."""
+        fire = F.col(self._FIRE)
+        slot = {c: f"__dml_set_{i}" for i, c in enumerate(assignments)}
+        cols = [
+            F.when(fire, F.col(slot[f.name]).cast(f.dataType))
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if f.name in slot
+            else F.col(f.name)
+            for f in target.fields
+        ]
+        out = tagged.select(*cols, fire)
+        types = {f.name: f.dataType for f in target.fields}
+        for g, gexpr in self._generated_of(m.get("column_defaults")).items():
+            out = out.withColumn(
+                g,
+                F.when(fire, F.expr(gexpr).cast(types.get(g)))
+                .otherwise(F.col(g)),
+            )
+        return out.drop(self._FIRE)
+
+    def _rewrite_where(
+        self, tag: str, transform, plan: tuple, stats_for, bloom_for
+    ) -> dict:
+        """A copy-on-write statement: ``transform(cand, m, target)`` maps
+        the live candidate rows to their replacement."""
+        return self._row_dml(
+            tag,
+            functools.partial(
+                self._write_rewrite, tag, transform, stats_for, bloom_for
+            ),
+            plan,
+        )
+
+    def _write_rewrite(
+        self, tag, transform, stats_for, bloom_for, v, m, target, planned
+    ):
+        """The copy-on-write writer: the replacement of the candidate
+        rows goes into one fresh data dir under the table's current
+        partition layout and declared sort order; the edit hides the
+        candidate files (``dir_files`` shrink) and adds the new dir.
+        Non-candidate files are untouched."""
+        selection, n_sel, n_skip = planned
+        cand = self._live_rows(m, target, selection)
+        if cand is None:
+            cand = self.spark.createDataFrame([], target)
+        replacement = self._align(transform(cand, m, target), target)
+        cons = m.get("constraints")
+        if cons and tag != "delete":  # deletes can't create violating rows
+            self._enforce(cons, replacement, context=f"this {tag}")
+        new_dir = f"data/r{v + 1}-{uuid.uuid4().hex[:8]}"
+        # the replacement keeps the table's CURRENT partition layout
+        # (identity or hidden transform) — CoW DML must not erode a
+        # partitioned table into unpartitioned accretion
+        parsed = [parse_partition_entry(c) for c in self._partition_by_of(m)]
+        if not all(
+            (tr["source"] if tr else p) in replacement.columns
+            for p, tr in parsed
+        ):
+            parsed = []  # layout's source column gone: plain write
+        phys = [p for p, _ in parsed]
+        trs: dict[str, dict] = {}
+        write_df = replacement
+        dtypes = dict(replacement.dtypes)
+        for pcol, tr in parsed:
+            if tr is not None:
+                tr = {**tr, "vtype": dtypes[tr["source"]]}
+                trs[pcol] = tr
+                write_df = write_df.withColumn(
+                    pcol, self._transform_expr(tr)
+                )
+        # the replacement honors a declared sort order too (same
+        # contract as commit()): rewritten survivors come back out
+        # range-clustered with their stats, so CoW DML never erodes
+        # the WRITE ORDERED BY layout
+        so_cols = [
+            c
+            for c in (m.get("declared_sort_order") or [])
+            if c in write_df.columns
+        ]
+        if so_cols:
+            so_keys = phys + [c for c in so_cols if c not in phys]
+            write_df = write_df.repartitionByRange(
+                *[F.col(c) for c in so_keys]
+            ).sortWithinPartitions(*so_keys)
+            stats_for = list(
+                dict.fromkeys(
+                    (stats_for or [])
+                    + [c for c in so_cols if c not in phys]
+                )
+            )
+        self._write_data_dir(write_df, new_dir, phys or None)
+        own_stats = self._harvest_stats(
+            new_dir,
+            [c for c in (stats_for or []) if c not in set(phys)] or None,
+            bloom_for,
+        )
+        new_dir_schema = write_df.schema.jsonValue()
+
+        def edit(m: dict) -> dict:
             dirs: list[str] = []
             dir_files: dict[str, list[str]] = {}
-            for d in manifest["data_dirs"]:
+            for d in m["data_dirs"]:
                 sel = selection.get(d)
                 if sel is None:
                     continue  # whole dir was rewritten: no longer visible
                 if sel == []:
                     dirs.append(d)
-                    vis = self._visible_files(manifest, d)
+                    vis = self._visible_files(m, d)
                     if vis is not None:
                         dir_files[d] = vis
                     continue
                 removed = set(sel)
                 new_vis = [
                     f
-                    for f in self._dir_universe(
-                        manifest, d, self.dir_stats(manifest, d)
-                    )
+                    for f in self._dir_universe(m, d, self.dir_stats(m, d))
                     if f not in removed
                 ]
                 if not new_vis:
@@ -5914,97 +5544,221 @@ class SnapshotTable:
                 dir_files[d] = new_vis
             keep = set(dirs)
             dirs.append(new_dir)
-            fids = manifest.get("field_ids") or {}
+            fids = m.get("field_ids") or {}
+
+            def kept(key: str) -> dict:
+                return {d: s for d, s in m.get(key, {}).items() if d in keep}
+
+            # an explicit key list: table-level keys carry over, per-dir
+            # maps keep only the surviving dirs
             return {
-                "version": planned_version + 1,
-                "parent": planned_version,
-                "mode": tag,
                 "data_dirs": dirs,
                 "field_ids": fids,
-                "last_field_id": manifest.get("last_field_id"),
+                "last_field_id": m.get("last_field_id"),
                 # the replacement dir is written under CURRENT names
                 "dir_field_ids": {
-                    **{
-                        d: m
-                        for d, m in manifest.get("dir_field_ids", {}).items()
-                        if d in keep
-                    },
+                    **kept("dir_field_ids"),
                     **(
-                        {
-                            new_dir: {
-                                f.name: fids[f.name]
-                                for f in target.fields
-                                if f.name in fids
-                            }
-                        }
+                        {new_dir: self._dir_ids(fids, target)}
                         if fids
                         else {}
                     ),
                 },
                 "partition_specs": {
-                    **{
-                        d: s
-                        for d, s in manifest.get("partition_specs", {}).items()
-                        if d in keep
-                    },
-                    new_dir: list(new_spec or []),
+                    **kept("partition_specs"), new_dir: list(phys),
                 },
                 "partition_transforms": {
-                    **{
-                        d: s
-                        for d, s in manifest.get(
-                            "partition_transforms", {}
-                        ).items()
-                        if d in keep
-                    },
-                    **({new_dir: new_transforms} if new_transforms else {}),
+                    **kept("partition_transforms"),
+                    **({new_dir: trs} if trs else {}),
                 },
                 "dir_schemas": {
-                    **{
-                        d: s
-                        for d, s in manifest.get("dir_schemas", {}).items()
-                        if d in keep
-                    },
-                    new_dir: new_dir_schema or target.jsonValue(),
+                    **kept("dir_schemas"), new_dir: new_dir_schema,
                 },
                 "dir_files": dir_files,
-                # delete vectors for rewritten files become vacuous (their
-                # files left visibility); vectors for untouched files
-                # still apply
-                "delete_dirs": manifest.get("delete_dirs", []),
+                # delete vectors for rewritten files become vacuous
+                # (their files left visibility); vectors for untouched
+                # files still apply
+                "delete_dirs": m.get("delete_dirs", []),
                 # equality deletes keep applying to surviving dirs; the
                 # replacement dir is exempt (its rows were read THROUGH
                 # the deletes); entries with no surviving dir drop
                 "eq_deletes": [
-                    {**e, "applies_dirs": kept}
-                    for e in manifest.get("eq_deletes", [])
-                    for kept in [
+                    {**e, "applies_dirs": still}
+                    for e in m.get("eq_deletes", [])
+                    for still in [
                         [d for d in e.get("applies_dirs", []) if d in keep]
                     ]
-                    if kept
+                    if still
                 ],
                 "file_stats": {
-                    **{
-                        d: s
-                        for d, s in manifest.get("file_stats", {}).items()
-                        if d in keep
-                    },
+                    **kept("file_stats"),
                     **({new_dir: own_stats} if own_stats else {}),
                 },
                 "schema": target.jsonValue(),
-                "txn": None,
-                "txn_watermarks": self._txn_watermarks(parent),
-                "constraints": manifest.get("constraints", {}),
-                "properties": manifest.get("properties", {}),
+                "constraints": m.get("constraints", {}),
+                "properties": m.get("properties", {}),
                 # table-level operator decisions and (stale-until-
                 # re-analyzed) statistics survive row-level DML like any
                 # other commit kind
-                "declared_partition_by": manifest.get(
-                    "declared_partition_by"
-                ),
-                "declared_sort_order": manifest.get("declared_sort_order"),
-                "table_stats": manifest.get("table_stats"),
-                "column_defaults": manifest.get("column_defaults"),
+                "declared_partition_by": m.get("declared_partition_by"),
+                "declared_sort_order": m.get("declared_sort_order"),
+                "table_stats": m.get("table_stats"),
+                "column_defaults": m.get("column_defaults"),
+            }
+
+        return edit, {"files_rewritten": n_sel, "files_skipped": n_skip}
+
+    def _write_positions(
+        self, condition, assignments, stats_for, v, m, target, planned
+    ):
+        """The position-delete writer (merge-on-read): (file, pos)
+        tombstones for the fired rows instead of rewriting their files,
+        so write volume is O(fired rows), not O(candidate files). With
+        ``assignments`` (UPDATE) the updated rows land as a fresh data
+        dir in the same commit. The pruned candidate selection is
+        recorded as ``dv_candidates`` for the change feed. A selection
+        with no file to scan commits nothing."""
+        selection, n_sel, n_skip = planned
+        info = {
+            "files_scanned": n_sel, "files_skipped": n_skip,
+            "mode": "merge-on-read",
+        }
+        kind = "DELETE" if assignments is None else "UPDATE"
+        self._require_local_dirs(m, f"merge-on-read {kind}")
+        if assignments is not None:
+            self._check_assignments(assignments, m, target, inputs_too=True)
+        cand = self._live_rows(m, target, selection, keep_meta=True)
+        if cand is None:
+            return None, info
+        fired = self._match(
+            cand, condition, assignments=assignments
+        ).filter(F.col(self._FIRE))
+        if assignments is not None:
+            updated = self._assign(fired, assignments, m, target)
+            cons = m.get("constraints")
+            if cons:
+                self._enforce(cons, updated, context="this update")
+        dv_dir = f"deletes/dv{v + 1}-{uuid.uuid4().hex[:8]}"
+        fired.select(
+            F.col("__dv_file").alias("file"),
+            F.col("__dv_pos").alias("pos"),
+        ).write.mode("errorifexists").parquet(os.path.join(self.path, dv_dir))
+        data_dir = own_stats = None
+        if assignments is not None:
+            data_dir = f"data/u{v + 1}-{uuid.uuid4().hex[:8]}"
+            self._write_data_dir(updated, data_dir)
+            own_stats = self._harvest_stats(data_dir, stats_for, None)
+        dv_cands = self._recordable_dv_candidates(selection)
+
+        def edit(m: dict) -> dict:
+            out = (
+                dict(m) if data_dir is None
+                else self._with_data_dir(m, data_dir, target, own_stats)
+            )
+            if dv_cands is not None:
+                out["dv_candidates"] = {
+                    **m.get("dv_candidates", {}), dv_dir: dv_cands,
+                }
+            out["delete_dirs"] = m.get("delete_dirs", []) + [dv_dir]
+            return out
+
+        return edit, info
+
+    def _write_eq(
+        self, cols, rows_of, op, stats_for, v, m, target, planned
+    ):
+        """The equality-delete writer (merge-on-read, scan-free): one key
+        file recorded with the key columns' field ids and, as
+        ``applies_dirs``, the pinned snapshot's data dirs. ``rows_of(m,
+        target)`` returns ``(keys, append)``: the key tuples, and for the
+        MERGE upsert the source rows, which land in the same commit as a
+        fresh data dir — exempt from the delete by sequencing."""
+        self._require_local_dirs(m, op)
+        key_df, append = rows_of(m, target)
+        fids = m.get("field_ids") or {}
+        ids = [fids.get(c) for c in cols]
+        if any(i is None for i in ids):
+            raise ValueError(
+                f"{op} on {cols}: not all columns carry field ids "
+                f"(legacy manifest — recommit first)"
+            )
+        eq_dir = f"deletes/eq{v + 1}-{uuid.uuid4().hex[:8]}"
+        key_df.coalesce(1).write.mode("errorifexists").parquet(
+            os.path.join(self.path, eq_dir)
+        )
+        entry = {
+            "dir": eq_dir,
+            "cols": cols,
+            "ids": ids,
+            "applies_dirs": list(m["data_dirs"]),
+        }
+        data_dir = own_stats = None
+        if append is None:
+            info = {"n_keys": key_df.count(), "mode": "equality-delete"}
+        else:
+            data_dir = f"data/g{v + 1}-{uuid.uuid4().hex[:8]}"
+            self._write_data_dir(append, data_dir)
+            own_stats = self._harvest_stats(data_dir, stats_for, None)
+            info = {"mode": "merge-on-read"}
+
+        def edit(m: dict) -> dict:
+            out = (
+                dict(m) if data_dir is None
+                else self._with_data_dir(m, data_dir, target, own_stats)
+            )
+            out["eq_deletes"] = m.get("eq_deletes", []) + [entry]
+            return out
+
+        return edit, info
+
+    @staticmethod
+    def _dir_ids(fids: dict, target: T.StructType) -> dict:
+        """The write-time name → field id map of a dir written under
+        ``target``."""
+        return {f.name: fids[f.name] for f in target.fields if f.name in fids}
+
+    def _with_data_dir(
+        self, m: dict, d: str, target: T.StructType, own_stats: dict
+    ) -> dict:
+        """``m`` plus one unpartitioned data dir ``d`` written under
+        ``target`` — the append edit of the merge-on-read UPDATE and
+        MERGE upsert."""
+        out = {
+            **m,
+            "data_dirs": m["data_dirs"] + [d],
+            "partition_specs": {**m.get("partition_specs", {}), d: []},
+            "dir_schemas": {**m.get("dir_schemas", {}), d: target.jsonValue()},
+        }
+        if m.get("field_ids"):
+            out["dir_field_ids"] = {
+                **m.get("dir_field_ids", {}),
+                d: self._dir_ids(m["field_ids"], target),
+            }
+        if own_stats:
+            out["file_stats"] = {**m.get("file_stats", {}), d: own_stats}
+        return out
+
+    def _publish_dml(self, v: int, m: dict, tag: str, edit) -> int:
+        """The one commit build of every row-level DML: refuse a head
+        that moved since the pin, apply ``edit`` to the pinned manifest
+        ``m`` (no re-read: the head check proves ``m`` is the parent)
+        and stamp the snapshot fields."""
+        wm = m["txn_watermarks"] if "txn_watermarks" in m else (
+            self._txn_watermarks(v)
+        )
+
+        def build(parent: int | None, read_manifest) -> dict:
+            if parent != v:
+                raise CommitConflict(
+                    f"planned against v{v}, head is v{parent}"
+                )
+            return {
+                **edit(m),
+                "version": v + 1,
+                "parent": v,
+                "mode": tag,
+                "txn": None,
+                "txn_watermarks": wm,
                 "committed_at_ms": int(time.time() * 1000),
             }
 
@@ -6271,14 +6025,11 @@ class SnapshotTable:
         their deletes materialized in passing (visible rows only are
         rewritten). Returns Delta-style operation metrics."""
         return self._rewrite_where(
-            lambda df: df.coalesce(target_partitions),
             "compact",
-            prune_column,
-            prune_lower,
-            prune_upper,
+            lambda cand, m, target: cand.coalesce(target_partitions),
+            (prune_preds, prune_column, prune_lower, prune_upper),
             stats_for,
             bloom_for,
-            prune_preds=prune_preds,
         )
 
     def expire_snapshots(

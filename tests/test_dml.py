@@ -163,9 +163,7 @@ def test_rewrite_conflict_detection_and_vacuum(spark, tbl):
     tbl.commit(spark.createDataFrame([Row(k=i) for i in range(10)]))
     # a publish planned against a stale head must refuse
     with pytest.raises(CommitConflict):
-        tbl._publish_rewrite(
-            0, {}, "data/r1-dead", tbl.schema(), {}, "delete"
-        )
+        tbl._publish_dml(0, tbl._manifest(1), "delete", dict)
     # fully-stale-free delete still works after the failed attempt
     tbl.delete_where("k = 0")
     assert tbl.read().count() == 9

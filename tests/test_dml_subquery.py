@@ -81,6 +81,20 @@ def test_update_with_subquery_condition(spark, eng):
             assert rows[k][0] == float(k)
 
 
+def test_update_assignments_evaluate_in_the_statement_scope(spark, eng):
+    """With a subquery condition, SET expressions resolve where the
+    condition does: a scalar subquery over a registered table, and the
+    target alias for the candidate row."""
+    e, t, _ref = eng
+    e.sql(
+        "UPDATE t SET v = (SELECT max(k) FROM ref) + t.v "
+        "WHERE k IN (SELECT k FROM ref WHERE k < 10)"
+    )
+    rows = {r["k"]: r["v"] for r in e.sql("SELECT k, v FROM t").collect()}
+    assert rows[0] == 25.0 and rows[5] == 30.0   # max(ref.k) = 25
+    assert rows[10] == 10.0 and rows[1] == 1.0
+
+
 def test_subquery_dml_time_travels_and_restores(spark, eng):
     e, t, _ref = eng
     e.sql(

@@ -3,7 +3,7 @@ derived from the row's other columns, declared at CREATE TABLE, stored
 in the column_defaults metadata that already rides every commit kind.
 Contract: computed when absent / validated when present at commit
 (INSERT INTO, COPY INTO, API writes), recomputed by copy-on-write
-UPDATE, refused for direct assignment everywhere, conservative refusals
+UPDATE (subquery conditions included), refused for direct assignment everywhere, conservative refusals
 on paths without the recompute projection, and rename/drop guards on
 the rule's inputs."""
 
@@ -77,6 +77,22 @@ def test_cow_update_recomputes_fired_rows(spark, gen_eng):
     # direct assignment refuses
     with pytest.raises(ValueError, match="GENERATED"):
         e.sql("UPDATE t SET s = 0 WHERE a = 10")
+
+
+def test_subquery_update_recomputes_fired_rows(spark, gen_eng):
+    """A subquery condition goes through the same matcher and UPDATE
+    projection as a plain one, so assigning an input recomputes the
+    generated column instead of refusing."""
+    e, t = gen_eng
+    e.sql("INSERT INTO t (a, b) VALUES (1, 2), (10, 20), (30, 40)")
+    e.sql("CREATE TABLE r (b INT) USING snapshot")
+    e.sql("INSERT INTO r VALUES (2), (40)")
+    e.sql("UPDATE t SET a = a + 1 WHERE b IN (SELECT b FROM r)")
+    rows = {
+        r["b"]: (r["a"], r["s"])
+        for r in e.sql("SELECT a, b, s FROM t").collect()
+    }
+    assert rows == {2: (2, 4), 20: (10, 30), 40: (31, 71)}
 
 
 def test_mor_and_merge_paths_refuse_conservatively(spark, gen_eng):

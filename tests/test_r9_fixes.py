@@ -188,7 +188,7 @@ def test_defaults_reject_nondeterministic_and_query_time(spark, tmp_path):
 
 
 # --------------------------------------------- low: subquery DML pruning
-# (dml_sql.py delete/update_where_subquery)
+# (dml_sql.py subquery DELETE/UPDATE through delete/update_where's run_sql)
 
 
 @pytest.fixture()
