@@ -456,21 +456,16 @@ class Engine:
     def _reattach(self, ent: dict):
         """A member table from its transaction-record entry, on the
         protocol it committed through."""
-        from oss_data_lake_spark.sources.rest_catalog import (
-            RestCommitProtocol,
-        )
+        from oss_data_lake_spark.sources.catalog import open_protocol
         from oss_data_lake_spark.sources.snapshots import SnapshotTable
 
         desc = ent.get("protocol")
-        if desc is None:
-            return SnapshotTable(self.spark, ent["path"])
-        if desc.get("kind") == "rest":
-            return SnapshotTable(
-                self.spark,
-                ent["path"],
-                protocol=RestCommitProtocol(desc["url"], desc["table"]),
-            )
-        raise ValueError(f"unknown protocol descriptor: {desc!r}")
+        if desc is not None and desc.get("kind") != "rest":
+            raise ValueError(f"unknown protocol descriptor: {desc!r}")
+        rest = None if desc is None else (desc["url"], desc["table"])
+        return SnapshotTable(
+            self.spark, ent["path"], protocol=open_protocol(ent["path"], rest)
+        )
 
     def _txn_record_write(self, gid: str, entries: list[dict]) -> str:
         """The commit point: one create-exclusive JSON record naming

@@ -50,6 +50,7 @@ import re
 import threading
 import uuid
 from abc import ABC, abstractmethod
+from collections import OrderedDict
 from typing import Callable
 
 # build(parent_version, read_manifest) returns either the manifest dict for
@@ -74,6 +75,12 @@ class CommitProtocol(ABC):
     @abstractmethod
     def read_manifest(self, version: int) -> dict: ...
 
+    def manifest(self, version: int) -> dict:
+        """Parsed manifest of ``version`` — the one way callers get one.
+        The dict may be shared with other callers: never mutate it.
+        Raises ``FileNotFoundError`` for an absent (expired) slot."""
+        return self.read_manifest(version)
+
     @abstractmethod
     def list_versions(self) -> list[int]: ...
 
@@ -87,18 +94,68 @@ class CommitProtocol(ABC):
         short-circuited) version number."""
 
 
+def open_protocol(
+    path: str, rest: "tuple[str, str] | None" = None
+) -> CommitProtocol:
+    """The commit protocol of the table rooted at ``path``: the REST
+    catalog service ``rest`` = ``(url, table)`` when given, else the
+    local ``<path>/_snapshots`` tail. Every engine-built protocol comes
+    from here."""
+    if rest is not None:
+        from oss_data_lake_spark.sources.rest_catalog import (
+            RestCommitProtocol,
+        )
+
+        return RestCommitProtocol(*rest)
+    return LocalFsCommitProtocol(os.path.join(path, "_snapshots"))
+
+
 # --------------------------------------------------------------- local FS
+
+# Parsed local manifests, process-wide: absolute path -> (identity,
+# dict). A version slot is write-once (link-claimed from a fresh file),
+# so an entry is valid while the file's (inode, size, mtime) is; a table
+# dropped and recreated at the same path has new files and misses.
+# Bounded by the summed file sizes; the oldest entries leave first.
+_MANIFESTS: "OrderedDict[str, tuple[tuple, dict]]" = OrderedDict()
+_MANIFESTS_CAP = 16 << 20
+_manifests_bytes = 0
+_manifests_mu = threading.Lock()
+
+
+def _cache_manifest(path: str, ident: tuple | None, manifest=None) -> None:
+    """Put ``manifest`` under ``path`` (``ident[1]`` is its size), or
+    drop the entry when ``ident`` is None."""
+    global _manifests_bytes
+    with _manifests_mu:
+        old = _MANIFESTS.pop(path, None)
+        if old is not None:
+            _manifests_bytes -= old[0][1]
+        if ident is None or ident[1] > _MANIFESTS_CAP:
+            return
+        _MANIFESTS[path] = (ident, manifest)
+        _manifests_bytes += ident[1]
+        while _manifests_bytes > _MANIFESTS_CAP:
+            _manifests_bytes -= _MANIFESTS.popitem(last=False)[1][0][1]
+
+
+def _fsync_dir(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 class LocalFsCommitProtocol(CommitProtocol):
     """flock-serialized tail + hard-link version claims + atomic pointer
     replace — correct across processes on ONE host's POSIX filesystem.
     (Object stores have none of these primitives; use
-    :class:`CasCommitProtocol` there.)"""
+    :class:`CasCommitProtocol` there.) The metadata directory is created
+    by the first commit, never by a handle."""
 
     def __init__(self, meta_dir: str):
-        self.meta = meta_dir
-        os.makedirs(self.meta, exist_ok=True)
+        self.meta = os.path.abspath(meta_dir)
 
     def read_current(self) -> int | None:
         try:
@@ -111,25 +168,47 @@ class LocalFsCommitProtocol(CommitProtocol):
         with open(os.path.join(self.meta, f"v{version}.json")) as f:
             return json.load(f)
 
+    def manifest(self, version: int) -> dict:
+        """Cached parse, checked by one ``os.stat`` (which also raises
+        ``FileNotFoundError`` for an expired slot). Filled on read only:
+        a build's own dict may hold tuples a JSON round trip would not."""
+        path = os.path.join(self.meta, f"v{version}.json")
+        st = os.stat(path)
+        ident = (st.st_ino, st.st_size, st.st_mtime_ns)
+        with _manifests_mu:
+            hit = _MANIFESTS.get(path)
+        if hit is not None and hit[0] == ident:
+            return hit[1]
+        out = self.read_manifest(version)
+        _cache_manifest(path, ident, out)
+        return out
+
     def list_versions(self) -> list[int]:
+        try:
+            names = os.listdir(self.meta)
+        except FileNotFoundError:
+            return []
         out = []
-        for name in os.listdir(self.meta):
+        for name in names:
             m = re.fullmatch(r"v(\d+)\.json", name)
             if m:
                 out.append(int(m.group(1)))
         return sorted(out)
 
     def delete_manifest(self, version: int) -> None:
-        os.remove(os.path.join(self.meta, f"v{version}.json"))
+        path = os.path.join(self.meta, f"v{version}.json")
+        _cache_manifest(path, None)
+        os.remove(path)
 
     def commit(self, build: BuildFn) -> int:
         import fcntl
 
+        os.makedirs(self.meta, exist_ok=True)
         with open(os.path.join(self.meta, "LOCK"), "a") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
             try:
                 parent = self.read_current()
-                result = build(parent, self.read_manifest)
+                result = build(parent, self.manifest)
                 if isinstance(result, int):
                     return result
                 version = result["version"]
@@ -144,11 +223,12 @@ class LocalFsCommitProtocol(CommitProtocol):
         reader never observes a partial manifest, and a version slot can
         never be silently overwritten even by a non-conforming writer
         (the link raises instead). The CURRENT pointer then advances
-        MONOTONICALLY via temp + ``os.replace``."""
+        MONOTONICALLY via temp + ``os.replace``. Each file is fsynced
+        before it is linked or renamed into place, and the directory
+        after, so a host crash cannot leave CURRENT naming a manifest
+        that never reached the disk."""
         mpath = os.path.join(self.meta, f"v{version}.json")
-        tmp = mpath + f".tmp-{uuid.uuid4().hex[:6]}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
+        tmp = self._write_synced(mpath, json.dumps(manifest))
         try:
             os.link(tmp, mpath)
         except FileExistsError:
@@ -158,12 +238,22 @@ class LocalFsCommitProtocol(CommitProtocol):
             )
         finally:
             os.remove(tmp)
+        _fsync_dir(self.meta)
         if version > (self.read_current() or 0):
             cpath = os.path.join(self.meta, "CURRENT")
-            ctmp = cpath + f".tmp-{uuid.uuid4().hex[:6]}"
-            with open(ctmp, "w") as f:
-                f.write(str(version))
-            os.replace(ctmp, cpath)
+            os.replace(self._write_synced(cpath, str(version)), cpath)
+            _fsync_dir(self.meta)
+
+    @staticmethod
+    def _write_synced(path: str, text: str) -> str:
+        """``text`` in a fresh temp file beside ``path``, flushed to
+        disk; returns the temp file's path."""
+        tmp = path + f".tmp-{uuid.uuid4().hex[:6]}"
+        with open(tmp, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        return tmp
 
 
 # ------------------------------------------------------------ CAS catalog
@@ -284,7 +374,7 @@ class CasCommitProtocol(CommitProtocol):
     def commit(self, build: BuildFn) -> int:
         for _attempt in range(self.retries):
             parent = self.read_current()
-            result = build(parent, self.read_manifest)
+            result = build(parent, self.manifest)
             if isinstance(result, int):
                 return result
             version = result["version"]

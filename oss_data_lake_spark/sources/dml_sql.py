@@ -1366,8 +1366,9 @@ def _adopt_on_disk(engine, tables: dict, name: str) -> None:
         import os
 
         p = t.path
-        # ignore the probe's own `_snapshots` scaffolding (the protocol
-        # mkdirs it eagerly); any OTHER entry is data files
+        # ignore `_snapshots`: a first commit that crashed before its
+        # publish leaves `_snapshots/LOCK` and nothing readable; any
+        # OTHER entry is data files
         if (
             "://" not in p
             and os.path.isdir(p)

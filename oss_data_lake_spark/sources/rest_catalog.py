@@ -664,7 +664,7 @@ class RestCommitProtocol(CommitProtocol):
     def commit(self, build) -> int:
         for _attempt in range(self.retries):
             parent = self.read_current()
-            result = build(parent, self.read_manifest)
+            result = build(parent, self.manifest)
             if isinstance(result, int):
                 return result
             code, body = self._request(

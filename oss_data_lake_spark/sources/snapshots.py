@@ -67,7 +67,7 @@ from pyspark.sql import types as T
 from oss_data_lake_spark.sources.catalog import (
     CommitConflict,
     CommitProtocol,
-    LocalFsCommitProtocol,
+    open_protocol,
 )
 from oss_data_lake_spark.sqltext import (
     _depths,
@@ -379,7 +379,7 @@ class SnapshotTable:
             else os.path.normpath(path)
         )
         self._meta = os.path.join(self.path, "_snapshots")
-        self.protocol = protocol or LocalFsCommitProtocol(self._meta)
+        self.protocol = protocol or open_protocol(self.path)
 
     # ------------------------------------------------------------ commits
 
@@ -569,15 +569,15 @@ class SnapshotTable:
         # actual parent and prepends its dirs. The build callback is PURE
         # — optimistic protocols re-run it per claim race.
         def build(parent: int | None, read_manifest) -> dict | int:
-            # ONE ledger read serves both the idempotence check and the
-            # outgoing manifest's carried-forward watermarks
-            wm = self._txn_watermarks(parent)
+            # ONE parent read serves the idempotence check and every
+            # field the outgoing manifest carries forward
+            pm = read_manifest(parent) if parent else None
+            wm = self._watermarks_of(pm)
             if txn_app is not None and not txn_force:
                 entry = wm.get(txn_app)
                 if entry is not None and entry["version"] >= txn_version:
                     return entry["snapshot"]  # re-delivery; dir orphaned
             version = (parent or 0) + 1
-            pm = read_manifest(parent) if parent else None
             # stable column identity (field ids): names the parent knows
             # keep their ids across appends AND overwrites; new names get
             # fresh ids — the substrate for RENAME COLUMN
@@ -597,7 +597,7 @@ class SnapshotTable:
             delete_dirs: list = []
             eq_deletes: list = []
             if mode == "append" and parent:
-                self._check_evolution(self.schema(parent), df.schema)
+                self._check_evolution(self._schema_of(pm), df.schema)
                 dirs = pm["data_dirs"] + dirs
                 specs = {**pm.get("partition_specs", {}), **specs}
                 tr_map = {**pm.get("partition_transforms", {}), **tr_map}
@@ -665,22 +665,14 @@ class SnapshotTable:
                 # instead of an O(#snapshots) scan — and survives
                 # expire_snapshots deleting the original commit's manifest
                 "txn_watermarks": self._next_watermarks(
-                    wm if parent else {}, txn_app, txn_version, version
+                    wm, txn_app, txn_version, version
                 ),
                 # table-level CHECK constraints survive every commit kind
                 # (like Delta table properties — an overwrite reshapes
                 # data, not the quality contract)
-                "constraints": (
-                    read_manifest(parent).get("constraints", {})
-                    if parent
-                    else {}
-                ),
+                "constraints": (pm or {}).get("constraints", {}),
                 "properties": {
-                    **(
-                        read_manifest(parent).get("properties", {})
-                        if parent
-                        else {}
-                    ),
+                    **(pm or {}).get("properties", {}),
                     **(props_update or {}),
                 },
                 # table-level metadata that survives every commit kind:
@@ -881,14 +873,19 @@ class SnapshotTable:
 
     def _txn_watermarks(self, version: int | None = None) -> dict:
         """Per-app ``{app: {"version": v, "snapshot": k}}`` high-water map
-        from the manifest at ``version`` (default: current head); legacy
-        manifests (pre-watermark) fall back to one full version-log scan.
-        Commit builds pass their PARENT explicitly so the read is
-        consistent with the version they are claiming."""
+        from the manifest at ``version`` (default: current head)."""
         cur = version if version is not None else self.current_version()
-        if cur is None:
+        return self._watermarks_of(
+            None if cur is None else self._manifest(cur)
+        )
+
+    def _watermarks_of(self, m: dict | None) -> dict:
+        """The txn high-water map manifest ``m`` carries ({} for no
+        parent); legacy manifests (pre-watermark) fall back to one full
+        version-log scan. Commit builds pass the parent they read, so
+        the map is consistent with the version they are claiming."""
+        if m is None:
             return {}
-        m = self._manifest(cur)
         if "txn_watermarks" in m:
             return m["txn_watermarks"]
         wm: dict = {}
@@ -1004,15 +1001,23 @@ class SnapshotTable:
                 raise ValueError(f"{tag} on an empty table")
             manifest = dict(read_manifest(parent))
             manifest[key] = update_fn(dict(manifest.get(key) or {}))
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = tag
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, tag)
 
         return self.protocol.commit(build)
+
+    def _child_of(self, manifest: dict, parent: int, mode: str) -> dict:
+        """``manifest`` — a copy of ``parent``'s, edited — stamped as
+        its plain child: next version, ``mode``, no txn identity, the
+        parent's txn ledger carried forward."""
+        manifest.update(
+            version=parent + 1,
+            parent=parent,
+            mode=mode,
+            txn=None,
+            txn_watermarks=self._watermarks_of(manifest),
+            committed_at_ms=int(time.time() * 1000),
+        )
+        return manifest
 
     # ------------------------------------------------- schema-change DDL
     #
@@ -1537,13 +1542,7 @@ class SnapshotTable:
                 )
                 manifest["field_ids"] = fids
                 manifest["last_field_id"] = last
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = tag
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, tag)
 
         return self.protocol.commit(build)
 
@@ -1563,13 +1562,7 @@ class SnapshotTable:
             manifest["constraints"] = update_fn(
                 dict(manifest.get("constraints", {}))
             )
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = tag
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, tag)
 
         return self.protocol.commit(build)
 
@@ -1812,13 +1805,7 @@ class SnapshotTable:
                 picked = {d: src[d] for d in added if d in src}
                 if picked:
                     head[key] = {**head.get(key, {}), **picked}
-            head["version"] = parent + 1
-            head["parent"] = parent
-            head["mode"] = f"cherry_pick_{version}"
-            head["txn"] = None
-            head["txn_watermarks"] = self._txn_watermarks(parent)
-            head["committed_at_ms"] = int(time.time() * 1000)
-            return head
+            return self._child_of(head, parent, f"cherry_pick_{version}")
 
         return self.protocol.commit(build)
 
@@ -1829,6 +1816,9 @@ class SnapshotTable:
 
         def build(parent: int | None, read_manifest) -> dict:
             cur = parent or 0
+            # HEAD-owned fields come from the parent, else the rolled-to
+            pm = read_manifest(parent) if parent else None
+            hm = pm or old
             return {
                 "version": cur + 1,
                 "parent": cur,
@@ -1852,36 +1842,20 @@ class SnapshotTable:
                 # the id HIGH-WATER follows the head, not the rolled-to
                 # snapshot: ids burned after it must stay burned, or a
                 # post-rollback ADD COLUMN could reuse a live dir's id
-                "last_field_id": (
-                    read_manifest(parent).get("last_field_id")
-                    if parent
-                    else old.get("last_field_id")
-                ),
+                "last_field_id": hm.get("last_field_id"),
                 # ...but carries the CURRENT head's txn ledger forward —
                 # rolling back data must not roll back applied-batch
                 # memory, or re-deliveries after a rollback double-apply
-                "txn_watermarks": self._txn_watermarks(parent),
+                "txn_watermarks": self._watermarks_of(pm),
                 # the quality contract is an operator decision, not data
                 # state: rollback keeps the HEAD's constraints
-                "constraints": (
-                    self.constraints(parent) if parent else {}
-                ),
-                "properties": (
-                    self.properties(parent) if parent else {}
-                ),
+                "constraints": (pm or {}).get("constraints", {}),
+                "properties": (pm or {}).get("properties", {}),
                 # layout declarations are operator decisions (HEAD's,
                 # like constraints); table stats describe the file set
                 # this rollback exposes (the rolled-to snapshot's)
-                "declared_partition_by": (
-                    read_manifest(parent).get("declared_partition_by")
-                    if parent
-                    else old.get("declared_partition_by")
-                ),
-                "declared_sort_order": (
-                    read_manifest(parent).get("declared_sort_order")
-                    if parent
-                    else old.get("declared_sort_order")
-                ),
+                "declared_partition_by": hm.get("declared_partition_by"),
+                "declared_sort_order": hm.get("declared_sort_order"),
                 "table_stats": old.get("table_stats"),
                 "committed_at_ms": int(time.time() * 1000),
             }
@@ -2157,20 +2131,6 @@ class SnapshotTable:
         # build re-checks against the claimed parent, so a race that
         # slips past this pre-check still refuses atomically
         if require_source_unchanged:
-            if source_protocol is None and not (
-                "://" in src_root
-                or os.path.isdir(os.path.join(src_root, "_snapshots"))
-            ):
-                # (a caller-supplied protocol owns the metadata tail —
-                # e.g. a REST catalog — so a missing local _snapshots
-                # dir says nothing about the table's existence)
-                # don't construct a SnapshotTable here: its protocol
-                # would recreate _snapshots under the vanished path
-                raise ValueError(
-                    f"publish: source table at {src_root} is gone "
-                    "(moved or deleted); re-clone from its new "
-                    "location and replay the changes"
-                )
             src_head = SnapshotTable(
                 self.spark, src_root, protocol=source_protocol
             ).current_version()
@@ -2308,16 +2268,15 @@ class SnapshotTable:
                     f"require_source_unchanged=False) to rebase "
                     f"non-overlapping changes"
                 )
-            parent_props = (
-                read_manifest(parent).get("properties", {}) if parent else {}
-            )
+            pm = read_manifest(parent) if parent else None
+            parent_props = (pm or {}).get("properties", {})
             common = {
                 "txn": None,
                 # multi-table transaction stamp: recovery's "did this
                 # member already land?" check reads it (crash between
                 # the txn record and the last pointer move)
                 **({"txn_record": txn_record} if txn_record else {}),
-                "txn_watermarks": source._txn_watermarks(parent),
+                "txn_watermarks": source._watermarks_of(pm),
                 # audited quality contract travels with the publish...
                 "constraints": self.constraints(v),
                 # ...as do the clone's column DEFAULTs (schema state the
@@ -2369,7 +2328,7 @@ class SnapshotTable:
                 }
             # ---- rebase: re-parent the clone's diff onto the new head
             base = read_manifest(srcinfo["version"])
-            head_src = read_manifest(parent)
+            head_src = pm
             if json.dumps(head_src.get("schema"), sort_keys=True) != (
                 json.dumps(base.get("schema"), sort_keys=True)
             ) or head_src.get("field_ids") != base.get("field_ids"):
@@ -2960,13 +2919,7 @@ class SnapshotTable:
                 manifest["column_defaults"] = {
                     (new if n == old else n): e for n, e in cdef.items()
                 }
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = f"rename_{old}_to_{new}"
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, f"rename_{old}_to_{new}")
 
         return self.protocol.commit(build)
 
@@ -3344,13 +3297,7 @@ class SnapshotTable:
                 # FOR COLUMNS merges into (never clears) earlier NDVs
                 "ndv": {**prev.get("ndv", {}), **stats.get("ndv", {})},
             }
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = "analyze"
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, "analyze")
 
         stats["version"] = self.protocol.commit(build)
         return stats
@@ -3431,13 +3378,7 @@ class SnapshotTable:
                 raise ValueError("partition-spec change on an empty table")
             manifest = dict(read_manifest(parent))
             manifest["declared_partition_by"] = list(spec)
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = "set_partition_spec"
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, "set_partition_spec")
 
         return self.protocol.commit(build)
 
@@ -3488,13 +3429,7 @@ class SnapshotTable:
                 raise ValueError("sort-order change on an empty table")
             manifest = dict(read_manifest(parent))
             manifest["declared_sort_order"] = list(cols) or None
-            manifest["version"] = parent + 1
-            manifest["parent"] = parent
-            manifest["mode"] = "set_sort_order"
-            manifest["txn"] = None
-            manifest["txn_watermarks"] = self._txn_watermarks(parent)
-            manifest["committed_at_ms"] = int(time.time() * 1000)
-            return manifest
+            return self._child_of(manifest, parent, "set_sort_order")
 
         return self.protocol.commit(build)
 
@@ -4174,7 +4109,11 @@ class SnapshotTable:
         v = version if version is not None else self.current_version()
         if v is None:
             return None
-        s = self._manifest(v).get("schema")
+        return self._schema_of(self._manifest(v))
+
+    @staticmethod
+    def _schema_of(m: dict) -> T.StructType | None:
+        s = m.get("schema")
         return T.StructType.fromJson(s) if s else None
 
     def _align(
@@ -4412,10 +4351,7 @@ class SnapshotTable:
 
     def versions(self) -> list[dict]:
         """All snapshot manifests, oldest first (the snapshot log)."""
-        return [
-            self.protocol.read_manifest(v)
-            for v in self.protocol.list_versions()
-        ]
+        return [self._manifest(v) for v in self.protocol.list_versions()]
 
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Incremental scan: rows ADDED after ``from_version`` up to
@@ -5743,9 +5679,7 @@ class SnapshotTable:
         that moved since the pin, apply ``edit`` to the pinned manifest
         ``m`` (no re-read: the head check proves ``m`` is the parent)
         and stamp the snapshot fields."""
-        wm = m["txn_watermarks"] if "txn_watermarks" in m else (
-            self._txn_watermarks(v)
-        )
+        wm = self._watermarks_of(m)
 
         def build(parent: int | None, read_manifest) -> dict:
             if parent != v:
@@ -6292,7 +6226,9 @@ class SnapshotTable:
     # ----------------------------------------------------------- internal
 
     def _manifest(self, version: int) -> dict:
-        return self.protocol.read_manifest(version)
+        """Shared parsed manifest (``CommitProtocol.manifest``): copy
+        before editing, never mutate."""
+        return self.protocol.manifest(version)
 
 
 # --------------------------------------------------------- SQL time travel

@@ -89,14 +89,25 @@ def _decode_segment(raw: str, typ: str):
     )
 
 
+def _rest_of(options) -> "tuple[str, str] | None":
+    """``(restUrl, restTable)`` when both options name a REST-attached
+    table, else None (the table's local ``_snapshots`` tail)."""
+    url, tbl = options.get("restUrl"), options.get("restTable")
+    return (str(url).rstrip("/"), str(tbl)) if url and tbl else None
+
+
 def _build_source_class():
-    """The DataSource / reader / partition classes are defined INSIDE
-    this factory so cloudpickle ships them to Python workers BY VALUE
-    (nested classes fail the module-lookup test that triggers
-    by-reference pickling): the engine package is importable only on the
-    driver in an external-driver session (see ``skipping._make_enc`` for
-    the same constraint on functions). Everything the executor-side
-    ``read`` touches is stdlib/pyarrow or pickled partition data."""
+    """The DataSource / reader / partition classes are defined inside
+    this factory, so cloudpickle ships the classes themselves to Python
+    workers by value. Planning — ``schema()``, ``reader()`` and the
+    readers' ``partitions()`` — runs in a Python worker and reads CURRENT
+    and manifests through the table's commit protocol
+    (``catalog.open_protocol``), so the package must be importable on
+    Python workers, as every other engine path already requires. The readers
+    keep only plain data as attributes (the table path and the REST
+    ``(url, table)`` tuple) and import the factory inside their methods.
+    The executor-side ``read`` touches only stdlib/pyarrow and pickled
+    partition data."""
 
     class _FilePartition(InputPartition):
         def __init__(
@@ -162,8 +173,8 @@ def _build_source_class():
             self.consts = consts or {}
 
     class _SnapshotStreamReader(DataSourceStreamReader):
-        """Driver-side planner: versions → file partitions. Reads
-        manifests directly from the local metadata layout."""
+        """Planner: versions → file partitions, from manifests read
+        through the table's commit protocol."""
 
         def __init__(
             self,
@@ -175,21 +186,14 @@ def _build_source_class():
             max_files_per_trigger: int | None = None,
             max_bytes_per_trigger: int | None = None,
             end_version: int | None = None,
-            rest_url: str | None = None,
-            rest_table: str | None = None,
+            rest: "tuple[str, str] | None" = None,
         ):
             self.path = path.rstrip("/")
-            self.meta = os.path.join(self.path, "_snapshots")
-            # REST-attached tables keep their metadata tail in the
-            # catalog service, not under <path>/_snapshots: CURRENT and
-            # manifests read over the wire (the planner is driver-side;
-            # executors only ever see data-file lists, which stay on the
-            # shared store like every other table)
-            self._rest = (
-                (rest_url.rstrip("/"), rest_table)
-                if rest_url and rest_table
-                else None
-            )
+            # a REST-attached table's (url, table): its metadata tail
+            # lives in the catalog service, not under <path>/_snapshots
+            # (executors only ever see data-file lists, which stay on
+            # the shared store like every other table)
+            self.rest = rest
             self.start_version = start_version
             self.skip_change_commits = skip_change_commits
             self.change_feed = change_feed
@@ -226,27 +230,15 @@ def _build_source_class():
             self._floor: int | None = None
 
         # -------------------------------------------------------- meta
-        def _rest_protocol(self):
-            from oss_data_lake_spark.sources.rest_catalog import (
-                RestCommitProtocol,
-            )
-
-            return RestCommitProtocol(self._rest[0], self._rest[1])
-
         def _current(self) -> int:
-            if self._rest is not None:
-                return self._rest_protocol().read_current() or 0
-            try:
-                with open(os.path.join(self.meta, "CURRENT")) as fh:
-                    return int(fh.read().strip())
-            except FileNotFoundError:
-                return 0
+            from oss_data_lake_spark.sources.catalog import open_protocol
+
+            return open_protocol(self.path, self.rest).read_current() or 0
 
         def _manifest(self, v: int) -> dict:
-            if self._rest is not None:
-                return self._rest_protocol().read_manifest(v)
-            with open(os.path.join(self.meta, f"v{v}.json")) as fh:
-                return json.load(fh)
+            from oss_data_lake_spark.sources.catalog import open_protocol
+
+            return open_protocol(self.path, self.rest).manifest(v)
 
         @staticmethod
         def _visible(manifest: dict, d: str):
@@ -400,6 +392,20 @@ def _build_source_class():
                 for c in columns
             ]
 
+        def _eq_filters(self, m, eqs, d):
+            """References to the equality deletes in ``eqs`` that apply
+            to dir ``d``: (write-time key names, abs key file dir,
+            stored column names) — the executor reads the keys."""
+            return [
+                (
+                    self._entry_key_src(m, d, e),
+                    os.path.join(self.path, e["dir"]),
+                    list(e["cols"]),
+                )
+                for e in eqs
+                if d in set(e.get("applies_dirs", []))
+            ]
+
         def _entry_key_src(self, m, d, entry):
             """the equality entry's key columns under dir d's WRITE names
             (field-id resolution — a rename between the file's commit and
@@ -463,20 +469,6 @@ def _build_source_class():
             c_dvd = c.get("delete_dirs", [])
             p_eqs = p.get("eq_deletes", [])
             c_eqs = c.get("eq_deletes", [])
-
-            def eq_filters(m, eqs, d):
-                # references only: (write-time key names, abs key file
-                # dir, stored column names) — the executor reads the keys
-                return [
-                    (
-                        self._entry_key_src(m, d, e),
-                        os.path.join(self.path, e["dir"]),
-                        list(e["cols"]),
-                    )
-                    for e in eqs
-                    if d in set(e.get("applies_dirs", []))
-                ]
-
             removed: list[tuple[str, str]] = []
             added: list[tuple[str, str]] = []
             for d in p_dirs:
@@ -502,7 +494,7 @@ def _build_source_class():
                     self._src_names_for(p, d, columns, head_fids),
                     "delete", v,
                     skip_dv_refs=self._dv_refs_for(p_dvd, rel),
-                    eq_skip=eq_filters(p, p_eqs, d),
+                    eq_skip=self._eq_filters(p, p_eqs, d),
                     consts=self._path_consts(p, d, f),
                 ))
             for d, f in added:
@@ -512,7 +504,7 @@ def _build_source_class():
                     self._src_names_for(c, d, columns, head_fids),
                     "insert", v,
                     skip_dv_refs=self._dv_refs_for(c_dvd, rel),
-                    eq_skip=eq_filters(c, c_eqs, d),
+                    eq_skip=self._eq_filters(c, c_eqs, d),
                     consts=self._path_consts(c, d, f),
                 ))
 
@@ -549,7 +541,7 @@ def _build_source_class():
                         # the child's OWN equality deletes apply first: a
                         # row they suppress is not visible, so a vector
                         # targeting it must not emit it (batch-feed rule)
-                        eq_skip=eq_filters(c, c_eqs, d),
+                        eq_skip=self._eq_filters(c, c_eqs, d),
                         consts=self._path_consts(c, d, rel[len(d) + 1:]),
                     ))
             p_eq_dirs = {e["dir"] for e in p_eqs}
@@ -599,8 +591,8 @@ def _build_source_class():
                             # the changed entry itself is never in the
                             # filter state (p for arriving, c for gone);
                             # earlier same-step siblings ARE
-                            eq_skip=eq_filters(m_state, eqs_state, d)
-                            + eq_filters(c, sibs, d),
+                            eq_skip=self._eq_filters(m_state, eqs_state, d)
+                            + self._eq_filters(c, sibs, d),
                             consts=self._path_consts(c, d, f),
                         ))
             return parts
@@ -675,34 +667,16 @@ def _build_source_class():
                         continue
                     # field-id projection: a column renamed between this
                     # commit and the head is read under its WRITE name
-                    dmap = cur.get("dir_field_ids", {}).get(d) or {}
-                    id2w = {i: w for w, i in dmap.items()}
-                    src_names = [
-                        id2w.get(head_fids.get(c), c)
-                        if head_fids.get(c) in id2w
-                        else c
-                        for c in columns
-                    ]
-                    vis = self._visible(cur, d)
-                    root = os.path.join(self.path, d)
-                    files = (
-                        [os.path.join(root, f) for f in vis]
-                        if vis is not None
-                        else [
-                            os.path.join(dp, f)
-                            for dp, _dn, fs in os.walk(root)
-                            for f in sorted(fs)
-                            if f.endswith(".parquet")
-                            and not f.startswith("_")
-                        ]
+                    src_names = self._src_names_for(
+                        cur, d, columns, head_fids
                     )
-                    for p in files:
+                    for f in self._rel_files(cur, d):
                         parts.append(
                             _FilePartition(
-                                p, columns, src_names,
-                                consts=self._path_consts(
-                                    cur, d, os.path.relpath(p, root)
-                                ),
+                                os.path.join(self.path, d, f),
+                                columns,
+                                src_names,
+                                consts=self._path_consts(cur, d, f),
                             )
                         )
                 prev = cur
@@ -802,15 +776,20 @@ def _build_source_class():
     class _SnapshotBatchReader(DataSourceReader):
         """BATCH reads through the same format —
         ``spark.read.format("snapshot_stream").option("path", p)
-        [.option("versionAsOf", n)]`` — so a PLAIN Spark session (no
-        engine import on the executors, pickled-by-value classes only)
+        [.option("versionAsOf", n)]`` — so a plain Spark session (no
+        engine configs; the package importable on its Python workers)
         reads a snapshot table with full correctness: one snapshot's
         visible files plan as partitions, and executors apply position
         tombstones / equality deletes from file REFERENCES, exactly
         like the stream. Clean dirs take the plain-file fast path."""
 
-        def __init__(self, path: str, version: int | None = None):
-            self._r = _SnapshotStreamReader(path, 0)
+        def __init__(
+            self,
+            path: str,
+            version: int | None = None,
+            rest: "tuple[str, str] | None" = None,
+        ):
+            self._r = _SnapshotStreamReader(path, 0, rest=rest)
             self._version = version
 
         def partitions(self):
@@ -830,15 +809,7 @@ def _build_source_class():
             parts = []
             for d in m["data_dirs"]:
                 src_names = r._src_names_for(m, d, columns, head_fids)
-                eq_skip = [
-                    (
-                        r._entry_key_src(m, d, e),
-                        os.path.join(r.path, e["dir"]),
-                        list(e["cols"]),
-                    )
-                    for e in eqs
-                    if d in set(e.get("applies_dirs", []))
-                ]
+                eq_skip = r._eq_filters(m, eqs, d)
                 for f in r._rel_files(m, d):
                     rel = f"{d}/{f}"
                     dv_refs = r._dv_refs_for(dvd, rel) if dvd else []
@@ -888,12 +859,12 @@ def _build_source_class():
         the first batch after a checkpoint restart is uncapped (a
         capped guess below the restored offset would plan a replaying
         batch under the API's equality-compared offsets).
-        ``restUrl`` + ``restTable`` — stream a REST-attached table
-        (``RestCommitProtocol``): CURRENT and manifests read from the
-        catalog service instead of ``<path>/_snapshots`` (driver-side
-        planning only; executors still read data files from the shared
-        store). ``changeFeed`` ('true'/'false', default false) — Delta's
-        streaming ``readChangeFeed``: every commit kind becomes a typed
+        ``restUrl`` + ``restTable`` — read or stream a REST-attached
+        table: CURRENT and manifests come from the catalog service
+        instead of ``<path>/_snapshots`` (planning only; executors
+        still read data files from the shared store). ``changeFeed``
+        ('true'/'false', default false) — Delta's streaming
+        ``readChangeFeed``: every commit kind becomes a typed
         micro-batch of (table columns, ``_change_type`` insert/delete,
         ``_commit_version``) rows, matching the batch
         ``SnapshotTable.read_change_feed`` semantics — appends stream as
@@ -908,36 +879,18 @@ def _build_source_class():
         def _flag(self, name: str) -> bool:
             return str(self.options.get(name, "false")).lower() == "true"
 
-        def _rest_protocol(self):
-            """REST-attached tables (options restUrl + restTable) keep
-            their metadata tail in the catalog service; None for the
-            local layout."""
-            url = self.options.get("restUrl")
-            tbl = self.options.get("restTable")
-            if not url or not tbl:
-                return None
-            from oss_data_lake_spark.sources.rest_catalog import (
-                RestCommitProtocol,
-            )
-
-            return RestCommitProtocol(url, tbl)
-
         def schema(self):
-            meta = os.path.join(self.options["path"], "_snapshots")
+            from oss_data_lake_spark.sources.catalog import open_protocol
+
+            path = self.options["path"]
+            proto = open_protocol(path, _rest_of(self.options))
             v = self.options.get("versionAsOf")
-            rest = self._rest_protocol()
-            if rest is not None:
-                cur = int(v) if v is not None else (rest.read_current() or 0)
-                manifest = rest.read_manifest(cur)
-            else:
-                if v is None:
-                    with open(os.path.join(meta, "CURRENT")) as fh:
-                        cur = int(fh.read().strip())
-                else:
-                    cur = int(v)
-                with open(os.path.join(meta, f"v{cur}.json")) as fh:
-                    manifest = json.load(fh)
-            s = manifest.get("schema")
+            cur = int(v) if v is not None else proto.read_current()
+            if cur is None:
+                raise FileNotFoundError(
+                    f"snapshot_stream: no snapshot table at {path}"
+                )
+            s = proto.manifest(cur).get("schema")
             if s is None:
                 raise ValueError(
                     "snapshot_stream needs a schema-carrying snapshot table"
@@ -967,6 +920,7 @@ def _build_source_class():
             return _SnapshotBatchReader(
                 self.options["path"].rstrip("/"),
                 int(v) if v is not None else None,
+                rest=_rest_of(self.options),
             )
 
         def streamReader(self, schema):
@@ -987,28 +941,21 @@ def _build_source_class():
                 # version strictly before it. _parse_ts_ms is the shared
                 # literal parser (naive literals read as UTC; an explicit
                 # offset is honored, not clobbered)
+                from oss_data_lake_spark.sources.catalog import (
+                    open_protocol,
+                )
                 from oss_data_lake_spark.sources.snapshots import (
                     _parse_ts_ms,
                 )
 
                 ms = _parse_ts_ms(ts)
-                meta = os.path.join(self.options["path"], "_snapshots")
+                proto = open_protocol(
+                    self.options["path"], _rest_of(self.options)
+                )
                 start = 0
-                rest = self._rest_protocol()
-                if rest is not None:
-                    cur = rest.read_current() or 0
-                else:
-                    with open(os.path.join(meta, "CURRENT")) as fh:
-                        cur = int(fh.read().strip())
-                for v in range(1, cur + 1):
+                for v in range(1, (proto.read_current() or 0) + 1):
                     try:
-                        if rest is not None:
-                            m = rest.read_manifest(v)
-                        else:
-                            with open(
-                                os.path.join(meta, f"v{v}.json")
-                            ) as fh:
-                                m = json.load(fh)
+                        m = proto.manifest(v)
                     except FileNotFoundError:
                         continue  # expired
                     if m.get("committed_at_ms", 0) < ms:
@@ -1031,8 +978,7 @@ def _build_source_class():
                 max_files_per_trigger=_int_opt("maxFilesPerTrigger"),
                 max_bytes_per_trigger=_int_opt("maxBytesPerTrigger"),
                 end_version=_int_opt("endVersion"),
-                rest_url=self.options.get("restUrl"),
-                rest_table=self.options.get("restTable"),
+                rest=_rest_of(self.options),
             )
 
     return SnapshotStreamSource
@@ -1075,27 +1021,11 @@ def drain_available_now(
     is bounded to."""
     import time as _time
 
-    meta = os.path.join(path.rstrip("/"), "_snapshots")
-    if options.get("restUrl") and options.get("restTable"):
-        # REST-attached table: the head snapshot comes from the catalog
-        # service (the same wire the stream's own planner uses)
-        from oss_data_lake_spark.sources.rest_catalog import (
-            RestCommitProtocol,
-        )
+    from oss_data_lake_spark.sources.catalog import open_protocol
 
-        head = (
-            RestCommitProtocol(
-                str(options["restUrl"]), str(options["restTable"])
-            ).read_current()
-            or 0
-        )
-    else:
-        try:
-            with open(os.path.join(meta, "CURRENT")) as fh:
-                head = int(fh.read().strip())
-        except FileNotFoundError:
-            return 0
-    if head <= 0:
+    # the entry-time head, through the same protocol the planner reads
+    head = open_protocol(path.rstrip("/"), _rest_of(options)).read_current()
+    if not head:
         return 0
     # already drained? peek at the checkpoint's last COMMITTED offset —
     # starting a stream just to learn "nothing to do" would wait out the

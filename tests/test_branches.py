@@ -239,3 +239,12 @@ def test_branch_streams_like_any_table(spark, table, tmp_path):
     q.awaitTermination(120)
     got = spark.sql("SELECT COUNT(*) AS n FROM branch_stream").collect()
     assert got[0]["n"] == 130  # 120 base + 10 branch rows; main's 99 absent
+
+
+def test_unknown_branch_lookup_creates_nothing(spark, table):
+    import os
+
+    with pytest.raises(ValueError, match="unknown branch"):
+        table.branch("nope")
+    assert not os.path.exists(os.path.join(table.path, "_branches"))
+    assert table.branches() == {}

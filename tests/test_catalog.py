@@ -13,11 +13,13 @@ properties the flock protocol cannot provide off-host.
 from __future__ import annotations
 
 import json
+import os
 import threading
 
 import pytest
 from pyspark.sql import Row
 
+from oss_data_lake_spark.sources import catalog
 from oss_data_lake_spark.sources.catalog import (
     CasCommitProtocol,
     CommitConflict,
@@ -247,3 +249,71 @@ def test_cas_concurrent_mixed_dml_and_appends(spark, tmp_path):
     want.update({k: float(k) + 1000.0 for k in range(90, 100)})
     want.update({k: float(k) for k in range(200, 210)})
     assert got == want
+
+
+def test_append_build_reads_its_parent_once_per_attempt(spark, tmp_path):
+    """Without a parse cache (an object store, a REST catalog) every
+    manifest read is a round trip: the commit build takes every parent
+    field from the one manifest it read. The first attempt loses its
+    claim to a rival writer and rebuilds on the new head."""
+    t = _cas_table(spark, tmp_path)
+    t.commit(_batch(spark, 0, 5))
+    proto, cat = t.protocol, t.protocol.catalog
+    read, commit = proto.read_manifest, proto.commit
+    reads, parents, in_build = [], [], [False]
+
+    def counted(version):
+        if in_build[0]:
+            reads.append(version)
+        return read(version)
+
+    def flagged_commit(build):
+        def flagged(parent, rm):
+            parents.append(parent)
+            in_build[0] = True
+            try:
+                out = build(parent, rm)
+            finally:
+                in_build[0] = False
+            if len(parents) == 1:  # a rival claims the slot first
+                rival = {**read(parent), "version": parent + 1}
+                cat.put_if_absent(
+                    proto._vkey(parent + 1), json.dumps(rival).encode()
+                )
+            return out
+
+        return commit(flagged)
+
+    proto.read_manifest = counted
+    proto.commit = flagged_commit
+    assert t.commit(_batch(spark, 5, 8), mode="append") == 3
+    assert parents == [1, 2]
+    assert reads == [1, 2]
+    assert sorted(r.k for r in t.read().collect()) == list(range(8))
+
+
+def test_local_publish_is_durable_and_mkdirs_on_first_commit(
+    tmp_path, monkeypatch
+):
+    """The temp manifest is fsynced before its link, the CURRENT temp
+    before its rename, and the directory after each; a protocol handle
+    alone creates nothing."""
+    meta = tmp_path / "t" / "_snapshots"
+    proto = catalog.open_protocol(str(tmp_path / "t"))
+    assert proto.read_current() is None and proto.list_versions() == []
+    assert not (tmp_path / "t").exists()
+    synced = []
+    real = os.fsync
+
+    def spy(fd):
+        synced.append(os.fstat(fd).st_ino)
+        real(fd)
+
+    monkeypatch.setattr(catalog.os, "fsync", spy)
+    assert proto.commit(lambda p, _r: {"version": 1}) == 1
+
+    def ino(name=None):
+        return os.stat(meta / name if name else meta).st_ino
+
+    assert synced == [ino("v1.json"), ino(), ino("CURRENT"), ino()]
+    assert sorted(os.listdir(meta)) == ["CURRENT", "LOCK", "v1.json"]

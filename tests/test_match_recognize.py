@@ -603,3 +603,71 @@ def test_clause_keywords_as_identifiers_do_not_misfire(mr_eng):
           DEFINE UPP AS subset > PREV(subset)
         )""").collect()
     assert len(out) == 1 and out[0]["n_up"] == 2
+
+
+# ---- runtime exclusivity guard: overlapping DEFINEs must raise ----
+def _one_user_df(spark, vals):
+    """One user's events, ``event_id`` = position in ``vals``."""
+    return _mk_df(
+        spark, {1: [{"event_id": i, "value": v} for i, v in enumerate(vals)]}
+    )
+
+
+def test_overlapping_defines_raise_not_silently_mislabel(spark):
+    """Values [5,3,3] with
+    DOWN AS value <= PREV(value), UP AS value >= PREV(value). The reference
+    NFA finds 1 match; the label rewrite would find 0 — so the engine must
+    refuse at execution time, not return the wrong answer."""
+    df = _one_user_df(spark, [5, 3, 3])
+    out = match_recognize(
+        df,
+        partition_by=["user_id"],
+        order_by="event_id",
+        pattern="STRT DOWN+ UP+",
+        defines={
+            "DOWN": "value <= PREV(value)",
+            "UP": "value >= PREV(value)",
+        },
+        measures={"mn": "MATCH_NUMBER()"},
+    )
+    with pytest.raises(Exception, match="mutually exclusive"):
+        out.collect()
+
+
+def test_exclusive_defines_pass_the_guard(spark):
+    """The guard must not fire on contract-conforming (strict) defines —
+    the shipped b53 spelling still evaluates."""
+    df = _one_user_df(spark, [5, 3, 1, 4, 6, 2])
+    out = match_recognize(
+        df,
+        partition_by=["user_id"],
+        order_by="event_id",
+        pattern="STRT DOWN+ UP+",
+        defines={
+            "DOWN": "value < PREV(value)",
+            "UP": "value > PREV(value)",
+        },
+        measures={"mn": "MATCH_NUMBER()"},
+    )
+    assert out.count() == 1  # 5>3>1<4<6 matches; trailing 2 has no UP leg
+
+
+def test_sql_route_overlapping_defines_raise(spark, tmp_path):
+    """Engine.sql routes arbitrary Trino MATCH_RECOGNIZE text — the guard
+    must protect that path too."""
+    from oss_data_lake_spark.engine import Engine
+
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    e.sql("CREATE TABLE ev (user_id BIGINT, event_id BIGINT, value DOUBLE) "
+          "USING snapshot")
+    e.sql("INSERT INTO ev VALUES (1, 0, 5.0), (1, 1, 3.0), (1, 2, 3.0)")
+    out = e.sql(
+        "SELECT * FROM ev MATCH_RECOGNIZE ("
+        " PARTITION BY user_id ORDER BY event_id"
+        " MEASURES MATCH_NUMBER() AS mn"
+        " PATTERN (STRT DOWN+ UP+)"
+        " DEFINE DOWN AS value <= PREV(value),"
+        "        UP AS value >= PREV(value))"
+    )
+    with pytest.raises(Exception, match="mutually exclusive"):
+        out.collect()

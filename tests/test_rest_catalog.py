@@ -603,3 +603,32 @@ def test_management_warehouse_endpoints(tmp_path):
             assert e.code == 409
     finally:
         srv.stop()
+
+
+def test_warehouse_ids_consistent_across_post_and_get():
+    """Lakekeeper warehouse ids are creation-stable: create 'b' then
+    'a' — POST returns wh-0 for b; the name-sorted GET listing must
+    still say b=wh-0, a=wh-1."""
+    srv = RestCatalogServer().start()
+    try:
+        created = {}
+        for name in ("b", "a"):
+            req = urllib.request.Request(
+                f"{srv.url}/management/v1/warehouse",
+                data=json.dumps({"warehouse-name": name}).encode(),
+                headers={"Content-Type": "application/json"},
+                method="POST",
+            )
+            with urllib.request.urlopen(req) as r:
+                created[name] = json.loads(r.read().decode())["warehouse-id"]
+        assert created == {"b": "wh-0", "a": "wh-1"}
+        with urllib.request.urlopen(
+            f"{srv.url}/management/v1/warehouse"
+        ) as r:
+            listed = {
+                w["name"]: w["id"]
+                for w in json.loads(r.read().decode())["warehouses"]
+            }
+        assert listed == created
+    finally:
+        srv.stop()

@@ -53,6 +53,8 @@ def test_plan_reads_manifest_once_and_lists_each_dir_once(
 ):
     t = six_dirs
     v = t.current_version()
+    # counted from the first read: the one parse serves the whole test
+    calls = _count_calls(monkeypatch)
     dirs = t._manifest(v)["data_dirs"]
     assert len(dirs) == 6
     n_files = sum(
@@ -61,7 +63,7 @@ def test_plan_reads_manifest_once_and_lists_each_dir_once(
     )
     in_pred = {"col": "c", "in": ["c1", "c3", "c4"]}
 
-    calls = _count_calls(monkeypatch)
+    calls["listed"].clear()
     sel, n_sel, n_skip = t.plan_pruned([in_pred, ("k", 15, 44)], version=v)
     assert calls["manifest"] == 1
     assert len(calls["listed"]) <= len(dirs)
@@ -79,3 +81,4 @@ def test_plan_reads_manifest_once_and_lists_each_dir_once(
     # c3 lies wholly inside k in [15, 44], c1 and c4 partly: three
     # dirs keep files, the other three are skipped whole
     assert [d for d in dirs if sel[d]] == [dirs[1], dirs[3], dirs[4]]
+    assert calls["manifest"] == 1

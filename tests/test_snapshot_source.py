@@ -1050,3 +1050,45 @@ def test_drain_available_now_over_rest_table(registered, spark, tmp_path):
         assert sorted(got) == [0, 1, 2]
     finally:
         server.stop()
+
+
+def test_batch_read_of_rest_attached_table(registered, spark, tmp_path):
+    """A batch read passes restUrl/restTable to its planner: the
+    manifests come from the catalog service, and no local _snapshots
+    dir is read or created."""
+    import os
+
+    from oss_data_lake_spark.sources.rest_catalog import (
+        RestCatalogServer,
+        RestCommitProtocol,
+    )
+
+    server = RestCatalogServer().start()
+    try:
+        t = SnapshotTable(
+            spark,
+            str(tmp_path / "bt"),
+            protocol=RestCommitProtocol(server.url, "bt"),
+        )
+        t.commit(spark.createDataFrame([Row(k=i) for i in range(4)]))
+        t.commit(spark.createDataFrame([Row(k=9)]), mode="append")
+        df = (
+            spark.read.format(FORMAT_NAME)
+            .option("path", t.path)
+            .option("restUrl", server.url)
+            .option("restTable", "bt")
+            .load()
+        )
+        assert sorted(r.k for r in df.collect()) == [0, 1, 2, 3, 9]
+        assert not os.path.isdir(os.path.join(t.path, "_snapshots"))
+    finally:
+        server.stop()
+
+
+def test_schema_probe_of_missing_path_creates_nothing(
+    registered, spark, tmp_path
+):
+    missing = tmp_path / "missing"
+    with pytest.raises(Exception, match="no snapshot table"):
+        spark.read.format(FORMAT_NAME).option("path", str(missing)).load()
+    assert not missing.exists()

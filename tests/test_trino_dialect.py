@@ -907,3 +907,27 @@ def test_chain_masks_each_statement_a_bounded_number_of_times(
     text, want = _strpos_statement(500)
     assert eng._translate_chain(text) == want
     assert counting.chars <= 20 * len(text), counting.chars / len(text)
+
+
+def test_trino_ddl_type_words_as_column_names_survive(spark, tmp_path):
+    """Trino-DDL type substitutions fire only in TYPE position: 'real
+    DOUBLE' in Trino-marked DDL (WITH partitioning tail) is a column
+    NAMED real, not a type token — the
+    translation must keep the name and the declared type."""
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    e.sql(
+        "CREATE TABLE twords ("
+        " real DOUBLE, varbinary BIGINT, varchar VARCHAR,"
+        " ts TIMESTAMP(3) WITH TIME ZONE)"
+        " WITH (partitioning = ARRAY['day(ts)'])"
+    )
+    schema = {f.name: f.dataType.simpleString()
+              for f in e.sql("SELECT * FROM twords").schema.fields}
+    assert schema["real"] == "double"
+    assert schema["varbinary"] == "bigint"
+    assert schema["varchar"] == "string"   # VARCHAR in TYPE position maps
+    assert schema["ts"] == "timestamp"
+    e.sql("INSERT INTO twords VALUES "
+          "(1.5, 2, 'x', TIMESTAMP '2024-01-02 03:04:05')")
+    row = e.sql("SELECT real, varbinary, varchar FROM twords").collect()[0]
+    assert (row["real"], row["varbinary"], row["varchar"]) == (1.5, 2, "x")
