@@ -82,7 +82,9 @@ class Engine:
         - maintenance statements (``OPTIMIZE [ZORDER BY|CLUSTER BY]``,
           ``VACUUM``, ``DESCRIBE HISTORY``),
         - and plain SELECTs whose WHERE conjuncts route the scan through
-          manifest file skipping (``extract_prunable_predicates``)."""
+          manifest file skipping: one parse by Spark's parser finds the
+          registered tables the statement reads and the conjuncts that
+          constrain each one's rows (``sqlplan.statement``)."""
         self._sync_schema_aliases()
         m = self._EXPLAIN_ANALYZE_RE.match(text)
         if m:

@@ -158,15 +158,15 @@ statement-shaped text here BEFORE the query path:
                                              bit-identical to the full
                                              recompute
 
-DML statements prune through the same conservative conjunct extraction as
-SELECTs (``snapshots.extract_prunable_predicates``'s machinery over the
-statement's WHERE text): extracted ranges intersect via ``plan_pruned`` so
-only files whose manifest bounds admit the predicate are rewritten; an
-inextractable WHERE (OR / NOT / CASE / function-wrapped columns) simply
-rewrites everything the condition touches — under-pruning is a cost, never
-a correctness, decision. Each statement returns a small result DataFrame
-(the DML ones: one row of version / files_rewritten / files_skipped —
-Delta's ``operationMetrics`` shape).
+DML statements prune like SELECTs: the condition is parsed once by Spark
+(``sqlplan.condition``), and its extractable top-level conjuncts on stats
+columns intersect via ``plan_pruned`` so only files whose manifest bounds
+admit them are rewritten; an OR / NOT / CASE / function / subquery
+conjunct prunes nothing — under-pruning is a cost, never a correctness,
+decision. The same parse picks the subquery route and the equality-delete
+keys. Each statement returns a small result DataFrame (the DML ones: one
+row of version / files_rewritten / files_skipped — Delta's
+``operationMetrics`` shape).
 
 A DML-shaped statement naming an UNREGISTERED table raises immediately —
 falling through to Spark's parser would produce a far-from-cause error
@@ -180,16 +180,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oss_data_lake_spark import sqlplan
 from oss_data_lake_spark.sources.snapshots import (
     SnapshotTable,
-    _BLOCKER_RE,
-    _CMP_RE,
-    _IN_RE,
-    _ANY_LIT_RE,
-    _conjunct_spans,
     _coerce_key_value,
-    _parse_sql_literal,
-    _preds_from_conjuncts,
 )
 from oss_data_lake_spark.sqltext import (
     _depths,
@@ -369,39 +363,23 @@ _DML_SHAPE_RE = re.compile(
 )
 
 
-def conjunct_ranges(cond: str, stats_cols: set[str]) -> list:
-    """Prunable predicates from a bare WHERE condition (the single-table
-    DML context — no FROM-scope resolution needed): ranges, point/IN
-    probes (bloom-powered), IS [NOT] NULL. Same conservative gates as the
-    SELECT extractor: OR/CASE/negations anywhere → nothing; only depth-0
-    conjuncts on stats columns; predicate-shaped text inside literals
-    ignored. Under-extraction only costs pruning."""
-    masked = _masked(cond)
-    if _BLOCKER_RE.search(masked):
-        return []
-    depths = _depths(masked)
-    return _preds_from_conjuncts(
-        cond, masked, depths, 0, len(cond), 0, stats_cols, None
-    )
+def _parsed(cond: "str | sqlplan.Condition") -> sqlplan.Condition:
+    return sqlplan.condition(cond) if isinstance(cond, str) else cond
 
 
-def subquery_free_conjunct_ranges(cond: str, stats_cols: set[str]) -> list:
-    """Prunable predicates from the NON-subquery depth-0 conjuncts of a
-    condition that contains subqueries elsewhere. Each conjunct gates
-    the AND independently, so extraction is per-conjunct: a conjunct
-    containing a subquery (or a blocker like OR/NOT) contributes
-    nothing, the rest prune as usual — a file where any extracted
-    conjunct cannot hold has no row satisfying the whole conjunction.
-    Under-extraction only costs pruning, never soundness."""
-    masked = _masked(cond)
-    depths = _depths(masked)
-    spans = _conjunct_spans(masked, depths, 0, len(cond), 0)
-    preds: list = []
-    for lo, hi in spans:
-        if _SUBQUERY_RE.search(masked[lo:hi]):
-            continue
-        preds.extend(conjunct_ranges(cond[lo:hi], stats_cols))
-    return preds
+def conjunct_ranges(
+    cond: "str | sqlplan.Condition", stats_cols: set[str]
+) -> list:
+    """Prunable predicates from a bare WHERE condition (text, or its one
+    parse): one per extractable top-level conjunct on an unqualified stats
+    column. The rest contribute nothing and the others still prune — a
+    file where any extracted conjunct cannot hold has no row satisfying
+    the whole conjunction."""
+    return [
+        t.pred
+        for t in _parsed(cond).terms
+        if t is not None and t.qual is None and t.col in stats_cols
+    ]
 
 
 # multi-conjunct probes expand IN lists as a cross product; past this
@@ -409,7 +387,7 @@ def subquery_free_conjunct_ranges(cond: str, stats_cols: set[str]) -> list:
 _EQ_PROBE_MAX_ROWS = 1000
 
 
-def eq_delete_probe(cond: str, table_cols: set[str]):
+def eq_delete_probe(cond: "str | sqlplan.Condition", table_cols: set[str]):
     """If the DELETE condition is a conjunction of ``col = lit`` /
     ``col IN (lits)`` terms on DISTINCT table columns, return
     ``(cols, [key_tuples])`` — the shape an EQUALITY delete can take
@@ -417,42 +395,21 @@ def eq_delete_probe(cond: str, table_cols: set[str]):
     delete; IN lists cross-product, bounded). Anything else returns
     None (the position-delete path)."""
     import itertools
+    import math
 
-    masked = _masked(cond)
-    if _BLOCKER_RE.search(masked):
+    terms = _parsed(cond).terms
+    if not terms or any(
+        t is None or t.qual or t.op not in ("=", "in")
+        or t.col not in table_cols
+        for t in terms
+    ):
         return None
-    depths = _depths(masked)
-    spans = _conjunct_spans(masked, depths, 0, len(cond), 0)
-    if not spans:
+    cols = [t.col for t in terms]
+    if len(set(cols)) < len(cols):
+        return None  # a = 1 AND a = 2 — let the scan decide
+    if math.prod(len(t.vals) for t in terms) > _EQ_PROBE_MAX_ROWS:
         return None
-    cols: list[str] = []
-    per_col_vals: list[list] = []
-    for lo, hi in spans:
-        conj = cond[lo:hi].strip().rstrip(";").strip()
-        m = _CMP_RE.fullmatch(conj)
-        if m and m.group(2) == "=" and m.group(1) in table_cols:
-            col, vals = m.group(1), [_parse_sql_literal(m.group(3))]
-        else:
-            m = _IN_RE.fullmatch(conj)
-            if not (m and m.group(1) in table_cols):
-                return None
-            col = m.group(1)
-            vals = [
-                _parse_sql_literal(t)
-                for t in _ANY_LIT_RE.findall(m.group(2))
-            ]
-            if not vals:
-                return None
-        if col in cols:
-            return None  # a = 1 AND a = 2 — let the scan decide
-        cols.append(col)
-        per_col_vals.append(vals)
-    n_rows = 1
-    for vs in per_col_vals:
-        n_rows *= len(vs)
-    if n_rows > _EQ_PROBE_MAX_ROWS:
-        return None
-    return cols, [tuple(t) for t in itertools.product(*per_col_vals)]
+    return cols, list(itertools.product(*(t.vals for t in terms)))
 
 
 def split_statements(script: str) -> list[str]:
@@ -971,10 +928,6 @@ _COMMENT_ON_RE = re.compile(
     r"('(?:[^']|'')*'|NULL)\s*;?\s*$",
     re.IGNORECASE,
 )
-# a subquery inside a DML condition (IN (SELECT ...), EXISTS (...),
-# scalar comparison) — routes through the temp-view SQL path, since a
-# Spark Column expression cannot hold a subquery
-_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 
 _PROP_PAIR_RE = re.compile(r"'([^']*)'\s*=\s*'([^']*)'")
 _PROP_KEY_RE = re.compile(r"'([^']*)'")
@@ -2229,29 +2182,30 @@ def dispatch_statement(
     if m:
         t = _require(tables, m.group(1), "DELETE FROM")
         cond = m.group(2) or "true"
+        parsed = sqlplan.condition(cond, spark)
         stats = t.stats_columns()
-        if _SUBQUERY_RE.search(_masked(cond)):
+        preds = conjunct_ranges(parsed, stats)
+        if parsed.subquery:
             # Trino accepts subqueries in DML conditions; always a
             # copy-on-write rewrite (a tombstone write would still have
-            # to evaluate the subquery against a full scan)
+            # to evaluate the subquery against a full scan), evaluated
+            # as SQL since a Spark Column expression cannot hold one
             from oss_data_lake_spark.sources.snapshots import (
                 sql_with_time_travel,
             )
 
             info = t.delete_where(
                 cond,
-                prune_preds=subquery_free_conjunct_ranges(cond, stats)
-                or None,
+                prune_preds=preds or None,
                 stats_for=sorted(stats),
                 run_sql=lambda q: sql_with_time_travel(spark, q, tables),
                 alias=m.group(1),
             )
             return _metrics_df(spark, info)
-        preds = conjunct_ranges(cond, stats)
         if _merge_on_read(t):
             schema = t.schema()
             probe = eq_delete_probe(
-                cond, {f.name for f in schema.fields} if schema else set()
+                parsed, {f.name for f in schema.fields} if schema else set()
             )
             if probe is not None:
                 # parsed literals are raw Python str/int/float; coerce
@@ -2295,8 +2249,10 @@ def dispatch_statement(
         else:
             set_text, cond = body, "true"
         assigns = _split_assignments(set_text)
+        parsed = sqlplan.condition(cond, spark)
         stats = t.stats_columns()
-        if _SUBQUERY_RE.search(_masked(cond)):
+        preds = conjunct_ranges(parsed, stats)
+        if parsed.subquery:
             from oss_data_lake_spark.sources.snapshots import (
                 sql_with_time_travel,
             )
@@ -2304,23 +2260,18 @@ def dispatch_statement(
             info = t.update_where(
                 cond,
                 assigns,
-                prune_preds=subquery_free_conjunct_ranges(cond, stats)
-                or None,
+                prune_preds=preds or None,
                 stats_for=sorted(stats),
                 run_sql=lambda q: sql_with_time_travel(spark, q, tables),
                 alias=m.group(1),
             )
         elif _merge_on_read(t):
             info = t.update_where_mor(
-                cond, assigns,
-                prune_preds=conjunct_ranges(cond, stats),
-                stats_for=sorted(stats),
+                cond, assigns, prune_preds=preds, stats_for=sorted(stats),
             )
         else:
             info = t.update_where(
-                cond, assigns,
-                prune_preds=conjunct_ranges(cond, stats),
-                stats_for=sorted(stats),
+                cond, assigns, prune_preds=preds, stats_for=sorted(stats),
             )
         return _metrics_df(spark, info)
 
@@ -2364,7 +2315,9 @@ def dispatch_statement(
         )
         info = t.replace_where(
             aligned, cond,
-            prune_preds=conjunct_ranges(cond, t.stats_columns()) or None,
+            prune_preds=conjunct_ranges(
+                sqlplan.condition(cond, spark), t.stats_columns()
+            ) or None,
             stats_for=sorted(t.stats_columns()) or None,
         )
         return _metrics_df(spark, info)
@@ -2456,7 +2409,9 @@ def dispatch_statement(
                     "OPTIMIZE ... WHERE is exclusive with "
                     "ZORDER BY / CLUSTER BY (re-clustering is whole-table)"
                 )
-            preds = conjunct_ranges(where, t.stats_columns())
+            preds = conjunct_ranges(
+                sqlplan.condition(where, spark), t.stats_columns()
+            )
             if not preds:
                 raise ValueError(
                     "OPTIMIZE ... WHERE needs prunable conjuncts on "

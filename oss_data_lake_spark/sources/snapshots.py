@@ -69,13 +69,8 @@ from oss_data_lake_spark.sources.catalog import (
     CommitProtocol,
     open_protocol,
 )
-from oss_data_lake_spark.sqltext import (
-    _depths,
-    _literal_spans,
-    _masked,
-    _starts_in_literal,
-    _sub_outside_literals,
-)
+from oss_data_lake_spark import sqlplan
+from oss_data_lake_spark.sqltext import _masked, _sub_outside_literals
 
 # Iceberg's safe type promotions (spec §Schemas: int→long, float→double,
 # decimal precision widening — we support the primitive pair plus the
@@ -6316,80 +6311,29 @@ def snapshot_view(
     return view_name
 
 
-# ------------------------------------------- SQL-text predicate pruning
+# ------------------------------------------- SQL predicate pruning
 #
 # The reference's primary persona is a BI tool issuing plain SQL
-# (reference RUNBOOK.md:120-132). File skipping must therefore fire from
-# SQL TEXT, not only from the read_between API: before registering a
-# snapshot table's head view, ``sql_with_time_travel`` extracts the
-# query's top-level WHERE conjuncts on the table's stats columns and backs
-# the view with a file-pruned scan. Soundness rests on two facts:
-#
-# 1. Pruning drops only files PROVEN empty for the extracted conjunction,
-#    and the SQL's own WHERE still runs on top of the view — so a missed
-#    or skipped extraction merely under-prunes; it can never change
-#    results.
-# 2. Extraction is aggressively conservative: it fires only for
-#    (a) predicates inside a WHERE whose OWN from-list (same paren depth)
-#        names the table — a subquery's or another UNION branch's WHERE
-#        never prunes it,
-#    (b) top-level conjuncts (paren depth 0 relative to the WHERE; spans
-#        containing OR / NOT / CASE are skipped whole),
-#    (c) a table referenced exactly ONCE in the statement (two references
-#        share one view; intersecting their predicates would be wrong),
-#    (d) columns that are stats columns of exactly that table; qualified
-#        names must be qualified by the table name itself.
-#    Anything else falls back to the unpruned head view.
-
-_NUM_LIT = r"-?\d+(?:\.\d+)?"
-_SQL_STR_LIT = r"(?:DATE\s+|TIMESTAMP\s+)?'[^']*'"
-_ANY_LIT = rf"(?:{_NUM_LIT}|{_SQL_STR_LIT})"
-_CMP_RE = re.compile(
-    rf"\b([A-Za-z_][\w.]*)\s*(>=|<=|=|>|<)\s*({_ANY_LIT})", re.IGNORECASE
-)
-_BETWEEN_RE = re.compile(
-    rf"\b([A-Za-z_][\w.]*)\s+BETWEEN\s+({_ANY_LIT})\s+AND\s+({_ANY_LIT})",
-    re.IGNORECASE,
-)
-_WHERE_RE = re.compile(r"\bWHERE\b", re.IGNORECASE)
-_FROM_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
-_WHERE_END_RE = re.compile(
-    r"\b(GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW|QUALIFY"
-    r"|UNION|INTERSECT|EXCEPT)\b",
-    re.IGNORECASE,
-)
-# NOT blocks extraction (NOT IN / NOT BETWEEN / NOT LIKE / NOT (…) all
-# negate in ways range pruning cannot express) — EXCEPT the `IS NOT NULL`
-# form, which has its own sound plan (null-count pruning)
-_BLOCKER_RE = re.compile(
-    r"\b(OR|CASE)\b|\bNOT\b(?!\s+NULL\b)", re.IGNORECASE
-)
-_IN_RE = re.compile(
-    rf"\b([A-Za-z_][\w.]*)\s+IN\s*\(\s*"
-    rf"({_ANY_LIT}(?:\s*,\s*{_ANY_LIT})*)\s*\)",
-    re.IGNORECASE,
-)
-_NULL_RE = re.compile(
-    r"\b([A-Za-z_][\w.]*)\s+IS\s+(NOT\s+)?NULL\b", re.IGNORECASE
-)
-_ANY_LIT_RE = re.compile(_ANY_LIT, re.IGNORECASE)
-_AND_RE = re.compile(r"\bAND\b", re.IGNORECASE)
-_BETWEEN_KW_RE = re.compile(r"\bBETWEEN\b", re.IGNORECASE)
-
-
-def _parse_sql_literal(tok: str):
-    tok = tok.strip()
-    up = tok.upper()
-    if up.startswith("DATE") or up.startswith("TIMESTAMP"):
-        tok = tok[tok.index("'"):]
-    if tok.startswith("'"):
-        return tok[1:-1]
-    return float(tok) if "." in tok else int(tok)
+# (reference RUNBOOK.md:120-132), so file skipping fires from SQL:
+# ``sql_with_time_travel`` parses the statement once (``sqlplan``) and
+# backs a table's head or versioned view with a file-pruned scan. Pruning
+# drops only files PROVEN empty for the extracted conjunction, and the
+# SQL's own WHERE still runs on top, so a missed conjunct only
+# under-prunes. A conjunct prunes a table only when (a) it is an
+# extractable top-level AND conjunct of a WHERE (never a HAVING), (b) the
+# walk from that WHERE reaches the table through only inner/cross joins,
+# the preserved side of an outer, semi or anti join and the table's own
+# alias (never a derived table, aggregate, window, limit, union or full
+# join: ``sqlplan``'s docstring), (c) the table has exactly ONE relation
+# leaf in the statement, subqueries and CTE bodies included (two
+# references share one view), and (d) the column is one of the table's
+# stats columns, qualified (if at all) by its alias, or its name when it
+# has none. Anything else falls back to the unpruned view.
 
 
 def _coerce_key_value(v, dtype: T.DataType):
-    """A raw Python literal (str/int/float, the shapes
-    ``_parse_sql_literal`` produces) coerced to what Spark's type
+    """A raw Python literal (str/int/float, the shapes ``sqlplan``
+    reads from a parsed literal) coerced to what Spark's type
     verifier accepts for ``dtype``. Values already the right shape pass
     through; an unconvertible value raises the same TypeError the
     verifier would, just earlier and with the column type in hand."""
@@ -6437,86 +6381,6 @@ def _coerce_key_value(v, dtype: T.DataType):
     return v
 
 
-def _conjunct_spans(
-    masked: str,
-    depths: list[int],
-    start: int,
-    end: int,
-    base_depth: int,
-) -> list[tuple[int, int]]:
-    """``(start, end)`` spans of the top-level conjuncts of
-    ``masked[start:end]``: splits on ``AND`` keywords at ``base_depth``,
-    EXCEPT an ``AND`` that closes a pending ``BETWEEN`` at the same depth
-    (each ``BETWEEN`` consumes exactly one following ``AND``). Keyword
-    detection runs on the masked copy so literal contents never split."""
-    toks = sorted(
-        [
-            (m.start(), m.end(), "AND")
-            for m in _AND_RE.finditer(masked, start, end)
-            if depths[m.start()] == base_depth
-        ]
-        + [
-            (m.start(), m.end(), "BETWEEN")
-            for m in _BETWEEN_KW_RE.finditer(masked, start, end)
-            if depths[m.start()] == base_depth
-        ]
-    )
-    spans: list[tuple[int, int]] = []
-    cstart, pending_between = start, 0
-    for s, e, kind in toks:
-        if kind == "BETWEEN":
-            pending_between += 1
-        elif pending_between:
-            pending_between -= 1
-        else:
-            spans.append((cstart, s))
-            cstart = e
-    spans.append((cstart, end))
-    return spans
-
-
-def _preds_from_conjuncts(
-    text: str,
-    masked: str,
-    depths: list[int],
-    start: int,
-    end: int,
-    base_depth: int,
-    stats_cols: set,
-    table_name: str | None,
-) -> list:
-    """Prunable predicates from ``text[start:end]``, one top-level
-    conjunct at a time. Each conjunct must FULLMATCH one extraction
-    pattern end-to-end — ``k = 5 + 50``, ``k = 5e3``, ``-k < 5``,
-    ``k BETWEEN 1 AND 5+1`` all leave residue, so they extract NOTHING
-    rather than a wrong sub-expression (a wrong extraction over-prunes;
-    a skipped one only under-prunes, which is always sound because the
-    SQL's own predicate still runs on top of the pruned scan)."""
-    preds: list = []
-    for cs, ce in _conjunct_spans(masked, depths, start, end, base_depth):
-        conj = text[cs:ce].strip().rstrip(";").strip()
-        if not conj:
-            continue
-        for rex in (_BETWEEN_RE, _CMP_RE, _IN_RE, _NULL_RE):
-            m = rex.fullmatch(conj)
-            if m is None:
-                continue
-            col = m.group(1)
-            if "." in col:
-                if table_name is None:
-                    break  # bare-condition context: no qualifier scope
-                qual, col = col.rsplit(".", 1)
-                if qual != table_name:
-                    break
-            if col not in stats_cols:
-                break
-            pred = _build_pred(rex, m, col)
-            if pred is not None:
-                preds.append(pred)
-            break  # first fullmatch wins; patterns are disjoint shapes
-    return preds
-
-
 def _as_test(pred) -> tuple:
     """A ``plan_pruned`` predicate → the planner's test tuple (forms
     above ``SnapshotTable.plan_range_scan``). A point range becomes an
@@ -6533,93 +6397,32 @@ def _as_test(pred) -> tuple:
     return ("range", column, lo, hi)
 
 
-def _build_pred(rex: "re.Pattern[str]", m: "re.Match[str]", col: str):
-    """One matched conjunct → a ``plan_pruned`` predicate (forms above
-    ``SnapshotTable.plan_range_scan``)."""
-    if rex is _BETWEEN_RE:
-        return (col, _parse_sql_literal(m.group(2)), _parse_sql_literal(m.group(3)))
-    if rex is _CMP_RE:
-        op, v = m.group(2), _parse_sql_literal(m.group(3))
-        if op in (">=", ">"):
-            return (col, v, None)
-        if op in ("<=", "<"):
-            return (col, None, v)
-        return (col, v, v)
-    if rex is _IN_RE:
-        vals = [
-            _parse_sql_literal(tok)
-            for tok in _ANY_LIT_RE.findall(m.group(2))
-        ]
-        return {"col": col, "in": vals} if vals else None
-    if rex is _NULL_RE:
-        return {"col": col, "null": m.group(2) is None}
-    return None
+def _prunable(
+    stmt: sqlplan.Statement, tables: dict[str, "SnapshotTable"]
+) -> dict[str, list]:
+    """Per registered table, the predicates (forms above
+    ``SnapshotTable.plan_range_scan``) a pruned view of it may act on,
+    under the gates above."""
+    out: dict[str, list] = {}
+    for name, terms in stmt.terms.items():
+        t = tables.get(name)
+        if t is None or not terms or stmt.leaves[name] != 1:
+            continue
+        stats = t.stats_columns()
+        preds = [x.pred for x in terms if x.col in stats]
+        if preds:
+            out[name] = preds
+    return out
 
 
 def extract_prunable_predicates(
     text: str, tables: dict[str, "SnapshotTable"]
-) -> dict[str, list[tuple[str, object, object]]]:
-    """Per-table ``[(column, lower, upper), ...]`` range conjuncts a
-    pruned head view may act on, under the conservative gates documented
-    above. ``=`` maps to a point range; strict ``<``/``>`` map to their
-    inclusive superset (sound for file pruning; the SQL applies the
-    strict predicate itself)."""
-    masked = _masked(text)
-    depths = _depths(masked)
-    out: dict[str, list[tuple[str, object, object]]] = {}
-    for name, t in tables.items():
-        # table REFERENCES only: a dotted qualifier (`t.col`) is a column
-        # reference, not a second table occurrence
-        refs = list(
-            re.finditer(rf"(?<![\w.]){re.escape(name)}(?![\w.])", masked)
-        )
-        if len(refs) != 1:
-            continue  # 0 refs: nothing to prune; >1: shared view — unsafe
-        stats_cols = t.stats_columns()
-        if not stats_cols:
-            continue
-        preds: list[tuple[str, object, object]] = []
-        for wm in _WHERE_RE.finditer(masked):
-            wdepth = depths[wm.start()]
-            # the WHERE's own from-list: nearest preceding FROM at the
-            # same depth; it must reference the table
-            froms = [
-                f
-                for f in _FROM_RE.finditer(masked, 0, wm.start())
-                if depths[f.start()] == wdepth
-            ]
-            if not froms:
-                continue
-            from_text = masked[froms[-1].end(): wm.start()]
-            if not re.search(rf"\b{re.escape(name)}\b", from_text):
-                continue
-            # clause end: next top-level keyword at the same depth, or the
-            # paren closing the block, or end of text
-            end = len(masked)
-            for km in _WHERE_END_RE.finditer(masked, wm.end()):
-                if depths[km.start()] <= wdepth:
-                    end = km.start()
-                    break
-            for i in range(wm.end(), end):
-                if masked[i] == ")" and depths[i] <= wdepth:
-                    end = i
-                    break
-            span = masked[wm.end(): end]
-            if _BLOCKER_RE.search(span):
-                continue  # OR / NOT / CASE: not a pure conjunction
-            # split on depth-0 ANDs and FULLMATCH each conjunct against
-            # the extraction patterns (values read from the ORIGINAL
-            # text — the masked copy has literal contents blanked);
-            # residue (`k = 5 + 50`, `5e3`, `-k < 5`) extracts nothing
-            preds.extend(
-                _preds_from_conjuncts(
-                    text, masked, depths, wm.end(), end, wdepth,
-                    stats_cols, name,
-                )
-            )
-        if preds:
-            out[name] = preds
-    return out
+) -> dict[str, list]:
+    """``_prunable`` of one parse of ``text``."""
+    if not any(name in text for name in tables):
+        return {}
+    spark = next(iter(tables.values())).spark
+    return _prunable(sqlplan.statement(text, spark), tables)
 
 
 def temp_view_exists(spark: SparkSession, name: str) -> bool:
@@ -6643,18 +6446,14 @@ def sql_with_time_travel(
     the CURRENT snapshot via temp views, so one statement can mix
     versioned and head reads.
 
-    Rewrites and name-detection skip string literals (``'... FOR VERSION
-    AS OF 3'`` stays data). The temp views backing the rewrite are
+    Rewrites skip string literals (``'... FOR VERSION AS OF 3'`` stays
+    data); the registered tables the statement reads come from one parse
+    by Spark's parser (``sqlplan``), which raises Spark's parse error for
+    a statement it cannot parse. The temp views backing the rewrite are
     DROPPED before returning — analysis is forced first, so the returned
     DataFrame stays valid while later ``spark.sql`` calls see no leftover
     shadowing views."""
     created: list[str] = []
-    # predicate extraction runs on the ORIGINAL text (the AS-OF clause
-    # sits in the FROM list, so the WHERE's conjuncts associate with the
-    # table name exactly like a plain reference): versioned views get the
-    # same file pruning as head views, planned against THAT version's
-    # manifest stats
-    pruned_tt = extract_prunable_predicates(text, tables)
 
     def _view(name: str, version: int) -> str:
         t = tables.get(name)
@@ -6664,7 +6463,7 @@ def sql_with_time_travel(
                 f"table '{name}' (registered: {sorted(tables)})"
             )
         view = f"__tt_{name.replace('.', '_')}_v{version}"
-        preds = pruned_tt.get(name)
+        preds = pruned.get(name)
         df = (
             t.read_pruned(preds, version=version)
             if preds
@@ -6768,44 +6567,39 @@ def sql_with_time_travel(
         created.append(view)
         return view
 
-    rewritten = _sub_outside_literals(
-        _TT_TS_RE,
-        sub_ts,
-        _sub_outside_literals(
-            _TT_TAG_RE,
-            sub_tag,
+    try:
+        # Spark's grammar rejects `t$files`: splice before the one parse,
+        # whose leaves decide the head views and whose conjuncts prune
+        # both the versioned and the head views
+        text = _sub_outside_literals(_META_TABLE_RE, sub_meta, text)
+        found = any(name in text for name in tables)
+        stmt = sqlplan.statement(text, spark) if found else None
+        pruned = _prunable(stmt, tables) if stmt else {}
+        rewritten = _sub_outside_literals(
+            _TT_TS_RE,
+            sub_ts,
             _sub_outside_literals(
-                _TT_VERSION_RE,
-                sub_version,
+                _TT_TAG_RE,
+                sub_tag,
                 _sub_outside_literals(
-                    _TABLE_CHANGES_RE,
-                    sub_table_changes,
-                    _sub_outside_literals(_META_TABLE_RE, sub_meta, text),
+                    _TT_VERSION_RE,
+                    sub_version,
+                    _sub_outside_literals(
+                        _TABLE_CHANGES_RE, sub_table_changes, text
+                    ),
                 ),
             ),
-        ),
-    )
-    # plain (non-AS-OF) references to registered tables read the head;
-    # detection likewise ignores names that appear only inside literals.
-    # A pre-existing USER temp view under a registered name is a conflict
-    # we refuse loudly — silently replacing (then dropping) it would
-    # destroy user session state. When the statement's WHERE carries
-    # top-level range conjuncts on the table's stats columns, the head
-    # view is backed by a FILE-PRUNED scan (extract_prunable_predicates;
-    # no row filter — the SQL's own WHERE applies on top), so BI-style
-    # plain SQL gets the same manifest skipping as the read_between API.
-    pruned = extract_prunable_predicates(rewritten, tables)
-    try:
+        )
+        # plain (non-AS-OF) leaves read the head. A USER temp view under
+        # a registered name is refused loudly — silently replacing (then
+        # dropping) it would destroy user session state.
+        heads = [
+            n for n in tables if stmt and stmt.leaves[n] > stmt.versioned[n]
+        ]
         # longest names first: with both "a.b" and "a.b.c" registered, the
         # longer reference must not be clobbered by the shorter rewrite
-        for name in sorted(tables, key=len, reverse=True):
+        for name in sorted(heads, key=len, reverse=True):
             t = tables[name]
-            spans = _literal_spans(rewritten)
-            if not any(
-                not _starts_in_literal(m.start(), spans)
-                for m in re.finditer(rf"\b{re.escape(name)}\b", rewritten)
-            ):
-                continue
             view = name
             if "." in name:
                 # a DOTTED registry name (the reference's verbatim

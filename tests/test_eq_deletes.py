@@ -7,11 +7,13 @@ append into the scan-free streaming-CDC upsert."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
 from pyspark.sql import Row
 
+from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.sources.skipping import _iter_parquet_files
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
 
@@ -158,8 +160,6 @@ def test_merge_rows_mor_is_scan_free_upsert(spark, tbl):
 
 
 def test_sql_routes_keyed_delete_and_merge_through_eq(spark, tbl):
-    from oss_data_lake_spark.engine import Engine
-
     eng = Engine(spark=spark)
     eng._snapshot_tables["t_eq"] = tbl
     tbl.set_properties({"delete.mode": "merge-on-read"})
@@ -285,8 +285,6 @@ def test_sql_multi_conjunct_delete_routes_scan_free(spark, tmp_path):
     """Round 8: a conjunction of col = lit / col IN (...) terms on
     distinct columns routes as ONE composite-key equality delete
     (IN lists cross-product); non-eq conjuncts keep the scan path."""
-    from oss_data_lake_spark.engine import Engine
-
     t = SnapshotTable(spark, str(tmp_path / "mc"))
     t.commit(
         spark.createDataFrame(
@@ -322,3 +320,101 @@ def test_sql_multi_conjunct_delete_routes_scan_free(spark, tmp_path):
     ).collect()[0]
     assert res["mode"] == "merge-on-read"
     assert t.read().where("k = 1").count() == 0
+
+
+# --------------------------------------------- typed literals via SQL
+#
+# The SQL route reads each literal from Spark's parse as a raw Python
+# str/int/float; it must be coerced to the column's declared type, and a
+# literal that cannot be coerced must take the position-delete path.
+
+
+@pytest.fixture()
+def typed_tbl(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "typed"))
+    rows = [
+        Row(
+            k=i,
+            x=float(i * 100),
+            ts=datetime.datetime(2024, 1, 1 + i, 0, 0, 0),
+            d=datetime.date(2024, 1, 1 + i),
+        )
+        for i in range(10)
+    ]
+    t.commit(spark.createDataFrame(rows), stats_for=["k"])
+    t.set_properties({"delete.mode": "merge-on-read"})
+    return t
+
+
+def test_typed_literals_route_through_equality_delete(spark, typed_tbl):
+    """DELETE ... WHERE <col> = TIMESTAMP/DATE/numeric literal must keep
+    the scan-free equality route under merge-on-read — parsed literals
+    are raw Python str/int, the column types are timestamp/date/double."""
+    eng = Engine(spark=spark)
+    eng._snapshot_tables["typed"] = typed_tbl
+
+    res = eng.sql(
+        "DELETE FROM typed WHERE ts = TIMESTAMP '2024-01-02 00:00:00'"
+    ).collect()[0]
+    assert res["mode"] == "equality-delete" and res["n_keys"] == 1
+    res = eng.sql("DELETE FROM typed WHERE d = DATE '2024-01-03'").collect()[0]
+    assert res["mode"] == "equality-delete"
+    # integer literal against a DOUBLE column
+    res = eng.sql("DELETE FROM typed WHERE x = 400").collect()[0]
+    assert res["mode"] == "equality-delete"
+    # string timestamp without the TIMESTAMP keyword (k=5's ts)
+    res = eng.sql("DELETE FROM typed WHERE ts = '2024-01-06 00:00:00'").collect()[0]
+    assert res["mode"] == "equality-delete"
+    got = sorted(r["k"] for r in typed_tbl.read().collect())
+    assert got == [0, 3, 6, 7, 8, 9]
+
+    # IN-list of typed literals (k=6, k=7)
+    res = eng.sql(
+        "DELETE FROM typed WHERE d IN (DATE '2024-01-07', DATE '2024-01-08')"
+    ).collect()[0]
+    assert res["mode"] == "equality-delete" and res["n_keys"] == 2
+    assert sorted(r["k"] for r in typed_tbl.read().collect()) == [0, 3, 8, 9]
+
+
+def test_unconvertible_literal_falls_back_to_position_path(spark, typed_tbl):
+    eng = Engine(spark=spark)
+    eng._snapshot_tables["typed"] = typed_tbl
+    # 'abc' cannot coerce to double → position-delete path, zero matches
+    res = eng.sql("DELETE FROM typed WHERE x = 'abc'").collect()[0]
+    assert res["mode"] == "merge-on-read"
+    assert typed_tbl.read().count() == 10
+
+
+def test_api_eq_delete_coerces_string_keys(spark, typed_tbl):
+    info = typed_tbl.delete_where_eq("ts", ["2024-01-04 00:00:00"])
+    assert info["mode"] == "equality-delete" and info["n_keys"] == 1
+    assert typed_tbl.read().where("k = 3").count() == 0
+    info = typed_tbl.delete_where_eq("d", ["2024-01-09"])
+    assert typed_tbl.read().where("k = 8").count() == 0
+    info = typed_tbl.delete_where_eq("x", [100])  # int on double col
+    assert typed_tbl.read().where("k = 1").count() == 0
+
+
+def test_bool_literal_delete_never_coerces_garbage_to_false(
+    spark, tmp_path
+):
+    """Round-8 review finding: DELETE ... WHERE flag = 'oops' must NOT
+    silently tombstone every flag=false row — the unconvertible literal
+    routes to the position-delete path (SQL cast semantics: NULL
+    matches nothing)."""
+    t = SnapshotTable(spark, str(tmp_path / "b"))
+    t.commit(
+        spark.createDataFrame(
+            [Row(k=i, flag=(i % 2 == 0)) for i in range(10)]
+        )
+    )
+    t.set_properties({"delete.mode": "merge-on-read"})
+    eng = Engine(spark=spark)
+    eng._snapshot_tables["b"] = t
+    res = eng.sql("DELETE FROM b WHERE flag = 'oops'").collect()[0]
+    assert res["mode"] == "merge-on-read"  # position path, not eq
+    assert t.read().count() == 10          # and nothing matched
+    # real boolean strings still take the scan-free route
+    res = eng.sql("DELETE FROM b WHERE flag = 'true'").collect()[0]
+    assert res["mode"] == "equality-delete"
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 3, 5, 7, 9]

@@ -1,5 +1,7 @@
 """Snapshot layer (time travel / rollback / crash safety) and MERGE upsert
-(correctness, idempotence, partition-scoped rewrite)."""
+(correctness, idempotence, partition-scoped rewrite, the merge-on-read
+fast path's key-name gate, target-qualified NOT MATCHED BY SOURCE
+conditions)."""
 
 from __future__ import annotations
 
@@ -503,3 +505,64 @@ def test_sql_time_travel_error_cleanup_and_conflicts(spark, tmp_path):
         assert spark.sql("SELECT z FROM tbl2").collect()[0]["z"] == 9
     finally:
         spark.catalog.dropTempView("tbl2")
+
+
+def test_mor_merge_fast_path_requires_matching_key_names(spark, tmp_path):
+    """ON t.k = s.nk with star clauses must NOT silently take the
+    merge_rows_mor route (which keys on the TARGET name) — it falls
+    through to merge_rows and its key-name validation."""
+    from pyspark.sql import Row
+
+    from oss_data_lake_spark.engine import Engine
+
+    t = SnapshotTable(spark, str(tmp_path / "m"))
+    t.commit(
+        spark.createDataFrame([Row(k=i, v=float(i)) for i in range(5)]),
+        stats_for=["k"],
+    )
+    t.set_properties({"delete.mode": "merge-on-read"})
+    eng = Engine(spark=spark)
+    eng._snapshot_tables["tm"] = t
+    spark.createDataFrame(
+        [Row(nk=2, v=200.0)]
+    ).createOrReplaceTempView("src_nk")
+    with pytest.raises(Exception, match="different target/source|schema mismatch"):
+        eng.sql(
+            "MERGE INTO tm USING src_nk AS s ON tm.k = s.nk "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+    # same-named keys still take the scan-free route
+    spark.createDataFrame(
+        [Row(k=2, v=200.0)]
+    ).createOrReplaceTempView("src_k")
+    res = eng.sql(
+        "MERGE INTO tm USING src_k AS s ON tm.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    ).collect()[0]
+    assert res["mode"] == "merge-on-read"
+    assert t.read().where("k = 2").collect()[0]["v"] == 200.0
+
+
+def test_nmbs_condition_accepts_target_alias_on_direct_api(spark):
+    from pyspark.sql import Row
+
+    from oss_data_lake_spark.operators.upsert import merge
+
+    target = spark.createDataFrame(
+        [Row(k=1, v=5.0), Row(k=2, v=50.0), Row(k=3, v=500.0)]
+    )
+    source = spark.createDataFrame([Row(k=1, v=6.0)])
+    # documented 't.<col>'-qualified condition form, direct API call
+    out = merge(
+        target,
+        source,
+        ["k"],
+        when_matched="update",
+        when_not_matched=None,
+        when_not_matched_by_source="delete",
+        not_matched_by_source_condition="t.v > 100",
+    ).collect()
+    got = {r["k"]: r["v"] for r in out}
+    assert got == {1: 6.0, 2: 50.0}  # k=3 fired the delete; k=2 survived

@@ -1,5 +1,6 @@
-"""SQL-text predicate extraction → file-pruned head views
-(sources/snapshots.py::extract_prunable_predicates + read_pruned).
+"""SQL predicate extraction → file-pruned head views (one Spark parse per
+statement, oss_data_lake_spark/sqlplan.py, through
+sources/snapshots.py::extract_prunable_predicates + read_pruned).
 
 Soundness frame: extraction may only surface predicates that are GENUINE
 top-level WHERE conjuncts of the query block that reads the table —
@@ -61,12 +62,14 @@ def test_or_not_case_disable_the_span(tbl):
     ) is None
 
 
-def test_non_stats_and_function_wrapped_columns_ignored(tbl):
+def test_non_stats_and_function_wrapped_columns_ignored(spark, tbl):
     assert _preds("SELECT * FROM t WHERE s = 'g1'", tbl) is None  # no stats
     assert _preds("SELECT * FROM t WHERE abs(k) > 90", tbl) is None
-    # parenthesized conjunct is depth>0 relative to the WHERE: skipped
-    # (under-prune, never wrong-prune)
-    assert _preds("SELECT * FROM t WHERE (k > 90)", tbl) is None
+    # parentheses are gone after Spark's parse: the conjunct is k > 90
+    text = "SELECT k FROM t WHERE (k > 90)"
+    assert _preds(text, tbl) == [("k", 90, None)]
+    got = sql_with_time_travel(spark, text, {"t": tbl}).collect()
+    assert sorted(r["k"] for r in got) == list(range(91, 100))
 
 
 def test_subquery_and_union_wheres_never_prune_outer_table(tbl):
@@ -133,12 +136,18 @@ def test_multi_column_plan_intersects(tbl):
     assert tbl.read_pruned([("k", 0, 9), ("v", 90.0, 99.0)]).count() == 0
 
 
-def test_compound_expressions_extract_nothing(tbl):
-    """A conjunct must FULLMATCH its extraction pattern — a literal
-    matched mid-expression would over-prune (ADVICE r6-high: `k = 5 + 50`
-    used to extract (k, 5, 5) and wrongly prune the k=55 file)."""
+def test_compound_expressions_extract_nothing(spark, tbl):
+    """A conjunct must BE an extraction shape — a literal matched
+    mid-expression would over-prune (ADVICE r6-high: `k = 5 + 50` used to
+    extract (k, 5, 5) and wrongly prune the k=55 file)."""
     assert _preds("SELECT * FROM t WHERE k = 5 + 50", tbl) is None
-    assert _preds("SELECT * FROM t WHERE k = 5e3", tbl) is None
+    # an exponent literal is one double literal to Spark's parser
+    text = "SELECT count(*) AS n FROM t WHERE k = 5e3"
+    assert _preds(text, tbl) == [("k", 5000.0, 5000.0)]
+    assert sql_with_time_travel(spark, text, {"t": tbl}).collect()[0]["n"] == 0
+    text = "SELECT k FROM t WHERE k = 5e1"
+    got = sql_with_time_travel(spark, text, {"t": tbl}).collect()
+    assert [r["k"] for r in got] == [50]
     assert _preds("SELECT * FROM t WHERE -k < 5", tbl) is None
     assert _preds("SELECT * FROM t WHERE k BETWEEN 1 AND 5+1", tbl) is None
     assert _preds("SELECT * FROM t WHERE k = v + 1", tbl) is None
@@ -302,3 +311,133 @@ def test_as_of_views_also_prune(spark, tmp_path):
     plan = explain_str(sql_with_time_travel(spark, text, {"ttp": t}), "simple")
     m = re.search(r"InMemoryFileIndex\((\d+) paths\)", plan)
     assert m and int(m.group(1)) == n_sel, plan
+
+
+# --------------------------------------------------- wrong-row regressions
+#
+# Each statement runs twice: through Engine.sql over the registered
+# snapshot tables (pruned views), and through spark.sql over plain temp
+# views of the same tables (nothing pruned). The rows must match. The
+# text extractor returned wrong rows for every one of these: it pruned
+# the null-supplying side of an outer join, and pushed an outer WHERE
+# through a window, a LIMIT and an aggregate in a derived table.
+
+
+def _commit(spark, path, rows, schema, cluster_by, stats):
+    t = SnapshotTable(spark, str(path))
+    t.commit_clustered(
+        spark.createDataFrame(rows, schema),
+        cluster_by=cluster_by, n_files=len(rows) // 10 or 1, stats_for=stats,
+    )
+    return t
+
+
+def _engine_vs_unpruned(spark, tables, text):
+    from oss_data_lake_spark.engine import Engine
+
+    for name, t in tables.items():
+        t.read().createOrReplaceTempView(name)
+    try:
+        want = sorted(tuple(r) for r in spark.sql(text).collect())
+    finally:
+        for name in tables:
+            spark.catalog.dropTempView(name)
+    eng = Engine(spark=spark)
+    eng._snapshot_tables.update(tables)
+    got = sorted(tuple(r) for r in eng.sql(text).collect())
+    assert got == want
+    return got
+
+
+@pytest.fixture()
+def keyed(spark, tmp_path):
+    """ta: k = 0..9 and payload x; tb: the even k only, both with stats."""
+    ta = _commit(
+        spark, tmp_path / "ta", [(i, i * 10) for i in range(10)],
+        "k int, x int", "k", ["k", "x"],
+    )
+    tb = _commit(
+        spark, tmp_path / "tb", [(i, i * 10) for i in range(0, 10, 2)],
+        "k int, x int", "k", ["k", "x"],
+    )
+    return {"ta": ta, "tb": tb}
+
+
+def test_left_anti_join_where_keeps_the_null_supplying_side(spark, keyed):
+    text = (
+        "SELECT ta.k FROM ta LEFT JOIN tb ON ta.k = tb.k WHERE tb.k IS NULL"
+    )
+    assert _preds(text, keyed["tb"], "tb") is None
+    got = _engine_vs_unpruned(spark, keyed, text)
+    assert got == [(1,), (3,), (5,), (7,), (9,)]
+
+
+def test_right_join_where_keeps_the_null_supplying_side(spark, keyed):
+    text = (
+        "SELECT ta.k FROM tb RIGHT JOIN ta ON ta.k = tb.k "
+        "WHERE tb.x IS NULL AND ta.x >= 30"
+    )
+    # the preserved side still prunes
+    assert _preds(text, keyed["ta"], "ta") == [("x", 30, None)]
+    assert _preds(text, keyed["tb"], "tb") is None
+    got = _engine_vs_unpruned(spark, keyed, text)
+    assert got == [(3,), (5,), (7,), (9,)]
+
+
+@pytest.fixture()
+def sixty(spark, tmp_path):
+    """k = 1..60 in six files; g = k % 3; c = k // 20 (0..3)."""
+    return {
+        "t": _commit(
+            spark, tmp_path / "t60",
+            [(k, k % 3, k // 20) for k in range(1, 61)],
+            "k int, g int, c int", "k", ["k", "c"],
+        )
+    }
+
+
+@pytest.mark.parametrize(
+    "text, want",
+    [
+        (
+            "SELECT k, rn FROM (SELECT k, row_number() OVER (ORDER BY k) "
+            "AS rn FROM t) s WHERE k > 50",
+            [(k, k) for k in range(51, 61)],
+        ),
+        (
+            "SELECT k FROM (SELECT k FROM t ORDER BY k LIMIT 55) s "
+            "WHERE k > 50",
+            [(k,) for k in range(51, 56)],
+        ),
+        (
+            # c is also a stats column of t itself
+            "SELECT * FROM (SELECT g, count(*) AS c FROM t GROUP BY g) s "
+            "WHERE c > 3",
+            [(0, 20), (1, 20), (2, 20)],
+        ),
+    ],
+    ids=["window", "limit", "aggregate"],
+)
+def test_outer_where_never_prunes_through_a_derived_table(
+    spark, sixty, text, want
+):
+    assert _preds(text, sixty["t"]) is None
+    assert _engine_vs_unpruned(spark, sixty, text) == want
+
+
+def test_aliased_table_prunes_on_its_alias(spark, tbl):
+    import re
+
+    from oss_data_lake_spark.plans.audit import explain_str
+
+    text = "SELECT o.k FROM t o WHERE o.k BETWEEN 20 AND 39"
+    assert _preds(text, tbl) == [("k", 20, 39)]
+    _sel, n_sel, n_skip = tbl.plan_pruned([("k", 20, 39)])
+    assert n_skip > 0
+    df = sql_with_time_travel(spark, text, {"t": tbl})
+    assert sorted(r["k"] for r in df.collect()) == list(range(20, 40))
+    plan = explain_str(df, "simple")
+    m = re.search(r"InMemoryFileIndex\((\d+) paths\)", plan)
+    assert m and int(m.group(1)) == n_sel, plan
+    # the table's own name is out of scope once it is aliased
+    assert _preds("SELECT * FROM t o WHERE t.k = 5", tbl) is None

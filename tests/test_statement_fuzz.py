@@ -25,6 +25,8 @@ inside it is sound in both parser modes."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -38,6 +40,7 @@ from oss_data_lake_spark.sqltext import (
     _depths,
     _literal_spans,
     _masked,
+    _sub_outside_literals,
     close_paren,
     split_top,
 )
@@ -221,21 +224,35 @@ def test_split_keeps_literal_semicolons_intact(p):
 
 @pytest.fixture(scope="module")
 def fuzz_eng(spark, tmp_path_factory):
+    """``t``: k = 0..39; ``u``: k = 20..59 (so a join of the two has
+    unmatched rows on both sides), both registered, four files each so
+    that pruning has files to drop; ``fz_t`` / ``fz_u`` are plain temp
+    views of the same rows, for Spark-as-oracle runs."""
     root = tmp_path_factory.mktemp("fuzz")
     e = Engine(spark=spark, warehouse_dir=str(root / "wh"))
     svals = TRICKY + ["plain", None, "x"]
-    rows = [
-        Row(k=i, s=svals[i % len(svals)],
-            d=(None if i % 7 == 0 else float(i) / 3))
-        for i in range(40)
-    ]
-    t = SnapshotTable(spark, str(root / "t"))
-    t.commit(spark.createDataFrame(rows, "k long, s string, d double"),
-             stats_for=["k", "d"])
-    e._snapshot_tables["t"] = t
-    base = spark.createDataFrame(rows, "k long, s string, d double").cache()
+
+    def rows(ks):
+        return [
+            Row(k=i, s=svals[i % len(svals)],
+                d=(None if i % 7 == 0 else float(i) / 3))
+            for i in ks
+        ]
+
+    schema = "k long, s string, d double"
+    for name, ks in (("t", range(40)), ("u", range(20, 60))):
+        tbl = SnapshotTable(spark, str(root / name))
+        tbl.commit_clustered(spark.createDataFrame(rows(ks), schema),
+                             cluster_by="k", n_files=4, stats_for=["k", "d"])
+        e._snapshot_tables[name] = tbl
+        spark.createDataFrame(rows(ks), schema).createOrReplaceTempView(
+            f"fz_{name}"
+        )
+    base = spark.createDataFrame(rows(range(40)), schema).cache()
     base.count()
-    return e, t, base
+    yield e, e._snapshot_tables["t"], base
+    for name in ("fz_t", "fz_u"):
+        spark.catalog.dropTempView(name)
 
 
 # WHERE-condition grammar: literal-heavy, valid by construction
@@ -267,21 +284,61 @@ def condition(draw, depth=0):
     return f"({a}) OR NOT ({b})"
 
 
+# query shapes around one WHERE condition ``{c}``, and the qualifier its
+# columns take there; ``{t}`` / ``{u}`` are the registered tables, or
+# their unpruned temp views for the oracle
+SHAPES = {
+    "plain": ("SELECT k FROM {t} WHERE {c}", ""),
+    "aliased": ("SELECT a.k FROM {t} a WHERE {c}", "a."),
+    "self_join": (
+        "SELECT a.k FROM {t} a JOIN {t} b ON a.k = b.k WHERE {c}", "a."
+    ),
+    "left_join_preserved": (
+        "SELECT {t}.k FROM {t} LEFT JOIN {u} ON {t}.k = {u}.k WHERE {c}",
+        "{t}.",
+    ),
+    "left_join_null_side": (
+        "SELECT {u}.k FROM {u} LEFT JOIN {t} ON {t}.k = {u}.k WHERE {c}",
+        "{t}.",
+    ),
+    "row_number": (
+        "SELECT k FROM (SELECT k, s, d, row_number() OVER (ORDER BY k) "
+        "AS rn FROM {t}) a WHERE {c} AND rn > 3",
+        "",
+    ),
+    "cte": ("WITH a AS (SELECT * FROM {t} WHERE {c}) SELECT k FROM a", ""),
+}
+_COLUMN_RE = re.compile(r"\b([ksd])\b")
+
+
+def _shaped(shape: str, cond: str, t: str, u: str) -> str:
+    tpl, qual = SHAPES[shape]
+    qual = qual.format(t=t)
+    if qual:
+        cond = _sub_outside_literals(
+            _COLUMN_RE, lambda m: qual + m.group(1), cond
+        )
+    return tpl.format(t=t, u=u, c=cond)
+
+
 @settings(
     max_examples=40, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(condition())
-def test_select_differential_spark_is_the_oracle(fuzz_eng, cond):
-    """Engine.sql SELECT (masking + predicate extraction + file-pruned
-    head views) must equal Spark's own evaluation of the identical
-    condition — under-extraction may cost pruning, never rows."""
+@given(condition(), st.sampled_from(sorted(SHAPES)))
+def test_select_differential_spark_is_the_oracle(spark, fuzz_eng, cond, shape):
+    """Engine.sql SELECT (predicate extraction + file-pruned views) must
+    equal Spark's own evaluation of the identical statement over
+    unpruned views — under-extraction may cost pruning, never rows."""
     e, _t, base = fuzz_eng
-    got = sorted(
-        r["k"] for r in e.sql(f"SELECT k FROM t WHERE {cond}").collect()
-    )
-    want = sorted(r["k"] for r in base.filter(F.expr(cond)).collect())
-    assert got == want, cond
+    got = e.sql(_shaped(shape, cond, "t", "u")).collect()
+    want = spark.sql(_shaped(shape, cond, "fz_t", "fz_u")).collect()
+    got, want = sorted(r["k"] for r in got), sorted(r["k"] for r in want)
+    assert got == want, (shape, cond)
+    if shape == "plain":
+        assert want == sorted(
+            r["k"] for r in base.filter(F.expr(cond)).collect()
+        )
 
 
 @settings(

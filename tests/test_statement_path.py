@@ -214,6 +214,39 @@ def test_point_lookup_py4j_round_trip_budget(spark, tmp_path):
     assert e.sql(q).first()["s"] == "n7"
 
 
+def test_one_parse_per_statement(spark, tmp_path, monkeypatch):
+    """Table references and file-skipping conjuncts come from one call
+    to Spark's parser per statement, and none when the statement names
+    no registered table."""
+    from oss_data_lake_spark import sqlplan
+
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(
+        spark.createDataFrame([(i, float(i)) for i in range(20)],
+                              "k bigint, v double"),
+        stats_for=["k"],
+    )
+    e._snapshot_tables["rt_budget"] = t
+    calls = []
+    orig = sqlplan._parse
+
+    def counting(spark_, method, text):
+        calls.append(method)
+        return orig(spark_, method, text)
+
+    monkeypatch.setattr(sqlplan, "_parse", counting)
+    assert e.sql("SELECT * FROM rt_budget WHERE k = 7").count() == 1
+    assert calls == ["parsePlan"]
+    calls.clear()
+    e.sql("DELETE FROM rt_budget WHERE k = 7")
+    assert calls == ["parseExpression"]
+    assert t.read().count() == 19
+    calls.clear()
+    assert e.sql("SELECT count(*) AS n FROM range(5)").first()["n"] == 5
+    assert calls == []
+
+
 def test_try_cast_keeps_escape_mode(spark):
     """The session pins the SQL escape mode the TRY(CAST) integer guard's
     regex is spelled for: surrounding whitespace still parses."""
