@@ -363,21 +363,15 @@ _DML_SHAPE_RE = re.compile(
 )
 
 
-def _parsed(cond: "str | sqlplan.Condition") -> sqlplan.Condition:
-    return sqlplan.condition(cond) if isinstance(cond, str) else cond
-
-
-def conjunct_ranges(
-    cond: "str | sqlplan.Condition", stats_cols: set[str]
-) -> list:
-    """Prunable predicates from a bare WHERE condition (text, or its one
-    parse): one per extractable top-level conjunct on an unqualified stats
-    column. The rest contribute nothing and the others still prune — a
-    file where any extracted conjunct cannot hold has no row satisfying
-    the whole conjunction."""
+def conjunct_ranges(cond: sqlplan.Condition, stats_cols: set[str]) -> list:
+    """Prunable predicates from a bare WHERE condition's one parse: one
+    per extractable top-level conjunct on an unqualified stats column.
+    The rest contribute nothing and the others still prune — a file where
+    any extracted conjunct cannot hold has no row satisfying the whole
+    conjunction."""
     return [
         t.pred
-        for t in _parsed(cond).terms
+        for t in cond.terms
         if t is not None and t.qual is None and t.col in stats_cols
     ]
 
@@ -387,7 +381,7 @@ def conjunct_ranges(
 _EQ_PROBE_MAX_ROWS = 1000
 
 
-def eq_delete_probe(cond: "str | sqlplan.Condition", table_cols: set[str]):
+def eq_delete_probe(cond: sqlplan.Condition, table_cols: set[str]):
     """If the DELETE condition is a conjunction of ``col = lit`` /
     ``col IN (lits)`` terms on DISTINCT table columns, return
     ``(cols, [key_tuples])`` — the shape an EQUALITY delete can take
@@ -397,7 +391,7 @@ def eq_delete_probe(cond: "str | sqlplan.Condition", table_cols: set[str]):
     import itertools
     import math
 
-    terms = _parsed(cond).terms
+    terms = cond.terms
     if not terms or any(
         t is None or t.qual or t.op not in ("=", "in")
         or t.col not in table_cols

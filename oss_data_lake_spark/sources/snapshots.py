@@ -6325,8 +6325,9 @@ def snapshot_view(
 # the preserved side of an outer, semi or anti join and the table's own
 # alias (never a derived table, aggregate, window, limit, union or full
 # join: ``sqlplan``'s docstring), (c) the table has exactly ONE relation
-# leaf in the statement, subqueries and CTE bodies included (two
-# references share one view), and (d) the column is one of the table's
+# leaf in the statement, subqueries and CTE bodies included, counted
+# case-insensitively (two references, ``t`` and ``T`` alike, share one
+# view), and (d) the column is one of the table's
 # stats columns, qualified (if at all) by its alias, or its name when it
 # has none. Anything else falls back to the unpruned view.
 
@@ -6397,32 +6398,27 @@ def _as_test(pred) -> tuple:
     return ("range", column, lo, hi)
 
 
-def _prunable(
-    stmt: sqlplan.Statement, tables: dict[str, "SnapshotTable"]
-) -> dict[str, list]:
-    """Per registered table, the predicates (forms above
+def parse_for_pruning(
+    spark: SparkSession, text: str, tables: dict[str, "SnapshotTable"]
+) -> tuple[sqlplan.Statement | None, dict[str, list]]:
+    """The one parse of ``text`` (None, unparsed, when no registered name
+    occurs in it) and per registered table the predicates (forms above
     ``SnapshotTable.plan_range_scan``) a pruned view of it may act on,
     under the gates above."""
+    low = text.lower()
+    if not any(name.lower() in low for name in tables):
+        return None, {}
+    stmt = sqlplan.statement(text, spark)
     out: dict[str, list] = {}
-    for name, terms in stmt.terms.items():
-        t = tables.get(name)
-        if t is None or not terms or stmt.leaves[name] != 1:
+    for name, t in tables.items():
+        terms = stmt.terms.get(name.lower())
+        if not terms or stmt.leaves[name.lower()] != 1:
             continue
         stats = t.stats_columns()
         preds = [x.pred for x in terms if x.col in stats]
         if preds:
             out[name] = preds
-    return out
-
-
-def extract_prunable_predicates(
-    text: str, tables: dict[str, "SnapshotTable"]
-) -> dict[str, list]:
-    """``_prunable`` of one parse of ``text``."""
-    if not any(name in text for name in tables):
-        return {}
-    spark = next(iter(tables.values())).spark
-    return _prunable(sqlplan.statement(text, spark), tables)
+    return stmt, out
 
 
 def temp_view_exists(spark: SparkSession, name: str) -> bool:
@@ -6572,9 +6568,7 @@ def sql_with_time_travel(
         # whose leaves decide the head views and whose conjuncts prune
         # both the versioned and the head views
         text = _sub_outside_literals(_META_TABLE_RE, sub_meta, text)
-        found = any(name in text for name in tables)
-        stmt = sqlplan.statement(text, spark) if found else None
-        pruned = _prunable(stmt, tables) if stmt else {}
+        stmt, pruned = parse_for_pruning(spark, text, tables)
         rewritten = _sub_outside_literals(
             _TT_TS_RE,
             sub_ts,
@@ -6594,7 +6588,8 @@ def sql_with_time_travel(
         # a registered name is refused loudly — silently replacing (then
         # dropping) it would destroy user session state.
         heads = [
-            n for n in tables if stmt and stmt.leaves[n] > stmt.versioned[n]
+            n for n in tables
+            if stmt and stmt.leaves[n.lower()] > stmt.versioned[n.lower()]
         ]
         # longest names first: with both "a.b" and "a.b.c" registered, the
         # longer reference must not be clobbered by the shorter rewrite

@@ -12,20 +12,24 @@ one) constrain the relation leaves reached from the Filter's child
 through only: a ``SubqueryAlias`` directly over a relation (the leaf's
 alias), both sides of an ``Inner``/``Cross`` join, the left side of a
 ``LeftOuter``/``LeftSemi``/``LeftAnti`` join and the right side of a
-``RightOuter`` one. Nothing else is crossed — not a ``Project``,
-``Aggregate``, ``Window``, ``Limit``, ``Union`` or ``FullOuter`` join —
-since a WHERE there does not constrain the base rows. A qualified column
-applies to the leaf whose alias (or name, without one) is the qualifier.
-Extractable conjuncts are ``col op literal`` (``= < <= > >=``), ``col
-BETWEEN lit AND lit``, ``col IN (literals)`` and ``col IS [NOT] NULL``;
-anything else (OR, NOT, CASE, functions, arithmetic, subqueries) drops
-that conjunct only.
+``RightOuter`` one (a ``LateralJoin``, Trino's ``CROSS JOIN UNNEST``,
+alike: its one plan child is its left side). Nothing else is crossed —
+not a ``Project``, ``Aggregate``, ``Window``, ``Limit``, ``Union`` or
+``FullOuter`` join — since a WHERE there does not constrain the base
+rows. A qualified column applies to the leaf whose alias (or name,
+without one) is the qualifier. Extractable conjuncts are ``col op
+literal`` (``= < <= > >=``), ``col BETWEEN lit AND lit``, ``col IN
+(literals)`` and ``col IS [NOT] NULL``; anything else (OR, NOT, CASE,
+functions, arithmetic, subqueries) drops that conjunct only. Leaves are
+keyed by lower-cased name: temp views resolve case-insensitively, so
+``t`` and ``T`` read one view.
 """
 
 from __future__ import annotations
 
 import json
 import re
+import weakref
 from collections import Counter, defaultdict
 from typing import NamedTuple
 
@@ -46,6 +50,7 @@ _SUBQUERIES = frozenset(
 _JOIN_SIDES = {"Inner": (0, 1), "Cross": (0, 1), "LeftOuter": (0,),
                "LeftSemi": (0,), "LeftAnti": (0,), "RightOuter": (1,)}
 _NO_VALUE = object()
+_PARSERS = weakref.WeakKeyDictionary()  # session → its sqlParser()
 
 
 class Term(NamedTuple):
@@ -72,9 +77,9 @@ class Term(NamedTuple):
 
 
 class Statement(NamedTuple):
-    """Relation leaves per name (subqueries and CTE bodies included), how
-    many of them carry a time-travel clause, and per name the terms that
-    constrain its leaves' rows."""
+    """Relation leaves per lower-cased name (subqueries and CTE bodies
+    included), how many of them carry a time-travel clause, and per
+    lower-cased name the terms that constrain its leaves' rows."""
 
     leaves: Counter
     versioned: Counter
@@ -91,10 +96,12 @@ class Condition(NamedTuple):
     subquery: bool
 
 
-def _parse(spark: SparkSession | None, method: str, text: str) -> list:
+def _parse(spark: SparkSession, method: str, text: str) -> list:
     """The one parser call."""
-    spark = spark or SparkSession.builder.getOrCreate()
-    parser = spark._jsparkSession.sessionState().sqlParser()
+    parser = _PARSERS.get(spark)
+    if parser is None:
+        parser = spark._jsparkSession.sessionState().sqlParser()
+        _PARSERS[spark] = parser
     return json.loads(getattr(parser, method)(text).toJSON())
 
 
@@ -194,22 +201,23 @@ def _term(node: dict, strict: bool) -> Term | None:
     return Term(qual or None, col, op, vals)
 
 
-def _scopes(plan: dict) -> list[tuple[str | None, str | None]]:
-    """``(leaf name, scope name)`` of each leaf a Filter over ``plan``
+def _scopes(plan: dict) -> list[tuple[str, str | None]]:
+    """``(leaf key, scope name)`` of each leaf a Filter over ``plan``
     constrains."""
     out, stack = [], [(plan, None)]
     while stack:
         n, alias = stack.pop()
         cls = _cls(n)
         if cls in _RELATIONS:
-            out.append((_leaf_name(n), alias or _leaf_name(n)))
+            out.append(((_leaf_name(n) or "").lower(), alias or _leaf_name(n)))
         elif cls == "SubqueryAlias" and _cls(n["_kids"][0]) in _RELATIONS:
             stack.append((n["_kids"][0], n["identifier"]["name"]))
-        elif cls == "Join":
+        elif cls in ("Join", "LateralJoin"):
             jt = n.get("joinType") or {}
             jt = jt.get("tpe", jt).get("object", "")  # USING/NATURAL wrap it
             sides = _JOIN_SIDES.get(jt.rsplit(".", 1)[-1].rstrip("$"), ())
-            stack.extend((n["_kids"][i], None) for i in sides)
+            kids = n["_kids"]
+            stack.extend((kids[i], None) for i in sides if i < len(kids))
     return out
 
 
@@ -217,16 +225,16 @@ def _strict(text: str) -> bool:
     return any(", " in q for q in _BACKTICKED_RE.findall(text))
 
 
-def statement(text: str, spark: SparkSession | None = None) -> Statement:
+def statement(text: str, spark: SparkSession) -> Statement:
     """Leaves and per-leaf terms of one statement; raises Spark's
     ParseException for a statement Spark cannot parse."""
     strict = _strict(text)
     leaves, versioned, terms = Counter(), Counter(), defaultdict(list)
     for node in _nodes(_parse(spark, "parsePlan", text)):
         if "multipartIdentifier" in node:
-            leaves[_name(node["multipartIdentifier"])] += 1
+            leaves[(_name(node["multipartIdentifier"]) or "").lower()] += 1
         if _cls(node) == "RelationTimeTravel":
-            versioned[_leaf_name(node)] += 1
+            versioned[(_leaf_name(node) or "").lower()] += 1
         elif _cls(node) == "Filter":
             conj = _conjuncts(_link(node["condition"]))
             found = [t for t in (_term(c, strict) for c in conj) if t]
@@ -235,7 +243,7 @@ def statement(text: str, spark: SparkSession | None = None) -> Statement:
     return Statement(leaves, versioned, dict(terms))
 
 
-def condition(text: str, spark: SparkSession | None = None) -> Condition:
+def condition(text: str, spark: SparkSession) -> Condition:
     """The conjuncts of a single-table DML condition (no qualifier scope:
     callers keep unqualified terms only)."""
     try:

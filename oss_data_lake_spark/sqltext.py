@@ -44,15 +44,11 @@ def _literal_spans(text: str) -> list[tuple[int, int]]:
     return [m.span() for m in _LITERAL_RE.finditer(text)]
 
 
-def _starts_in_literal(pos: int, spans: list[tuple[int, int]]) -> bool:
-    return any(a < pos < b for a, b in spans)
-
-
 def _sub_outside_literals(pattern: "re.Pattern[str]", repl, text: str) -> str:
     spans = _literal_spans(text)
 
     def guarded(m: "re.Match[str]") -> str:
-        if _starts_in_literal(m.start(), spans):
+        if any(a < m.start() < b for a, b in spans):
             return m.group(0)
         return repl(m)
 

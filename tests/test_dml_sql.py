@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
+from oss_data_lake_spark import sqlplan
 from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.sources.dml_sql import (
     _split_assignments,
@@ -99,19 +100,23 @@ def test_sql_select_still_falls_through(spark, eng):
     assert out[0]["n"] == 10
 
 
-def test_assignment_splitter_and_ranges():
+def test_assignment_splitter_and_ranges(spark):
     assert _split_assignments("a = f(x, y), b = c + 1") == {
         "a": "f(x, y)", "b": "c + 1"
     }
     with pytest.raises(ValueError, match="cannot parse"):
         _split_assignments("a +=1")
     cols = {"k", "d"}
-    assert conjunct_ranges("k BETWEEN 1 AND 2 AND d >= '2024-01-01'", cols) == [
+
+    def ranges(text):
+        return conjunct_ranges(sqlplan.condition(text, spark), cols)
+
+    assert ranges("k BETWEEN 1 AND 2 AND d >= '2024-01-01'") == [
         ("k", 1, 2), ("d", "2024-01-01", None)
     ]
-    assert conjunct_ranges("k = 5 OR d = '2024'", cols) == []
-    assert conjunct_ranges("abs(k) > 5", cols) == []
-    assert conjunct_ranges("s = 'k BETWEEN 1 AND 2'", cols) == []
+    assert ranges("k = 5 OR d = '2024'") == []
+    assert ranges("abs(k) > 5") == []
+    assert ranges("s = 'k BETWEEN 1 AND 2'") == []
 
 
 def test_sql_insert_values_and_select(spark, eng):

@@ -1,6 +1,6 @@
 """SQL predicate extraction → file-pruned head views (one Spark parse per
 statement, oss_data_lake_spark/sqlplan.py, through
-sources/snapshots.py::extract_prunable_predicates + read_pruned).
+sources/snapshots.py::parse_for_pruning + read_pruned).
 
 Soundness frame: extraction may only surface predicates that are GENUINE
 top-level WHERE conjuncts of the query block that reads the table —
@@ -17,7 +17,7 @@ from pyspark.sql import Row
 
 from oss_data_lake_spark.sources.snapshots import (
     SnapshotTable,
-    extract_prunable_predicates,
+    parse_for_pruning,
     sql_with_time_travel,
 )
 
@@ -32,8 +32,13 @@ def tbl(spark, tmp_path):
     return t
 
 
+def _pruned(text, tables):
+    spark = next(iter(tables.values())).spark
+    return parse_for_pruning(spark, text, tables)[1]
+
+
 def _preds(text, tbl, name="t"):
-    return extract_prunable_predicates(text, {name: tbl}).get(name)
+    return _pruned(text, {name: tbl}).get(name)
 
 
 def test_between_and_comparisons_extract(tbl):
@@ -232,7 +237,7 @@ def test_in_list_predicate_unions_bloom_plans(spark, tmp_path):
     ).repartition(10)
     t.commit(df, stats_for=["doc_id"], bloom_for=["doc_id"])
 
-    preds = extract_prunable_predicates(
+    preds = _pruned(
         "SELECT * FROM x WHERE doc_id IN (5, 17, 400)", {"x": t}
     )["x"]
     assert preds == [{"col": "doc_id", "in": [5, 17, 400]}]
@@ -276,10 +281,10 @@ def test_null_predicates_prune_from_null_counts(spark, tmp_path):
     assert got == 25 + 50
     # IS NOT NULL extraction survives the NOT blocker exception; real
     # negations still disable
-    assert extract_prunable_predicates(
+    assert _pruned(
         "SELECT * FROM t WHERE v IS NOT NULL", {"t": t}
     )["t"] == [{"col": "v", "null": False}]
-    assert extract_prunable_predicates(
+    assert _pruned(
         "SELECT * FROM t WHERE v NOT IN (1, 2)", {"t": t}
     ) == {}
 
@@ -441,3 +446,46 @@ def test_aliased_table_prunes_on_its_alias(spark, tbl):
     assert m and int(m.group(1)) == n_sel, plan
     # the table's own name is out of scope once it is aliased
     assert _preds("SELECT * FROM t o WHERE t.k = 5", tbl) is None
+
+
+def test_mixed_case_self_join_counts_both_leaves(spark, tbl):
+    """Temp views resolve case-insensitively, so ``t a`` and ``T b`` read
+    one view: pruning it for ``a.k = 5`` would lose ``b``'s k = 55 row."""
+    text = (
+        "SELECT a.k, b.k FROM t a JOIN T b ON b.k = a.k + 50 WHERE a.k = 5"
+    )
+    assert _preds(text, tbl) is None
+    assert _engine_vs_unpruned(spark, {"t": tbl}, text) == [(5, 55)]
+
+
+def test_unnest_outer_side_prunes(spark, tmp_path):
+    """Trino's ``CROSS JOIN UNNEST`` becomes a lateral join whose outer
+    side a WHERE on the outer table's own columns still prunes."""
+    import re
+
+    from oss_data_lake_spark.engine import Engine
+    from oss_data_lake_spark.plans.audit import explain_str
+
+    ut = _commit(
+        spark, tmp_path / "ut", [(i, [i, i + 100]) for i in range(60)],
+        "id int, arr array<int>", "id", ["id"],
+    )
+    lateral = (
+        "SELECT id, u.v FROM ut CROSS JOIN LATERAL "
+        "(SELECT * FROM explode(arr)) AS u(v) WHERE id = 2"
+    )
+    assert _preds(lateral, ut, "ut") == [("id", 2, 2)]
+    assert _engine_vs_unpruned(spark, {"ut": ut}, lateral) == [
+        (2, 2), (2, 102)
+    ]
+    eng = Engine(spark=spark)
+    eng._snapshot_tables["ut"] = ut
+    df = eng.sql(
+        "SELECT id, u.v FROM ut CROSS JOIN UNNEST(arr) AS u(v) WHERE id = 2"
+    )
+    assert sorted(tuple(r) for r in df.collect()) == [(2, 2), (2, 102)]
+    _sel, n_sel, n_skip = ut.plan_pruned([("id", 2, 2)])
+    assert n_skip > 0
+    plan = explain_str(df, "simple")
+    m = re.search(r"InMemoryFileIndex\((\d+) paths\)", plan)
+    assert m and int(m.group(1)) == n_sel, plan

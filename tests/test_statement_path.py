@@ -192,9 +192,10 @@ def _py4j_calls(fn) -> int:
 
 def test_point_lookup_py4j_round_trip_budget(spark, tmp_path):
     """No timing, so host noise cannot move it. A point lookup on an
-    8-column snapshot table measured 26 py4j calls inside ``Engine.sql``
-    (361 before the temp-view probe replaced ``listTables()`` and the
-    scan alignment stopped building a Column chain per column)."""
+    8-column snapshot table measured 28 py4j calls inside ``Engine.sql``,
+    two of them the statement's one parse (361 before the temp-view probe
+    replaced ``listTables()`` and the scan alignment stopped building a
+    Column chain per column)."""
     e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.commit(
