@@ -19,7 +19,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from oss_data_lake_spark.plans.audit import explain_str
-from oss_data_lake_spark.session import get_spark
+from oss_data_lake_spark.session import get_spark, local_frame
 from oss_data_lake_spark.sources.loaders import register_views
 from oss_data_lake_spark.sources.tables import Warehouse
 from oss_data_lake_spark.sqltext import (
@@ -98,8 +98,8 @@ class Engine:
             df = self.sql(m.group(1))
             n = sum(1 for _ in df.toLocalIterator())
             plan = explain_str(df, "formatted")
-            return self.spark.createDataFrame(
-                [(plan, n)], "plan string, rows long"
+            return local_frame(
+                self.spark, [(plan, n)], "plan string, rows long"
             )
         handled = self._handle_prepared_statement(text)
         if handled is not None:
@@ -281,7 +281,8 @@ class Engine:
         if m:
             name, body = m.group(1), m.group(2)
             self._prepared[name] = body
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(name, len(self._param_positions(body)))],
                 "statement string, n_params long",
             )
@@ -291,8 +292,8 @@ class Engine:
             if name not in self._prepared:
                 raise ValueError(f"no prepared statement named {name!r}")
             del self._prepared[name]
-            return self.spark.createDataFrame(
-                [(name,)], "statement string"
+            return local_frame(
+                self.spark, [(name,)], "statement string"
             )
         m = self._DESCRIBE_IO_RE.match(text)
         if m:
@@ -303,16 +304,13 @@ class Engine:
             if kind == "INPUT":
                 # Trino's DESCRIBE INPUT: one row per `?`, type unknown
                 # (parameters are untyped until EXECUTE)
-                rows = [
-                    (i, "unknown")
-                    for i in range(len(self._param_positions(body)))
-                ]
-                if rows:
-                    return self.spark.createDataFrame(
-                        rows, "position long, type string"
-                    )
-                return self.spark.createDataFrame(
-                    [], "position long, type string"
+                return local_frame(
+                    self.spark,
+                    [
+                        (i, "unknown")
+                        for i in range(len(self._param_positions(body)))
+                    ],
+                    "position long, type string",
                 )
             # DESCRIBE OUTPUT: plan (never execute) the body with NULL
             # in each parameter slot. Only query-shaped bodies plan
@@ -329,7 +327,8 @@ class Engine:
             for pos in reversed(self._param_positions(body)):
                 probe = probe[:pos] + "NULL" + probe[pos + 1:]
             schema = self.sql(probe).schema
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (f.name, f.dataType.simpleString())
                     for f in schema.fields
@@ -635,8 +634,8 @@ class Engine:
                 self._txns[name] = (t, gid, frozenset(names))
                 self._snapshot_tables[name] = bt
                 rows.append((name, gid))
-            return self.spark.createDataFrame(
-                rows, "table string, branch string"
+            return local_frame(
+                self.spark, rows, "table string, branch string"
             )
         m = self._COMMIT_RE.match(text)
         if m:
@@ -650,8 +649,8 @@ class Engine:
                 version = t.fast_forward(br, require_source_unchanged=False)
                 del self._txns[name]
                 self._snapshot_tables[name] = t
-                return self.spark.createDataFrame(
-                    [(version,)], "version long"
+                return local_frame(
+                    self.spark, [(version,)], "version long"
                 )
             return self._commit_multi(names, group)
         m = self._ROLLBACK_RE.match(text)
@@ -664,7 +663,7 @@ class Engine:
                 self._snapshot_tables[name] = t
                 t.drop_branch(br)
                 rows.append((name,))
-            return self.spark.createDataFrame(rows, "table string")
+            return local_frame(self.spark, rows, "table string")
         m = self._DROP_GUARD_RE.match(text)
         if m and m.group(1) in self._txns:
             raise ValueError(
@@ -777,7 +776,8 @@ class Engine:
                 if n in self._txns:
                     del self._txns[n]
                     self._snapshot_tables[n] = t
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(n, t.current_version()) for n, t in members],
                 "table string, version long",
             )
@@ -788,7 +788,7 @@ class Engine:
             # every member landed and removed the record first — the
             # commit is fully applied either way
             pass
-        return self.spark.createDataFrame(rows, "table string, version long")
+        return local_frame(self.spark, rows, "table string, version long")
 
     _REST_TXN_RETRIES = 20
 
@@ -848,8 +848,8 @@ class Engine:
                     del self._txns[n]
                     self._snapshot_tables[n] = t
                     rows.append((n, t.current_version()))
-                return self.spark.createDataFrame(
-                    rows, "table string, version long"
+                return local_frame(
+                    self.spark, rows, "table string, version long"
                 )
             changes = []
             for _n, t in members:
@@ -876,8 +876,8 @@ class Engine:
                 del self._txns[n]
                 self._snapshot_tables[n] = t
                 rows.append((n, res["version"]))
-            return self.spark.createDataFrame(
-                rows, "table string, version long"
+            return local_frame(
+                self.spark, rows, "table string, version long"
             )
         raise CommitConflict(
             f"multi-table transaction {gid} lost "
@@ -1145,8 +1145,10 @@ class Engine:
             except Exception:
                 applied = False  # recorded only — never a refusal
             self._current_schema = target
-            return self.spark.createDataFrame(
-                [(target, applied)], "schema string, applied boolean"
+            return local_frame(
+                self.spark,
+                [(target, applied)],
+                "schema string, applied boolean",
             )
         m = self._SET_SESSION_RE.match(text)
         if m:
@@ -1161,7 +1163,8 @@ class Engine:
                 self.spark.conf.set(key, val)
                 applied = True
             self._session_props[key] = val
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(key, val, applied)],
                 "name string, value string, applied boolean",
             )
@@ -1175,15 +1178,15 @@ class Engine:
                     existed = True
                 except Exception:
                     pass
-            return self.spark.createDataFrame(
-                [(key, existed)], "name string, reset boolean"
+            return local_frame(
+                self.spark, [(key, existed)], "name string, reset boolean"
             )
         if self._SHOW_SESSION_RE.match(text):
-            schema = "name string, value string"
-            rows = sorted(self._session_props.items())
-            if rows:
-                return self.spark.createDataFrame(rows, schema)
-            return self.spark.createDataFrame([], schema)
+            return local_frame(
+                self.spark,
+                sorted(self._session_props.items()),
+                "name string, value string",
+            )
         return None
 
     # Trino's MATCH_RECOGNIZE (SQL:2016 row-pattern recognition), routed to
@@ -2767,7 +2770,7 @@ class Engine:
             if name in self._ns_schemas and not cs_m.group(1):
                 raise ValueError(f"schema '{name}' already exists")
             self._ns_schemas.add(name)
-            return self.spark.createDataFrame([], "result string")
+            return local_frame(self.spark, [], "result string")
         ds_m = self._DROP_SCHEMA_NS_RE.match(text)
         if ds_m:
             name = ds_m.group(2)
@@ -2778,7 +2781,7 @@ class Engine:
             if name not in self._ns_schemas and not ds_m.group(1):
                 raise ValueError(f"schema '{name}' does not exist")
             self._ns_schemas.discard(name)
-            return self.spark.createDataFrame([], "result string")
+            return local_frame(self.spark, [], "result string")
         if self._SHOW_CATALOGS_RE.match(text):
             # Trino's SHOW CATALOGS (the FIRST statement CloudBeaver
             # issues on connect): catalog names from the same federated
@@ -2790,8 +2793,8 @@ class Engine:
             cats = sorted(
                 {c for c, *_ in entries} | {c for c, _s in extra}
             )
-            return self.spark.createDataFrame(
-                [(c,) for c in cats] or [], "Catalog string"
+            return local_frame(
+                self.spark, [(c,) for c in cats], "Catalog string"
             )
         sf_m = self._SHOW_FUNCTIONS_RE.match(text)
         if sf_m:
@@ -2821,9 +2824,7 @@ class Engine:
                 "function string, function_type string, "
                 "description string"
             )
-            if rows:
-                return self.spark.createDataFrame(rows, schema)
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, rows, schema)
         sc_m = self._SHOW_SCHEMAS_CAT_RE.match(text)
         if sc_m:
             cat = sc_m.group(1)
@@ -2843,8 +2844,10 @@ class Engine:
                 if s.startswith(pref)
             }
             if schemas:
-                return self.spark.createDataFrame(
-                    [(s,) for s in sorted(schemas)], "Schema string"
+                return local_frame(
+                    self.spark,
+                    [(s,) for s in sorted(schemas)],
+                    "Schema string",
                 )
             return None
         ns_m = self._SHOW_TABLES_NS_RE.match(text)
@@ -2862,8 +2865,8 @@ class Engine:
                 if n.startswith(pref)
             )
             if names:
-                return self.spark.createDataFrame(
-                    [(n,) for n in names], "Table string"
+                return local_frame(
+                    self.spark, [(n,) for n in names], "Table string"
                 )
             return None  # unknown either way: Spark raises its error
         if self._SHOW_SNAPSHOT_TABLES_RE.match(text):
@@ -2874,17 +2877,13 @@ class Engine:
                 for n, t in self._snapshot_tables.items()
             )
             schema = "table string, location string, version long"
-            if rows:
-                return self.spark.createDataFrame(rows, schema)
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, rows, schema)
         if self._RECOVER_TXNS_RE.match(text):
-            recovered = self.recover_transactions()
-            schema = "txn string"
-            if recovered:
-                return self.spark.createDataFrame(
-                    [(g,) for g in recovered], schema
-                )
-            return self.spark.createDataFrame([], schema)
+            return local_frame(
+                self.spark,
+                [(g,) for g in self.recover_transactions()],
+                "txn string",
+            )
         vc = self._views()
         m = self._CREATE_VIEW_RE.match(text)
         if m:
@@ -2916,28 +2915,28 @@ class Engine:
                 or_replace=bool(or_replace),
                 if_not_exists=bool(if_not_exists),
             )
-            return self.spark.createDataFrame([(name,)], "view string")
+            return local_frame(self.spark, [(name,)], "view string")
         m = self._DROP_VIEW_RE.match(text)
         if m:
             if_exists, name = m.groups()
             dropped = vc.drop(name, if_exists=bool(if_exists))
-            return self.spark.createDataFrame(
-                [(name, dropped)], "view string, dropped boolean"
+            return local_frame(
+                self.spark, [(name, dropped)], "view string, dropped boolean"
             )
         if self._SHOW_VIEWS_RE.match(text):
-            rows = [(n, vc.get(n)) for n in vc.names()]
-            schema = "view string, definition string"
-            if rows:
-                return self.spark.createDataFrame(rows, schema)
-            return self.spark.createDataFrame([], schema)
+            return local_frame(
+                self.spark,
+                [(n, vc.get(n)) for n in vc.names()],
+                "view string, definition string",
+            )
         m = self._SHOW_CREATE_VIEW_RE.match(text)
         if m:
             name = m.group(1)
             body = vc.get(name)
             if body is None:
                 raise ValueError(f"view '{name}' does not exist")
-            return self.spark.createDataFrame(
-                [(f"CREATE VIEW {name} AS {body}",)], "stmt string"
+            return local_frame(
+                self.spark, [(f"CREATE VIEW {name} AS {body}",)], "stmt string"
             )
         return None
 

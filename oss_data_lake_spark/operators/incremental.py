@@ -46,6 +46,7 @@ from oss_data_lake_spark.operators.dedup import (
     minhash_signatures,
 )
 from oss_data_lake_spark.operators.pipeline import _with_quality
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
 
 
@@ -131,7 +132,7 @@ class IncrementalCorpus:
         """New doc_ids that near-duplicate an EXISTING corpus doc. Corpus
         cost: one index band-join + shingling of candidate docs only."""
         if not self.index.current_version():
-            return self.spark.createDataFrame([], "doc_id long")
+            return local_frame(self.spark, [], "doc_id long")
         idx = self.index.read()
         cands = (
             new_bands.alias("n")

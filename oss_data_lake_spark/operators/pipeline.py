@@ -30,6 +30,7 @@ from oss_data_lake_spark.operators.dedup import (
     shingle_jaccard_pairs,
 )
 from oss_data_lake_spark.operators.text import STOPWORDS
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sources.loaders import load_table
 
 MIN_TOKENS = 20
@@ -1015,7 +1016,8 @@ def dsir_resampling_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (selection, totals) don't each re-derive it — keeps the corpus
     # at exactly 2 FileScans (model fit + the per-doc pass's two
     # consumers share this literal table)
-    lw = spark.createDataFrame(
+    lw = local_frame(
+        spark,
         [(r["bucket"], r["lw"]) for r in lw.collect()],
         "bucket long, lw long",
     )

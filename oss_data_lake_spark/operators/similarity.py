@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sources.loaders import load_table
 
 N_QUERIES = 10
@@ -1328,7 +1329,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
                     )
                 )
                 table.append((int(qr["vec_id"]), m, j, d2))
-    adc = spark.createDataFrame(table, "q_id long, m int, j long, d2 double")
+    adc = local_frame(spark, table, "q_id long, m int, j long, d2 double")
 
     exploded = codes.select(
         "vec_id", F.posexplode("codes").alias("m", "j")

@@ -41,9 +41,12 @@ hyperparameter. Nothing is ever corpus-sized after step 1.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sources.loaders import load_table
 
 BPE_ROUNDS = 24
@@ -187,9 +190,24 @@ def _apply_merge(wt: DataFrame, left: str, right: str) -> DataFrame:
 
 # TRAIN-ONCE cache (the _pq_codebook protocol, in-session form): training
 # is deterministic, e85 (the merge table) and e86 (corpus encoding) share
-# one trajectory, and the checkpointed word-type table stays valid for the
-# session's lifetime.
-_TRAIN_CACHE: dict[tuple[str, int], tuple[object, list, DataFrame]] = {}
+# one trajectory, and the checkpointed word-type table stays valid while
+# the session lives and the input files are the ones it was trained on.
+_TRAIN_CACHE: dict[tuple, tuple[object, tuple, list, DataFrame]] = {}
+
+
+def _input_identity(sf_dir: str) -> tuple:
+    """(path, inode, size, mtime_ns) of every file of the documents table,
+    the stat check ``LocalFsCommitProtocol.manifest`` uses: a table
+    rewritten at the same path no longer matches."""
+    root = os.path.join(sf_dir, "documents.parquet")
+    paths = [root] if os.path.isfile(root) else sorted(
+        os.path.join(d, f) for d, _, files in os.walk(root) for f in files
+    )
+    ident = []
+    for p in paths:
+        st = os.stat(p)
+        ident.append((p, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(ident)
 
 
 def _select_batch(top: list, known: set, kmax: int) -> list:
@@ -237,12 +255,14 @@ def _train(
     import weakref
 
     key = (sf_dir, rounds, bytelevel, batch_max)
+    ident = _input_identity(sf_dir)
     hit = _TRAIN_CACHE.get(key)
     if hit is not None:
-        ref, merges, wt = hit
-        if ref() is spark:  # same LIVE session — not an id() alias
+        ref, hit_ident, merges, wt = hit
+        # same LIVE session (not an id() alias) and unchanged input files
+        if ref() is spark and hit_ident == ident:
             return merges, wt
-        del _TRAIN_CACHE[key]  # stale session: evict, retrain
+        del _TRAIN_CACHE[key]  # stale session or rewritten input: retrain
     builder = _word_types_bytelevel if bytelevel else _word_types
     # lazy checkpoints throughout the trainer (r14): the next driver
     # action — the alphabet collect below, then each round's TOP-M pair
@@ -282,7 +302,7 @@ def _train(
             wt = _apply_merge(wt, b["l"], b["r"])
             known.add(b["l"] + b["r"])
         wt = wt.localCheckpoint(eager=False)
-    _TRAIN_CACHE[key] = (weakref.ref(spark), merges, wt)
+    _TRAIN_CACHE[key] = (weakref.ref(spark), ident, merges, wt)
     return merges, wt
 
 
@@ -292,8 +312,10 @@ def bpe_merge_table(
     """e85: the learned merge table — one row per round:
     (rank, left_sym, right_sym, pair_count), rank 1-based in learning order."""
     merges, _ = _train(spark, sf_dir, rounds)
-    out = spark.createDataFrame(
-        merges, "rank long, left_sym string, right_sym string, pair_count long"
+    out = local_frame(
+        spark,
+        merges,
+        "rank long, left_sym string, right_sym string, pair_count long",
     )
     return out.orderBy("rank")
 
@@ -342,8 +364,10 @@ def bpe_bytelevel_merge_table(
     Same full-trajectory DuckDB oracle style: every round's argmax pair
     re-derived from scratch with the positional formulation."""
     merges, _ = _train(spark, sf_dir, rounds, bytelevel=True)
-    out = spark.createDataFrame(
-        merges, "rank long, left_sym string, right_sym string, pair_count long"
+    out = local_frame(
+        spark,
+        merges,
+        "rank long, left_sym string, right_sym string, pair_count long",
     )
     return out.orderBy("rank")
 

@@ -22,10 +22,103 @@ Deliberate configs (SURVEY.md §4 "Engine configs to set deliberately"):
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _map_leaves(
+    dt: T.DataType, leaf: Callable[[T.DataType], T.DataType]
+) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name, _map_leaves(f.dataType, leaf), f.nullable, f.metadata
+                )
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_map_leaves(dt.elementType, leaf), dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _map_leaves(dt.keyType, leaf),
+            _map_leaves(dt.valueType, leaf),
+            dt.valueContainsNull,
+        )
+    return leaf(dt)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side rows, as an Arrow local relation.
+
+    ``spark.createDataFrame(list, schema)`` turns a Python list into a
+    Python RDD, so every action on the frame (even collecting a DML
+    statement's one-row result) runs a Spark job whose tasks start Python
+    workers. Handed a ``pyarrow.Table`` instead, Spark builds a
+    ``LocalRelation`` that the driver answers without a job. Every engine
+    result frame and small driver-side table is built here.
+
+    Rows go through the same type verifier and ``StructType.toInternal`` as
+    the list path, so a wrong-typed value raises and naive datetimes, dates
+    and decimals keep the meaning the list path gives them (a naive
+    datetime is system local time). Two cases differ from the list path,
+    which would let the JVM coerce the value: a string column takes only
+    ``str`` values, and a decimal with more digits than its column holds
+    raises where the list path rounded it. Zero rows give an empty frame
+    of ``schema``.
+
+    PySpark's Arrow conversion has no char, varchar or year-month interval
+    type. A DataFrame
+    never carries char/varchar (Spark reads them as string), so those
+    columns come back as string. A year-month interval crosses as its
+    int months and is cast back.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    schema = _map_leaves(
+        schema,
+        lambda t: (
+            T.StringType() if isinstance(t, (T.CharType, T.VarcharType)) else t
+        ),
+    )
+    carrier = _map_leaves(
+        schema,
+        lambda t: (
+            T.IntegerType() if isinstance(t, T.YearMonthIntervalType) else t
+        ),
+    )
+    verify = _make_type_verifier(schema)
+    columns: list[list] = [[] for _ in schema.fields]
+    for row in rows:
+        verify(row)
+        for col, v in zip(columns, schema.toInternal(row)):
+            col.append(v)
+    arrow = to_arrow_schema(carrier)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    df = spark.createDataFrame(table, carrier)
+    if carrier == schema:
+        return df
+    return df.select(
+        [
+            F.col("`" + f.name.replace("`", "``") + "`")
+            .cast(f.dataType)
+            .alias(f.name, metadata=f.metadata)
+            for f in schema.fields
+        ]
+    )
 
 
 def get_spark(

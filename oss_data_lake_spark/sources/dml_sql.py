@@ -181,6 +181,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from oss_data_lake_spark import sqlplan
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sources.snapshots import (
     SnapshotTable,
     _coerce_key_value,
@@ -516,7 +517,8 @@ _RESULT_COLUMNS = (
 
 def _metrics_df(spark: SparkSession, info: dict) -> DataFrame:
     cols = [(k, t) for k, t in _RESULT_COLUMNS if k in info]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(info[k] for k, _ in cols)],
         ", ".join(f"{k} {t}" for k, t in cols),
     )
@@ -1360,7 +1362,7 @@ def dispatch_statement(
         _adopt_on_disk(engine, tables, name)
         if name in tables:
             if if_not_exists:
-                return spark.createDataFrame([(0,)], "version long").limit(0)
+                return local_frame(spark, [], "version long")
             raise ValueError(
                 f"snapshot table '{name}' already exists; use CREATE "
                 f"TABLE IF NOT EXISTS or DROP TABLE first"
@@ -1373,7 +1375,7 @@ def dispatch_statement(
                 f"{sorted(unknown)}"
             )
         ddl = ", ".join(f"{n} {ty}" for n, ty in cols.items())
-        empty = spark.createDataFrame([], ddl)
+        empty = local_frame(spark, [], ddl)
         # validate DEFAULTs BEFORE the table exists: a failed CREATE
         # must not leave a registered, committed table behind
         from oss_data_lake_spark.sources.snapshots import validate_default
@@ -1406,7 +1408,7 @@ def dispatch_statement(
             raise
         for cname, lit in defaults.items():
             version = t.set_column_default(cname, lit)
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _CREATE_RE.match(text)
     if m and engine is not None:
@@ -1423,7 +1425,7 @@ def dispatch_statement(
             )
         if name in tables:
             if if_not_exists:
-                return spark.createDataFrame([(0,)], "version long").limit(0)
+                return local_frame(spark, [], "version long")
             if not or_replace:
                 raise ValueError(
                     f"snapshot table '{name}' already exists; use "
@@ -1460,7 +1462,7 @@ def dispatch_statement(
                     set(_prunable_columns(df)) - identity
                 ) or None,
             )
-            return spark.createDataFrame([(version,)], "version long")
+            return local_frame(spark, [(version,)], "version long")
         df = sql_with_time_travel(spark, query, tables)
         t = engine.register_snapshot_table(name, engine.snapshot_table_path(name))
         try:
@@ -1494,7 +1496,7 @@ def dispatch_statement(
             # deleting it cannot destroy pre-existing data
             engine.drop_snapshot_table(name, delete_data=True)
             raise
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _CLONE_RE.match(text)
     if m and engine is not None:
@@ -1502,7 +1504,7 @@ def dispatch_statement(
         _adopt_on_disk(engine, tables, name)
         if name in tables:
             if if_not_exists:
-                return spark.createDataFrame([(0,)], "version long").limit(0)
+                return local_frame(spark, [], "version long")
             raise ValueError(
                 f"snapshot table '{name}' already exists; use "
                 f"CREATE TABLE IF NOT EXISTS or DROP TABLE first"
@@ -1513,7 +1515,8 @@ def dispatch_statement(
             int(as_of) if as_of else None,
         )
         tables[name] = clone
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     name,
@@ -1534,8 +1537,8 @@ def dispatch_statement(
 
             to_v = t.version_as_of(_parse_ts_ms(m.group(3)))
         version = t.rollback(to_v)
-        return spark.createDataFrame(
-            [(version, to_v)], "version long, restored_to long"
+        return local_frame(
+            spark, [(version, to_v)], "version long, restored_to long"
         )
 
     m = _COPY_INTO_RE.match(text)
@@ -1550,7 +1553,8 @@ def dispatch_statement(
             force=bool(m.group(5)),
             fileformat=(m.group(3) or "parquet"),
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(res["version"], res["files_loaded"], res["rows_loaded"])],
             "version long, files_loaded long, rows_loaded long",
         )
@@ -1617,7 +1621,7 @@ def dispatch_statement(
                 f";\nALTER TABLE {m.group(1)} ADD CONSTRAINT {cname} "
                 f"CHECK ({expr})"
             )
-        return spark.createDataFrame([(stmt,)], "createtab_stmt string")
+        return local_frame(spark, [(stmt,)], "createtab_stmt string")
 
     m = _DROP_RE.match(text)
     if m:
@@ -1627,7 +1631,7 @@ def dispatch_statement(
         _adopt_on_disk(engine, tables, name)
         if name in tables and engine is not None:
             engine.drop_snapshot_table(name)
-            return spark.createDataFrame([(name,)], "dropped string")
+            return local_frame(spark, [(name,)], "dropped string")
         if name not in tables:
             return None  # session-catalog table: Spark's own DROP handles it
 
@@ -1637,7 +1641,7 @@ def dispatch_statement(
         if name not in tables:
             return None  # session-catalog ALTER falls through
         version = tables[name].add_constraint(m.group(2), m.group(3))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _DROP_CONSTRAINT_RE.match(text)
     if m:
@@ -1645,7 +1649,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         version = tables[name].drop_constraint(m.group(2))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _SET_PROPS_RE.match(text)
     if m:
@@ -1658,7 +1662,7 @@ def dispatch_statement(
                 "SET TBLPROPERTIES expects 'key' = 'value' pairs"
             )
         version = tables[name].set_properties(props)
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _UNSET_PROPS_RE.match(text)
     if m:
@@ -1668,7 +1672,7 @@ def dispatch_statement(
         version = tables[name].unset_properties(
             _PROP_KEY_RE.findall(m.group(2))
         )
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _COMMENT_ON_RE.match(text)
     if m:
@@ -1709,7 +1713,7 @@ def dispatch_statement(
             version = t.unset_properties([key])
         else:
             version = t.set_properties({key: value})
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _ADD_COLUMNS_RE.match(text)
     if m:
@@ -1724,7 +1728,7 @@ def dispatch_statement(
                 "retroactively)"
             )
         version = tables[name].add_columns(cols, defaults or None)
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _DROP_COLUMN_RE.match(text)
     if m:
@@ -1733,7 +1737,7 @@ def dispatch_statement(
             return None
         names = [c.strip() for c in m.group(2).split(",") if c.strip()]
         version = tables[name].drop_columns(names)
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _RENAME_COLUMN_RE.match(text)
     if m:
@@ -1741,7 +1745,7 @@ def dispatch_statement(
         if name not in tables:
             return None  # session-catalog ALTER falls through
         version = tables[name].rename_column(m.group(2), m.group(3))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _SET_DEFAULT_RE.match(text)
     if m:
@@ -1749,7 +1753,7 @@ def dispatch_statement(
         if name not in tables:
             return None  # session-catalog ALTER falls through
         version = tables[name].set_column_default(m.group(2), m.group(3))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _DROP_DEFAULT_RE.match(text)
     if m:
@@ -1757,7 +1761,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         version = tables[name].drop_column_default(m.group(2))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _ALTER_TYPE_RE.match(text)
     if m:
@@ -1765,7 +1769,7 @@ def dispatch_statement(
         if name not in tables:
             return None  # session-catalog ALTER falls through
         version = tables[name].widen_column(m.group(2), m.group(3))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _ADD_PART_FIELD_RE.match(text)
     if m:
@@ -1773,7 +1777,7 @@ def dispatch_statement(
         if name not in tables:
             return None  # session-catalog ALTER falls through
         version = tables[name].add_partition_field(m.group(2))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _DROP_PART_FIELD_RE.match(text)
     if m:
@@ -1781,7 +1785,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         version = tables[name].drop_partition_field(m.group(2))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _SHOW_PARTITIONS_RE.match(text)
     if m:
@@ -1789,8 +1793,8 @@ def dispatch_statement(
         if name not in tables:
             return None  # session-catalog SHOW PARTITIONS falls through
         parts = tables[name].show_partitions()
-        return spark.createDataFrame(
-            [(p,) for p in parts], "partition string"
+        return local_frame(
+            spark, [(p,) for p in parts], "partition string"
         )
 
     m = _SHOW_COLUMNS_RE.match(text)
@@ -1807,8 +1811,10 @@ def dispatch_statement(
              props.get(f"comment.column.{c}", ""))
             for c, dt in t.read().dtypes
         ]
-        return spark.createDataFrame(
-            rows, "Column string, Type string, Extra string, Comment string"
+        return local_frame(
+            spark,
+            rows,
+            "Column string, Type string, Extra string, Comment string",
         )
 
     m = _SHOW_STATS_RE.match(text)
@@ -1893,7 +1899,8 @@ def dispatch_statement(
             (None, None, None, None,
              float(total_rows) if rows_known else None, None, None)
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "column_name string, data_size double, "
             "distinct_values_count double, nulls_fraction double, "
@@ -1912,7 +1919,7 @@ def dispatch_statement(
                 "(use WRITE UNORDERED to clear the order)"
             )
         version = tables[name].set_sort_order(cols)
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _WRITE_UNORDERED_RE.match(text)
     if m:
@@ -1920,7 +1927,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         version = tables[name].set_sort_order([])
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _CREATE_MV_RE.match(text)
     if m:
@@ -1960,7 +1967,8 @@ def dispatch_statement(
             }),
             _MV_PRES_PROP: json.dumps(d["presentation"]),
         })
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(info["mode"], info["source_version"])],
             "mode string, source_version long",
         )
@@ -1989,7 +1997,8 @@ def dispatch_statement(
             nonnull_measures=d.get("nonnull_measures") or None,
         )
         info = ia.refresh()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(info["mode"], info["source_version"], mvt.current_version())],
             "mode string, source_version long, version long",
         )
@@ -2008,7 +2017,7 @@ def dispatch_statement(
                 f"materialized view — use DROP TABLE"
             )
         engine.drop_snapshot_table(name)
-        return spark.createDataFrame([(name,)], "dropped string")
+        return local_frame(spark, [(name,)], "dropped string")
 
     m = _ANALYZE_RE.match(text)
     if m:
@@ -2021,7 +2030,8 @@ def dispatch_statement(
             else None
         )
         st = tables[name].analyze(columns=cols)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(st["version"], st["row_count"], st["size_bytes"])],
             "version long, row_count long, size_bytes long",
         )
@@ -2034,8 +2044,8 @@ def dispatch_statement(
         version = tables[name].create_tag(
             m.group(2), int(m.group(3)) if m.group(3) else None
         )
-        return spark.createDataFrame(
-            [(version, m.group(2))], "version long, tag string"
+        return local_frame(
+            spark, [(version, m.group(2))], "version long, tag string"
         )
 
     m = _DROP_TAG_RE.match(text)
@@ -2044,7 +2054,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         version = tables[name].drop_tag(m.group(2))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _CREATE_BRANCH_RE.match(text)
     if m:
@@ -2063,7 +2073,8 @@ def dispatch_statement(
         # <table>_branch_<name> run on the branch line
         tables[reg] = bt
         src = bt._manifest(1)["clone_source"]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(bname, reg, src["version"])],
             "branch string, sql_name string, from_version long",
         )
@@ -2081,7 +2092,7 @@ def dispatch_statement(
         reg = branch_sql_name(name, bname)
         if reg in tables and tables[reg].path == bpath:
             tables.pop(reg)
-        return spark.createDataFrame([(bname,)], "dropped string")
+        return local_frame(spark, [(bname,)], "dropped string")
 
     m = _FAST_FORWARD_RE.match(text)
     if m:
@@ -2095,7 +2106,7 @@ def dispatch_statement(
             reg = branch_sql_name(name, bname)
             if reg in tables and tables[reg].path == bpath:
                 tables.pop(reg)
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _SHOW_BRANCHES_RE.match(text)
     if m:
@@ -2106,8 +2117,8 @@ def dispatch_statement(
             (b, info["head"], info["from_version"])
             for b, info in sorted(tables[name].branches().items())
         ]
-        return spark.createDataFrame(
-            rows, "branch string, head long, from_version long"
+        return local_frame(
+            spark, rows, "branch string, head long, from_version long"
         )
 
     m = _CHERRY_PICK_RE.match(text)
@@ -2116,7 +2127,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         version = tables[name].cherry_pick(int(m.group(2)))
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _SHOW_TAGS_RE.match(text)
     if m:
@@ -2124,7 +2135,7 @@ def dispatch_statement(
         if name not in tables:
             return None
         rows = sorted(tables[name].tags().items())
-        return spark.createDataFrame(rows, "tag string, version long")
+        return local_frame(spark, rows, "tag string, version long")
 
     m = _CONVERT_RE.match(text)
     if m:
@@ -2167,7 +2178,8 @@ def dispatch_statement(
         )
 
         n_files = sum(1 for _ in _iter_parquet_files(src))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(name, src, n_files)],
             "table string, source string, n_files long",
         )
@@ -2373,7 +2385,7 @@ def dispatch_statement(
             partition_by=pb or None,
             stats_for=sorted(t.stats_columns() - identity) or None,
         )
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _MERGE_EVOLVE_RE.match(text)
     if m:
@@ -2418,7 +2430,8 @@ def dispatch_statement(
                 target_partitions=n_files,
                 stats_for=sorted(t.stats_columns()) or None,
             )
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [(res["version"], res["files_rewritten"],
                   res["files_skipped"])],
                 "version long, files_rewritten long, files_skipped long",
@@ -2429,7 +2442,7 @@ def dispatch_statement(
             zorder_by=zorder,
             stats_for=sorted(t.stats_columns()) or None,
         )
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _TRUNCATE_RE.match(text)
     if m:
@@ -2443,11 +2456,11 @@ def dispatch_statement(
         # truncate-and-reload workflow would silently reload
         # unpartitioned
         version = t.commit(
-            spark.createDataFrame([], schema), mode="overwrite",
+            local_frame(spark, [], schema), mode="overwrite",
             partition_by=t.current_partition_by() or None,
             tag="truncate",
         )
-        return spark.createDataFrame([(version,)], "version long")
+        return local_frame(spark, [(version,)], "version long")
 
     m = _SHOW_PROPS_RE.match(text)
     if m and m.group(1) in tables:
@@ -2457,8 +2470,8 @@ def dispatch_statement(
             props = {
                 k: v for k, v in props.items() if k == m.group(2)
             }
-        return spark.createDataFrame(
-            sorted(props.items()) or [], "key string, value string"
+        return local_frame(
+            spark, sorted(props.items()), "key string, value string"
         )
 
     m = _ALTER_EXECUTE_RE.match(text)
@@ -2477,7 +2490,7 @@ def dispatch_statement(
                 target_partitions=1,
                 stats_for=sorted(t.stats_columns()) or None,
             )
-            return spark.createDataFrame([(version,)], "version long")
+            return local_frame(spark, [(version,)], "version long")
         if proc == "expire_snapshots":
             extra = set(args) - {"retention_threshold"}
             if extra or "retention_threshold" not in args:
@@ -2495,8 +2508,8 @@ def dispatch_statement(
                 args["retention_threshold"],
             )
             expired = t.expire_snapshots(keep_last=1, retain_ms=ms)
-            return spark.createDataFrame(
-                [(v,) for v in expired] or [], "expired_version long"
+            return local_frame(
+                spark, [(v,) for v in expired], "expired_version long"
             )
         if proc == "remove_orphan_files":
             extra = set(args) - {"retention_threshold"}
@@ -2520,8 +2533,8 @@ def dispatch_statement(
                     args["retention_threshold"],
                 )
             removed = t.vacuum(dry_run=False, retain_ms=ms)
-            return spark.createDataFrame(
-                [(d,) for d in removed] or [], "removed_dir string"
+            return local_frame(
+                spark, [(d,) for d in removed], "removed_dir string"
             )
         raise ValueError(
             f"ALTER TABLE ... EXECUTE {proc!r} is not supported "
@@ -2544,8 +2557,8 @@ def dispatch_statement(
                 int(m.group(4)) * 3_600_000 if m.group(4) else None
             ),
         )
-        return spark.createDataFrame(
-            [(v,) for v in expired] or [], "expired_version long"
+        return local_frame(
+            spark, [(v,) for v in expired], "expired_version long"
         )
 
     m = _DESCRIBE_RE.match(text)
@@ -2559,7 +2572,8 @@ def dispatch_statement(
             )
         wdef = t.write_defaults()
         gens = t.generated_columns()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     f.name,
@@ -2586,8 +2600,8 @@ def dispatch_statement(
                 int(m.group(2)) * 3_600_000 if m.group(2) else None
             ),
         )
-        return spark.createDataFrame(
-            [(d,) for d in removed] or [], "removed_dir string"
+        return local_frame(
+            spark, [(d,) for d in removed], "removed_dir string"
         )
 
     m = _HISTORY_RE.match(text)
@@ -2614,7 +2628,8 @@ def dispatch_statement(
             n_files += len(universe)
             n_visible += len(universe) if vis is None else len(vis)
         schema = t.schema(v)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     v,

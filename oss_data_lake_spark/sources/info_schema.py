@@ -48,6 +48,7 @@ import itertools
 import re
 from typing import TYPE_CHECKING
 
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sqltext import _masked, _sub_outside_literals
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -274,10 +275,7 @@ def build_relation(engine, relation: str, catalog: str | None) -> "DataFrame":
                     (c, s, n, cn, pos, default,
                      "YES" if nullable else "NO", dt)
                 )
-    shape = _SHAPES[relation]
-    if rows:
-        return spark.createDataFrame(rows, shape)
-    return spark.createDataFrame([], shape)
+    return local_frame(spark, rows, _SHAPES[relation])
 
 
 def expand_information_schema(engine, text: str) -> tuple[str, list[str]]:

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oss_data_lake_spark.session import local_frame
+
 DEFAULT_TICKERS = ("AAPL", "MSFT", "GOOGL", "AMZN")  # reference dags/yfinance_to_minio.py:17
 DEFAULT_LOOKBACK_DAYS = 30  # reference dags/yfinance_to_minio.py:18
 
@@ -47,7 +49,7 @@ def generate_ohlcv(
     days = spark.range(n_days * 2).select(
         F.date_add(F.lit(start_date).cast("date"), F.col("id").cast("int")).alias("day")
     ).filter(F.dayofweek("day").isin(2, 3, 4, 5, 6)).limit(n_days)
-    tick = spark.createDataFrame([(t,) for t in tickers], "ticker string")
+    tick = local_frame(spark, [(t,) for t in tickers], "ticker string")
     grid = tick.crossJoin(days)
 
     s = F.lit(seed)

@@ -52,6 +52,7 @@ parquet reader over the manifest's directories.
 from __future__ import annotations
 
 import datetime
+import decimal
 import functools
 import json
 import operator
@@ -64,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oss_data_lake_spark.session import local_frame
 from oss_data_lake_spark.sources.catalog import (
     CommitConflict,
     CommitProtocol,
@@ -1276,7 +1278,7 @@ class SnapshotTable:
         field = next((f for f in schema.fields if f.name == name), None)
         if field is None:
             raise ValueError(f"no such column: '{name}'")
-        empty = self.spark.createDataFrame([], schema)
+        empty = local_frame(self.spark, [], schema)
         try:
             probe = empty.select(F.expr(expr).cast(field.dataType))
             probe.schema
@@ -3458,7 +3460,8 @@ class SnapshotTable:
                 # AS OF scopes the log to commits up to that version
                 if version is None or m.get("version") <= version
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "version long, parent long, operation string, "
                 "n_data_dirs long, committed_at_ms long",
@@ -3481,7 +3484,8 @@ class SnapshotTable:
                 for m in self.versions()
                 if version is None or m.get("version") <= version
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "version long, parent long, operation string, "
                 "committed_at_ms long, n_data_dirs long, "
@@ -3519,7 +3523,8 @@ class SnapshotTable:
                             ),
                         )
                     )
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "data_dir string, file string, visible boolean, "
                 "rows long, stat_columns array<string>",
@@ -3528,8 +3533,8 @@ class SnapshotTable:
             counts: dict[str, int] = {}
             for tup in self._partition_tuples(v):
                 counts[tup] = counts.get(tup, 0) + 1
-            return spark.createDataFrame(
-                sorted(counts.items()), "partition string, n_files long"
+            return local_frame(
+                spark, sorted(counts.items()), "partition string, n_files long"
             )
         raise ValueError(
             f"unknown metadata table '${kind}' (supported: $files, "
@@ -4001,7 +4006,7 @@ class SnapshotTable:
             )
         target = T.StructType.fromJson(schema)
         out = self._live_rows(manifest, target, selection)
-        return self.spark.createDataFrame([], target) if out is None else out
+        return local_frame(self.spark, [], target) if out is None else out
 
     def _live_rows(
         self,
@@ -4320,7 +4325,7 @@ class SnapshotTable:
         }
         out = self._live_rows(state, target, sel)
         if out is None:
-            return self.spark.createDataFrame([], target)
+            return local_frame(self.spark, [], target)
         keys, on = self._eq_key_join(out, manifest, entry)
         hit = out.join(keys, on, "left_semi")
         return hit.select(*[F.col(f.name) for f in target.fields])
@@ -4404,7 +4409,7 @@ class SnapshotTable:
         if not new_dirs:
             if target is None:
                 raise ValueError("no changes and no schema to shape an empty result")
-            return self.spark.createDataFrame([], target)
+            return local_frame(self.spark, [], target)
         def _one(d: str) -> DataFrame:
             if target is None:
                 return self.spark.read.parquet(os.path.join(self.path, d))
@@ -4524,8 +4529,8 @@ class SnapshotTable:
             T.StructField(self.CHANGE_VERSION_COL, T.LongType(), False),
         ]
         if not parts:
-            return self.spark.createDataFrame(
-                [], T.StructType(list(target.fields) + meta_fields)
+            return local_frame(
+                self.spark, [], T.StructType(list(target.fields) + meta_fields)
             )
         out = parts[0]
         for p in parts[1:]:
@@ -4794,7 +4799,7 @@ class SnapshotTable:
             {**manifest, "delete_dirs": []}, target, sel, keep_meta=True
         )
         if out is None:
-            return self.spark.createDataFrame([], target)
+            return local_frame(self.spark, [], target)
         hit = out.join(
             dv,
             (out["__dv_file"] == dv["file"]) & (out["__dv_pos"] == dv["pos"]),
@@ -5131,7 +5136,7 @@ class SnapshotTable:
             # SQL-parsed literals arrive as raw Python str/int/float
             # (DELETE ... WHERE ts = TIMESTAMP '...' yields a str);
             # coerce each value to the column's declared type so the
-            # typed createDataFrame below never trips Spark's verifier
+            # typed local_frame below never trips Spark's verifier
             typed = [
                 tuple(
                     _coerce_key_value(v, ftypes[c])
@@ -5139,10 +5144,10 @@ class SnapshotTable:
                 )
                 for r in rows
             ]
-            return self.spark.createDataFrame(
-                typed, T.StructType(
-                    [T.StructField(c, ftypes[c], True) for c in cols]
-                )
+            return local_frame(
+                self.spark,
+                typed,
+                T.StructType([T.StructField(c, ftypes[c], True) for c in cols]),
             ).distinct(), None
 
         return self._row_dml(
@@ -5396,7 +5401,7 @@ class SnapshotTable:
         selection, n_sel, n_skip = planned
         cand = self._live_rows(m, target, selection)
         if cand is None:
-            cand = self.spark.createDataFrame([], target)
+            cand = local_frame(self.spark, [], target)
         replacement = self._align(transform(cand, m, target), target)
         cons = m.get("constraints")
         if cons and tag != "delete":  # deletes can't create violating rows
@@ -6363,11 +6368,24 @@ def _coerce_key_value(v, dtype: T.DataType):
             return int(v)
         return v
     if isinstance(dtype, T.DecimalType) and isinstance(
-        v, (int, float, str)
+        v, (int, float, str, decimal.Decimal)
     ):
-        import decimal
-
-        return decimal.Decimal(str(v))
+        # a literal the column cannot hold exactly (more fraction digits
+        # than its scale, or more digits than its precision) equals no
+        # stored value; rounding it would match other rows, so it raises
+        # and the statement takes the position-delete path
+        try:
+            d = decimal.Decimal(str(v))
+            q = d.quantize(
+                decimal.Decimal(1).scaleb(-dtype.scale),
+                context=decimal.Context(prec=dtype.precision),
+            )
+            exact = q == d
+        except decimal.InvalidOperation:
+            exact = False
+        if not exact:
+            raise ValueError(f"{v!r} does not fit {dtype.simpleString()}")
+        return q
     if isinstance(dtype, T.BooleanType) and isinstance(v, str):
         s = v.strip().lower()
         if s in ("true", "t", "1", "yes"):

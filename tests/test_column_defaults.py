@@ -218,3 +218,29 @@ def test_failed_create_table_registers_nothing(spark):
     e.sql(f"CREATE TABLE {name} (a INT DEFAULT 5) USING snapshot")
     assert e._snapshot_tables[name].write_defaults() == {"a": "5"}
     e.sql(f"DROP TABLE {name}")
+
+
+def test_defaults_reject_nondeterministic_and_query_time(spark, tmp_path):
+    e = Engine(spark=spark)
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(1,)], "k bigint"))
+    e._snapshot_tables["t"] = t
+    for bad, ty in [
+        ("rand()", "DOUBLE"),
+        ("uuid()", "STRING"),
+        ("current_timestamp()", "TIMESTAMP"),
+        ("now()", "TIMESTAMP"),
+        ("current_date()", "DATE"),
+        ("date_add(current_date(), 1)", "DATE"),  # nested query-time
+    ]:
+        with pytest.raises(ValueError, match="constant|query time"):
+            e.sql(f"ALTER TABLE t ADD COLUMNS (c {ty} DEFAULT {bad})")
+        assert "c" not in [f.name for f in t.schema().fields]
+    # genuinely constant expressions still pass
+    e.sql(
+        "ALTER TABLE t ADD COLUMNS ("
+        "d DATE DEFAULT CAST('2024-01-01' AS DATE), "
+        "n INT DEFAULT 1 + 1, s STRING DEFAULT upper('x'))"
+    )
+    row = e.sql("SELECT d, n, s FROM t").collect()[0]
+    assert (str(row["d"]), row["n"], row["s"]) == ("2024-01-01", 2, "X")

@@ -4,6 +4,8 @@ DELETE/UPDATE/OPTIMIZE/VACUUM/DESCRIBE HISTORY as plain SQL."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -238,6 +240,27 @@ def test_sql_ctas_and_drop_lifecycle(spark, tmp_path):
     # plain CREATE/DROP still reach the session catalog untouched
     eng.sql("CREATE TABLE IF NOT EXISTS plain_tbl (a INT) USING parquet")
     eng.sql("DROP TABLE plain_tbl")
+
+
+def test_create_table_with_char_varchar_and_year_month_columns(
+    spark, tmp_path
+):
+    """Column types PySpark's Arrow conversion lacks still make a table:
+    CREATE, a read of the empty table, a pruned read that matches no file,
+    and TRUNCATE all build their frames from the declared schema."""
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    eng.sql(
+        "CREATE TABLE tv (name VARCHAR(10), c CHAR(3), "
+        "i INTERVAL YEAR TO MONTH, k INT) USING snapshot"
+    )
+    want = "struct<name:string,c:string,i:interval year to month,k:int>"
+    assert eng.sql("SELECT * FROM tv").schema.simpleString() == want
+    eng.sql("INSERT INTO tv VALUES ('ab', 'x', INTERVAL '1-2' YEAR TO MONTH, 1)")
+    assert eng.sql("SELECT name, k FROM tv").collect() == [Row(name="ab", k=1)]
+    pruned = eng.sql("SELECT * FROM tv WHERE k = 99")
+    assert pruned.schema.simpleString() == want and pruned.collect() == []
+    eng.sql("TRUNCATE TABLE tv")
+    assert eng.sql("SELECT k FROM tv").collect() == []
 
 
 def test_sql_script_runs_full_lifecycle(spark, tmp_path):
@@ -1149,3 +1172,213 @@ def test_comment_on_table_and_column(spark, tmp_path):
     with _pytest.raises(Exception, match="table.column"):
         e.sql("COMMENT ON COLUMN cmt IS 'x'")
     e.drop_snapshot_table("cmt", delete_data=True)
+
+
+def test_failed_create_table_leaves_no_registered_name(spark, tmp_path):
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    # days() on a STRING column fails the transform-typing validation
+    # inside the v1 commit — AFTER the name was registered
+    with pytest.raises(Exception):
+        e.sql(
+            "CREATE TABLE tdays (a INT, ts STRING) USING snapshot "
+            "PARTITIONED BY (days(ts))"
+        )
+    # the corrected retry must succeed (no 'already exists' ghost) ...
+    e.sql(
+        "CREATE TABLE tdays (a INT, ts TIMESTAMP) USING snapshot "
+        "PARTITIONED BY (days(ts))"
+    )
+    assert e.sql("SELECT count(*) AS n FROM tdays").collect()[0]["n"] == 0
+    # ... and IF NOT EXISTS after a failure must CREATE, not no-op
+    with pytest.raises(Exception):
+        e.sql(
+            "CREATE TABLE tbad (a INT, s STRING) USING snapshot "
+            "PARTITIONED BY (hours(s))"
+        )
+    e.sql("CREATE TABLE IF NOT EXISTS tbad (a INT, s STRING) USING snapshot")
+    e.sql("INSERT INTO tbad VALUES (1, 'x')")
+    assert e.sql("SELECT count(*) AS n FROM tbad").collect()[0]["n"] == 1
+
+
+def test_failed_ctas_leaves_no_registered_name(spark, tmp_path):
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    with pytest.raises(Exception):
+        e.sql("CREATE TABLE ghost USING snapshot AS SELECT no_such_fn(1)")
+    # retry with a valid body succeeds
+    e.sql("CREATE TABLE ghost USING snapshot AS SELECT 1 AS a")
+    assert e.sql("SELECT a FROM ghost").collect()[0]["a"] == 1
+
+
+def test_create_in_fresh_process_never_deletes_existing_table(
+    spark, tmp_path
+):
+    """A fresh process (empty registry) running
+    CREATE TABLE over a warehouse where the table already exists on
+    disk used to reach the failure rollback's rmtree — a failed DDL
+    silently destroying the table. Now the on-disk table is ADOPTED
+    first: plain CREATE refuses with 'already exists', IF NOT EXISTS
+    no-ops, and the data survives both."""
+    wh = str(tmp_path / "wh")
+    e1 = Engine(spark=spark, warehouse_dir=wh)
+    e1.sql("CREATE TABLE facts (k INT, v DOUBLE) USING snapshot")
+    e1.sql("INSERT INTO facts VALUES (1, 1.5), (2, 2.5)")
+    data_dir = e1._snapshot_tables["facts"].path
+
+    # a FRESH process: empty registry, same warehouse
+    e2 = Engine(spark=spark, warehouse_dir=wh)
+    assert "facts" not in e2._snapshot_tables
+    # a CREATE that would previously fail mid-commit (bad partition
+    # transform) now refuses up front — and deletes nothing
+    with pytest.raises(ValueError, match="already exists"):
+        e2.sql(
+            "CREATE TABLE facts (k INT, v DOUBLE) USING snapshot "
+            "PARTITIONED BY (days(k))"
+        )
+    assert os.path.isdir(data_dir)
+    t = SnapshotTable(spark, data_dir)
+    assert {r["k"] for r in t.read().collect()} == {1, 2}
+
+    # plain CREATE with a VALID body also refuses (no silent append)
+    e3 = Engine(spark=spark, warehouse_dir=wh)
+    with pytest.raises(ValueError, match="already exists"):
+        e3.sql("CREATE TABLE facts (k INT, v DOUBLE) USING snapshot")
+    assert {r["k"] for r in t.read().collect()} == {1, 2}
+
+    # IF NOT EXISTS no-ops and adopts the table into the registry
+    e4 = Engine(spark=spark, warehouse_dir=wh)
+    e4.sql("CREATE TABLE IF NOT EXISTS facts (k INT, v DOUBLE) USING snapshot")
+    assert {r["k"] for r in e4.sql("SELECT k FROM facts").collect()} == {
+        Row(k=1), Row(k=2),
+    } or {r["k"] for r in e4.sql("SELECT k FROM facts").collect()} == {1, 2}
+
+
+def test_ctas_in_fresh_process_never_deletes_existing_table(spark, tmp_path):
+    """Same hazard on the CTAS arm:
+    a fresh process's CREATE ... AS over an existing on-disk table
+    refuses (or replaces, under OR REPLACE) — never rmtrees on failure."""
+    wh = str(tmp_path / "wh")
+    e1 = Engine(spark=spark, warehouse_dir=wh)
+    e1.sql("CREATE TABLE dim (k INT, s STRING) USING snapshot")
+    e1.sql("INSERT INTO dim VALUES (1, 'a')")
+    path = e1._snapshot_tables["dim"].path
+
+    e2 = Engine(spark=spark, warehouse_dir=wh)
+    with pytest.raises(ValueError, match="already exists"):
+        e2.sql("CREATE TABLE dim USING snapshot AS SELECT 1 AS k, 'b' AS s")
+    assert os.path.isdir(path)
+    assert SnapshotTable(spark, path).read().count() == 1
+
+    # OR REPLACE in the fresh process takes the REGISTERED-replace path:
+    # an overwrite commit that keeps the version history time-travelable
+    e3 = Engine(spark=spark, warehouse_dir=wh)
+    e3.sql(
+        "CREATE OR REPLACE TABLE dim USING snapshot "
+        "AS SELECT 9 AS k, 'z' AS s"
+    )
+    t = SnapshotTable(spark, path)
+    assert [r["s"] for r in t.read().collect()] == ["z"]
+    assert [r["s"] for r in t.read(2).collect()] == ["a"]
+
+
+def test_create_refuses_tailless_nonempty_managed_path(spark, tmp_path):
+    """A managed path that HOLDS DATA
+    but no readable local snapshot tail (a REST-attached table keeps
+    its metadata tail in the catalog service) must refuse CREATE — the
+    old probe read current_version()=None, treated the path as absent,
+    and a failed CREATE's rollback rmtree'd the table's data files."""
+    wh = str(tmp_path / "wh")
+    e = Engine(spark=spark, warehouse_dir=wh)
+    p = e.snapshot_table_path("restish")
+    os.makedirs(p)
+    spark.createDataFrame([Row(k=1, v=1.0)]).write.parquet(
+        os.path.join(p, "data-000.parquet")
+    )
+    # valid body, bad body: both refuse up front, neither deletes
+    for ddl in (
+        "CREATE TABLE restish (k INT, v DOUBLE) USING snapshot",
+        "CREATE TABLE restish (k INT, v DOUBLE) USING snapshot "
+        "PARTITIONED BY (days(k))",
+        "CREATE TABLE restish USING snapshot AS SELECT 1 AS k",
+    ):
+        with pytest.raises(ValueError, match="no readable local snapshot"):
+            Engine(spark=spark, warehouse_dir=wh).sql(ddl)
+    assert os.path.isdir(p)
+    assert spark.read.parquet(os.path.join(p, "data-000.parquet")).count() == 1
+
+
+def test_failed_create_on_fresh_name_still_cleans_up(spark, tmp_path):
+    """The legitimate rollback still works: a failing CREATE on a name
+    with nothing on disk unregisters, deletes its partial dir, and a
+    corrected retry succeeds, also over the adoption path."""
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    with pytest.raises(Exception):
+        eng.sql(
+            "CREATE TABLE fresh (k INT, v DOUBLE) USING snapshot "
+            "PARTITIONED BY (days(k))"  # days() needs a timestamp
+        )
+    assert "fresh" not in eng._snapshot_tables
+    assert not os.path.isdir(eng.snapshot_table_path("fresh"))
+    eng.sql("CREATE TABLE fresh (k INT, v DOUBLE) USING snapshot")
+    eng.sql("INSERT INTO fresh VALUES (1, 1.0)")
+    assert eng.sql("SELECT * FROM fresh").count() == 1
+
+
+def test_drop_table_works_across_processes(spark, tmp_path):
+    """A fresh process can DROP a managed on-disk table it never
+    registered — the same adoption rule that protects CREATE."""
+    wh = str(tmp_path / "wh")
+    e1 = Engine(spark=spark, warehouse_dir=wh)
+    e1.sql("CREATE TABLE dropme (k INT) USING snapshot")
+    e1.sql("INSERT INTO dropme VALUES (1)")
+    path = e1._snapshot_tables["dropme"].path
+
+    e2 = Engine(spark=spark, warehouse_dir=wh)
+    assert "dropme" not in e2._snapshot_tables
+    out = e2.sql("DROP TABLE dropme").collect()
+    assert out[0]["dropped"] == "dropme"
+    assert not os.path.isdir(path)
+    # and CREATE of the same name now succeeds in ANY process
+    e3 = Engine(spark=spark, warehouse_dir=wh)
+    e3.sql("CREATE TABLE dropme (k INT) USING snapshot")
+    assert e3.sql("SELECT * FROM dropme").count() == 0
+
+
+def test_merge_evolution_rolls_back_on_runtime_failure(spark, tmp_path):
+    e = Engine(spark=spark)
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([(1, 10.0)], "k bigint, v double"))
+    t.add_constraint("v_small", "v < 100")
+    e._snapshot_tables["t"] = t
+    src = SnapshotTable(spark, str(tmp_path / "src"))
+    src.commit(
+        spark.createDataFrame(
+            [(1, 500.0, "boom")], "k bigint, v double, extra string"
+        )
+    )
+    e._snapshot_tables["src"] = src
+    cols0 = [f.name for f in t.schema().fields]
+    with pytest.raises(Exception, match="v_small|constraint|CHECK"):
+        e.sql(
+            "MERGE WITH SCHEMA EVOLUTION INTO t USING src ON t.k = src.k "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+    # the evolution (add 'extra') was rolled back with the failed merge:
+    # the statement is atomic at the head
+    assert [f.name for f in t.schema().fields] == cols0
+    assert "extra" not in cols0
+    # data untouched
+    assert e.sql("SELECT v FROM t").collect()[0]["v"] == 10.0
+    # and the table still accepts a VALID evolved merge afterwards
+    src2 = SnapshotTable(spark, str(tmp_path / "src2"))
+    src2.commit(
+        spark.createDataFrame(
+            [(2, 20.0, "ok")], "k bigint, v double, extra string"
+        )
+    )
+    e._snapshot_tables["src2"] = src2
+    e.sql(
+        "MERGE WITH SCHEMA EVOLUTION INTO t USING src2 ON t.k = src2.k "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert [f.name for f in t.schema().fields] == ["k", "v", "extra"]

@@ -205,3 +205,66 @@ def test_failed_merge_evolution_leaves_schema_untouched(spark, eng):
     assert t.current_version() == v0
     assert [f.name for f in t.schema().fields] == cols0
     assert "brand_new" not in cols0
+
+
+@pytest.fixture()
+def pruned_tbl(spark, tmp_path):
+    e = Engine(spark=spark)
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [Row(ds=f"2024-01-{d:02d}", k=d * 100 + j, v=float(j))
+         for d in range(1, 5) for j in range(10)]
+    ).repartition("ds")
+    t.commit(df, partition_by=["ds"], stats_for=["ds", "k"])
+    ref = SnapshotTable(spark, str(tmp_path / "ref"))
+    ref.commit(spark.createDataFrame([Row(k=k) for k in (101, 103, 301)]))
+    e._snapshot_tables["t"] = t
+    e._snapshot_tables["ref"] = ref
+    return e, t
+
+
+def test_delete_subquery_prunes_on_plain_conjunct(spark, pruned_tbl):
+    """DELETE WHERE ds = X AND k IN (SELECT …) must rewrite only the
+    ds = X files, not the whole table."""
+    e, t = pruned_tbl
+    res = e.sql(
+        "DELETE FROM t WHERE ds = '2024-01-01' "
+        "AND k IN (SELECT k FROM ref)"
+    ).collect()[0]
+    assert res["files_skipped"] >= 3   # the other three ds partitions
+    assert res["files_rewritten"] <= 1
+    left = sorted(
+        r["k"] for r in e.sql("SELECT k FROM t WHERE ds = '2024-01-01'")
+        .collect()
+    )
+    assert left == [100, 102] + list(range(104, 110))
+    # rows outside the pruned partition are untouched (301 is ds=03)
+    assert e.sql(
+        "SELECT count(*) AS n FROM t WHERE k = 301"
+    ).collect()[0]["n"] == 1
+
+
+def test_update_subquery_prunes_on_plain_conjunct(spark, pruned_tbl):
+    e, t = pruned_tbl
+    res = e.sql(
+        "UPDATE t SET v = v + 1000 WHERE ds = '2024-01-03' "
+        "AND k IN (SELECT k FROM ref)"
+    ).collect()[0]
+    assert res["files_skipped"] >= 3
+    rows = {
+        r["k"]: r["v"]
+        for r in e.sql("SELECT k, v FROM t WHERE k IN (301, 101)").collect()
+    }
+    assert rows[301] == 1001.0  # fired: right partition + in subquery
+    assert rows[101] == 1.0     # pruned partition: untouched
+
+
+def test_subquery_only_condition_still_full_rewrite(spark, pruned_tbl):
+    """No plain conjunct -> nothing prunable -> correct whole-table
+    behavior (the fix must not over-prune)."""
+    e, t = pruned_tbl
+    e.sql("DELETE FROM t WHERE k IN (SELECT k FROM ref)")
+    assert e.sql(
+        "SELECT count(*) AS n FROM t WHERE k IN (101, 103, 301)"
+    ).collect()[0]["n"] == 0
+    assert e.sql("SELECT count(*) AS n FROM t").collect()[0]["n"] == 37

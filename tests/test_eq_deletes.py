@@ -418,3 +418,28 @@ def test_bool_literal_delete_never_coerces_garbage_to_false(
     res = eng.sql("DELETE FROM b WHERE flag = 'true'").collect()[0]
     assert res["mode"] == "equality-delete"
     assert sorted(r["k"] for r in t.read().collect()) == [1, 3, 5, 7, 9]
+
+
+def test_overscaled_decimal_literal_deletes_nothing(spark, tmp_path):
+    """``price = 1.234`` on a decimal(10,2) column equals no stored value.
+    Rounding the key to 1.23 would tombstone the 1.23 rows; the literal
+    takes the position-delete path instead, which matches nothing."""
+    from decimal import Decimal
+
+    t = SnapshotTable(spark, str(tmp_path / "p"))
+    t.commit(
+        spark.createDataFrame(
+            [(1, Decimal("1.23")), (2, Decimal("1.24"))],
+            "k int, price decimal(10,2)",
+        )
+    )
+    t.set_properties({"delete.mode": "merge-on-read"})
+    eng = Engine(spark=spark)
+    eng._snapshot_tables["p"] = t
+    res = eng.sql("DELETE FROM p WHERE price = 1.234").collect()[0]
+    assert res["mode"] == "merge-on-read"  # position path, not eq
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 2]
+    # an exact literal still takes the scan-free route
+    res = eng.sql("DELETE FROM p WHERE price = 1.240").collect()[0]
+    assert res["mode"] == "equality-delete"
+    assert [r["k"] for r in t.read().collect()] == [1]

@@ -238,3 +238,30 @@ def test_replace_where_computes_and_validates(spark, gen_eng):
             spark.createDataFrame([(1, 9, 999)], "a int, b int, s int"),
             "a < 10",
         )
+
+
+def test_insert_generated_over_default_filled_column(spark, tmp_path):
+    """A GENERATED expression referencing a
+    column that is itself omitted and DEFAULT-filled used to fail
+    analysis (one merged fill projection). Defaults now land in a
+    FIRST projection, so the generated expression computes over the
+    default VALUE."""
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    eng.sql(
+        "CREATE TABLE gd (a INT, b INT DEFAULT 7, "
+        "c INT GENERATED ALWAYS AS (b * 2)) USING snapshot"
+    )
+    eng.sql("INSERT INTO gd (a) VALUES (1)")
+    row = eng.sql("SELECT * FROM gd").collect()[0]
+    assert (row["a"], row["b"], row["c"]) == (1, 7, 14)
+    # provided b still drives the generated value
+    eng.sql("INSERT INTO gd (a, b) VALUES (2, 10)")
+    rows = {r["a"]: (r["b"], r["c"]) for r in eng.sql("SELECT * FROM gd").collect()}
+    assert rows == {1: (7, 14), 2: (10, 20)}
+    # explicitly-provided generated values still validate at commit
+    with pytest.raises(Exception, match="generated"):
+        eng.sql("INSERT INTO gd (a, b, c) VALUES (3, 1, 99)")
+    # column order stable across the two projections (append files match)
+    assert [f.name for f in eng._snapshot_tables["gd"].schema().fields] == [
+        "a", "b", "c",
+    ]

@@ -198,7 +198,7 @@ def test_begin_runs_recovery_automatically(spark, eng2, tmp_path):
     )
     # the crash killed the owner: age the record past the ownership
     # lease (BEGIN's auto-recovery leaves LIVE owners' records alone —
-    # pinned in test_r10_fixes.py)
+    # pinned by test_begin_recovery_skips_young_live_owner_record)
     rec_path = os.path.join(e._txns_dir(), f"{gid}.json")
     with open(rec_path) as fh:
         rec = json.load(fh)
@@ -411,3 +411,170 @@ def test_show_snapshot_tables_and_recover_sql(spark, eng2, tmp_path):
     assert got == [gid]
     assert {r["k"] for r in t2.read().collect()} == set(range(5)) | {990}
     assert e2.sql("RECOVER TRANSACTIONS").collect() == []
+
+
+def _stage_pending_record(e, t1, t2):
+    """BEGIN + stage writes + write the commit record, as _commit_multi
+    does right before phase 3."""
+    e.sql("BEGIN TRANSACTION ON t1, t2")
+    e.sql("INSERT INTO t1 VALUES (900, 9.0)")
+    gid = e._txns["t1"][1]
+    e._txn_record_write(
+        gid,
+        [
+            {"name": "t1", "path": t1.path, "branch": gid,
+             "parent": t1.current_version()},
+            {"name": "t2", "path": t2.path, "branch": gid,
+             "parent": t2.current_version()},
+        ],
+    )
+    return gid
+
+
+@pytest.fixture()
+def two_tables(spark, tmp_path):
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    t1 = SnapshotTable(spark, str(tmp_path / "t1"))
+    t1.commit(spark.createDataFrame([Row(k=i, v=float(i)) for i in range(3)]))
+    t2 = SnapshotTable(spark, str(tmp_path / "t2"))
+    t2.commit(spark.createDataFrame([Row(k=i, s=f"s{i}") for i in range(3)]))
+    e._snapshot_tables["t1"] = t1
+    e._snapshot_tables["t2"] = t2
+    return e, t1, t2
+
+
+def test_begin_recovery_skips_young_live_owner_record(spark, two_tables):
+    """A txn record is LIVE while its owner is mid-phase-3: another
+    process's BEGIN must not roll it forward concurrently (duplicate
+    application / spurious conflicts). The record here is young and its
+    owner pid (this process) is alive — but from ANOTHER engine's
+    perspective, so the BEGIN hook leaves it alone."""
+    e, t1, t2 = two_tables
+    gid = _stage_pending_record(e, t1, t2)
+    rec_path = os.path.join(e._txns_dir(), f"{gid}.json")
+    # fake a DIFFERENT live owner process (pid 1 is always alive)
+    with open(rec_path) as fh:
+        rec = json.load(fh)
+    assert rec["owner"]["pid"] == os.getpid()  # the write stamps us
+    rec["owner"]["pid"] = 1
+    with open(rec_path, "w") as fh:
+        json.dump(rec, fh)
+
+    e2 = Engine(spark=spark, warehouse_dir=e._warehouse_dir)
+    e2._snapshot_tables["t2"] = SnapshotTable(spark, t2.path)
+    e2.sql("BEGIN TRANSACTION ON t2")  # auto-recovery runs here
+    e2.sql("ROLLBACK TRANSACTION ON t2")
+    assert os.path.exists(rec_path)  # the live owner's record survived
+    # a DEAD young owner forfeits the lease immediately
+    with open(rec_path) as fh:
+        rec = json.load(fh)
+    rec["owner"]["pid"] = 2 ** 22 + 77777  # beyond pid_max: never alive
+    with open(rec_path, "w") as fh:
+        json.dump(rec, fh)
+    assert e2.recover_transactions(min_age_s=60.0) == [gid]
+    assert not os.path.exists(rec_path)
+    assert [r["k"] for r in t1.read().filter("k = 900").collect()] == [900]
+    # clean up the still-open transaction on the owner engine
+    e._txns.clear()
+    e._snapshot_tables["t1"] = t1
+    e._snapshot_tables["t2"] = t2
+
+
+def test_begin_recovery_defers_to_live_owner_beyond_lease(spark, two_tables):
+    """Owner liveness is the
+    ownership test at ANY record age. A phase-3 landing can outlast the
+    60s lease (fast_forward over several large tables); another
+    process's BEGIN hook must still leave the live owner's record alone
+    — the old age-gated check re-exposed the duplicate-application race
+    exactly when commits were slowest."""
+    e, t1, t2 = two_tables
+    gid = _stage_pending_record(e, t1, t2)
+    rec_path = os.path.join(e._txns_dir(), f"{gid}.json")
+    with open(rec_path) as fh:
+        rec = json.load(fh)
+    rec["owner"]["pid"] = 1            # a different, always-alive owner
+    rec["owner"]["ts"] = 0.0           # stamped eons beyond the lease
+    with open(rec_path, "w") as fh:
+        json.dump(rec, fh)
+
+    e2 = Engine(spark=spark, warehouse_dir=e._warehouse_dir)
+    e2._snapshot_tables["t2"] = SnapshotTable(spark, t2.path)
+    e2.sql("BEGIN TRANSACTION ON t2")  # auto-recovery runs here
+    e2.sql("ROLLBACK TRANSACTION ON t2")
+    assert os.path.exists(rec_path)    # live owner kept it, however old
+    # the explicit statement still overrides (the operator's lever)
+    got = [r["txn"] for r in e2.sql("RECOVER TRANSACTIONS").collect()]
+    assert got == [gid]
+    assert not os.path.exists(rec_path)
+    e._txns.clear()
+    e._snapshot_tables["t1"] = t1
+    e._snapshot_tables["t2"] = t2
+
+
+def test_explicit_recovery_ignores_the_lease(spark, two_tables):
+    """RECOVER TRANSACTIONS (and the owner's own in-process retry) must
+    recover even YOUNG records — the statement is the operator's 'the
+    owner is gone, land it now' lever."""
+    e, t1, t2 = two_tables
+    gid = _stage_pending_record(e, t1, t2)
+    e2 = Engine(spark=spark, warehouse_dir=e._warehouse_dir)
+    got = [r["txn"] for r in e2.sql("RECOVER TRANSACTIONS").collect()]
+    assert got == [gid]
+    assert [r["k"] for r in t1.read().filter("k = 900").collect()] == [900]
+    e._txns.clear()
+    e._snapshot_tables["t1"] = t1
+    e._snapshot_tables["t2"] = t2
+
+
+def test_owner_remove_tolerates_record_already_recovered(spark, two_tables):
+    """The owner's post-phase-3 record delete (and recovery's own) must
+    tolerate the file having been removed by a concurrent recovery —
+    a fully successful commit must not raise FileNotFoundError."""
+    e, t1, t2 = two_tables
+    e.sql("BEGIN TRANSACTION ON t1, t2")
+    e.sql("INSERT INTO t1 VALUES (901, 9.1)")
+    e.sql("INSERT INTO t2 VALUES (901, 'x')")
+    gid = e._txns["t1"][1]
+
+    # intercept: as soon as the record is written, delete it + land the
+    # members exactly as a racing recovery would
+    orig_write = e._txn_record_write
+
+    def write_then_racing_recovery(g, entries):
+        path = orig_write(g, entries)
+        racer = Engine(spark=spark, warehouse_dir=e._warehouse_dir)
+        assert racer.recover_transactions() == [g]
+        assert not os.path.exists(path)
+        return path
+
+    e._txn_record_write = write_then_racing_recovery
+    # fast_forward of an already-landed branch would conflict, so the
+    # owner's phase 3 goes through its own recovery path — which must
+    # ALSO tolerate the missing record and report success
+    e.sql(f"COMMIT TRANSACTION ON t1, t2")
+    assert [r["k"] for r in t1.read().filter("k = 901").collect()] == [901]
+    assert [r["k"] for r in t2.read().filter("k = 901").collect()] == [901]
+    assert e._txns == {}
+
+
+def test_recovery_tolerates_expired_intermediate_manifest(spark, two_tables):
+    """The landed-stamp check walks (parent, head]; expire_snapshots
+    may have deleted an intermediate manifest. A vanished version
+    cannot prove the stamp — skip it, don't raise."""
+    e, t1, t2 = two_tables
+    gid = _stage_pending_record(e, t1, t2)  # parent(t1) = 1
+    # crash AFTER t1's pointer move: an outside write (v2), the landing
+    # (v3, stamped), then expiry punches a hole at v2 — squarely inside
+    # the landed-check's (parent, head] walk, below the stamp
+    t1.commit(spark.createDataFrame([Row(k=50, v=5.0)]), mode="append")
+    t1.fast_forward(gid, require_source_unchanged=False, txn_record=gid)
+    t1.expire_snapshots(keep_last=1)
+    with pytest.raises(FileNotFoundError):
+        t1._manifest(2)  # the hole is real
+    e2 = Engine(spark=spark, warehouse_dir=e._warehouse_dir)
+    assert e2.recover_transactions() == [gid]  # no FileNotFoundError
+    assert [r["k"] for r in t1.read().filter("k = 900").collect()] == [900]
+    assert os.listdir(e2._txns_dir()) == []  # record consumed
+    e._txns.clear()
+    e._snapshot_tables["t1"] = t1
+    e._snapshot_tables["t2"] = t2

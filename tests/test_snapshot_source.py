@@ -1092,3 +1092,57 @@ def test_schema_probe_of_missing_path_creates_nothing(
     with pytest.raises(Exception, match="no snapshot table"):
         spark.read.format(FORMAT_NAME).option("path", str(missing)).load()
     assert not missing.exists()
+
+
+def _reader(path: str, **kw):
+    from oss_data_lake_spark.streaming.snapshot_source import (
+        SnapshotStreamSource,
+    )
+
+    src = SnapshotStreamSource(options={"path": path, **kw})
+    return src.streamReader(None)
+
+
+def test_restart_offer_never_below_restored_position(spark, tmp_path):
+    """The double-restart replay hazard needs a capped
+    latestOffset BELOW the checkpoint-restored position. Traced against
+    Spark 4.1's MicroBatchExecution (committed AND uncommitted last
+    batch): a restart always replans the checkpointed batch —
+    partitions(start, end) with the restored offsets — BEFORE the first
+    latestOffset, which advances the admission baseline to the restored
+    position. This drives the reader through both traced restart
+    protocols and pins that no offer ever sits below the revealed
+    position."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for w in range(6):
+        t.commit(spark.createDataFrame([Row(k=w)]), mode="append")
+
+    # restart, last batch COMMITTED at v4: engine replans (4, 4) first
+    r = _reader(t.path, maxVersionsPerTrigger="1")
+    assert r.partitions({"version": 4}, {"version": 4}) == []
+    off = r.latestOffset()
+    assert off["version"] == 5          # capped, but >= position 4
+    assert off["version"] >= 4
+
+    # restart, last batch UNCOMMITTED (3 -> 4): engine replans it first
+    r2 = _reader(t.path, maxVersionsPerTrigger="1")
+    assert r2.partitions({"version": 3}, {"version": 4})
+    assert r2.latestOffset()["version"] == 5   # never below 4
+
+    # commit() alone (engine confirming a committed batch) also reveals
+    r3 = _reader(t.path, maxVersionsPerTrigger="1")
+    r3.commit({"version": 5})
+    assert r3.latestOffset()["version"] == 6
+
+    # fresh start: latestOffset may come first; the baseline IS the
+    # engine's initial position, so pacing applies from batch one
+    r4 = _reader(t.path, maxVersionsPerTrigger="2")
+    assert r4.latestOffset()["version"] == 2
+    assert r4.initialOffset() == {"version": 0}
+
+    # residual defense (future call-order changes): a backwards batch
+    # plans as empty, records the true position, and later offers clamp
+    r5 = _reader(t.path, maxVersionsPerTrigger="1")
+    assert r5.latestOffset()["version"] == 1   # stale capped offer
+    assert r5.partitions({"version": 4}, {"version": 1}) == []
+    assert r5.latestOffset()["version"] >= 4   # clamped to the floor

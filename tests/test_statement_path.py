@@ -8,12 +8,15 @@ session rules it keeps while making few of them.
 - A user temp view shadows a persistent view of the same name.
 - The one scan-alignment helper (``SnapshotTable._align``) returns the
   rows the snapshot schema says, and no projection at all when the scan
-  already has that schema."""
+  already has that schema.
+- A statement's result frame is a local relation, so collecting it
+  runs no Spark job of its own."""
 
 from __future__ import annotations
 
 import gc
 import threading
+import uuid
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -276,3 +279,35 @@ def test_stale_slow_tier_entries_are_reported(tmp_path):
     # a run narrowed to node ids collects partial modules: no check
     narrowed = ["tests/test_a.py::test_kept"]
     assert stale_slow_entries(tier, collected, narrowed, tmp_path) == []
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, read from the status
+    tracker's job group once the listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_statement_results_run_no_python_job(spark, tmp_path):
+    """A statement's result frame is an Arrow local relation: collecting a
+    metadata-only EXPIRE SNAPSHOTS or a VACUUM runs no Spark job (one,
+    through Python workers, when the one-row result was a Python RDD),
+    and a copy-on-write DELETE runs only its rewrite job."""
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    e.sql("CREATE TABLE jc USING snapshot AS SELECT 0L AS k, 0.5D AS v")
+    for i in range(1, 4):
+        e.sql(f"INSERT INTO jc VALUES ({i}, {i}.5)").collect()
+    assert _jobs(spark, lambda: e.sql(
+        "ALTER TABLE jc EXPIRE SNAPSHOTS KEEP LAST 2").collect()) == 0
+    assert _jobs(spark, lambda: e.sql(
+        "VACUUM jc RETAIN 0 HOURS").collect()) == 0
+    assert _jobs(spark, lambda: e.sql(
+        "DELETE FROM jc WHERE k = 1").collect()) == 1
+    assert sorted(r.k for r in e.sql("SELECT k FROM jc").collect()) == [0, 2, 3]

@@ -83,6 +83,33 @@ def test_e85_crafted_equals_reference(spark, tmp_path):
     assert any(l == r for _, l, r, _ in want)
 
 
+def test_e85_retrains_after_input_rewritten_in_place(
+    spark, tmp_path, monkeypatch
+):
+    """The train-once cache holds while the documents files are unchanged,
+    and a corpus rewritten at the same path is trained afresh instead of
+    answering with the old corpus's merges."""
+    from oss_data_lake_spark.operators import tokenizer
+
+    builds = []
+    real = tokenizer._word_types
+    monkeypatch.setattr(
+        tokenizer, "_word_types",
+        lambda s, d: builds.append(d) or real(s, d),
+    )
+    first = ["low lower lowest", "newer wider", "low low"]
+    second = ["tt tt tt ab", "abab ab", "xy"]
+    sf = _write_docs(spark, tmp_path, first)
+    want = ref_bpe(_counts(first), 6)
+    assert [tuple(r) for r in bpe_merge_table(spark, sf, 6).collect()] == want
+    assert [tuple(r) for r in bpe_merge_table(spark, sf, 6).collect()] == want
+    assert len(builds) == 1  # unchanged input: the cache answers
+    _write_docs(spark, tmp_path, second)
+    got = [tuple(r) for r in bpe_merge_table(spark, sf, 6).collect()]
+    assert got == ref_bpe(_counts(second), 6)
+    assert len(builds) == 2
+
+
 def test_e85_fixture_equals_reference(spark, sf_dir):
     import duckdb
 

@@ -188,3 +188,21 @@ def test_describe_and_explain_through_views(spark, eng):
     assert {"k", "v"} <= cols
     plan = e.explain("SELECT * FROM v_d", mode="simple")
     assert "Scan" in plan or "FileScan" in plan
+
+
+def test_view_backed_results_survive_view_drop(spark, tmp_path):
+    """The snapshot-table branch must bind the plan (force .schema)
+    before the finally block drops the expanded temp views — same rule
+    the plain-SQL path already followed. Collecting AFTER sql() returns
+    (twice) proves the returned DataFrame doesn't depend on the dropped
+    views."""
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    eng.sql("CREATE TABLE base (k INT, v DOUBLE) USING snapshot")
+    eng.sql("INSERT INTO base VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+    eng.sql("CREATE VIEW big AS SELECT k, v FROM base WHERE v >= 2.0")
+    df = eng.sql("SELECT k FROM big ORDER BY k")
+    assert not any(
+        v.name == "big" for v in spark.catalog.listTables()
+    )  # the expansion was dropped before we collect
+    assert [r["k"] for r in df.collect()] == [2, 3]
+    assert [r["k"] for r in df.collect()] == [2, 3]  # re-executable
