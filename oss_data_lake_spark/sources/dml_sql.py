@@ -37,9 +37,11 @@ statement-shaped text here BEFORE the query path:
                                              / per-file manifest view
 - ``CREATE TABLE t USING snapshot AS <query>`` / ``DROP TABLE t``
 - ``CREATE TABLE t (c T [DEFAULT e], ...) USING snapshot
-  [PARTITIONED BY (c | days(ts) | bucket(n, c) | ...)]``
-                                           → EMPTY table with declared
+  [PARTITIONED BY (c | days(ts) | bucket(n, c) | ...)]
+  [TBLPROPERTIES ('k' = 'v', ...)]``        → EMPTY table with declared
                                              schema/layout/defaults
+                                             (CTAS takes the same two
+                                             clauses before AS)
                                            → managed CTAS + lifecycle
 - ``ALTER TABLE t ADD CONSTRAINT n CHECK (e) | DROP CONSTRAINT n``
                                            → commit-time quality gates
@@ -868,25 +870,29 @@ def _run_merge(
     return _metrics_df(spark, info)
 
 
+# optional layout (the Trino `WITH (partitioning = ARRAY[...])` translates
+# here): transforms carry one paren level (days(ts), bucket(4, k)); then
+# optional TBLPROPERTIES ('k' = 'v', ...), which the table's first commit
+# carries, as CREATE followed by ALTER TABLE SET TBLPROPERTIES would set
+_CREATE_CLAUSES = (
+    r"(?:\s+PARTITIONED\s+BY\s*\(((?:[^()]|\([^()]*\))*)\))?"
+    r"(?:\s+TBLPROPERTIES\s*\(((?:[^()']|'[^']*')*)\))?"
+)
 _CREATE_RE = re.compile(
     r"^\s*CREATE\s+(?:(OR\s+REPLACE)\s+)?TABLE\s+"
     r"(?:(IF\s+NOT\s+EXISTS)\s+)?([A-Za-z_][\w.]*)\s+"
-    r"USING\s+SNAPSHOT"
-    # optional layout for CTAS (round 13 — the Trino `WITH
-    # (partitioning = ARRAY[...])` CTAS translates here): transforms
-    # carry one paren level (days(ts), bucket(4, k))
-    r"(?:\s+PARTITIONED\s+BY\s*\(((?:[^()]|\([^()]*\))*)\))?"
-    r"\s+AS\s+(.*?)\s*;?\s*$",
+    r"USING\s+SNAPSHOT" + _CREATE_CLAUSES + r"\s+AS\s+(.*?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
 
 # column-list CREATE TABLE (no AS): an EMPTY snapshot table with a
-# declared schema, optional partition layout, and column DEFAULTs
+# declared schema, optional partition layout and properties, and column
+# DEFAULTs
 _CREATE_COLS_RE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?:(IF\s+NOT\s+EXISTS)\s+)?"
     r"([A-Za-z_][\w.]*)\s*\((.*)\)\s*USING\s+SNAPSHOT"
-    r"(?:\s+PARTITIONED\s+BY\s*\((.*)\))?\s*;?\s*$",
+    + _CREATE_CLAUSES + r"\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_RE = re.compile(
@@ -927,6 +933,19 @@ _COMMENT_ON_RE = re.compile(
 
 _PROP_PAIR_RE = re.compile(r"'([^']*)'\s*=\s*'([^']*)'")
 _PROP_KEY_RE = re.compile(r"'([^']*)'")
+
+
+def _prop_pairs(body: str | None) -> dict[str, str] | None:
+    """The ``'key' = 'value'`` pairs of a TBLPROPERTIES clause; None for
+    no clause."""
+    if body is None:
+        return None
+    props = dict(_PROP_PAIR_RE.findall(body))
+    if not props:
+        raise ValueError("TBLPROPERTIES expects 'key' = 'value' pairs")
+    return props
+
+
 _ADD_COLUMNS_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+([A-Za-z_][\w.]*)\s+ADD\s+COLUMNS?\s*"
     r"\((.*)\)\s*;?\s*$",
@@ -1354,7 +1373,8 @@ def dispatch_statement(
 
     m = _CREATE_COLS_RE.match(text)
     if m and engine is not None:
-        if_not_exists, name, defs, part = m.groups()
+        if_not_exists, name, defs, part, props = m.groups()
+        props = _prop_pairs(props)
         if getattr(engine, "view_exists", lambda _n: False)(name):
             raise ValueError(
                 f"a view named '{name}' exists; a table cannot shadow it"
@@ -1395,7 +1415,9 @@ def dispatch_statement(
         # zero snapshots — that would make the corrected retry raise
         # 'already exists' and IF NOT EXISTS silently no-op.
         try:
-            version = t.commit(empty, partition_by=entries or None)
+            version = t.commit(
+                empty, partition_by=entries or None, props_update=props
+            )
             for cname, expr in gens.items():
                 # validates planability/determinism over the v1 schema;
                 # a bad expression unwinds the CREATE entirely
@@ -1412,8 +1434,9 @@ def dispatch_statement(
 
     m = _CREATE_RE.match(text)
     if m and engine is not None:
-        or_replace, if_not_exists, name, part_spec, query = m.groups()
+        or_replace, if_not_exists, name, part_spec, props, query = m.groups()
         ctas_entries = _split_exprs(part_spec or "")
+        props = _prop_pairs(props)
         if getattr(engine, "view_exists", lambda _n: False)(name):
             raise ValueError(
                 f"a view named '{name}' exists; a table cannot shadow it"
@@ -1457,7 +1480,7 @@ def dispatch_statement(
             identity = {p for p, tr in entries if tr is None} if pb else set()
             version = tables[name].commit(
                 df, mode="overwrite", tag="replace_table",
-                partition_by=pb or None,
+                partition_by=pb or None, props_update=props,
                 stats_for=sorted(
                     set(_prunable_columns(df)) - identity
                 ) or None,
@@ -1484,10 +1507,12 @@ def dispatch_statement(
                     stats_for=sorted(
                         set(_prunable_columns(df)) - identity
                     ) or None,
+                    props_update=props,
                 )
             else:
                 version = t.commit(
-                    df, stats_for=_prunable_columns(df) or None
+                    df, stats_for=_prunable_columns(df) or None,
+                    props_update=props,
                 )
         except Exception:
             # same guard as column-list CREATE: a failed v1 must not
@@ -1656,12 +1681,7 @@ def dispatch_statement(
         name = m.group(1)
         if name not in tables:
             return None  # session-catalog ALTER falls through
-        props = dict(_PROP_PAIR_RE.findall(m.group(2)))
-        if not props:
-            raise ValueError(
-                "SET TBLPROPERTIES expects 'key' = 'value' pairs"
-            )
-        version = tables[name].set_properties(props)
+        version = tables[name].set_properties(_prop_pairs(m.group(2)))
         return local_frame(spark, [(version,)], "version long")
 
     m = _UNSET_PROPS_RE.match(text)

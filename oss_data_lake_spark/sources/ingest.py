@@ -11,13 +11,22 @@ Reference behavior → Spark mapping (SURVEY.md §2.A A3-A8, A24, A25):
 - ``ingest_date`` + ``date`` partition key derivation (ref :73-74)
   → ``current_date()`` (overridable for determinism) + ``date_format(ts)``
 - one parquet file per ``date=`` partition dir, partition column dropped
-  from file payload (ref :85-91) → ``repartition("date")`` +
-  ``partitionBy("date")`` (Spark drops the partition column natively;
-  repartition guarantees one file per partition — the reference's layout,
-  and the small-file-avoidance the reference lacks, SURVEY.md §4)
-- metrics ``{rows_written, partitions}`` (ref :93) → returned dict
+  from file payload (ref :85-91) → ``session.write_parquet(...,
+  cluster=True)``, a Hive-partitioned write with one file per partition
+  value (the reference's layout, and the small-file-avoidance the
+  reference lacks, SURVEY.md §4). A batch Spark estimates at or under
+  ``session.DRIVER_WRITE_MAX_BYTES`` (it puts a week of 200 tickers at
+  ~1 MB) is collected once, grouped by ``date`` on the driver and written
+  by pyarrow; a larger batch or an object-store landing zone (s3a/MinIO,
+  with the magic committer) takes Spark's ``repartition("date")`` +
+  ``partitionBy("date")``.
+- metrics ``{rows_written, partitions}`` (ref :93) → the writer's counts:
+  the collected table's rows and partition values on the driver path, an
+  ``observe`` riding the write job on the Spark path (no second scan)
 - empty-input guard (ref :86-87, dags/yfinance_to_minio_v1.py:31-32)
-  → short-circuit, no write
+  → no write, not even the directory: the driver path sees zero rows in
+  its one collect; the Spark path pays a limit-1 ``isEmpty`` probe of the
+  un-shuffled input first
 
 At 100 TB: ``repartition("date")`` becomes ``repartition(n, "date", salt)``
 if single days exceed executor memory; the write path is otherwise
@@ -28,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from oss_data_lake_spark.session import write_parquet
 
 FACT_COLUMNS = ("ticker", "ts", "open", "high", "low", "close", "volume", "ingest_date")
 
@@ -79,32 +90,13 @@ def ingest(
 ) -> dict[str, int]:
     """The full A1→A8 pipeline: normalize → derive partition key → guarded
     partitioned write. Returns the reference's XCom metrics dict."""
-    from pyspark.sql import Observation
-
     tidy = normalize_ohlcv(source_df, ingest_date=ingest_date)
     tidy = tidy.withColumn("date", F.date_format("ts", "yyyy-MM-dd"))
-
-    if tidy.isEmpty():  # A25: empty-input guard — write nothing (limit-1 probe)
-        return {"rows_written": 0, "partitions": 0}
-
-    # A24: metrics ride the WRITE job via observe() — no second full scan of
-    # the source (the old _metrics() aggregation pass re-read everything; at
-    # 100 TB that doubled ingest I/O). countDistinct is not allowed in
-    # CollectMetrics, so distinct partitions come from collect_set size.
-    obs = Observation("ingest_metrics")
-    (
-        tidy.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.size(F.array_distinct(F.collect_list("date"))).alias("parts"),
-        )
-        .repartition("date")
-        .write.mode(mode)
-        .partitionBy("date")
-        .parquet(out_path)
+    rows, parts = write_parquet(
+        spark, tidy, out_path, ["date"], mode=mode, cluster=True,
+        skip_empty=True,
     )
-    got = obs.get
-    return {"rows_written": int(got["rows"]), "partitions": int(got["parts"])}
+    return {"rows_written": rows, "partitions": parts}
 
 
 def read_curated(spark: SparkSession, path: str) -> DataFrame:

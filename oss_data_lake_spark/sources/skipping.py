@@ -303,7 +303,12 @@ def _make_footer_reader(columns: list[str], bloom_columns: list[str] = ()):
                         a["known"] = False
                     if st.has_min_max:
                         lo, hi = enc(st.min), enc(st.max)
-                        if lo is None or hi is None:
+                        # a NaN bound (Spark records max = NaN on a
+                        # float column holding one) orders nothing
+                        if (
+                            lo is None or hi is None
+                            or lo[1] != lo[1] or hi[1] != hi[1]
+                        ):
                             a["known"] = False
                             continue
                         if a["min"] is None or lo[1] < a["min"][1]:

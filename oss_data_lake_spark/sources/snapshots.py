@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from oss_data_lake_spark.session import local_frame
+from oss_data_lake_spark.session import local_frame, write_parquet
 from oss_data_lake_spark.sources.catalog import (
     CommitConflict,
     CommitProtocol,
@@ -726,24 +726,19 @@ class SnapshotTable:
         data_dir: str,
         partition_by: list[str] | None = None,
     ) -> None:
-        """Write one immutable data directory. Spark's default INT96
-        timestamp encoding is deprecated and carries NO column statistics;
-        Iceberg mandates int64 micros, which do — required for timestamp
-        file skipping. Set transiently so a shared (driver-owned) session
-        keeps its own setting."""
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        ts_key = "spark.sql.parquet.outputTimestampType"
-        prev_ts = self.spark.conf.get(ts_key, None)
-        self.spark.conf.set(ts_key, "TIMESTAMP_MICROS")
-        try:
-            writer.parquet(os.path.join(self.path, data_dir))
-        finally:
-            if prev_ts is None:
-                self.spark.conf.unset(ts_key)
-            else:
-                self.spark.conf.set(ts_key, prev_ts)
+        """Write one immutable data directory. ``session.write_parquet``
+        picks the writer: a small write to a local table (an INSERT batch,
+        a DML rewrite, the compaction of a small table) is collected once
+        and written by pyarrow on the driver, since a Spark write
+        command's fixed cost is most of such a write's time; a large write
+        or an object-store table keeps Spark's write command. Both write
+        the same file layout, with INT64 timestamps (Spark's default INT96
+        carries no column statistics). The files stay invisible until the
+        manifest commit that names the directory, so which writer wrote
+        them changes no reader."""
+        write_parquet(
+            self.spark, df, os.path.join(self.path, data_dir), partition_by
+        )
 
     def _harvest_stats(
         self,
@@ -5575,10 +5570,14 @@ class SnapshotTable:
             if cons:
                 self._enforce(cons, updated, context="this update")
         dv_dir = f"deletes/dv{v + 1}-{uuid.uuid4().hex[:8]}"
-        fired.select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").alias("pos"),
-        ).write.mode("errorifexists").parquet(os.path.join(self.path, dv_dir))
+        write_parquet(
+            self.spark,
+            fired.select(
+                F.col("__dv_file").alias("file"),
+                F.col("__dv_pos").alias("pos"),
+            ),
+            os.path.join(self.path, dv_dir),
+        )
         data_dir = own_stats = None
         if assignments is not None:
             data_dir = f"data/u{v + 1}-{uuid.uuid4().hex[:8]}"
@@ -5619,8 +5618,8 @@ class SnapshotTable:
                 f"(legacy manifest — recommit first)"
             )
         eq_dir = f"deletes/eq{v + 1}-{uuid.uuid4().hex[:8]}"
-        key_df.coalesce(1).write.mode("errorifexists").parquet(
-            os.path.join(self.path, eq_dir)
+        n_keys, _ = write_parquet(
+            self.spark, key_df.coalesce(1), os.path.join(self.path, eq_dir)
         )
         entry = {
             "dir": eq_dir,
@@ -5630,7 +5629,7 @@ class SnapshotTable:
         }
         data_dir = own_stats = None
         if append is None:
-            info = {"n_keys": key_df.count(), "mode": "equality-delete"}
+            info = {"n_keys": n_keys, "mode": "equality-delete"}
         else:
             data_dir = f"data/g{v + 1}-{uuid.uuid4().hex[:8]}"
             self._write_data_dir(append, data_dir)

@@ -263,6 +263,43 @@ def test_create_table_with_char_varchar_and_year_month_columns(
     assert eng.sql("SELECT k FROM tv").collect() == []
 
 
+def test_create_table_with_tblproperties(spark, tmp_path):
+    """TBLPROPERTIES on a snapshot CREATE, column-list or CTAS, with or
+    without a layout: the first snapshot carries the properties, so the
+    table behaves as CREATE followed by ALTER TABLE SET TBLPROPERTIES."""
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    mor = "TBLPROPERTIES ('delete.mode' = 'merge-on-read', 'owner' = 'a(b)')"
+    assert eng.sql(
+        f"CREATE TABLE tp (k BIGINT, ts TIMESTAMP) USING snapshot {mor}"
+    ).collect()[0]["version"] == 1
+    eng.sql(
+        "CREATE TABLE tpp (k BIGINT, ts TIMESTAMP) USING snapshot "
+        f"PARTITIONED BY (days(ts)) {mor}"
+    )
+    eng.sql(
+        f"CREATE TABLE tpc USING snapshot PARTITIONED BY (k) {mor} "
+        "AS SELECT id AS k, TIMESTAMP'2025-01-06 00:00:00' AS ts FROM range(4)"
+    )
+    for name in ("tp", "tpp", "tpc"):
+        t = eng._snapshot_tables[name]
+        assert t.properties() == {
+            "delete.mode": "merge-on-read", "owner": "a(b)",
+        }, name
+        eng.sql(
+            f"INSERT INTO {name} SELECT id + 10, "
+            "TIMESTAMP'2025-01-07 00:00:00' FROM range(3)"
+        )
+        res = eng.sql(f"DELETE FROM {name} WHERE k >= 11").collect()[0]
+        assert res["mode"] == "merge-on-read", name
+        assert {r.k for r in eng.sql(f"SELECT k FROM {name}").collect()} == (
+            {0, 1, 2, 3, 10} if name == "tpc" else {10}
+        )
+    assert eng._snapshot_tables["tpp"].current_partition_by() == ["days(ts)"]
+    assert eng._snapshot_tables["tpc"].current_partition_by() == ["k"]
+    with pytest.raises(ValueError, match="'key' = 'value'"):
+        eng.sql("CREATE TABLE tbad (k BIGINT) USING snapshot TBLPROPERTIES ()")
+
+
 def test_sql_script_runs_full_lifecycle(spark, tmp_path):
     """One script string: CTAS -> DML -> maintenance -> final SELECT.
     Statements split on depth-0 semicolons only (a ';' inside a string

@@ -10,7 +10,9 @@ session rules it keeps while making few of them.
   rows the snapshot schema says, and no projection at all when the scan
   already has that schema.
 - A statement's result frame is a local relation, so collecting it
-  runs no Spark job of its own."""
+  runs no Spark job of its own.
+- A small write costs one collect: the job budgets of an ingest and of a
+  copy-on-write DELETE."""
 
 from __future__ import annotations
 
@@ -24,6 +26,7 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from oss_data_lake_spark.engine import Engine
+from oss_data_lake_spark.sources.ohlcv import generate_ohlcv
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
 from tests.conftest import stale_slow_entries
 
@@ -311,3 +314,30 @@ def test_statement_results_run_no_python_job(spark, tmp_path):
     assert _jobs(spark, lambda: e.sql(
         "DELETE FROM jc WHERE k = 1").collect()) == 1
     assert sorted(r.k for r in e.sql("SELECT k FROM jc").collect()) == [0, 2, 3]
+
+
+def test_small_write_job_budget(spark, tmp_path):
+    """A small write is one collect, written by pyarrow on the driver:
+    ingesting one week of 200 tickers runs at most 4 Spark jobs (7 when
+    Spark's write command wrote it, 2 of them the isEmpty probe), and a
+    copy-on-write DELETE on a day-partitioned table runs exactly 1."""
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    week = generate_ohlcv(
+        spark, tickers=tuple(f"T{i:03d}" for i in range(200)),
+        start_date="2025-01-06", n_days=5, seed=1,
+    )
+    stage = str(tmp_path / "stage")
+    assert _jobs(spark, lambda: e.ingest_ohlcv(
+        week, stage, ingest_date="2025-01-06")) <= 4
+    e.sql(
+        "CREATE TABLE fp (ticker STRING, ts TIMESTAMP, close DOUBLE) "
+        "USING snapshot PARTITIONED BY (days(ts))"
+    )
+    e.sql(
+        f"INSERT INTO fp SELECT ticker, ts, close FROM parquet.`{stage}`"
+    ).collect()
+    assert _jobs(spark, lambda: e.sql(
+        "DELETE FROM fp WHERE ticker IN ('T001', 'T002') "
+        "AND ts >= TIMESTAMP'2025-01-07' AND ts < TIMESTAMP'2025-01-08'"
+    ).collect()) == 1
+    assert e.sql("SELECT count(*) AS n FROM fp").first()["n"] == 998
