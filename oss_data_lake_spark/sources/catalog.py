@@ -13,7 +13,9 @@ metadata tail behind one interface with two implementations:
 - :class:`LocalFsCommitProtocol` — the flock + hard-link-claim protocol
   (POSIX-atomic, cross-process on one host): the build callback runs under
   an exclusive lock, the manifest is link-claimed into its version slot,
-  and the CURRENT pointer advances via temp + ``os.replace``.
+  and the CURRENT pointer advances via temp + ``os.replace``. A slot a
+  dead writer linked but never pointed to is rolled forward by the next
+  commit, as the CAS protocol below does.
 - :class:`CasCommitProtocol` — optimistic concurrency over a
   :class:`CasCatalog` key-value store offering only GET / conditional-PUT
   (exactly the object-store primitive set — no rename, no link, no lock):
@@ -207,7 +209,7 @@ class LocalFsCommitProtocol(CommitProtocol):
         with open(os.path.join(self.meta, "LOCK"), "a") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
             try:
-                parent = self.read_current()
+                parent = self._roll_forward()
                 result = build(parent, self.manifest)
                 if isinstance(result, int):
                     return result
@@ -216,6 +218,33 @@ class LocalFsCommitProtocol(CommitProtocol):
                 return version
             finally:
                 fcntl.flock(lf, fcntl.LOCK_UN)
+
+    def _roll_forward(self) -> int | None:
+        """Finish a publish a dead writer left half done, then return the
+        head to build on. Called under the lock, so no live writer owns a
+        temp file or a slot above CURRENT: a slot there comes from a
+        writer that died between its link and its pointer replace, and
+        its manifest is complete (the link is create-exclusive with full
+        content). If it parses, CURRENT advances to it — as
+        :class:`CasCommitProtocol` helps a dead claim forward — and so on
+        while the next slot exists; otherwise every later commit would
+        collide with the slot. Stale ``*.tmp-*`` files are removed."""
+        for name in os.listdir(self.meta):
+            if ".tmp-" in name and name.startswith(("CURRENT.", "v")):
+                os.remove(os.path.join(self.meta, name))
+        head = cur = self.read_current()
+        nxt = (cur or 0) + 1
+        while os.path.exists(os.path.join(self.meta, f"v{nxt}.json")):
+            try:
+                self.read_manifest(nxt)
+            except ValueError:
+                break  # not a manifest: leave it for the link to refuse
+            cur, nxt = nxt, nxt + 1
+        if cur != head:
+            cpath = os.path.join(self.meta, "CURRENT")
+            os.replace(self._write_synced(cpath, str(cur)), cpath)
+            _fsync_dir(self.meta)
+        return cur
 
     def _publish(self, version: int, manifest: dict) -> None:
         """The manifest is written to a temp file and ``os.link``ed into

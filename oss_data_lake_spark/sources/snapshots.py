@@ -59,6 +59,7 @@ import operator
 import os
 import re
 import time
+import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -220,6 +221,14 @@ _STATS_CACHE_CAP = 64               # sidecars are immutable (uuid names)
 
 def _is_stats_ref(entry) -> bool:
     return isinstance(entry, dict) and _STATS_SIDECAR_KEY in entry
+
+
+# A SQL view over a snapshot scan whose admitted data files total at most
+# this many bytes is planned as one partition when its statement would
+# shuffle (see ``sql_with_time_travel``); past it, Spark's file splits
+# scan in parallel, which wins once the scan costs more than the shuffle
+# one partition saves (measured crossover ~3 MB on a 4-vCPU host).
+SMALL_SCAN_BYTES = 1 << 20
 
 
 # Iceberg v3 restricts DEFAULTs to literals because an INITIAL default
@@ -2744,15 +2753,19 @@ class SnapshotTable:
 
     # ------------------------------------------------------------- reads
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def read(
+        self, version: int | None = None, *, small_scan: bool = False
+    ) -> DataFrame:
         """Read the table at ``version`` (default: current snapshot),
         projected onto that version's schema: files from commits before a
         column existed yield NULL for it, narrower-typed files are upcast,
-        and columns unknown to the snapshot's schema are invisible."""
+        and columns unknown to the snapshot's schema are invisible.
+        ``small_scan`` plans a small scan as one partition (see
+        ``_read_selection``)."""
         v = version if version is not None else self.current_version()
         if v is None:
             raise ValueError(f"no snapshots at {self.path}")
-        return self._read_selection(v, None)
+        return self._read_selection(v, None, small_scan)
 
     # ------------------------------------------------ field-ID indirection
     #
@@ -3300,13 +3313,15 @@ class SnapshotTable:
             return None
         return self._manifest(v).get("table_stats")
 
-    def read_hinted(self, version: int | None = None) -> DataFrame:
+    def read_hinted(
+        self, version: int | None = None, *, small_scan: bool = False
+    ) -> DataFrame:
         """:meth:`read`, plus a broadcast hint when ANALYZE recorded a
         live size under the session's autoBroadcastJoinThreshold — the
         stats-driven join decision Spark's file-size estimate cannot
         make for merge-on-read tables (tombstones don't shrink file
         bytes). Respects a disabled threshold (<= 0)."""
-        df = self.read(version=version)
+        df = self.read(version=version, small_scan=small_scan)
         st = self.table_stats(version)
         if not st:
             return df
@@ -3968,6 +3983,8 @@ class SnapshotTable:
         self,
         preds: list[tuple[str, object, object]],
         version: int | None = None,
+        *,
+        small_scan: bool = False,
     ) -> DataFrame:
         """Read the snapshot opening only files admitted by EVERY
         predicate's manifest bounds — WITHOUT applying any row filter:
@@ -3975,17 +3992,24 @@ class SnapshotTable:
         (``engine.sql`` routes extracted SQL-text predicates here).
         Pruning can only drop files PROVEN empty for the conjunction, so
         layering the exact SQL predicates above yields identical results
-        to the unpruned scan."""
+        to the unpruned scan. ``small_scan`` as for :meth:`read`."""
         v = version if version is not None else self.current_version()
         selection, _n_sel, _n_skip = self.plan_pruned(preds, version=v)
-        return self._read_selection(v, selection)
+        return self._read_selection(v, selection, small_scan)
 
     def _read_selection(
-        self, version: int, selection: dict[str, list[str] | None] | None
+        self,
+        version: int,
+        selection: dict[str, list[str] | None] | None,
+        small_scan: bool = False,
     ) -> DataFrame:
         """The live rows of a pruned file selection (None = every visible
         file), projected onto the snapshot schema (empty selection →
-        empty frame with that schema)."""
+        empty frame with that schema). With ``small_scan``, a selection
+        whose data files total at most ``SMALL_SCAN_BYTES`` is planned as
+        one partition, so operators over it need no exchange; the rows
+        are the same. An empty selection stays a local relation, which a
+        point lookup folds without a job."""
         manifest = self._manifest(version)
         schema = manifest.get("schema")
         if schema is None:
@@ -4001,7 +4025,39 @@ class SnapshotTable:
             )
         target = T.StructType.fromJson(schema)
         out = self._live_rows(manifest, target, selection)
-        return local_frame(self.spark, [], target) if out is None else out
+        if out is None:
+            return local_frame(self.spark, [], target)
+        if small_scan and self._is_small_scan(manifest, selection):
+            return out.coalesce(1)
+        return out
+
+    def _is_small_scan(
+        self, manifest: dict, selection: dict[str, list[str] | None] | None
+    ) -> bool:
+        """Whether the data files a scan of ``selection`` reads total at
+        most ``SMALL_SCAN_BYTES``: local ``os.stat`` sizes summed over the
+        planner's admitted lists (a whole dir's list from
+        ``_dir_universe``), stopping once past the bound. No JVM call and
+        no footer read. An object-store table is never small: each size
+        would cost a request."""
+        if urllib.parse.urlparse(self.path).scheme:
+            return False
+        total = 0
+        for d in manifest["data_dirs"]:
+            files = None if selection is None else selection.get(d)
+            if files is None:
+                files = self._dir_universe(
+                    manifest, d, self.dir_stats(manifest, d)
+                )
+            root = os.path.join(self.path, d)
+            for f in files:
+                try:
+                    total += os.stat(os.path.join(root, f)).st_size
+                except OSError:
+                    return False  # Spark reports the missing file
+                if total > SMALL_SCAN_BYTES:
+                    return False
+        return True
 
     def _live_rows(
         self,
@@ -4997,7 +5053,13 @@ class SnapshotTable:
             lo = hi = None
         else:
             skey0 = (source_keys or keys)[0]
-            bounds = source.agg(
+            src = source
+            plan = source._jdf.queryExecution().optimizedPlan()
+            if plan.stats().sizeInBytes() <= SMALL_SCAN_BYTES:
+                # a small source's bounds in one job, with no shuffle;
+                # the merge join below keeps the source's partitions
+                src = source.coalesce(1)
+            bounds = src.agg(
                 F.min(skey0).alias("lo"), F.max(skey0).alias("hi")
             ).first()
             lo, hi = bounds["lo"], bounds["hi"]
@@ -6297,6 +6359,8 @@ def snapshot_view(
     view_name: str,
     table: "SnapshotTable",
     version: int | None = None,
+    *,
+    small_scan: bool = False,
 ) -> str:
     """Register ``table`` at ``version`` (default: current) as a temp view
     — the time-travel surface for JDBC/BI clients sharing the session
@@ -6306,8 +6370,9 @@ def snapshot_view(
     even when its file bytes overshoot. A MATERIALIZED VIEW's stored
     state (``n_rows`` / ``__s_*`` sums / ``__sk_*`` sketches) projects
     through its recorded presentation onto the defining SELECT's shape
-    — queries see the declared aliases, never the internal state."""
-    df = table.read_hinted(version=version)
+    — queries see the declared aliases, never the internal state.
+    ``small_scan`` as for ``SnapshotTable.read``."""
+    df = table.read_hinted(version=version, small_scan=small_scan)
     pres = table.properties().get("mv.presentation")
     if pres:
         df = df.selectExpr(*json.loads(pres))
@@ -6465,7 +6530,22 @@ def sql_with_time_travel(
     a statement it cannot parse. The temp views backing the rewrite are
     DROPPED before returning — analysis is forced first, so the returned
     DataFrame stays valid while later ``spark.sql`` calls see no leftover
-    shadowing views."""
+    shadowing views.
+
+    One partition for small scans: when the parse finds an operator that
+    plans an exchange (``sqlplan._SHUFFLING``: GROUP BY or a function
+    call, DISTINCT, a join or subquery, ORDER BY, a window, a set
+    operation), every head, pruned, versioned, tag, timestamp or branch
+    view whose admitted data files total at most ``SMALL_SCAN_BYTES`` is
+    ``coalesce(1)`` over its scan. It then reports ``SinglePartition``,
+    the operator plans no exchange, and a range aggregate runs one Spark
+    job instead of a map stage, a shuffle and a result stage. A statement
+    with no such operator (a lookup) keeps Spark's file splits, which
+    read its files in parallel. Larger scans keep the splits too: past
+    the bound the scan costs more than the shuffle one partition saves,
+    and a large scan would run as one task. A write fed by such a
+    statement (INSERT … SELECT, CTAS, MERGE USING a query) reads the
+    same one-partition views, so it usually writes one file."""
     created: list[str] = []
 
     def _view(name: str, version: int) -> str:
@@ -6478,9 +6558,9 @@ def sql_with_time_travel(
         view = f"__tt_{name.replace('.', '_')}_v{version}"
         preds = pruned.get(name)
         df = (
-            t.read_pruned(preds, version=version)
+            t.read_pruned(preds, version=version, small_scan=shuffles)
             if preds
-            else t.read(version=version)
+            else t.read(version=version, small_scan=shuffles)
         )
         df.createOrReplaceTempView(view)
         created.append(view)
@@ -6509,7 +6589,9 @@ def sql_with_time_travel(
                     name.replace(".", "_"),
                     re.sub(r"\W", "_", ref),
                 )
-                t.branch(ref).read().createOrReplaceTempView(view)
+                t.branch(ref).read(
+                    small_scan=shuffles
+                ).createOrReplaceTempView(view)
                 created.append(view)
                 return view
             raise
@@ -6586,6 +6668,7 @@ def sql_with_time_travel(
         # both the versioned and the head views
         text = _sub_outside_literals(_META_TABLE_RE, sub_meta, text)
         stmt, pruned = parse_for_pruning(spark, text, tables)
+        shuffles = stmt is not None and stmt.shuffles
         rewritten = _sub_outside_literals(
             _TT_TS_RE,
             sub_ts,
@@ -6633,9 +6716,11 @@ def sql_with_time_travel(
                 )
             preds = pruned.get(name)
             if preds:
-                t.read_pruned(preds).createOrReplaceTempView(view)
+                t.read_pruned(
+                    preds, small_scan=shuffles
+                ).createOrReplaceTempView(view)
             else:
-                snapshot_view(spark, view, t)
+                snapshot_view(spark, view, t, small_scan=shuffles)
             created.append(view)
         df = spark.sql(rewritten)
         # force analysis so dropping the views cannot unbind the plan

@@ -46,6 +46,15 @@ _RELATIONS = frozenset({"UnresolvedRelation", "RelationTimeTravel"})
 _SUBQUERIES = frozenset(
     {"Exists", "InSubquery", "LateralSubquery", "ListQuery", "ScalarSubquery"}
 )
+# parsed-plan nodes Spark plans with an exchange over a multi-partition
+# input: a GROUP BY, DISTINCT, join, subquery, ORDER BY, window or set
+# operation, and any function call, which may be a global aggregate or a
+# window function (the parse does not tell them from scalar functions)
+_SHUFFLING = _SUBQUERIES | {
+    "Aggregate", "Distinct", "Except", "Intersect", "Join", "Pivot", "Sort",
+    "UnresolvedFunction", "UnresolvedHaving", "UnresolvedWindowExpression",
+    "WindowExpression",
+}
 # join type → the children whose rows a WHERE above the join constrains
 _JOIN_SIDES = {"Inner": (0, 1), "Cross": (0, 1), "LeftOuter": (0,),
                "LeftSemi": (0,), "LeftAnti": (0,), "RightOuter": (1,)}
@@ -78,12 +87,14 @@ class Term(NamedTuple):
 
 class Statement(NamedTuple):
     """Relation leaves per lower-cased name (subqueries and CTE bodies
-    included), how many of them carry a time-travel clause, and per
-    lower-cased name the terms that constrain its leaves' rows."""
+    included), how many of them carry a time-travel clause, per
+    lower-cased name the terms that constrain its leaves' rows, and
+    whether any node may plan an exchange (``_SHUFFLING``)."""
 
     leaves: Counter
     versioned: Counter
     terms: dict
+    shuffles: bool
 
 
 class Condition(NamedTuple):
@@ -230,7 +241,9 @@ def statement(text: str, spark: SparkSession) -> Statement:
     ParseException for a statement Spark cannot parse."""
     strict = _strict(text)
     leaves, versioned, terms = Counter(), Counter(), defaultdict(list)
+    shuffles = False
     for node in _nodes(_parse(spark, "parsePlan", text)):
+        shuffles = shuffles or _cls(node) in _SHUFFLING
         if "multipartIdentifier" in node:
             leaves[(_name(node["multipartIdentifier"]) or "").lower()] += 1
         if _cls(node) == "RelationTimeTravel":
@@ -240,7 +253,7 @@ def statement(text: str, spark: SparkSession) -> Statement:
             found = [t for t in (_term(c, strict) for c in conj) if t]
             for leaf, scope in _scopes(node["_kids"][0]):
                 terms[leaf] += [t for t in found if t.qual in (None, scope)]
-    return Statement(leaves, versioned, dict(terms))
+    return Statement(leaves, versioned, dict(terms), shuffles)
 
 
 def condition(text: str, spark: SparkSession) -> Condition:

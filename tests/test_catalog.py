@@ -317,3 +317,48 @@ def test_local_publish_is_durable_and_mkdirs_on_first_commit(
 
     assert synced == [ino("v1.json"), ino(), ino("CURRENT"), ino()]
     assert sorted(os.listdir(meta)) == ["CURRENT", "LOCK", "v1.json"]
+
+
+class _Crash(BaseException):
+    """A writer's death: not an Exception, so no handler swallows it."""
+
+
+def test_local_crash_between_link_and_pointer_rolls_forward(
+    tmp_path, monkeypatch
+):
+    """A writer that dies after linking ``v2.json`` but before replacing
+    CURRENT leaves a complete manifest above the pointer and a stray
+    ``CURRENT.tmp-*``. The next commit, from a fresh handle, advances
+    CURRENT to the dead writer's slot and builds on top of it, where it
+    used to collide with the slot on every attempt."""
+    meta = tmp_path / "t" / "_snapshots"
+    proto = catalog.open_protocol(str(tmp_path / "t"))
+    proto.commit(lambda p, _r: {"version": 1, "who": "base"})
+    real = os.replace
+
+    def dies_on_pointer(src, dst, *a, **kw):
+        if os.path.basename(dst) == "CURRENT":
+            raise _Crash()
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(catalog.os, "replace", dies_on_pointer)
+    with pytest.raises(_Crash):
+        proto.commit(lambda p, _r: {"version": p + 1, "who": "dead"})
+    monkeypatch.setattr(catalog.os, "replace", real)
+    assert proto.read_current() == 1
+    assert any(n.startswith("CURRENT.tmp-") for n in os.listdir(meta))
+
+    fresh = catalog.open_protocol(str(tmp_path / "t"))
+    parents = []
+
+    def build(p, read):
+        parents.append((p, read(p)["who"]))
+        return {"version": p + 1, "who": "live"}
+
+    assert fresh.commit(build) == 3
+    assert parents == [(2, "dead")]
+    assert fresh.read_current() == 3
+    assert fresh.list_versions() == [1, 2, 3]
+    assert sorted(os.listdir(meta)) == [
+        "CURRENT", "LOCK", "v1.json", "v2.json", "v3.json"
+    ]
