@@ -1402,6 +1402,22 @@ class Engine:
         r"^(day|month|year|hour)\s*\(\s*([A-Za-z_]\w*)\s*\)$", re.IGNORECASE
     )
 
+    @classmethod
+    def _trino_partitioning(cls, props: str) -> str:
+        """The ``partitioning = ARRAY['day(ts)', 'k']`` entry of a Trino
+        WITH clause as ``" PARTITIONED BY (days(ts), k)"`` ("" without
+        one); the other properties are the caller's."""
+        pm = cls._TRINO_PART_RE.search(props)
+        entries = []
+        for ent in pm.group(1).split(",") if pm else ():
+            ent = ent.strip().strip("'\"")
+            xm = cls._TRINO_XFORM_RE.match(ent)
+            if xm:
+                ent = f"{xm.group(1).lower()}s({xm.group(2)})"
+            if ent:
+                entries.append(ent)
+        return f" PARTITIONED BY ({', '.join(entries)})" if entries else ""
+
     # Trino CTAS: `CREATE TABLE [IF NOT EXISTS] name [WITH (props)]
     # AS <query>` (round 13 — dashboard rollups saved as Iceberg tables
     # are created exactly this way). Fires only when the statement
@@ -1463,7 +1479,6 @@ class Engine:
                 )
                 if not claimed:
                     return text
-        part = ""
         if props:
             known = {"partitioning", "format"}
             for key in re.findall(r"([A-Za-z_]\w*)\s*=", props):
@@ -1480,19 +1495,7 @@ class Engine:
                     f"CREATE TABLE ... WITH (format = {fm.group(1)!r}): "
                     f"only PARQUET is supported"
                 )
-            pm = self._TRINO_PART_RE.search(props)
-            if pm:
-                entries = []
-                for ent in pm.group(1).split(","):
-                    ent = ent.strip().strip("'\"")
-                    if not ent:
-                        continue
-                    xm = self._TRINO_XFORM_RE.match(ent)
-                    if xm:
-                        ent = f"{xm.group(1).lower()}s({xm.group(2)})"
-                    entries.append(ent)
-                if entries:
-                    part = f" PARTITIONED BY ({', '.join(entries)})"
+        part = self._trino_partitioning(props or "")
         ine = m.group(1) or ""
         body = text[am.end():]
         return (
@@ -1547,24 +1550,8 @@ class Engine:
                     body_m = rx.sub(repl, body_m)
             entries.append(head + body)
         cols = ",".join(entries)
-        part = ""
-        if wm:
-            # the props text at the same offsets in the ORIGINAL tail
-            props = tail[tail.upper().index("WITH") + 4:].strip()
-            props = props[1:-1] if props.startswith("(") else props
-            pm = self._TRINO_PART_RE.search(props)
-            if pm:
-                entries = []
-                for ent in pm.group(1).split(","):
-                    ent = ent.strip().strip("'\"")
-                    if not ent:
-                        continue
-                    xm = self._TRINO_XFORM_RE.match(ent)
-                    if xm:
-                        ent = f"{xm.group(1).lower()}s({xm.group(2)})"
-                    entries.append(ent)
-                if entries:
-                    part = f" PARTITIONED BY ({', '.join(entries)})"
+        # the WITH (...) properties are the whole tail
+        part = self._trino_partitioning(tail if wm else "")
         ine = m.group(1) or ""
         return (
             f"CREATE TABLE {ine}{m.group(2)} ({cols}) USING snapshot{part}"

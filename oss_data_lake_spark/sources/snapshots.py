@@ -61,6 +61,7 @@ import re
 import time
 import urllib.parse
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -5739,7 +5740,9 @@ class SnapshotTable:
         """The one commit build of every row-level DML: refuse a head
         that moved since the pin, apply ``edit`` to the pinned manifest
         ``m`` (no re-read: the head check proves ``m`` is the parent)
-        and stamp the snapshot fields."""
+        and stamp it as ``m``'s child. ``m`` is the shared parsed
+        manifest, so the stamp goes on a copy, and the txn ledger is
+        ``m``'s own (``edit`` rebuilds only the file-set keys)."""
         wm = self._watermarks_of(m)
 
         def build(parent: int | None, read_manifest) -> dict:
@@ -5747,15 +5750,7 @@ class SnapshotTable:
                 raise CommitConflict(
                     f"planned against v{v}, head is v{parent}"
                 )
-            return {
-                **edit(m),
-                "version": v + 1,
-                "parent": v,
-                "mode": tag,
-                "txn": None,
-                "txn_watermarks": wm,
-                "committed_at_ms": int(time.time() * 1000),
-            }
+            return self._child_of({**edit(m), "txn_watermarks": wm}, v, tag)
 
         return self.protocol.commit(build)
 
@@ -6294,45 +6289,15 @@ class SnapshotTable:
 
 # --------------------------------------------------------- SQL time travel
 #
-# The Trino/Iceberg SQL-text surface for time travel (the reference engine's
-# ``SELECT ... FROM t FOR VERSION AS OF n`` / ``FOR TIMESTAMP AS OF ts``,
-# Trino 467 per reference docker-compose.yaml:153 over the Iceberg REST
-# catalog, etc/catalog/iceberg.properties:14-20). Spark's parser has no such
-# clause for the session parquet catalog, so ``sql_with_time_travel``
-# resolves each clause AGAINST THE MANIFESTS before parsing: every
-# ``<table> FOR ... AS OF ...`` occurrence is replaced by a temp view over
-# ``SnapshotTable.read(version=...)`` and the rewritten text runs through
-# the normal Spark SQL path. BI/JDBC clients that cannot preprocess text
-# get the same capability as named views via ``snapshot_view``.
+# The Trino/Iceberg time-travel surface (the reference engine's ``SELECT
+# ... FROM t FOR VERSION AS OF n`` / ``FOR TIMESTAMP AS OF ts``, Trino 467
+# per reference docker-compose.yaml:153 over the Iceberg REST catalog,
+# etc/catalog/iceberg.properties:14-20) and Delta's ``table_changes``:
+# ``sql_with_time_travel`` resolves each reference the statement's one
+# parse reports AGAINST THE MANIFESTS to a temp view and splices its name
+# over the reference. BI/JDBC clients that cannot preprocess text get the
+# same capability as named views via ``snapshot_view``.
 
-# Both spellings resolve: Trino's ``t FOR VERSION AS OF n`` and
-# Delta's FOR-less ``t VERSION AS OF n`` (same for TIMESTAMP AS OF).
-# The captured name must be a real relation, not the keyword of a
-# SURROUNDING clause that happens to precede VERSION AS OF — FOR
-# (this clause's own marker) and TO (``RESTORE ... TO VERSION AS OF``,
-# handled by its own statement arm) are excluded.
-_TT_NAME = r"\b(?!FOR\b|TO\b)([A-Za-z_][\w.]*)"
-_TT_VERSION_RE = re.compile(
-    rf"{_TT_NAME}\s+(?:FOR\s+)?VERSION\s+AS\s+OF\s+(\d+)",
-    re.IGNORECASE,
-)
-_TT_TAG_RE = re.compile(
-    rf"{_TT_NAME}\s+(?:FOR\s+)?VERSION\s+AS\s+OF\s+'([^']+)'",
-    re.IGNORECASE,
-)
-_TT_TS_RE = re.compile(
-    rf"{_TT_NAME}\s+(?:FOR\s+)?TIMESTAMP\s+AS\s+OF\s+"
-    r"(?:TIMESTAMP\s+)?'([^']+)'",
-    re.IGNORECASE,
-)
-# Delta's CDF table-valued function: table_changes('t', start[, end]),
-# bounds as version numbers (INCLUSIVE, Delta semantics) or quoted
-# timestamp literals
-_TABLE_CHANGES_RE = re.compile(
-    r"\btable_changes\s*\(\s*'([A-Za-z_][\w.]*)'\s*,\s*"
-    r"(\d+|'[^']+')(?:\s*,\s*(\d+|'[^']+'))?\s*\)",
-    re.IGNORECASE,
-)
 # Trino-Iceberg metadata tables: SELECT ... FROM t$files / t$history /
 # t$snapshots / t$partitions (the reference's engine exposes exactly
 # these); rewritten to metadata-DataFrame temp views before Spark's
@@ -6483,12 +6448,15 @@ def _as_test(pred) -> tuple:
 def parse_for_pruning(
     spark: SparkSession, text: str, tables: dict[str, "SnapshotTable"]
 ) -> tuple[sqlplan.Statement | None, dict[str, list]]:
-    """The one parse of ``text`` (None, unparsed, when no registered name
-    occurs in it) and per registered table the predicates (forms above
-    ``SnapshotTable.plan_range_scan``) a pruned view of it may act on,
-    under the gates above."""
+    """The one parse of ``text`` (None, unparsed, when it names no
+    registered table and holds neither ``table_changes`` nor the words
+    ``as of``, even in a literal or comment) and per registered table the
+    predicates (forms above ``SnapshotTable.plan_range_scan``) a pruned
+    view of it may act on, under the gates above."""
     low = text.lower()
-    if not any(name.lower() in low for name in tables):
+    if not any(name.lower() in low for name in tables) and not (
+        "table_changes" in low or " as of " in f" {' '.join(low.split())} "
+    ):
         return None, {}
     stmt = sqlplan.statement(text, spark)
     out: dict[str, list] = {}
@@ -6516,20 +6484,18 @@ def temp_view_exists(spark: SparkSession, name: str) -> bool:
 def sql_with_time_travel(
     spark: SparkSession, text: str, tables: dict[str, "SnapshotTable"]
 ) -> DataFrame:
-    """Run SQL text supporting ``<table> FOR VERSION AS OF n`` and
-    ``<table> FOR TIMESTAMP AS OF '<iso>'`` over registered
-    ``SnapshotTable``s. Unknown table names in a time-travel clause raise
-    (a silent pass-through would hand Spark's parser a syntax error far
-    from the real cause). Plain references to registered names resolve to
-    the CURRENT snapshot via temp views, so one statement can mix
-    versioned and head reads.
-
-    Rewrites skip string literals (``'... FOR VERSION AS OF 3'`` stays
-    data); the registered tables the statement reads come from one parse
-    by Spark's parser (``sqlplan``), which raises Spark's parse error for
-    a statement it cannot parse. The temp views backing the rewrite are
-    DROPPED before returning — analysis is forced first, so the returned
-    DataFrame stays valid while later ``spark.sql`` calls see no leftover
+    """Run SQL text supporting ``<table> FOR VERSION|TIMESTAMP AS OF ...``
+    and ``table_changes('<table>', start[, end])`` over registered
+    ``SnapshotTable``s. Each reference and its source span come from the
+    statement's one parse by Spark's parser (``sqlplan``), which raises
+    Spark's parse error for a statement it cannot parse; it resolves
+    against the manifests to a temp view whose name is spliced over the
+    span (``travel``). Names resolve case-insensitively, as temp views
+    do; an unregistered one raises. Plain references to registered names
+    read the CURRENT snapshot via temp views, so one statement can mix
+    versioned and head reads. The temp views are DROPPED before
+    returning — analysis is forced first, so the returned DataFrame
+    stays valid while later ``spark.sql`` calls see no leftover
     shadowing views.
 
     One partition for small scans: when the parse finds an operator that
@@ -6547,100 +6513,53 @@ def sql_with_time_travel(
     statement (INSERT … SELECT, CTAS, MERGE USING a query) reads the
     same one-partition views, so it usually writes one file."""
     created: list[str] = []
+    registered = {name.lower(): name for name in tables}
 
-    def _view(name: str, version: int) -> str:
-        t = tables.get(name)
-        if t is None:
+    def travel(tr: sqlplan.Travel) -> str:
+        """The temp view one reference reads. An all-digit version is a
+        version number (tag names start with a letter); another name is
+        a tag, else a branch read at its own head (Iceberg resolves both
+        ref kinds by name). ``table_changes`` bounds are INCLUSIVE commit
+        versions (Delta semantics) or timestamps: changes after the
+        version current just BEFORE the start, up to the version as of
+        the end."""
+        name = registered.get(tr.name)
+        if name is None:
             raise ValueError(
-                f"time-travel clause references unregistered snapshot "
-                f"table '{name}' (registered: {sorted(tables)})"
+                f"time travel references unregistered snapshot table "
+                f"'{tr.name}' (registered: {sorted(tables)})"
             )
-        view = f"__tt_{name.replace('.', '_')}_v{version}"
-        preds = pruned.get(name)
-        df = (
-            t.read_pruned(preds, version=version, small_scan=shuffles)
-            if preds
-            else t.read(version=version, small_scan=shuffles)
-        )
+        t, key = tables[name], name.replace(".", "_")
+        if tr.kind == "changes":
+            start, end = (*tr.at, None)[:2]
+            if isinstance(start, str):
+                try:
+                    start = t.version_as_of(_parse_ts_ms(start) - 1) + 1
+                except ValueError:
+                    start = 1  # before the first commit: everything
+            if isinstance(end, str):
+                end = t.version_as_of(_parse_ts_ms(end))
+            view = f"__tc_{key}_{start - 1}_{'head' if end is None else end}"
+            df = t.read_change_feed(start - 1, end)
+        elif tr.kind == "version" and not tr.at.isdigit() and (
+            tr.at not in t.tags() and tr.at in t.branches()
+        ):
+            view = f"__tt_{key}_br_" + re.sub(r"\W", "_", tr.at)
+            df = t.branch(tr.at).read(small_scan=shuffles)
+        else:
+            version = (
+                t.version_as_of(_parse_ts_ms(tr.at))
+                if tr.kind == "timestamp"
+                else int(tr.at) if tr.at.isdigit() else t.resolve_ref(tr.at)
+            )
+            view = f"__tt_{key}_v{version}"
+            preds = pruned.get(name)
+            df = (
+                t.read_pruned(preds, version=version, small_scan=shuffles)
+                if preds
+                else t.read(version=version, small_scan=shuffles)
+            )
         df.createOrReplaceTempView(view)
-        created.append(view)
-        return view
-
-    def sub_version(m: "re.Match[str]") -> str:
-        return _view(m.group(1), int(m.group(2)))
-
-    def sub_tag(m: "re.Match[str]") -> str:
-        name = m.group(1)
-        t = tables.get(name)
-        if t is None:
-            raise ValueError(
-                f"time-travel clause references unregistered snapshot "
-                f"table '{name}' (registered: {sorted(tables)})"
-            )
-        ref = m.group(2)
-        try:
-            return _view(name, t.resolve_ref(ref))
-        except ValueError:
-            # Iceberg resolves BOTH ref kinds by name: a tag pins a
-            # version of THIS table; a branch is its own line of
-            # commits, so the view reads the branch table's head
-            if ref in t.branches():
-                view = "__tt_{}_br_{}".format(
-                    name.replace(".", "_"),
-                    re.sub(r"\W", "_", ref),
-                )
-                t.branch(ref).read(
-                    small_scan=shuffles
-                ).createOrReplaceTempView(view)
-                created.append(view)
-                return view
-            raise
-
-    def sub_ts(m: "re.Match[str]") -> str:
-        name = m.group(1)
-        t = tables.get(name)
-        if t is None:
-            raise ValueError(
-                f"time-travel clause references unregistered snapshot "
-                f"table '{name}' (registered: {sorted(tables)})"
-            )
-        return _view(name, t.version_as_of(_parse_ts_ms(m.group(2))))
-
-    def sub_table_changes(m: "re.Match[str]") -> str:
-        # Delta's table_changes('t', start[, end]) → a view over the
-        # change feed. Numeric bounds are INCLUSIVE commit versions
-        # (Delta semantics — our read_change_feed takes the exclusive
-        # floor, hence start-1); a quoted bound resolves through
-        # version_as_of (start: changes strictly after the version
-        # current just BEFORE the instant; end: the version as of it).
-        name = m.group(1)
-        t = tables.get(name)
-        if t is None:
-            raise ValueError(
-                f"table_changes references unregistered snapshot "
-                f"table '{name}' (registered: {sorted(tables)})"
-            )
-
-        def bound(tok: str | None, *, start: bool) -> int | None:
-            if tok is None:
-                return None
-            if tok.startswith("'"):
-                ms = _parse_ts_ms(tok[1:-1])
-                if start:
-                    try:
-                        return t.version_as_of(ms - 1)
-                    except ValueError:
-                        return 0  # before the first commit: everything
-                return t.version_as_of(ms)
-            return int(tok) - 1 if start else int(tok)
-
-        frm = bound(m.group(2), start=True)
-        to = bound(m.group(3), start=False)
-        view = (
-            f"__tc_{name.replace('.', '_')}_{frm}_"
-            f"{to if to is not None else 'head'}"
-        )
-        t.read_change_feed(frm, to).createOrReplaceTempView(view)
         created.append(view)
         return view
 
@@ -6664,32 +6583,23 @@ def sql_with_time_travel(
 
     try:
         # Spark's grammar rejects `t$files`: splice before the one parse,
-        # whose leaves decide the head views and whose conjuncts prune
-        # both the versioned and the head views
+        # whose leaves decide the head views, whose conjuncts prune both
+        # the versioned and the head views and whose time-travel
+        # references are spliced right to left
         text = _sub_outside_literals(_META_TABLE_RE, sub_meta, text)
         stmt, pruned = parse_for_pruning(spark, text, tables)
         shuffles = stmt is not None and stmt.shuffles
-        rewritten = _sub_outside_literals(
-            _TT_TS_RE,
-            sub_ts,
-            _sub_outside_literals(
-                _TT_TAG_RE,
-                sub_tag,
-                _sub_outside_literals(
-                    _TT_VERSION_RE,
-                    sub_version,
-                    _sub_outside_literals(
-                        _TABLE_CHANGES_RE, sub_table_changes, text
-                    ),
-                ),
-            ),
-        )
+        travels = stmt.travels if stmt else ()
+        rewritten = text
+        for tr in sorted(travels, key=lambda r: r.start, reverse=True):
+            rewritten = rewritten[:tr.start] + travel(tr) + rewritten[tr.stop:]
+        versioned = Counter(r.name for r in travels if r.kind != "changes")
         # plain (non-AS-OF) leaves read the head. A USER temp view under
         # a registered name is refused loudly — silently replacing (then
         # dropping) it would destroy user session state.
         heads = [
             n for n in tables
-            if stmt and stmt.leaves[n.lower()] > stmt.versioned[n.lower()]
+            if stmt and stmt.leaves[n.lower()] > versioned[n.lower()]
         ]
         # longest names first: with both "a.b" and "a.b.c" registered, the
         # longer reference must not be clobbered by the shorter rewrite

@@ -23,6 +23,15 @@ literal`` (``= < <= > >=``), ``col BETWEEN lit AND lit``, ``col IN
 functions, arithmetic, subqueries) drops that conjunct only. Leaves are
 keyed by lower-cased name: temp views resolve case-insensitively, so
 ``t`` and ``T`` read one view.
+
+The same parse reports each time-travel reference, a relation with an
+``AS OF`` clause (``RelationTimeTravel``) or a ``table_changes(...)``
+call, with its source span. ``toJSON`` carries no positions, so only a
+statement holding one pays for them: one ``treeString()`` numbers the
+nodes as ``TreeNode.apply`` does, then each reference's node, its JSON
+and the origins of the node and of a relation's name cost nine py4j
+calls per ``AS OF`` and six per ``table_changes`` (two per node for all
+nodes when a string literal spans lines and so shifts the numbering).
 """
 
 from __future__ import annotations
@@ -58,6 +67,11 @@ _SHUFFLING = _SUBQUERIES | {
 # join type → the children whose rows a WHERE above the join constrains
 _JOIN_SIDES = {"Inner": (0, 1), "Cross": (0, 1), "LeftOuter": (0,),
                "LeftSemi": (0,), "LeftAnti": (0,), "RightOuter": (1,)}
+_BOUND_TYPES = _INT_TYPES | {"string"}
+# commands holding their query in a field, not as a child: their tree
+# string and node numbering stop at the command
+_QUERY_FIELDS = {"ExplainCommand": "logicalPlan",
+                 "DescribeQueryCommand": "plan"}
 _NO_VALUE = object()
 _PARSERS = weakref.WeakKeyDictionary()  # session → its sqlParser()
 
@@ -85,16 +99,29 @@ class Term(NamedTuple):
         return (c, lo, hi)
 
 
+class Travel(NamedTuple):
+    """A time-travel reference, ``text[start:stop]``: ``kind`` ``version``
+    (``at`` the version or ref name), ``timestamp`` (``at`` the literal's
+    text as written) or ``changes`` (``at`` the ``table_changes`` bounds,
+    ints or strings). ``name`` is lower-cased, as the leaves are."""
+
+    kind: str
+    name: str
+    at: object
+    start: int
+    stop: int
+
+
 class Statement(NamedTuple):
     """Relation leaves per lower-cased name (subqueries and CTE bodies
-    included), how many of them carry a time-travel clause, per
-    lower-cased name the terms that constrain its leaves' rows, and
-    whether any node may plan an exchange (``_SHUFFLING``)."""
+    included), per lower-cased name the terms that constrain its leaves'
+    rows, whether any node may plan an exchange (``_SHUFFLING``), and the
+    time-travel references (``Travel``)."""
 
     leaves: Counter
-    versioned: Counter
     terms: dict
     shuffles: bool
+    travels: tuple
 
 
 class Condition(NamedTuple):
@@ -107,13 +134,13 @@ class Condition(NamedTuple):
     subquery: bool
 
 
-def _parse(spark: SparkSession, method: str, text: str) -> list:
-    """The one parser call."""
+def _parse(spark: SparkSession, method: str, text: str):
+    """The one parser call; the parsed JVM tree."""
     parser = _PARSERS.get(spark)
     if parser is None:
         parser = spark._jsparkSession.sessionState().sqlParser()
         _PARSERS[spark] = parser
-    return json.loads(getattr(parser, method)(text).toJSON())
+    return getattr(parser, method)(text)
 
 
 def _cls(node: dict) -> str:
@@ -232,35 +259,96 @@ def _scopes(plan: dict) -> list[tuple[str, str | None]]:
     return out
 
 
+def _travel(text: str, doc: dict, node) -> Travel:
+    """The reference of one numbered JVM node; ``doc`` is its JSON."""
+    ctx = node.origin().context()
+    stop = ctx.stopIndex() + 1
+    if _cls(doc) == "UnresolvedTableValuedFunction":
+        vals = [_value(a[0]) if a[0].get("dataType") in _BOUND_TYPES
+                else None for a in doc["functionArgs"]]
+        if not 2 <= len(vals) <= 3 or not all(
+            isinstance(v, (int, str)) for v in vals
+        ):
+            raise ValueError("table_changes takes a table name and one or "
+                             "two version or timestamp literals")
+        return Travel("changes", str(vals[0]).lower(), tuple(vals[1:]),
+                      ctx.startIndex(), stop)
+    # the node's own span covers only the clause; its name's starts it
+    start = node.relation().origin().context().startIndex()
+    name = (_leaf_name(doc) or "").lower()
+    if doc.get("version") is not None:
+        return Travel("version", name, doc["version"], start, stop)
+    # the literal as written: Spark prints a typed TIMESTAMP literal in the
+    # session time zone, which loses whether the text had an offset
+    quote = text[stop - 1]
+    if _cls(doc["timestamp"][0]) != "Literal" or quote not in "'\"":
+        raise ValueError("FOR TIMESTAMP AS OF takes a timestamp literal")
+    at = text[text.rindex(quote, start, stop - 1) + 1:stop - 1]
+    return Travel("timestamp", name, at, start, stop)
+
+
+def _is_travel(node: dict) -> bool:
+    return _cls(node) == "RelationTimeTravel" or (
+        _cls(node) == "UnresolvedTableValuedFunction"
+        and (_name(node["name"]) or "").lower() == "table_changes"
+    )
+
+
+def _travels(text: str, plan, doc: list, refs: int) -> tuple:
+    """The ``Travel`` of each of the statement's ``refs`` time-travel
+    nodes; ``plan`` is the parsed JVM tree, ``doc`` its JSON."""
+    field = _QUERY_FIELDS.get(_cls(doc[0]))
+    root = getattr(plan, field)() if field else plan
+    lines = [line.lstrip(" :+-") for line in root.treeString().split("\n")]
+    marked = [i for i, line in enumerate(lines) if line.startswith(
+        ("'RelationTimeTravel ", "'UnresolvedTableValuedFunction "))]
+    # a literal spanning lines prints as more lines than nodes and shifts
+    # the numbering after it: then every node is tried
+    for picks in (marked, range(len(lines))):
+        nodes = [n for n in map(root.apply, picks) if n is not None]
+        docs = [json.loads(n.toJSON())[0] for n in nodes]
+        found = [(d, n) for d, n in zip(docs, nodes) if _is_travel(d)]
+        if len(found) == refs:
+            return tuple(_travel(text, d, n) for d, n in found)
+    raise ValueError(
+        f"cannot place the time-travel references of a "
+        f"{_cls(doc[0])} statement"
+    )
+
+
 def _strict(text: str) -> bool:
     return any(", " in q for q in _BACKTICKED_RE.findall(text))
 
 
 def statement(text: str, spark: SparkSession) -> Statement:
-    """Leaves and per-leaf terms of one statement; raises Spark's
-    ParseException for a statement Spark cannot parse."""
+    """Leaves, per-leaf terms and time-travel references of one statement;
+    raises Spark's ParseException for a statement Spark cannot parse, and
+    ValueError for a time-travel value that is not a literal."""
     strict = _strict(text)
-    leaves, versioned, terms = Counter(), Counter(), defaultdict(list)
+    plan = _parse(spark, "parsePlan", text)
+    doc = json.loads(plan.toJSON())
+    leaves, terms, refs = Counter(), defaultdict(list), 0
     shuffles = False
-    for node in _nodes(_parse(spark, "parsePlan", text)):
+    for node in _nodes(doc):
         shuffles = shuffles or _cls(node) in _SHUFFLING
         if "multipartIdentifier" in node:
             leaves[(_name(node["multipartIdentifier"]) or "").lower()] += 1
-        if _cls(node) == "RelationTimeTravel":
-            versioned[(_leaf_name(node) or "").lower()] += 1
-        elif _cls(node) == "Filter":
+        if _cls(node) == "Filter":
             conj = _conjuncts(_link(node["condition"]))
             found = [t for t in (_term(c, strict) for c in conj) if t]
             for leaf, scope in _scopes(node["_kids"][0]):
                 terms[leaf] += [t for t in found if t.qual in (None, scope)]
-    return Statement(leaves, versioned, dict(terms), shuffles)
+        elif _is_travel(node):
+            refs += 1
+    travels = _travels(text, plan, doc, refs) if refs else ()
+    return Statement(leaves, dict(terms), shuffles, travels)
 
 
 def condition(text: str, spark: SparkSession) -> Condition:
     """The conjuncts of a single-table DML condition (no qualifier scope:
     callers keep unqualified terms only)."""
     try:
-        doc = _parse(spark, "parseExpression", text)
+        doc = json.loads(_parse(spark, "parseExpression", text).toJSON())
     except ParseException:
         return Condition([], True)
     subquery = any(_cls(n) in _SUBQUERIES for n in _nodes(doc))

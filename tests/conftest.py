@@ -4,8 +4,12 @@ import pathlib
 import warnings
 
 import pytest
+from pyspark.sql import Row
 
+from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.session import get_spark
+from oss_data_lake_spark.sources.snapshots import SnapshotTable
+from tests.hostile import STRUCTURE
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -100,3 +104,34 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture(scope="module")
+def fz_eng(spark, tmp_path_factory):
+    """An Engine over snapshot table ``fz``: k = 0..19, v = k + 0.5."""
+    root = tmp_path_factory.mktemp("fz")
+    e = Engine(spark=spark, warehouse_dir=str(root / "wh"))
+    e.sql("CREATE TABLE fz (k INT, v DOUBLE) USING snapshot")
+    e.sql(
+        "INSERT INTO fz VALUES "
+        + ", ".join(f"({i}, {i}.5)" for i in range(20))
+    )
+    return e
+
+
+@pytest.fixture(scope="module")
+def hostile_eng(spark, tmp_path_factory):
+    """``(engine, t, df)``: snapshot table ``t`` registered with the
+    rows of ``df``, k = 0..29 and a string ``s`` drawn from
+    ``hostile.STRUCTURE``."""
+    root = tmp_path_factory.mktemp("hostile")
+    e = Engine(spark=spark, warehouse_dir=str(root / "wh"))
+    svals = STRUCTURE + ["plain"]
+    rows = [
+        Row(k=i, s=svals[i % len(svals)], d=float(i) / 2) for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "k long, s string, d double")
+    t = SnapshotTable(spark, str(root / "t"))
+    t.commit(df, stats_for=["k", "d"])
+    e._snapshot_tables["t"] = t
+    return e, t, df

@@ -10,9 +10,11 @@ over registered snapshot tables AND persistent views."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
 from pyspark.sql import Row
 
 from oss_data_lake_spark.engine import Engine
+from tests.hostile import SAMPLING, payloads, quote
 
 
 @pytest.fixture()
@@ -424,3 +426,50 @@ def test_bare_current_catalog_schema_niladics(spark, tmp_path):
         assert s == "current_schema"
     finally:
         e.sql("USE default")
+
+
+# ---------- SET SESSION values and TABLESAMPLE spellings inside literals
+
+_payload = payloads(SAMPLING)
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_set_session_value_round_trips(fz_eng, payload):
+    """Any payload survives SET SESSION quoting verbatim: stored,
+    listed, and reset — never parsed as statement structure."""
+    r = fz_eng.sql(f"SET SESSION fuzz_key = {quote(payload)}").collect()[0]
+    assert r["name"] == "fuzz_key" and r["value"] == payload
+    listed = {
+        row["name"]: row["value"]
+        for row in fz_eng.sql("SHOW SESSION").collect()
+    }
+    assert listed["fuzz_key"] == payload
+    assert fz_eng.sql("RESET SESSION fuzz_key").collect()[0]["reset"] is True
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_tablesample_translator_never_rewrites_literals(fz_eng, payload):
+    """A string literal carrying TABLESAMPLE keywords (balanced or not)
+    comes back byte-identical — the translator matches on masked text,
+    so quoted bytes are invisible to it — and the statement still
+    samples correctly when a REAL clause follows the literal."""
+    got = fz_eng.sql(
+        f"SELECT {quote(payload)} AS s FROM fz "
+        f"TABLESAMPLE BERNOULLI (100) LIMIT 1"
+    ).collect()[0]["s"]
+    assert got == payload
+
+
+def test_unbalanced_real_tablesample_still_errors(fz_eng):
+    """An unbalanced UNQUOTED sampling clause is left for the SQL
+    parser to refuse — the translator must not loop or 'repair' it."""
+    with pytest.raises(Exception):
+        fz_eng.sql("SELECT k FROM fz TABLESAMPLE BERNOULLI (100").collect()

@@ -10,10 +10,12 @@ the rule's inputs."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
 from pyspark.sql import Row
 
 from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
+from tests.hostile import STRUCTURE, payloads, quote
 
 
 @pytest.fixture()
@@ -265,3 +267,34 @@ def test_insert_generated_over_default_filled_column(spark, tmp_path):
     assert [f.name for f in eng._snapshot_tables["gd"].schema().fields] == [
         "a", "b", "c",
     ]
+
+
+# ------------- GENERATED ALWAYS AS expressions carrying hostile literals
+
+_payload = payloads(STRUCTURE, max_size=16)
+
+
+@settings(
+    max_examples=10, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_payload)
+def test_generated_expressions_with_hostile_literals(
+    spark, tmp_path_factory, p
+):
+    """A GENERATED ALWAYS AS expression whose literal carries SQL
+    structure must parse at CREATE, compute at INSERT, and equal
+    Spark's own evaluation of the expression."""
+    root = tmp_path_factory.mktemp("fg")
+    e = Engine(spark=spark, warehouse_dir=str(root / "wh"))
+    lit = quote(p)
+    e.sql(
+        f"CREATE TABLE gt (s STRING, "
+        f"g STRING GENERATED ALWAYS AS (concat(s, {lit}))) USING snapshot"
+    )
+    e.sql(f"INSERT INTO gt (s) VALUES ('a'), ({lit})")
+    got = {r["s"]: r["g"] for r in e.sql("SELECT s, g FROM gt").collect()}
+    assert got == {"a": "a" + p, p: p + p}, (p, got)
+    # a provided-but-wrong generated value still refuses
+    with pytest.raises(Exception, match="generated"):
+        e.sql(f"INSERT INTO gt (s, g) VALUES ('x', concat('WRONG', {lit}))")

@@ -247,3 +247,15 @@ def test_is_views_cleaned_up_when_expand_views_raises(eng, spark):
         assert after == before, f"leaked metadata views: {after - before}"
     finally:
         eng.sql("DROP VIEW v_cycle")
+
+
+# -------------------------------- a table named like the reserved schema
+
+
+def test_information_schema_inside_ddl_name_is_refused_cleanly(fz_eng):
+    """A table NAMED like the reserved schema cannot shadow it — the
+    reference text rewrites to the metadata relation first, so the
+    CREATE fails loudly rather than silently registering a shadow."""
+    with pytest.raises(Exception):
+        fz_eng.sql("CREATE TABLE information_schema.tables (k INT) "
+                   "USING snapshot")

@@ -15,10 +15,12 @@ import random
 
 import pytest
 
+from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.operators.match_recognize import (
     match_recognize,
     vshape_events,
 )
+from tests.hostile import SAMPLING, payloads, quote
 
 
 # ---------------------------------------------------------------- NFA ----
@@ -671,3 +673,90 @@ def test_sql_route_overlapping_defines_raise(spark, tmp_path):
     )
     with pytest.raises(Exception, match="mutually exclusive"):
         out.collect()
+
+
+# ----------------- MATCH_RECOGNIZE DEFINE literals carrying hostile text
+
+_payload = payloads(SAMPLING)
+
+
+MR_TMPL = """
+SELECT * FROM mrz MATCH_RECOGNIZE (
+  PARTITION BY u ORDER BY i
+  MEASURES MATCH_NUMBER() AS n, LAST(A.s) AS last_s, COUNT(*) AS c
+  PATTERN (A+ B+)
+  DEFINE A AS s = {pa}, B AS s = {pb}
+)
+"""
+
+
+@pytest.fixture(scope="module")
+def mrz_eng(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("mrz")
+    e = Engine(spark=spark, warehouse_dir=str(root / "whmr"))
+    e.sql("CREATE TABLE mrz (u INT, i INT, s STRING) USING snapshot")
+    e.sql(
+        "INSERT INTO mrz VALUES "
+        + ", ".join(
+            f"(1, {i}, '{'xy'[i % 2]}')" for i in range(16)
+        )
+    )
+    return e
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_match_recognize_define_literals_stay_data(mrz_eng, payload):
+    """Hostile payloads inside DEFINE string literals must parse as DATA:
+    commas, parens, AS, PATTERN(, MATCH_RECOGNIZE( inside the literal may
+    never split the clause or re-trigger the router. The statement either
+    returns cleanly (payload matched / didn't match rows) or raises a
+    clean analysis error — never a mangled rewrite."""
+    q = MR_TMPL.format(pa=quote(payload), pb=quote(payload + "z"))
+    rows = mrz_eng.sql(q).collect()
+    # labels are exclusive ('s' can't equal both payloads), so matches
+    # require both labels present — only the 'x'/'y' payloads can match
+    for r in rows:
+        assert r["last_s"] == payload
+        assert r["c"] >= 2
+
+
+def test_match_recognize_keyword_inside_literal_is_data(mrz_eng):
+    df = mrz_eng.sql(
+        "SELECT 'MATCH_RECOGNIZE ( PATTERN' AS s FROM mrz LIMIT 1"
+    )
+    assert df.collect()[0]["s"] == "MATCH_RECOGNIZE ( PATTERN"
+
+
+def test_match_recognize_malformed_clauses_raise_cleanly(mrz_eng):
+    cases = [
+        # clause order violated
+        ("SELECT * FROM mrz MATCH_RECOGNIZE (ORDER BY i PARTITION BY u "
+         "MEASURES MATCH_NUMBER() AS n PATTERN (A+) DEFINE A AS s = 'x')",
+         "out of order"),
+        # missing DEFINE
+        ("SELECT * FROM mrz MATCH_RECOGNIZE (PARTITION BY u ORDER BY i "
+         "MEASURES MATCH_NUMBER() AS n PATTERN (A+))", "missing"),
+        # SUBSET unsupported
+        ("SELECT * FROM mrz MATCH_RECOGNIZE (PARTITION BY u ORDER BY i "
+         "MEASURES MATCH_NUMBER() AS n PATTERN (A+) SUBSET S = (A) "
+         "DEFINE A AS s = 'x')", "SUBSET"),
+        # DESC order
+        ("SELECT * FROM mrz MATCH_RECOGNIZE (PARTITION BY u ORDER BY i DESC "
+         "MEASURES MATCH_NUMBER() AS n PATTERN (A+) DEFINE A AS s = 'x')",
+         "ascending"),
+        # measure without alias
+        ("SELECT * FROM mrz MATCH_RECOGNIZE (PARTITION BY u ORDER BY i "
+         "MEASURES MATCH_NUMBER() PATTERN (A+) DEFINE A AS s = 'x')",
+         "AS alias"),
+        # trailing junk after the clause
+        ("SELECT * FROM mrz MATCH_RECOGNIZE (PARTITION BY u ORDER BY i "
+         "MEASURES MATCH_NUMBER() AS n PATTERN (A+) DEFINE A AS s = 'x') "
+         "WHERE n > 1", "trailing"),
+    ]
+    for q, msg in cases:
+        with pytest.raises(ValueError, match=msg):
+            mrz_eng.sql(q)

@@ -7,8 +7,12 @@ outside literals."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from oss_data_lake_spark.engine import Engine
+from tests.hostile import STRUCTURE, payloads, quote
 
 
 @pytest.fixture()
@@ -112,3 +116,66 @@ def test_describe_input_and_output(eng):
     assert eng.sql("SELECT COUNT(*) AS n FROM items").collect()[0]["n"] == 3
     with pytest.raises(ValueError, match="no prepared statement"):
         eng.sql("DESCRIBE INPUT ghost")
+
+
+# --------------- prepared-statement parameters carrying hostile literals
+
+_payload = payloads(STRUCTURE, max_size=16)
+
+
+@settings(
+    max_examples=30, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_payload)
+def test_execute_parameter_differential(hostile_eng, p):
+    """EXECUTE ... USING '<hostile>' must select exactly the rows Spark
+    says match the equality — the parameter splice can neither leak
+    structure nor corrupt neighbors."""
+    e, _t, base = hostile_eng
+    e.sql("PREPARE fz FROM SELECT k FROM t WHERE s = ? OR k = ?")
+    got = sorted(
+        r["k"]
+        for r in e.sql(f"EXECUTE fz USING {quote(p)}, 3").collect()
+    )
+    want = sorted(
+        r["k"]
+        for r in base.filter(
+            (F.col("s") == F.lit(p)) | (F.col("k") == 3)
+        ).collect()
+    )
+    assert got == want, (p, got, want)
+
+
+@settings(max_examples=50, deadline=None)
+@given(st.lists(_payload, min_size=1, max_size=4))
+def test_using_arg_splitter_arity(args):
+    """The depth-0 comma split over USING text must recover exactly the
+    quoted arguments, whatever their content."""
+    text = ", ".join(quote(a) for a in args)
+    got = Engine._split_using_args(text)
+    assert got == [quote(a) for a in args]
+
+
+@settings(max_examples=50, deadline=None)
+@given(st.lists(st.booleans(), min_size=0, max_size=6), _payload)
+def test_param_positions_skip_literal_question_marks(slots, p):
+    """`?` markers interleaved with literals CONTAINING `?`: only the
+    bare markers count, at exactly their offsets."""
+    parts, expect = [], []
+    pos = 0
+    for bare in slots:
+        if bare:
+            parts.append("x = ")
+            pos += 4
+            expect.append(pos)
+            parts.append("?")
+            pos += 1
+        else:
+            q = quote(p + "?")
+            parts.append(q)
+            pos += len(q)
+        parts.append(" AND ")
+        pos += 5
+    text = "".join(parts)
+    assert Engine._param_positions(text) == expect

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, given, settings
 
 from oss_data_lake_spark.engine import Engine
+from tests.hostile import QUANTIFIED, payloads, quote
 
 XS = [None, 0, 2, 3, 5, 9]
 B_VARIANTS = {
@@ -207,3 +209,54 @@ def test_quantified_stats_subquery_executes_once(eng, spark):
     df.collect()  # reuse is visible in the EXECUTED plan
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedSubquery" in plan
+
+
+# --- translator keywords inside literals beside a real quantified comparison
+
+_payload = payloads(QUANTIFIED)
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_translator_keywords_inside_literals_stay_data(fz_eng, payload):
+    """A literal carrying quantified / SQL-JSON / information_schema
+    spellings round-trips byte-identically — no translator fires inside
+    it, and the row count of the carrying query is unchanged."""
+    lit = quote(payload)
+    rows = fz_eng.sql(
+        f"SELECT k, {lit} AS s FROM fz WHERE k < 3 ORDER BY k"
+    ).collect()
+    assert [r.k for r in rows] == [0, 1, 2]
+    assert all(r.s == payload for r in rows)
+
+
+@settings(
+    max_examples=25, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_quantified_in_where_with_hostile_literal_beside_it(fz_eng, payload):
+    """A real quantified comparison translates while a hostile literal
+    sits in the same statement — the masked-text scan must not let the
+    literal shift the subquery span."""
+    lit = quote(payload)
+    rows = fz_eng.sql(
+        f"SELECT k, {lit} AS s FROM fz "
+        f"WHERE k > ALL (SELECT k - 19 FROM fz) ORDER BY k"
+    ).collect()
+    assert [r.k for r in rows] == list(range(1, 20))
+    assert all(r.s == payload for r in rows)
+
+
+def test_malformed_quantified_raises_not_corrupts(fz_eng):
+    # unbalanced subquery paren: translator declines; Spark's parser
+    # reports the site
+    with pytest.raises(Exception):
+        fz_eng.sql("SELECT k FROM fz WHERE k > ALL (SELECT k FROM fz")
+    # quantifier over a non-subquery stays Spark's own error (any() is
+    # an aggregate, invalid in WHERE)
+    with pytest.raises(Exception):
+        fz_eng.sql("SELECT k FROM fz WHERE k = ANY (k)")

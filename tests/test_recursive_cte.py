@@ -10,6 +10,8 @@ query walks a real hierarchy."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from oss_data_lake_spark.engine import Engine
 
@@ -96,3 +98,52 @@ def test_b50_registry_query_matches_duckdb(spark, sf_dir):
     want = con.execute(ORACLES["b50_recursive_user_tree"]).fetchall()
     assert got == want
     assert len(got) >= 3  # a real multi-level hierarchy
+
+
+# ---- recursive CTE differential against DuckDB over generated edge sets
+
+
+@st.composite
+def edge_set(draw):
+    """A random small DAG-ish edge list over nodes 0..9 (child > parent
+    guarantees termination) plus a random depth-limit predicate."""
+    n_edges = draw(st.integers(min_value=0, max_value=14))
+    edges = sorted({
+        (draw(st.integers(1, 9)), draw(st.integers(0, 8)))
+        for _ in range(n_edges)
+        if True
+    })
+    edges = [(c, p) for c, p in edges if c > p]
+    return edges
+
+
+@settings(
+    max_examples=15, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(edge_set())
+def test_recursive_cte_differential_duckdb(spark, edges):
+    """Spark and DuckDB evaluate the IDENTICAL recursive text over the
+    same edge relation: closure row sets must match exactly (child >
+    parent bounds the recursion — no infinite loops by construction)."""
+    import duckdb
+
+    rows = edges or [(1, 0)]
+    df = spark.createDataFrame(rows, "child int, parent int")
+    df.createOrReplaceTempView("fz_edges")
+    q = """
+        WITH RECURSIVE walk(node, depth) AS (
+          SELECT 0, 0
+          UNION ALL
+          SELECT e.child, w.depth + 1
+          FROM {tbl} e JOIN walk w ON e.parent = w.node
+        )
+        SELECT node, depth, COUNT(*) AS n
+        FROM walk GROUP BY node, depth ORDER BY node, depth
+    """
+    got = [tuple(r) for r in spark.sql(q.format(tbl="fz_edges")).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edges (child INT, parent INT)")
+    con.executemany("INSERT INTO edges VALUES (?, ?)", rows)
+    want = [tuple(r) for r in con.execute(q.format(tbl="edges")).fetchall()]
+    assert got == want, (rows, got, want)

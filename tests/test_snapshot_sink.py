@@ -303,6 +303,30 @@ def test_txn_ledger_survives_compaction_and_expiry(spark, tmp_path):
     assert t.read().count() == 80
 
 
+def test_txn_ledger_survives_row_dml_after_expiry(spark, tmp_path, monkeypatch):
+    """A copy-on-write DELETE/UPDATE commit carries its parent's txn
+    ledger as-is: after expire_snapshots has dropped the txn commits'
+    manifests, a re-delivered batch still no-ops, and the DML commit
+    never rebuilds the ledger from the version log."""
+    t = SnapshotTable(spark, str(tmp_path / "dml"))
+    commit_batch(t, _batch(spark, 0, 50), 0, "sink")
+    commit_batch(t, _batch(spark, 50, 80), 1, "sink")
+    t.commit(_batch(spark, 80, 90), mode="append")
+    t.expire_snapshots(keep_last=1)  # the txn commits' manifests are gone
+
+    def no_scan():
+        raise AssertionError("row DML commit scanned the version log")
+
+    monkeypatch.setattr(t, "versions", no_scan)
+    t.delete_where("k < 10")
+    t.update_where("k >= 80", {"v": "v + 1"})
+    monkeypatch.undo()
+    assert t.read().count() == 80
+    assert t.txn_watermark("sink") == 1
+    commit_batch(t, _batch(spark, 50, 80), 1, "sink")  # re-delivery
+    assert t.read().count() == 80, "ledger must survive row-level DML"
+
+
 def test_auto_compact_fires_on_file_count(spark, tmp_path):
     """compact.max-files: streaming small-file accretion self-heals at
     the cap, exactly like delete debt — and the count comes from

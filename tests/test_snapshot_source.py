@@ -5,6 +5,8 @@ resume. Delta readStream parity on the Spark 4 Python DataSource API."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
@@ -1146,3 +1148,42 @@ def test_restart_offer_never_below_restored_position(spark, tmp_path):
     assert r5.latestOffset()["version"] == 1   # stale capped offer
     assert r5.partitions({"version": 4}, {"version": 1}) == []
     assert r5.latestOffset()["version"] >= 4   # clamped to the floor
+
+
+# ----- admission control as a walk over generated commit counts and caps
+
+
+@settings(
+    max_examples=12, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.integers(min_value=1, max_value=7), st.integers(min_value=1, max_value=4))
+def test_paced_offers_cover_every_version_exactly_once(
+    spark, tmp_path_factory, n_commits, cap
+):
+    """Admission control (maxVersionsPerTrigger) as a walk: repeated
+    latestOffset/commit must advance monotonically in steps <= cap and
+    terminate exactly at the head — no version skipped, none repeated,
+    no offer past the head."""
+    root = tmp_path_factory.mktemp("fp")
+    t = SnapshotTable(spark, str(root / "t"))
+    for i in range(n_commits):
+        t.commit(spark.createDataFrame([Row(k=i)]), mode="append")
+    src = SnapshotStreamSource(
+        options={"path": t.path, "maxVersionsPerTrigger": str(cap)}
+    )
+    r = src.streamReader(None)
+    seen, prev, steps = [], 0, 0
+    while True:
+        off = r.latestOffset()["version"]
+        assert off <= n_commits, "offer past the head"
+        if off == prev:
+            break
+        assert 1 <= off - prev <= cap, (prev, off, cap)
+        seen.extend(range(prev + 1, off + 1))
+        r.commit({"version": off})
+        prev = off
+        steps += 1
+        assert steps <= n_commits + 1, "walk failed to terminate"
+    assert seen == list(range(1, n_commits + 1))
+    assert steps == -(-n_commits // cap)  # ceil division

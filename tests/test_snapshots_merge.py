@@ -507,6 +507,114 @@ def test_sql_time_travel_error_cleanup_and_conflicts(spark, tmp_path):
         spark.catalog.dropTempView("tbl2")
 
 
+@pytest.fixture()
+def tt_two(spark, tmp_path):
+    """``tt``: v1 holds k=1, v2 appends k=2; commits pinned at
+    2024-01-01 00:00Z and 05:00Z."""
+    import json
+
+    t = SnapshotTable(spark, str(tmp_path / "tt"))
+    t.commit(_df(spark, [(1, "a")]))
+    t.commit(_df(spark, [(2, "b")]), mode="append")
+    for v, hour in ((1, 0), (2, 5)):
+        p = os.path.join(t.path, "_snapshots", f"v{v}.json")
+        m = json.load(open(p))
+        m["committed_at_ms"] = 1704067200000 + hour * 3600_000
+        json.dump(m, open(p, "w"))
+    return t
+
+
+@pytest.mark.parametrize(
+    "spelling",
+    [
+        "SELECT k FROM `tt` FOR VERSION AS OF 1",
+        "SELECT k FROM tt /* c */ FOR VERSION AS OF 1",
+        "SELECT k FROM tt -- c\n FOR VERSION AS OF 1",
+        "SELECT k FROM TT FOR VERSION AS OF 1",
+        "SELECT k FROM Tt FOR SYSTEM_VERSION AS OF 1",
+        "SELECT k FROM tt FOR VERSION AS OF '1' t WHERE t.k > 0",
+        "SELECT k, 'two\nlines' AS s FROM tt FOR VERSION AS OF 1",
+        "SELECT k, 'a\n+- b' AS s FROM tt FOR VERSION AS OF 1",
+    ],
+)
+def test_sql_time_travel_spellings_read_like_the_plain_one(
+    spark, tt_two, spelling
+):
+    """A backquoted, commented, mixed-case or SYSTEM_VERSION spelling of
+    an AS OF reference reads the same rows as the plain lower-case one:
+    references come from Spark's parse, not from a text pattern."""
+    from oss_data_lake_spark.sources.snapshots import sql_with_time_travel
+
+    def rows(q):
+        return sorted(
+            r.k for r in sql_with_time_travel(spark, q, {"tt": tt_two})
+            .collect()
+        )
+
+    assert rows("SELECT k FROM tt FOR VERSION AS OF 1") == [1]
+    assert rows(spelling) == [1]
+
+
+def test_time_travel_inside_explain_and_describe_query(spark, tt_two):
+    """EXPLAIN and DESCRIBE QUERY hold their query outside the parsed
+    tree's node numbering; their AS OF references still resolve."""
+    from oss_data_lake_spark.sources.snapshots import sql_with_time_travel
+
+    def run(q):
+        return sql_with_time_travel(spark, q, {"tt": tt_two}).collect()
+
+    cols = run("DESCRIBE QUERY SELECT k FROM tt FOR VERSION AS OF 1")
+    assert [r.col_name for r in cols] == ["k"]
+    (plan,) = run("EXPLAIN SELECT k FROM Tt FOR VERSION AS OF 1")
+    assert "Scan" in plan.plan
+
+
+def test_table_changes_name_resolves_case_insensitively(spark, tt_two):
+    from oss_data_lake_spark.sources.snapshots import sql_with_time_travel
+
+    def rows(q):
+        return sorted(
+            tuple(r) for r in sql_with_time_travel(spark, q, {"tt": tt_two})
+            .select("k", "_change_type", "_commit_version").collect()
+        )
+
+    want = rows("SELECT * FROM table_changes('tt', 1)")
+    assert want == [(1, "insert", 1), (2, "insert", 2)]
+    assert rows("SELECT * FROM table_changes('TT', 1)") == want
+    assert rows("SELECT * FROM TABLE_CHANGES(/* c */ 'Tt', 2)") == want[1:]
+
+
+def test_typed_timestamp_literal_under_non_utc_session_zone(spark, tt_two):
+    """``TIMESTAMP '...'`` resolves the instant its text names: an
+    explicit offset is honored and a naive literal is UTC, whatever the
+    session time zone (Spark prints a typed literal converted to the
+    session zone, so the printed value would say 03:00 in New York)."""
+    from oss_data_lake_spark.sources.snapshots import sql_with_time_travel
+
+    def rows(q):
+        return sorted(
+            r.k for r in sql_with_time_travel(spark, q, {"tt": tt_two})
+            .collect()
+        )
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        # 10:00+02:00 is 08:00Z, after v2's 05:00Z commit
+        for lit in ("TIMESTAMP '2024-01-01 10:00:00+02:00'",
+                    "'2024-01-01 10:00:00+02:00'"):
+            assert rows(f"SELECT k FROM tt FOR TIMESTAMP AS OF {lit}") == [
+                1, 2
+            ]
+        # a naive literal is UTC: 04:00Z precedes v2
+        assert rows(
+            "SELECT k FROM tt FOR TIMESTAMP AS OF TIMESTAMP "
+            "'2024-01-01 04:00:00'"
+        ) == [1]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
 def test_mor_merge_fast_path_requires_matching_key_names(spark, tmp_path):
     """ON t.k = s.nk with star clauses must NOT silently take the
     merge_rows_mor route (which keys on the TARGET name) — it falls

@@ -17,11 +17,12 @@ it. These properties pin the masked-scan discipline:
 
 Identifier/reserved-word policy (documented): unquoted identifiers are
 ``[A-Za-z_][\\w.]*`` exactly; back-quoted identifiers pass through to
-Spark untouched (the engine's rewrites only ever fire on plain names,
-so a backtick identifier can never be misrouted — it simply does not
-participate in time travel / metadata rewrites); double-quoted text is
-treated as a literal (Spark's default non-ANSI mode), so not rewriting
-inside it is sound in both parser modes."""
+Spark untouched (the text rewrites only ever fire on plain names, so a
+backtick identifier can never be misrouted; time-travel references come
+from Spark's parse, so a back-quoted name time-travels like a plain
+one); double-quoted text is treated as a literal (Spark's default
+non-ANSI mode), so not rewriting inside it is sound in both parser
+modes."""
 
 from __future__ import annotations
 
@@ -224,10 +225,12 @@ def test_split_keeps_literal_semicolons_intact(p):
 
 @pytest.fixture(scope="module")
 def fuzz_eng(spark, tmp_path_factory):
-    """``t``: k = 0..39; ``u``: k = 20..59 (so a join of the two has
-    unmatched rows on both sides), both registered, four files each so
-    that pruning has files to drop; ``fz_t`` / ``fz_u`` are plain temp
-    views of the same rows, for Spark-as-oracle runs."""
+    """``t``: k = 0..39 at its head, version 2, and the even k at
+    version 1; ``u``: k = 20..59 (so a join of the two has unmatched rows
+    on both sides), both registered, four files per version so that
+    pruning has files to drop; ``fz_t`` / ``fz_u`` / ``fz_t1`` are plain
+    temp views of the same rows (``fz_t1`` of ``t`` at version 1), for
+    Spark-as-oracle runs."""
     root = tmp_path_factory.mktemp("fuzz")
     e = Engine(spark=spark, warehouse_dir=str(root / "wh"))
     svals = TRICKY + ["plain", None, "x"]
@@ -242,16 +245,21 @@ def fuzz_eng(spark, tmp_path_factory):
     schema = "k long, s string, d double"
     for name, ks in (("t", range(40)), ("u", range(20, 60))):
         tbl = SnapshotTable(spark, str(root / name))
-        tbl.commit_clustered(spark.createDataFrame(rows(ks), schema),
-                             cluster_by="k", n_files=4, stats_for=["k", "d"])
+        versions = [range(0, 40, 2)] if name == "t" else []
+        for vks in versions + [ks]:
+            tbl.commit_clustered(
+                spark.createDataFrame(rows(vks), schema),
+                cluster_by="k", n_files=4, stats_for=["k", "d"],
+            )
         e._snapshot_tables[name] = tbl
         spark.createDataFrame(rows(ks), schema).createOrReplaceTempView(
             f"fz_{name}"
         )
+    e._snapshot_tables["t"].read(version=1).createOrReplaceTempView("fz_t1")
     base = spark.createDataFrame(rows(range(40)), schema).cache()
     base.count()
     yield e, e._snapshot_tables["t"], base
-    for name in ("fz_t", "fz_u"):
+    for name in ("fz_t", "fz_u", "fz_t1"):
         spark.catalog.dropTempView(name)
 
 
@@ -286,7 +294,8 @@ def condition(draw, depth=0):
 
 # query shapes around one WHERE condition ``{c}``, and the qualifier its
 # columns take there; ``{t}`` / ``{u}`` are the registered tables, or
-# their unpruned temp views for the oracle
+# their unpruned temp views for the oracle, and ``{t1}`` is ``t`` at
+# version 1: an AS OF spelling, or ``fz_t1`` for the oracle
 SHAPES = {
     "plain": ("SELECT k FROM {t} WHERE {c}", ""),
     "aliased": ("SELECT a.k FROM {t} a WHERE {c}", "a."),
@@ -307,32 +316,51 @@ SHAPES = {
         "",
     ),
     "cte": ("WITH a AS (SELECT * FROM {t} WHERE {c}) SELECT k FROM a", ""),
+    "as_of": ("SELECT k FROM {t1} WHERE {c}", ""),
+    "as_of_beside_head": (
+        "SELECT a.k FROM {t1} a JOIN {t} b ON a.k = b.k WHERE {c}", "a."
+    ),
+    "as_of_shaped_text": (
+        "SELECT k, 'u FOR VERSION AS OF 2' AS x /* t FOR VERSION AS OF 2 */ "
+        "FROM {t1} -- table_changes('t', 1)\n WHERE {c}",
+        "",
+    ),
 }
+# spellings of ``t FOR VERSION AS OF 1``, with AS-OF-shaped comments
+AS_OF_T1 = [
+    "t FOR VERSION AS OF 1",
+    "`t` /* FOR VERSION AS OF 2 */ FOR VERSION AS OF 1",
+    "T -- u FOR VERSION AS OF 2\n VERSION AS OF 1",
+]
 _COLUMN_RE = re.compile(r"\b([ksd])\b")
 
 
-def _shaped(shape: str, cond: str, t: str, u: str) -> str:
+def _shaped(shape: str, cond: str, t: str, u: str, t1: str) -> str:
     tpl, qual = SHAPES[shape]
     qual = qual.format(t=t)
     if qual:
         cond = _sub_outside_literals(
             _COLUMN_RE, lambda m: qual + m.group(1), cond
         )
-    return tpl.format(t=t, u=u, c=cond)
+    return tpl.format(t=t, u=u, c=cond, t1=t1)
 
 
 @settings(
     max_examples=40, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(condition(), st.sampled_from(sorted(SHAPES)))
-def test_select_differential_spark_is_the_oracle(spark, fuzz_eng, cond, shape):
-    """Engine.sql SELECT (predicate extraction + file-pruned views) must
-    equal Spark's own evaluation of the identical statement over
-    unpruned views — under-extraction may cost pruning, never rows."""
+@given(condition(), st.sampled_from(sorted(SHAPES)),
+       st.sampled_from(AS_OF_T1))
+def test_select_differential_spark_is_the_oracle(
+    spark, fuzz_eng, cond, shape, as_of
+):
+    """Engine.sql SELECT (predicate extraction + file-pruned views, time
+    travel included) must equal Spark's own evaluation of the identical
+    statement over unpruned views — under-extraction may cost pruning,
+    never rows."""
     e, _t, base = fuzz_eng
-    got = e.sql(_shaped(shape, cond, "t", "u")).collect()
-    want = spark.sql(_shaped(shape, cond, "fz_t", "fz_u")).collect()
+    got = e.sql(_shaped(shape, cond, "t", "u", as_of)).collect()
+    want = spark.sql(_shaped(shape, cond, "fz_t", "fz_u", "fz_t1")).collect()
     got, want = sorted(r["k"] for r in got), sorted(r["k"] for r in want)
     assert got == want, (shape, cond)
     if shape == "plain":

@@ -221,6 +221,36 @@ def test_point_lookup_py4j_round_trip_budget(spark, tmp_path):
     assert e.sql(q).first()["s"] == "n7"
 
 
+def test_versioned_point_lookup_py4j_round_trip_budget(spark, tmp_path):
+    """A ``FOR VERSION AS OF`` point lookup measured 24 py4j calls when
+    regexes found the clause. Its span now comes from the parse: the
+    numbered tree once, then the one time-travel node, its JSON and the
+    origins of the node and of its name, 10 calls in all."""
+    e = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    schema = ("k bigint, c int, p double, s string, b boolean, q bigint, "
+              "f string, d double")
+    t.commit(
+        spark.createDataFrame(
+            [(i, i % 7, float(i), f"n{i}", i % 2 == 0, i * 10, "x", 0.5)
+             for i in range(40)],
+            schema,
+        ),
+        stats_for=["k"],
+    )
+    t.commit(
+        spark.createDataFrame([(7, 0, 0.0, "new", True, 0, "y", 0.0)],
+                              schema),
+        mode="append",
+    )
+    e._snapshot_tables["rt_budget"] = t
+    q = "SELECT * FROM rt_budget FOR VERSION AS OF 1 WHERE k = 7"
+    assert e.sql(q).count() == 1  # warm: manifest cache, JVM classes
+    n = _py4j_calls(lambda: e.sql(q))
+    assert n <= 34, n
+    assert e.sql(q).first()["s"] == "n7"
+
+
 def test_one_parse_per_statement(spark, tmp_path, monkeypatch):
     """Table references and file-skipping conjuncts come from one call
     to Spark's parser per statement, and none when the statement names
@@ -252,6 +282,22 @@ def test_one_parse_per_statement(spark, tmp_path, monkeypatch):
     calls.clear()
     assert e.sql("SELECT count(*) AS n FROM range(5)").first()["n"] == 5
     assert calls == []
+    # an alias that starts with "of" is not an AS OF clause
+    assert e.sql("SELECT 1 AS offset").first()["offset"] == 1
+    assert calls == []
+    # time-travel references come from the same one parse
+    v = t.commit(spark.createDataFrame([(100, 1.0)], "k bigint, v double"),
+                 mode="append")
+    calls.clear()
+    assert e.sql(
+        "SELECT count(*) AS n FROM rt_budget FOR VERSION AS OF 1"
+    ).first()["n"] == 20
+    assert calls == ["parsePlan"]
+    calls.clear()
+    assert e.sql(
+        f"SELECT count(*) AS n FROM table_changes('rt_budget', {v})"
+    ).first()["n"] == 1
+    assert calls == ["parsePlan"]
 
 
 def test_try_cast_keeps_escape_mode(spark):

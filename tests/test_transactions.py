@@ -11,11 +11,14 @@ file pins the single-table fast path."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.sources.catalog import CommitConflict
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
+from tests.hostile import STRUCTURE, payloads, quote
 
 
 @pytest.fixture()
@@ -166,3 +169,45 @@ def test_txn_under_merge_on_read_mode(spark, eng):
     m = t._manifest(t.current_version())
     assert not m.get("delete_dirs") and not m.get("eq_deletes")
     assert t.branches() == {}
+
+
+# -------------------------- hostile literals staged inside a transaction
+
+_payload = payloads(STRUCTURE, max_size=16)
+
+
+@settings(
+    max_examples=10, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_payload, st.booleans())
+def test_txn_staged_hostile_writes_are_atomic(
+    spark, tmp_path_factory, p, commit
+):
+    """Hostile string literals staged INSIDE a transaction stay
+    invisible to other readers until COMMIT; ROLLBACK leaves no trace.
+    The payload exercises the statement grammar end-to-end (BEGIN
+    routing, INSERT masking, branch read-your-writes, publish)."""
+    root = tmp_path_factory.mktemp("ft")
+    e = Engine(spark=spark, warehouse_dir=str(root / "wh"))
+    for name in ("t1", "t2"):
+        t = SnapshotTable(spark, str(root / name))
+        t.commit(spark.createDataFrame([Row(k=0, s="seed")]))
+        e._snapshot_tables[name] = t
+    outside1 = SnapshotTable(spark, str(root / "t1"))
+    lit = quote(p)
+    e.sql("BEGIN TRANSACTION ON t1, t2")
+    e.sql(f"INSERT INTO t1 VALUES (1, {lit})")
+    e.sql(f"INSERT INTO t2 VALUES (2, {lit})")
+    # read-your-writes inside; invisible outside
+    assert e.sql(f"SELECT k FROM t1 WHERE s = {lit} AND k = 1").count() == 1
+    assert outside1.read().filter("k = 1").count() == 0
+    if commit:
+        e.sql("COMMIT TRANSACTION ON t1, t2")
+        assert [
+            r["s"] for r in outside1.read().filter("k = 1").collect()
+        ] == [p]
+    else:
+        e.sql("ROLLBACK TRANSACTION ON t1, t2")
+        assert outside1.read().filter("k = 1").count() == 0
+        assert outside1.current_version() == 1

@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, given, settings
 
 from oss_data_lake_spark.engine import Engine
+from tests.hostile import DIALECT, payloads, quote
 
 
 @pytest.fixture(scope="module")
@@ -931,3 +933,131 @@ def test_trino_ddl_type_words_as_column_names_survive(spark, tmp_path):
           "(1.5, 2, 'x', TIMESTAMP '2024-01-02 03:04:05')")
     row = e.sql("SELECT real, varbinary, varchar FROM twords").collect()[0]
     assert (row["real"], row["varbinary"], row["varchar"]) == (1.5, 2, "x")
+
+
+# --- SQL/JSON and paging spellings, and dialect spellings inside literals
+
+_payload = payloads(DIALECT)
+
+
+def test_sql_json_clause_refusals_are_precise(fz_eng):
+    with pytest.raises(ValueError, match="ON EMPTY"):
+        fz_eng.sql("SELECT json_value('{\"a\":1}', "
+                   "'$.a' DEFAULT 0 ON EMPTY) AS v")
+    with pytest.raises(ValueError, match="string literal"):
+        fz_eng.sql("SELECT json_value('{\"a\":1}', k) AS v FROM fz")
+
+
+def test_sql_json_nested_calls_translate(fz_eng):
+    got = fz_eng.sql(
+        "SELECT json_value(json_query('{\"a\": {\"b\": 7}}', '$.a'), "
+        "'$.b' RETURNING BIGINT) AS v"
+    ).collect()[0]["v"]
+    assert got == 7
+
+
+def test_fetch_first_offset_rows_translate(fz_eng):
+    """ANSI paging (DBeaver-class BI emits it): OFFSET n ROWS /
+    FETCH FIRST n ROWS ONLY / the combined ANSI ordering, vs the same
+    paging in Spark's native LIMIT/OFFSET spellings."""
+    base = "SELECT k FROM fz ORDER BY k "
+    want = [r.k for r in fz_eng.sql(base + "LIMIT 3 OFFSET 2").collect()]
+    assert want == [2, 3, 4]
+    for ansi in [
+        "OFFSET 2 ROWS FETCH FIRST 3 ROWS ONLY",
+        "OFFSET 2 ROWS FETCH NEXT 3 ROWS ONLY",
+    ]:
+        got = [r.k for r in fz_eng.sql(base + ansi).collect()]
+        assert got == want, ansi
+    assert [r.k for r in fz_eng.sql(
+        base + "FETCH FIRST ROW ONLY").collect()] == [0]  # default n=1
+    assert [r.k for r in fz_eng.sql(
+        base + "OFFSET 18 ROWS").collect()] == [18, 19]
+    with pytest.raises(ValueError, match="WITH TIES"):
+        fz_eng.sql(base + "FETCH FIRST 3 ROWS WITH TIES")
+    # the spelling inside a literal stays data
+    s = fz_eng.sql(
+        "SELECT 'OFFSET 2 ROWS FETCH FIRST 3 ROWS ONLY' AS s"
+    ).collect()[0]["s"]
+    assert s == "OFFSET 2 ROWS FETCH FIRST 3 ROWS ONLY"
+
+
+@settings(
+    max_examples=60, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_dialect_spellings_inside_literals_are_data(eng, payload):
+    """SELECT '<payload>' round-trips byte-for-byte even when the
+    payload spells a dialect function, a unit form, or AT TIME ZONE —
+    the masked-text matchers must never fire inside the literal."""
+    got = eng.sql(
+        f"SELECT {quote(payload)} AS s, strpos({quote(payload)}, 'x') "
+        f"AS p"
+    ).collect()[0]
+    assert got.s == payload
+    assert got.p == (payload.find("x") + 1)
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_dialect_call_over_hostile_literal_argument(eng, payload):
+    """A REAL dialect call whose string argument is hostile: the
+    translation rewrites the call but embeds the literal unchanged."""
+    got = eng.sql(
+        f"SELECT format_datetime(TIMESTAMP '2020-03-04 05:06:07', "
+        f"'yyyy-MM-dd') AS f, {quote(payload)} AS s"
+    ).collect()[0]
+    assert got.f == "2020-03-04" and got.s == payload
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_at_time_zone_zone_literal_is_never_payload(eng, payload):
+    """AT TIME ZONE with the payload in a NEIGHBORING literal: the zone
+    argument detection must bind the adjacent literal, not scan into
+    (or past) other strings."""
+    got = eng.sql(
+        f"SELECT CAST(TIMESTAMP '2020-01-01 01:30:00' "
+        f"AT TIME ZONE 'America/New_York' AS DATE) AS d, "
+        f"{quote(payload)} AS s"
+    ).collect()[0]
+    assert str(got.d) == "2019-12-31" and got.s == payload
+
+
+def test_composed_dialect_statement_with_every_seam(eng):
+    """One statement exercising every dialect rewrite plus hostile
+    literals simultaneously — the translator chain must compose."""
+    row = eng.sql(
+        "SELECT strpos('date_diff(''day'' AT TIME ZONE', 'TIME') AS p, "
+        "date_diff('hour', TIMESTAMP '2020-01-01 00:00:00', "
+        "          date_add('minute', 90, "
+        "                   TIMESTAMP '2020-01-01 00:00:00')) AS h, "
+        "format_datetime(TIMESTAMP '2020-01-01 00:00:00' "
+        "                AT TIME ZONE 'Asia/Kolkata', 'HH:mm') AS k, "
+        "approx_distinct(1) AS a"
+    ).collect()[0]
+    assert row.p == 20  # 'TIME' in "date_diff('day' AT TIME ZONE"
+    assert row.h == 1            # 90 min, elapsed whole hours
+    assert row.k == "05:30"      # the half-hour zone through both layers
+    assert row.a == 1
+
+
+def test_braces_in_literal_arguments_survive(eng):
+    """str.format-style braces inside a literal argument of a translated
+    call must pass through verbatim (the substitution templates use
+    plain text replacement, never str.format over user SQL)."""
+    row = eng.sql(
+        "SELECT format('%s={x}{unbalanced', 'v') AS f, "
+        "strpos('{a}{b}', '{b}') AS p, "
+        "day_of_week(TIMESTAMP '2020-01-01 00:00:00') AS d"
+    ).collect()[0]
+    assert row.f == "v={x}{unbalanced"
+    assert row.p == 4
+    assert row.d == 3

@@ -15,15 +15,17 @@ UNNEST claims, each pinned:
    Spark cannot type — all raise with the supported grammar; nothing
    is silently approximated.
 4. LITERAL SAFETY — UNNEST text inside a string literal is data
-   (fuzzed in test_statement_fuzz_r14.py; spot-pinned here).
+   (fuzzed and spot-pinned here).
 """
 
 from __future__ import annotations
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, given, settings
 
 from oss_data_lake_spark.engine import Engine
+from tests.hostile import UNNEST, payloads, quote
 
 
 @pytest.fixture(scope="module")
@@ -411,3 +413,71 @@ def test_unnest_property_differential_vs_duckdb(eng, duck):
             key=lambda t: (t[1],),
         )
         assert got == want, (case, arr_sql, got, want)
+
+
+# ---------------- UNNEST and EXECUTE IMMEDIATE spellings inside literals
+
+_payload = payloads(UNNEST)
+
+
+@settings(
+    max_examples=60, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_unnest_spellings_inside_literals_are_data(eng, payload):
+    """SELECT '<payload>' round-trips byte-for-byte even when the
+    payload spells an UNNEST clause, WITH ORDINALITY, or EXECUTE
+    IMMEDIATE — the masked-text matchers must never fire inside the
+    literal."""
+    got = eng.sql(
+        f"SELECT {quote(payload)} AS s, length({quote(payload)}) AS n"
+    ).collect()[0]
+    assert got.s == payload
+    assert got.n == len(payload)
+
+
+@settings(
+    max_examples=60, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_execute_immediate_roundtrips_hostile_payload(eng, payload):
+    """EXECUTE IMMEDIATE 'SELECT ''<payload-doubled>'' AS s' must
+    yield the payload exactly: the unwrap undoubles ONCE, the inner
+    statement's own literal grammar handles the rest."""
+    inner = f"SELECT {quote(payload)} AS s"
+    stmt = "EXECUTE IMMEDIATE " + quote(inner)
+    got = eng.sql(stmt).collect()[0]
+    assert got.s == payload
+
+
+@settings(
+    max_examples=40, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(payload=_payload)
+def test_real_unnest_next_to_hostile_literal(eng, payload):
+    """A REAL UNNEST clause with the hostile payload in a neighboring
+    literal: the rewrite splices around the literal, never into it."""
+    got = sorted(eng.sql(
+        f"SELECT u.v, {quote(payload)} AS s FROM "
+        f"(SELECT array(1, 2) AS a) "
+        f"CROSS JOIN UNNEST(a) WITH ORDINALITY AS u(v, i)"
+    ).collect())
+    assert [r.v for r in got] == [1, 2]
+    assert all(r.s == payload for r in got)
+
+
+def test_composed_unnest_statement_with_every_seam(eng):
+    """One statement exercising the UNNEST rewrite, a translated
+    function in its argument, EXECUTE IMMEDIATE wrapping, and hostile
+    literals simultaneously — the chain must compose."""
+    row = eng.sql(
+        "EXECUTE IMMEDIATE 'SELECT u.v AS v, u.i AS i, "
+        "strpos(''CROSS JOIN UNNEST('', ''UNNEST'') AS p "
+        "FROM (SELECT array(10, 20) AS a) "
+        "CROSS JOIN UNNEST(slice(a, 1, 1)) WITH ORDINALITY AS u(v, i)'"
+    ).collect()
+    assert len(row) == 1
+    assert (row[0].v, row[0].i, row[0].p) == (10, 1, 12)

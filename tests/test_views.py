@@ -7,11 +7,16 @@ the CURRENT snapshot — never materialized, never stale."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
+from hypothesis import HealthCheck, given, settings
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from oss_data_lake_spark.engine import Engine
 from oss_data_lake_spark.sources.snapshots import SnapshotTable
+from tests.hostile import STRUCTURE, payloads, quote
 
 
 @pytest.fixture()
@@ -206,3 +211,33 @@ def test_view_backed_results_survive_view_drop(spark, tmp_path):
     )  # the expansion was dropped before we collect
     assert [r["k"] for r in df.collect()] == [2, 3]
     assert [r["k"] for r in df.collect()] == [2, 3]  # re-executable
+
+
+# ---------------------- persistent-view bodies carrying hostile literals
+
+_payload = payloads(STRUCTURE, max_size=16)
+
+
+@settings(
+    max_examples=25, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_payload)
+def test_view_bodies_with_hostile_literals(hostile_eng, p):
+    """A persistent view whose body carries a literal full of SQL
+    structure must store, SHOW, and re-plan it verbatim: reading the
+    view equals Spark's own evaluation of the body's predicate."""
+    e, _t, base = hostile_eng
+    lit = quote(p)
+    name = f"v_{uuid.uuid4().hex[:8]}"
+    e.sql(f"CREATE VIEW {name} AS SELECT k, s FROM t WHERE s = {lit}")
+    try:
+        shown = e.sql(f"SHOW CREATE VIEW {name}").collect()[0]["stmt"]
+        assert lit in shown  # round-trips verbatim
+        got = sorted(r["k"] for r in e.sql(f"SELECT k FROM {name}").collect())
+        want = sorted(
+            r["k"] for r in base.filter(F.col("s") == F.lit(p)).collect()
+        )
+        assert got == want, (p, got, want)
+    finally:
+        e.sql(f"DROP VIEW {name}")
