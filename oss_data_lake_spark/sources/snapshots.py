@@ -73,6 +73,13 @@ from oss_data_lake_spark.sources.catalog import (
     CommitProtocol,
     open_protocol,
 )
+from oss_data_lake_spark.sources.commit_edit import (
+    Edit,
+    ManifestBuilder,
+    empty_file_set,
+    file_set,
+    table_fields,
+)
 from oss_data_lake_spark import sqlplan
 from oss_data_lake_spark.sqltext import _masked, _sub_outside_literals
 
@@ -566,148 +573,72 @@ class SnapshotTable:
         # write happened ONCE above, outside any serialization; the cheap
         # metadata tail — txn-idempotence check, parent read, manifest
         # build, version claim, pointer advance — runs through the
-        # table's COMMIT PROTOCOL (``sources/catalog.py``): under the
-        # local flock, or as an optimistic CAS loop against a catalog /
-        # conditional-PUT object store. Either way the idempotence check
-        # and the version claim cannot interleave with another writer's
-        # (the window that would let two re-deliveries of one micro-batch
-        # both land, or two writers claim one version slot). Append
-        # semantics compose across writers: each (re)build reads the
-        # actual parent and prepends its dirs. The build callback is PURE
-        # — optimistic protocols re-run it per claim race.
-        def build(parent: int | None, read_manifest) -> dict | int:
-            # ONE parent read serves the idempotence check and every
-            # field the outgoing manifest carries forward
-            pm = read_manifest(parent) if parent else None
-            wm = self._watermarks_of(pm)
-            if txn_app is not None and not txn_force:
-                entry = wm.get(txn_app)
-                if entry is not None and entry["version"] >= txn_version:
-                    return entry["snapshot"]  # re-delivery; dir orphaned
-            version = (parent or 0) + 1
+        # table's COMMIT PROTOCOL (``sources/catalog.py``) as one
+        # ``Edit``. Append semantics compose across writers: each
+        # (re)build reads the actual parent and prepends its dirs.
+        names = [f.name for f in df.schema.fields]
+        schema = df.schema.jsonValue()
+        # the WRITE schema includes the hidden transform columns so their
+        # path-segment values parse under the declared type; the snapshot
+        # schema (original df) excludes them
+        write_schema = write_df.schema.jsonValue()
+        append = mode == "append"
+
+        def check(parent, pm, read_manifest) -> None:
+            if append and pm:
+                self._check_evolution(self._schema_of(pm), df.schema)
+
+        def files(pm: dict | None) -> dict:
             # stable column identity (field ids): names the parent knows
             # keep their ids across appends AND overwrites; new names get
             # fresh ids — the substrate for RENAME COLUMN
-            field_ids, last_fid = self._next_field_ids(
-                pm, [f.name for f in df.schema.fields]
-            )
-            dirs = [data_dir]
-            specs = {data_dir: list(phys_cols)}
-            tr_map = {data_dir: transforms} if transforms else {}
-            # the WRITE schema includes the hidden transform columns so
-            # their path-segment values parse under the declared type;
-            # the snapshot schema (original df) excludes them
-            dir_schemas = {data_dir: write_df.schema.jsonValue()}
-            dir_field_ids = {data_dir: field_ids}
-            file_stats = {data_dir: own_stats} if own_stats else {}
-            dir_files: dict = {}
-            delete_dirs: list = []
-            eq_deletes: list = []
-            if mode == "append" and parent:
-                self._check_evolution(self._schema_of(pm), df.schema)
-                dirs = pm["data_dirs"] + dirs
-                specs = {**pm.get("partition_specs", {}), **specs}
-                tr_map = {**pm.get("partition_transforms", {}), **tr_map}
-                dir_schemas = {**pm.get("dir_schemas", {}), **dir_schemas}
-                dir_field_ids = {
-                    **pm.get("dir_field_ids", {}), **dir_field_ids,
-                }
-                # append keeps the parent's full name→id map (its dirs
-                # stay resolvable even for columns this append lacks)
-                field_ids = {**pm.get("field_ids", {}), **field_ids}
-                file_stats = {**pm.get("file_stats", {}), **file_stats}
-                # row-level rewrites shrink per-dir visibility; appends
-                # carry the parent's visible sets AND delete vectors
-                # forward unchanged (overwrite starts clean)
-                dir_files = dict(pm.get("dir_files", {}))
-                delete_dirs = list(pm.get("delete_dirs", []))
-                eq_deletes = list(pm.get("eq_deletes", []))
+            ids, _ = self._next_field_ids(pm, names)
+            own = {
+                "data_dirs": [data_dir],
+                "partition_specs": {data_dir: list(phys_cols)},
+                "partition_transforms": (
+                    {data_dir: transforms} if transforms else {}
+                ),
+                "dir_schemas": {data_dir: write_schema},
+                "dir_field_ids": {data_dir: ids},
+                "file_stats": {data_dir: own_stats} if own_stats else {},
+            }
+            if not (append and pm):
+                return {**empty_file_set(), **own}  # overwrite starts clean
+            # append: the parent's dirs, then this commit's; visibility
+            # and delete state carry forward unchanged
             return {
-                "version": version,
-                "parent": parent,
-                "mode": tag or mode,
-                "data_dirs": dirs,
-                # per-directory partition spec (spec evolution: dirs
-                # written under older specs keep them; absent key =
-                # unpartitioned)
-                "partition_specs": specs,
-                # hidden-partition transform specs per dir (absent =
-                # every spec entry is an identity/visible column)
-                "partition_transforms": tr_map,
-                # per-directory WRITE schema: reads pass it to the reader
-                # so partition-column values round-trip by declared type
-                # (no directory-name type inference — '01' stays '01') and
-                # data columns read under their exact written types before
-                # the snapshot-schema projection upcasts them
-                "dir_schemas": dir_schemas,
-                # per-dir VISIBLE-file subsets (absent key = whole dir):
-                # copy-on-write DML shrinks these instead of deleting data
-                "dir_files": dir_files,
-                # merge-on-read tombstone dirs (anti-joined at read time)
-                "delete_dirs": delete_dirs,
-                # outstanding equality deletes (keys + applicable dirs)
-                "eq_deletes": eq_deletes,
-                # the table schema AS OF this snapshot: appends adopt the
-                # new (possibly evolved) write schema — older files are
-                # projected onto it at read time
-                "schema": df.schema.jsonValue(),
-                # stable column identity: current name → field id, the
-                # per-dir write-time mappings, and the id high-water
-                "field_ids": field_ids,
-                "dir_field_ids": dir_field_ids,
-                "last_field_id": last_fid,
-                # per-dir per-file column bounds (Iceberg manifest stats)
-                # — absent key = no stats = never skipped
-                "file_stats": file_stats,
-                # writer identity for idempotent commits (Delta txnAppId
-                # protocol); None for plain commits
-                "txn": (
-                    {"app": txn_app, "version": txn_version}
-                    if txn_app is not None
-                    else None
-                ),
-                # per-app high-water txn versions, carried FORWARD through
-                # every commit (incl. plain/compaction commits): the
-                # idempotence check reads ONLY the current manifest — O(1)
-                # instead of an O(#snapshots) scan — and survives
-                # expire_snapshots deleting the original commit's manifest
-                "txn_watermarks": self._next_watermarks(
-                    wm, txn_app, txn_version, version
-                ),
-                # table-level CHECK constraints survive every commit kind
-                # (like Delta table properties — an overwrite reshapes
-                # data, not the quality contract)
-                "constraints": (pm or {}).get("constraints", {}),
-                "properties": {
-                    **(pm or {}).get("properties", {}),
-                    **(props_update or {}),
-                },
-                # table-level metadata that survives every commit kind:
-                # the DECLARED partition spec (ALTER ... PARTITION FIELD
-                # — a plain commit must not erase the layout future
-                # writes adopt) and ANALYZE statistics (stale-until-
-                # re-analyzed semantics, like any CBO stats)
-                "declared_partition_by": (
-                    pm.get("declared_partition_by") if pm else None
-                ),
-                "declared_sort_order": (
-                    pm.get("declared_sort_order") if pm else None
-                ),
-                "table_stats": pm.get("table_stats") if pm else None,
-                # column DEFAULTs survive every commit kind for columns
-                # the new schema still carries (an overwrite reshaping a
-                # column away drops its default with it)
-                "column_defaults": {
-                    n: e
-                    for n, e in (
-                        ((pm or {}).get("column_defaults")) or {}
-                    ).items()
-                    if n in {f.name for f in df.schema.fields}
-                } or None,
-                "committed_at_ms": int(time.time() * 1000),
+                k: pm.get(k, []) + x if isinstance(x, list)
+                else {**pm.get(k, {}), **x}
+                for k, x in own.items()
             }
 
-        return self.protocol.commit(build)
+        def fields(pm: dict | None) -> dict:
+            ids, last = self._next_field_ids(pm, names)
+            p = pm or {}
+            return {
+                # appends adopt the (possibly evolved) write schema
+                "schema": schema,
+                # append keeps the parent's full name→id map (its dirs
+                # stay resolvable even for columns this append lacks)
+                "field_ids": {**(p.get("field_ids") or {}), **ids}
+                if append else ids,
+                "last_field_id": last,
+                "properties": {
+                    **p.get("properties", {}), **(props_update or {}),
+                },
+                # an overwrite reshaping a column away drops its default
+                "column_defaults": {
+                    n: e
+                    for n, e in (p.get("column_defaults") or {}).items()
+                    if n in names
+                } or None,
+            }
+
+        return self._commit(Edit(
+            tag or mode, files, fields, check,
+            txn=None if txn_app is None else (txn_app, txn_version, txn_force),
+        ))
 
     @staticmethod
     def _transform_expr(tr: dict) -> F.Column:
@@ -877,43 +808,17 @@ class SnapshotTable:
         """Per-app ``{app: {"version": v, "snapshot": k}}`` high-water map
         from the manifest at ``version`` (default: current head)."""
         cur = version if version is not None else self.current_version()
-        return self._watermarks_of(
+        return self._builder().watermarks_of(
             None if cur is None else self._manifest(cur)
         )
 
-    def _watermarks_of(self, m: dict | None) -> dict:
-        """The txn high-water map manifest ``m`` carries ({} for no
-        parent); legacy manifests (pre-watermark) fall back to one full
-        version-log scan. Commit builds pass the parent they read, so
-        the map is consistent with the version they are claiming."""
-        if m is None:
-            return {}
-        if "txn_watermarks" in m:
-            return m["txn_watermarks"]
-        wm: dict = {}
-        for old in self.versions():  # legacy chain: derive once
-            txn = old.get("txn")
-            if txn and (
-                txn["app"] not in wm
-                or txn["version"] > wm[txn["app"]]["version"]
-            ):
-                wm[txn["app"]] = {
-                    "version": txn["version"],
-                    "snapshot": old["version"],
-                }
-        return wm
+    def _builder(self) -> ManifestBuilder:
+        return ManifestBuilder(self.protocol)
 
-    @staticmethod
-    def _next_watermarks(
-        parent_wm: dict,
-        txn_app: str | None,
-        txn_version: int | None,
-        version: int,
-    ) -> dict:
-        wm = dict(parent_wm)
-        if txn_app is not None:
-            wm[txn_app] = {"version": txn_version, "snapshot": version}
-        return wm
+    def _commit(self, edit: Edit) -> int:
+        """Publish ``edit`` through this table's commit protocol — the
+        one way every commit kind lands (``sources/commit_edit.py``)."""
+        return self._builder().commit(edit)
 
     def txn_watermark(self, app: str) -> int | None:
         """The highest transaction version this table has applied for
@@ -996,30 +901,19 @@ class SnapshotTable:
             "unset_properties",
         )
 
-    def _commit_meta(self, key: str, update_fn, tag: str) -> int:
-        """Metadata-only commit updating one manifest map field."""
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError(f"{tag} on an empty table")
-            manifest = dict(read_manifest(parent))
-            manifest[key] = update_fn(dict(manifest.get(key) or {}))
-            return self._child_of(manifest, parent, tag)
-
-        return self.protocol.commit(build)
-
-    def _child_of(self, manifest: dict, parent: int, mode: str) -> dict:
-        """``manifest`` — a copy of ``parent``'s, edited — stamped as
-        its plain child: next version, ``mode``, no txn identity, the
-        parent's txn ledger carried forward."""
-        manifest.update(
-            version=parent + 1,
-            parent=parent,
-            mode=mode,
-            txn=None,
-            txn_watermarks=self._watermarks_of(manifest),
-            committed_at_ms=int(time.time() * 1000),
-        )
-        return manifest
+    def _commit_meta(
+        self, key: str, update_fn, tag: str, check=None
+    ) -> int:
+        """Metadata-only commit setting one table-level field to
+        ``update_fn(the parent's value, {} when unset)``, which builds a
+        new value (the parent's may be the shared cached manifest's);
+        ``check`` is the edit's conflict rule."""
+        return self._commit(Edit(
+            tag,
+            fields=lambda pm: {key: update_fn(pm.get(key) or {})},
+            check=check,
+            on_table=True,
+        ))
 
     # ------------------------------------------------- schema-change DDL
     #
@@ -1064,15 +958,16 @@ class SnapshotTable:
                 )
             return T.StructType(fields)
 
-        def mutate(manifest: dict) -> None:
-            if defaults:
-                cur = dict(manifest.get("column_defaults") or {})
-                for cname, lit in defaults.items():
-                    cur[cname] = {"initial": lit, "write": lit}
-                manifest["column_defaults"] = cur
+        def new_defaults(cur: dict | None) -> dict:
+            return {
+                **(cur or {}),
+                **{c: {"initial": x, "write": x} for c, x in defaults.items()},
+            }
 
         return self._commit_schema(
-            update, f"add_columns_{'_'.join(cols)}", mutate
+            update,
+            f"add_columns_{'_'.join(cols)}",
+            new_defaults if defaults else None,
         )
 
     def drop_columns(self, names: list[str]) -> int:
@@ -1101,17 +996,15 @@ class SnapshotTable:
                 raise ValueError("cannot drop every column")
             return T.StructType(kept)
 
-        def mutate(manifest: dict) -> None:
+        def new_defaults(cur: dict | None) -> dict | None:
             # a re-added same-name column must not inherit the dropped
             # column's default (mirrors the fresh-field-id rule)
-            cur = manifest.get("column_defaults")
-            if cur:
-                manifest["column_defaults"] = {
-                    n: e for n, e in cur.items() if n not in set(names)
-                } or None
+            if not cur:
+                return cur
+            return {n: e for n, e in cur.items() if n not in dropping} or None
 
         return self._commit_schema(
-            update, f"drop_columns_{'_'.join(names)}", mutate
+            update, f"drop_columns_{'_'.join(names)}", new_defaults
         )
 
     def widen_column(self, name: str, type_ddl: str) -> int:
@@ -1522,51 +1415,45 @@ class SnapshotTable:
                 stack.append(bt)
         return out
 
-    def _commit_schema(self, update_fn, tag: str, mutate=None) -> int:
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("schema change on an empty table")
-            manifest = dict(read_manifest(parent))
-            s = manifest.get("schema")
+    def _commit_schema(self, update_fn, tag: str, defaults=None) -> int:
+        """Metadata-only schema change: ``update_fn`` maps the parent's
+        schema to the new one; ``defaults`` (optional) maps the parent's
+        column defaults to the new ones."""
+        def fields(pm: dict) -> dict:
+            s = pm.get("schema")
             if s is None:
                 raise ValueError("schema change needs a schema-carrying snapshot")
             new_schema = update_fn(T.StructType.fromJson(s))
-            manifest["schema"] = new_schema.jsonValue()
-            if mutate is not None:
-                mutate(manifest)
+            out = {"schema": new_schema.jsonValue()}
+            if defaults is not None:
+                out["column_defaults"] = defaults(pm.get("column_defaults"))
             # field-id bookkeeping: dropped names leave the map (their
             # ids stay burned — a re-added same-name column gets a FRESH
             # id, so pre-drop data does not resurface); added names get
             # fresh ids past the high-water
-            if manifest.get("field_ids") is not None:
-                fids, last = self._next_field_ids(
-                    manifest, [f.name for f in new_schema.fields]
+            if pm.get("field_ids") is not None:
+                out["field_ids"], out["last_field_id"] = self._next_field_ids(
+                    pm, [f.name for f in new_schema.fields]
                 )
-                manifest["field_ids"] = fids
-                manifest["last_field_id"] = last
-            return self._child_of(manifest, parent, tag)
+            return out
 
-        return self.protocol.commit(build)
+        return self._commit(Edit(tag, fields=fields, on_table=True))
 
     def _commit_constraints(
         self, update_fn, tag: str, revalidate: tuple | None = None
     ) -> int:
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("constraint change on an empty table")
+        """Set the CHECK constraints to ``update_fn(parent's)``. With
+        ``revalidate = (version, constraints)``, a parent other than the
+        validated ``version`` is validated against ``constraints`` first."""
+        def check(parent, pm, read_manifest) -> None:
             if revalidate is not None and parent != revalidate[0]:
                 self._enforce(
                     revalidate[1],
                     self.read(parent),
                     context="rows committed concurrently with ADD CONSTRAINT",
                 )
-            manifest = dict(read_manifest(parent))
-            manifest["constraints"] = update_fn(
-                dict(manifest.get("constraints", {}))
-            )
-            return self._child_of(manifest, parent, tag)
 
-        return self.protocol.commit(build)
+        return self._commit_meta("constraints", update_fn, tag, check)
 
     def _enforce(
         self, constraints: dict[str, str], df: DataFrame, context: str
@@ -1718,10 +1605,7 @@ class SnapshotTable:
                     "the data is gone"
                 )
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("cherry_pick onto an empty table")
-            head = dict(read_manifest(parent))
+        def check(parent, head: dict, read_manifest) -> None:
             already = [d for d in added if d in head["data_dirs"]]
             if already:
                 raise ValueError(
@@ -1795,7 +1679,9 @@ class SnapshotTable:
                         f"cherry_pick: dir {d!r} uses field ids the head "
                         f"schema no longer carries ({sorted(used - head_ids)})"
                     )
-            head["data_dirs"] = head["data_dirs"] + added
+
+        def files(head: dict) -> dict:
+            out = {"data_dirs": head["data_dirs"] + added}
             for key in (
                 "partition_specs",
                 "partition_transforms",
@@ -1806,63 +1692,33 @@ class SnapshotTable:
                 src = m.get(key, {})
                 picked = {d: src[d] for d in added if d in src}
                 if picked:
-                    head[key] = {**head.get(key, {}), **picked}
-            return self._child_of(head, parent, f"cherry_pick_{version}")
+                    out[key] = {**head.get(key, {}), **picked}
+            return out
 
-        return self.protocol.commit(build)
+        return self._commit(Edit(
+            f"cherry_pick_{version}", files, check=check, on_table=True
+        ))
 
     def rollback(self, version: int) -> int:
         """New snapshot exposing exactly the file set of ``version``.
         Serialized by the same commit protocol as ``commit``."""
         old = self._manifest(version)
-
-        def build(parent: int | None, read_manifest) -> dict:
-            cur = parent or 0
-            # HEAD-owned fields come from the parent, else the rolled-to
-            pm = read_manifest(parent) if parent else None
-            hm = pm or old
-            return {
-                "version": cur + 1,
-                "parent": cur,
-                "mode": f"rollback_to_{version}",
-                "data_dirs": old["data_dirs"],
-                "partition_specs": old.get("partition_specs", {}),
-                "partition_transforms": old.get("partition_transforms", {}),
-                "dir_schemas": old.get("dir_schemas", {}),
-                "dir_files": old.get("dir_files", {}),
-                "delete_dirs": old.get("delete_dirs", []),
-                "eq_deletes": old.get("eq_deletes", []),
-                "file_stats": old.get("file_stats", {}),
-                # rollback restores the rolled-to snapshot's schema too
-                "schema": old.get("schema"),
-                # ...and its column DEFAULTs (schema state, not operator
-                # decision: a column added-with-default after the rolled-
-                # to version leaves, its default must leave with it)
-                "column_defaults": old.get("column_defaults"),
-                "field_ids": old.get("field_ids"),
-                "dir_field_ids": old.get("dir_field_ids", {}),
-                # the id HIGH-WATER follows the head, not the rolled-to
-                # snapshot: ids burned after it must stay burned, or a
-                # post-rollback ADD COLUMN could reuse a live dir's id
-                "last_field_id": hm.get("last_field_id"),
-                # ...but carries the CURRENT head's txn ledger forward —
-                # rolling back data must not roll back applied-batch
-                # memory, or re-deliveries after a rollback double-apply
-                "txn_watermarks": self._watermarks_of(pm),
-                # the quality contract is an operator decision, not data
-                # state: rollback keeps the HEAD's constraints
-                "constraints": (pm or {}).get("constraints", {}),
-                "properties": (pm or {}).get("properties", {}),
-                # layout declarations are operator decisions (HEAD's,
-                # like constraints); table stats describe the file set
-                # this rollback exposes (the rolled-to snapshot's)
-                "declared_partition_by": hm.get("declared_partition_by"),
-                "declared_sort_order": hm.get("declared_sort_order"),
-                "table_stats": old.get("table_stats"),
-                "committed_at_ms": int(time.time() * 1000),
-            }
-
-        return self.protocol.commit(build)
+        # the rolled-to file set, with the schema state that labels it
+        # (schema, field ids, column DEFAULTs: a column added after the
+        # rolled-to version leaves with its default) and the table stats
+        # describing it. Everything else follows the HEAD: the id
+        # high-water (ids burned after the rolled-to version stay
+        # burned), the txn ledger (rolling back data must not roll back
+        # applied-batch memory), and the operator decisions — constraints,
+        # properties, declared layout.
+        return self._commit(Edit(
+            f"rollback_to_{version}",
+            files=file_set(old),
+            fields={
+                k: old.get(k)
+                for k in ("schema", "column_defaults", "field_ids", "table_stats")
+            },
+        ))
 
     # --------------------------------------------- zero-copy shallow clone
     #
@@ -1905,9 +1761,6 @@ class SnapshotTable:
                 return d  # clone of a clone: already external
             return os.path.join(self.path, d)
 
-        def _abs_keys(mapping: dict) -> dict:
-            return {_abs(k): val for k, val in mapping.items()}
-
         def _abs_stats(mapping: dict) -> dict:
             # spilled sidecar references are source-root-relative: the
             # clone keeps them as external absolute refs, exactly like
@@ -1923,52 +1776,40 @@ class SnapshotTable:
         if clone.current_version() is not None:
             raise ValueError(f"clone destination {dest_path} already exists")
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent:
-                raise ValueError(
-                    f"clone destination {dest_path} already exists"
-                )
-            return {
-                "version": 1,
-                "parent": None,
-                "mode": "shallow_clone",
-                "clone_source": {"path": self.path, "version": v},
+        self._carry_ledger_sidecars(self.properties(v), clone.path)
+        clone._commit(Edit(
+            "shallow_clone",
+            files={
+                **empty_file_set(),
                 "data_dirs": [_abs(d) for d in m["data_dirs"]],
-                "declared_partition_by": m.get("declared_partition_by"),
-                "declared_sort_order": m.get("declared_sort_order"),
-                "partition_specs": _abs_keys(m.get("partition_specs", {})),
-                "partition_transforms": _abs_keys(
-                    m.get("partition_transforms", {})
-                ),
-                "dir_schemas": _abs_keys(m.get("dir_schemas", {})),
-                "dir_files": _abs_keys(m.get("dir_files", {})),
-                "delete_dirs": [],
-                "eq_deletes": [],
-                "schema": m.get("schema"),
-                "column_defaults": m.get("column_defaults"),
-                "field_ids": m.get("field_ids"),
-                "dir_field_ids": _abs_keys(m.get("dir_field_ids", {})),
-                "last_field_id": m.get("last_field_id"),
+                **{
+                    k: {_abs(d): x for d, x in m.get(k, {}).items()}
+                    for k in (
+                        "partition_specs",
+                        "partition_transforms",
+                        "dir_schemas",
+                        "dir_files",
+                        "dir_field_ids",
+                    )
+                },
                 "file_stats": _abs_stats(m.get("file_stats", {})),
-                "txn": None,
-                # fresh writer ledger: the clone is a NEW table — source
-                # micro-batch identities must not suppress clone commits
-                "txn_watermarks": {},
-                "constraints": self.constraints(v),
-                # tags name SOURCE version numbers — meaningless (or
-                # wrong) against the clone's own history, so they stay
-                # behind; the rest (delete.mode, ingest ledger, ...)
-                # travels
+            },
+            # the source snapshot's table state; tags name SOURCE version
+            # numbers — meaningless (or wrong) against the clone's own
+            # history, so they stay behind. The clone is a NEW table: its
+            # txn ledger starts empty, so source micro-batch identities
+            # cannot suppress clone commits.
+            fields={
+                **table_fields(m),
                 "properties": {
                     k: val
-                    for k, val in self.properties(v).items()
+                    for k, val in m.get("properties", {}).items()
                     if not k.startswith("tag.")
                 },
-                "committed_at_ms": int(time.time() * 1000),
-            }
-
-        self._carry_ledger_sidecars(self.properties(v), clone.path)
-        clone.protocol.commit(build)
+            },
+            on_table=False,
+            stamp={"clone_source": {"path": self.path, "version": v}},
+        ))
         return clone
 
     @classmethod
@@ -2030,35 +1871,22 @@ class SnapshotTable:
                 )
             )
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent:
-                raise ValueError(
-                    f"convert destination {dest_root} already exists"
-                )
-            return {
-                "version": 1,
-                "parent": None,
-                "mode": "convert",
+        table._commit(Edit(
+            "convert",
+            files={
                 "data_dirs": [src],
                 "partition_specs": {src: list(partition_by or [])},
-                "partition_transforms": {},
                 "dir_schemas": {src: schema.jsonValue()},
-                "dir_files": {},
-                "delete_dirs": [],
-                "eq_deletes": [],
+                "dir_field_ids": {src: fids},
+                "file_stats": {src: own_stats} if own_stats else {},
+            },
+            fields={
                 "schema": schema.jsonValue(),
                 "field_ids": fids,
-                "dir_field_ids": {src: fids},
                 "last_field_id": last,
-                "file_stats": {src: own_stats} if own_stats else {},
-                "txn": None,
-                "txn_watermarks": {},
-                "constraints": {},
-                "properties": {},
-                "committed_at_ms": int(time.time() * 1000),
-            }
-
-        table.protocol.commit(build)
+            },
+            on_table=False,
+        ))
         return table
 
     def publish(
@@ -2260,9 +2088,27 @@ class SnapshotTable:
                     owners.add("/".join(parts[:2]) if len(parts) > 2 else f)
             return owners
 
-        def build(parent: int | None, read_manifest) -> dict:
-            advanced = (parent or 0) != srcinfo["version"]
-            if advanced and require_source_unchanged:
+        # the clone's audited table state travels with the publish:
+        # schema, field ids, constraints, column DEFAULTs, declared layout
+        # and table stats (rebase refuses on source-side schema
+        # divergence, so there is no source evolution to merge); the txn
+        # ledger stays the source's. Properties: the clone's minus ITS
+        # tags (clone-version refs), while the SOURCE's tags survive.
+        clone_props = {
+            k: x for k, x in head.get("properties", {}).items()
+            if not k.startswith("tag.")
+        }
+
+        @functools.cache
+        def base() -> dict:
+            """The source snapshot the clone was taken at."""
+            return source._manifest(srcinfo["version"])
+
+        def advanced(pm: dict | None) -> bool:
+            return (pm["version"] if pm else 0) != srcinfo["version"]
+
+        def check(parent, pm, read_manifest) -> None:
+            if require_source_unchanged and advanced(pm):
                 raise CommitConflict(
                     f"source advanced to v{parent} since the clone was "
                     f"taken at v{srcinfo['version']}; re-clone and "
@@ -2270,80 +2116,41 @@ class SnapshotTable:
                     f"require_source_unchanged=False) to rebase "
                     f"non-overlapping changes"
                 )
-            pm = read_manifest(parent) if parent else None
-            parent_props = (pm or {}).get("properties", {})
-            common = {
-                "txn": None,
-                # multi-table transaction stamp: recovery's "did this
-                # member already land?" check reads it (crash between
-                # the txn record and the last pointer move)
-                **({"txn_record": txn_record} if txn_record else {}),
-                "txn_watermarks": source._watermarks_of(pm),
-                # audited quality contract travels with the publish...
-                "constraints": self.constraints(v),
-                # ...as do the clone's column DEFAULTs (schema state the
-                # audit validated; rebase refuses on schema divergence,
-                # so there is no source-side evolution to merge)
-                "column_defaults": head.get("column_defaults"),
-                # ...and so do the clone's properties, minus ITS tags
-                # (clone-version refs), while the SOURCE's tags survive
-                "properties": {
-                    **{
-                        k: x
-                        for k, x in self.properties(v).items()
-                        if not k.startswith("tag.")
-                    },
-                    **{
-                        k: x
-                        for k, x in parent_props.items()
-                        if k.startswith("tag.")
-                    },
-                },
-                "committed_at_ms": int(time.time() * 1000),
-            }
-            if not advanced:
+
+        def files(pm: dict | None) -> dict:
+            if not advanced(pm):
                 return {
-                    "version": (parent or 0) + 1,
-                    "parent": parent,
-                    "mode": "publish_clone",
+                    **empty_file_set(),
+                    **{
+                        k: remap(head.get(k, {}))
+                        for k in (
+                            "partition_specs",
+                            "partition_transforms",
+                            "dir_schemas",
+                            "dir_files",
+                            "dir_field_ids",
+                        )
+                    },
                     "data_dirs": data_dirs,
-                    "declared_partition_by": head.get(
-                        "declared_partition_by"
-                    ),
-                    "declared_sort_order": head.get("declared_sort_order"),
-                    "partition_specs": remap(
-                        head.get("partition_specs", {})
-                    ),
-                    "partition_transforms": remap(
-                        head.get("partition_transforms", {})
-                    ),
-                    "dir_schemas": remap(head.get("dir_schemas", {})),
-                    "dir_files": remap(head.get("dir_files", {})),
                     "delete_dirs": delete_dirs,
                     "eq_deletes": eq_deletes,
-                    "schema": head.get("schema"),
-                    "field_ids": head.get("field_ids"),
-                    "dir_field_ids": remap(head.get("dir_field_ids", {})),
-                    "last_field_id": head.get("last_field_id"),
                     "file_stats": pub_stats,
-                    **common,
                 }
             # ---- rebase: re-parent the clone's diff onto the new head
-            base = read_manifest(srcinfo["version"])
             head_src = pm
             if json.dumps(head_src.get("schema"), sort_keys=True) != (
-                json.dumps(base.get("schema"), sort_keys=True)
-            ) or head_src.get("field_ids") != base.get("field_ids"):
+                json.dumps(base().get("schema"), sort_keys=True)
+            ) or head_src.get("field_ids") != base().get("field_ids"):
                 raise CommitConflict(
                     "publish rebase: source schema evolved since the "
                     "clone — re-clone and replay"
                 )
-            base_dirs = list(base["data_dirs"])
+            base_dirs = list(base()["data_dirs"])
             head_dirs = list(head_src["data_dirs"])
             clone_dirs = list(data_dirs)
             base_set, head_set = set(base_dirs), set(head_dirs)
             clone_set = set(clone_dirs)
-            base_df = base.get("dir_files", {})
+            base_df = base().get("dir_files", {})
             clone_df = remap(head.get("dir_files", {}))
             src_df = head_src.get("dir_files", {})
             clone_removed = [d for d in base_dirs if d not in clone_set]
@@ -2433,41 +2240,8 @@ class SnapshotTable:
                     **remap(head.get(key, {})),
                 }
 
-            # properties three-way merge: the source HEAD's values win
-            # (it may have advanced its COPY INTO ledger, tags, knobs
-            # since the clone) except where the CLONE changed a value
-            # relative to its base — the audited change being published
-            base_props = base.get("properties", {}) or {}
-            clone_props = {
-                k: x
-                for k, x in self.properties(v).items()
-                if not k.startswith("tag.")
-            }
-            merged_props = {
-                k: x
-                for k, x in parent_props.items()
-                if not k.startswith("tag.")
-            }
-            for k, x in clone_props.items():
-                if base_props.get(k) != x:
-                    merged_props[k] = x
-            for k in base_props:
-                if not k.startswith("tag.") and k not in clone_props:
-                    merged_props.pop(k, None)  # the clone unset it
-            merged_props.update(
-                {
-                    k: x
-                    for k, x in parent_props.items()
-                    if k.startswith("tag.")
-                }
-            )
             return {
-                "version": (parent or 0) + 1,
-                "parent": parent,
-                "mode": "publish_rebase",
                 "data_dirs": final_dirs,
-                "declared_partition_by": head.get("declared_partition_by"),
-                "declared_sort_order": head.get("declared_sort_order"),
                 "partition_specs": merged("partition_specs"),
                 "partition_transforms": merged("partition_transforms"),
                 "dir_schemas": merged("dir_schemas"),
@@ -2500,32 +2274,62 @@ class SnapshotTable:
                         )
                     }.values()
                 ),
-                "schema": head.get("schema"),
-                "field_ids": head.get("field_ids"),
                 "dir_field_ids": merged("dir_field_ids"),
-                "last_field_id": head.get("last_field_id"),
                 "file_stats": {
                     **dict(head_src.get("file_stats", {})),
                     **pub_stats,
                 },
-                **common,
-                # after **common: the three-way merge REPLACES the
-                # strict path's clone-props-win rule on rebase
-                "properties": merged_props,
             }
 
+        def properties(pm: dict | None) -> dict:
+            parent_props = (pm or {}).get("properties", {})
+            tags = {
+                k: x for k, x in parent_props.items() if k.startswith("tag.")
+            }
+            if not advanced(pm):
+                return {**clone_props, **tags}
+            # rebase, a three-way merge: the source HEAD's values win (it
+            # may have advanced its COPY INTO ledger, tags, knobs since the
+            # clone) except where the CLONE changed a value relative to its
+            # base — the audited change being published
+            base_props = base().get("properties", {}) or {}
+            merged_props = {
+                k: x for k, x in parent_props.items() if k not in tags
+            }
+            for k, x in clone_props.items():
+                if base_props.get(k) != x:
+                    merged_props[k] = x
+            for k in base_props:
+                if not k.startswith("tag.") and k not in clone_props:
+                    merged_props.pop(k, None)  # the clone unset it
+            return {**merged_props, **tags}
+
+        edit = Edit(
+            lambda pm: "publish_rebase" if advanced(pm) else "publish_clone",
+            files,
+            lambda pm: {**table_fields(head), "properties": properties(pm)},
+            check,
+            # multi-table transaction stamp: recovery's "did this member
+            # already land?" check reads it (crash between the txn record
+            # and the last pointer move)
+            stamp={"txn_record": txn_record} if txn_record else {},
+        )
         if dry_run:
             # phase-1 validation only: run the pure build once against
             # the live head (no claim, no pointer move, no data copy —
             # the copies above were skipped) and discard the manifest.
             # CommitConflict / collision errors propagate to the caller.
-            build(source.current_version(), source._manifest)
+            source._builder().build(
+                edit, source.current_version(), source._manifest
+            )
             return 0
         self._carry_ledger_sidecars(self.properties(v), src_root)
         if prepare:
             parent = source.current_version()
-            return parent, build(parent, source._manifest)
-        return source.protocol.commit(build)
+            return parent, source._builder().build(
+                edit, parent, source._manifest
+            )
+        return source._commit(edit)
 
     def _external_dirs(self, manifest: dict) -> list[str]:
         """Data dirs outside this table's root (shallow-clone refs)."""
@@ -2868,10 +2672,7 @@ class SnapshotTable:
                 f"first"
             )
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("rename on an empty table")
-            manifest = dict(read_manifest(parent))
+        def fields(manifest: dict) -> dict:
             s = manifest.get("schema")
             fids = manifest.get("field_ids")
             if s is None or not fids:
@@ -2899,35 +2700,39 @@ class SnapshotTable:
                     f"RENAME COLUMN '{old}': directories predate field-id "
                     f"manifests ({missing}); recommit or compact first"
                 )
-            manifest["schema"] = T.StructType(
-                [
-                    T.StructField(new if f.name == old else f.name,
-                                  f.dataType, f.nullable)
-                    for f in schema.fields
-                ]
-            ).jsonValue()
-            manifest["field_ids"] = {
-                (new if n == old else n): i for n, i in fids.items()
+            out = {
+                "schema": T.StructType(
+                    [
+                        T.StructField(new if f.name == old else f.name,
+                                      f.dataType, f.nullable)
+                        for f in schema.fields
+                    ]
+                ).jsonValue(),
+                "field_ids": {
+                    (new if n == old else n): i for n, i in fids.items()
+                },
             }
             decl = manifest.get("declared_partition_by")
             if decl:
                 # a declared spec names CURRENT columns — follow the rename
-                manifest["declared_partition_by"] = [
+                out["declared_partition_by"] = [
                     _rename_spec_entry(e, old, new) for e in decl
                 ]
             dso = manifest.get("declared_sort_order")
             if dso:
-                manifest["declared_sort_order"] = [
+                out["declared_sort_order"] = [
                     new if c == old else c for c in dso
                 ]
             cdef = manifest.get("column_defaults")
             if cdef:
-                manifest["column_defaults"] = {
+                out["column_defaults"] = {
                     (new if n == old else n): e for n, e in cdef.items()
                 }
-            return self._child_of(manifest, parent, f"rename_{old}_to_{new}")
+            return out
 
-        return self.protocol.commit(build)
+        return self._commit(
+            Edit(f"rename_{old}_to_{new}", fields=fields, on_table=True)
+        )
 
     def _visible_files(self, manifest: dict, rel_dir: str) -> list[str] | None:
         """The file subset of ``rel_dir`` VISIBLE in this snapshot (None =
@@ -3293,19 +3098,15 @@ class SnapshotTable:
             ).collect()[0]
             stats["ndv"] = {c: int(row[c]) for c in columns}
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("ANALYZE on an empty table")
-            manifest = dict(read_manifest(parent))
-            prev = manifest.get("table_stats") or {}
-            manifest["table_stats"] = {
+        # FOR COLUMNS merges into (never clears) earlier NDVs
+        stats["version"] = self._commit_meta(
+            "table_stats",
+            lambda prev: {
                 **stats,
-                # FOR COLUMNS merges into (never clears) earlier NDVs
                 "ndv": {**prev.get("ndv", {}), **stats.get("ndv", {})},
-            }
-            return self._child_of(manifest, parent, "analyze")
-
-        stats["version"] = self.protocol.commit(build)
+            },
+            "analyze",
+        )
         return stats
 
     def table_stats(self, version: int | None = None) -> dict | None:
@@ -3381,14 +3182,9 @@ class SnapshotTable:
                     f"column; '{src}' is {dtypes[src]}"
                 )
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("partition-spec change on an empty table")
-            manifest = dict(read_manifest(parent))
-            manifest["declared_partition_by"] = list(spec)
-            return self._child_of(manifest, parent, "set_partition_spec")
-
-        return self.protocol.commit(build)
+        return self._commit_meta(
+            "declared_partition_by", lambda _: list(spec), "set_partition_spec"
+        )
 
     def add_partition_field(self, entry: str) -> int:
         """``ALTER TABLE ... ADD PARTITION FIELD entry``."""
@@ -3432,14 +3228,9 @@ class SnapshotTable:
             if names is not None and c not in names:
                 raise ValueError(f"sort column '{c}' not in table schema")
 
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent is None:
-                raise ValueError("sort-order change on an empty table")
-            manifest = dict(read_manifest(parent))
-            manifest["declared_sort_order"] = list(cols) or None
-            return self._child_of(manifest, parent, "set_sort_order")
-
-        return self.protocol.commit(build)
+        return self._commit_meta(
+            "declared_sort_order", lambda _: list(cols) or None, "set_sort_order"
+        )
 
     def current_sort_order(self, version: int | None = None) -> list[str]:
         v = version if version is not None else self.current_version()
@@ -5265,9 +5056,9 @@ class SnapshotTable:
         (``plan`` = ``(prune_preds, prune_column, lower, upper)`` for
         ``_dml_plan``; None for a writer that reads no data); call
         ``write(v, m, target, planned)``, which writes its files and
-        returns ``(edit, info)``; publish ``edit`` as snapshot ``v + 1``.
-        An ``edit`` of None commits nothing. Returns ``info`` with the
-        published (or pinned) ``version`` first."""
+        returns ``(files, info)``; publish the file-set edit ``files`` as
+        snapshot ``v + 1``. ``files`` of None commits nothing. Returns
+        ``info`` with the published (or pinned) ``version`` first."""
         last_err: Exception | None = None
         for _attempt in range(self._DML_RETRIES):
             v = self.current_version()
@@ -5281,11 +5072,11 @@ class SnapshotTable:
                 )
             target = T.StructType.fromJson(m["schema"])
             planned = None if plan is None else self._dml_plan(m, *plan)
-            edit, info = write(v, m, target, planned)
-            if edit is None:
+            files, info = write(v, m, target, planned)
+            if files is None:
                 return {"version": v, **info}
             try:
-                return {"version": self._publish_dml(v, m, tag, edit), **info}
+                return {"version": self._publish_dml(v, m, tag, files), **info}
             except CommitConflict as e:
                 last_err = e  # head moved: replan against the new head
         raise CommitConflict(
@@ -5513,94 +5304,68 @@ class SnapshotTable:
         )
         new_dir_schema = write_df.schema.jsonValue()
 
-        def edit(m: dict) -> dict:
-            dirs: list[str] = []
-            dir_files: dict[str, list[str]] = {}
-            for d in m["data_dirs"]:
-                sel = selection.get(d)
-                if sel is None:
-                    continue  # whole dir was rewritten: no longer visible
-                if sel == []:
-                    dirs.append(d)
-                    vis = self._visible_files(m, d)
-                    if vis is not None:
-                        dir_files[d] = vis
-                    continue
-                removed = set(sel)
-                new_vis = [
-                    f
-                    for f in self._dir_universe(m, d, self.dir_stats(m, d))
-                    if f not in removed
-                ]
-                if not new_vis:
-                    continue  # every remaining file rewritten
+        dirs: list[str] = []
+        dir_files: dict[str, list[str]] = {}
+        for d in m["data_dirs"]:
+            sel = selection.get(d)
+            if sel is None:
+                continue  # whole dir was rewritten: no longer visible
+            if sel == []:
                 dirs.append(d)
-                dir_files[d] = new_vis
-            keep = set(dirs)
-            dirs.append(new_dir)
-            fids = m.get("field_ids") or {}
+                vis = self._visible_files(m, d)
+                if vis is not None:
+                    dir_files[d] = vis
+                continue
+            removed = set(sel)
+            new_vis = [
+                f
+                for f in self._dir_universe(m, d, self.dir_stats(m, d))
+                if f not in removed
+            ]
+            if not new_vis:
+                continue  # every remaining file rewritten
+            dirs.append(d)
+            dir_files[d] = new_vis
+        keep = set(dirs)
+        fids = m.get("field_ids") or {}
 
-            def kept(key: str) -> dict:
-                return {d: s for d, s in m.get(key, {}).items() if d in keep}
+        def kept(key: str) -> dict:
+            return {d: s for d, s in m.get(key, {}).items() if d in keep}
 
-            # an explicit key list: table-level keys carry over, per-dir
-            # maps keep only the surviving dirs
-            return {
-                "data_dirs": dirs,
-                "field_ids": fids,
-                "last_field_id": m.get("last_field_id"),
-                # the replacement dir is written under CURRENT names
-                "dir_field_ids": {
-                    **kept("dir_field_ids"),
-                    **(
-                        {new_dir: self._dir_ids(fids, target)}
-                        if fids
-                        else {}
-                    ),
-                },
-                "partition_specs": {
-                    **kept("partition_specs"), new_dir: list(phys),
-                },
-                "partition_transforms": {
-                    **kept("partition_transforms"),
-                    **({new_dir: trs} if trs else {}),
-                },
-                "dir_schemas": {
-                    **kept("dir_schemas"), new_dir: new_dir_schema,
-                },
-                "dir_files": dir_files,
-                # delete vectors for rewritten files become vacuous
-                # (their files left visibility); vectors for untouched
-                # files still apply
-                "delete_dirs": m.get("delete_dirs", []),
-                # equality deletes keep applying to surviving dirs; the
-                # replacement dir is exempt (its rows were read THROUGH
-                # the deletes); entries with no surviving dir drop
-                "eq_deletes": [
-                    {**e, "applies_dirs": still}
-                    for e in m.get("eq_deletes", [])
-                    for still in [
-                        [d for d in e.get("applies_dirs", []) if d in keep]
-                    ]
-                    if still
-                ],
-                "file_stats": {
-                    **kept("file_stats"),
-                    **({new_dir: own_stats} if own_stats else {}),
-                },
-                "schema": target.jsonValue(),
-                "constraints": m.get("constraints", {}),
-                "properties": m.get("properties", {}),
-                # table-level operator decisions and (stale-until-
-                # re-analyzed) statistics survive row-level DML like any
-                # other commit kind
-                "declared_partition_by": m.get("declared_partition_by"),
-                "declared_sort_order": m.get("declared_sort_order"),
-                "table_stats": m.get("table_stats"),
-                "column_defaults": m.get("column_defaults"),
-            }
-
-        return edit, {"files_rewritten": n_sel, "files_skipped": n_skip}
+        # per-dir maps keep only the surviving dirs; delete vectors stay
+        # (those of rewritten files become vacuous: their files left
+        # visibility); table-level fields carry over
+        files = {
+            "data_dirs": dirs + [new_dir],
+            # the replacement dir is written under CURRENT names
+            "dir_field_ids": {
+                **kept("dir_field_ids"),
+                **({new_dir: self._dir_ids(fids, target)} if fids else {}),
+            },
+            "partition_specs": {**kept("partition_specs"), new_dir: list(phys)},
+            "partition_transforms": {
+                **kept("partition_transforms"),
+                **({new_dir: trs} if trs else {}),
+            },
+            "dir_schemas": {**kept("dir_schemas"), new_dir: new_dir_schema},
+            "dir_files": dir_files,
+            # equality deletes keep applying to surviving dirs; the
+            # replacement dir is exempt (its rows were read THROUGH the
+            # deletes); entries with no surviving dir drop
+            "eq_deletes": [
+                {**e, "applies_dirs": still}
+                for e in m.get("eq_deletes", [])
+                for still in [
+                    [d for d in e.get("applies_dirs", []) if d in keep]
+                ]
+                if still
+            ],
+            "file_stats": {
+                **kept("file_stats"),
+                **({new_dir: own_stats} if own_stats else {}),
+            },
+        }
+        return files, {"files_rewritten": n_sel, "files_skipped": n_skip}
 
     def _write_positions(
         self, condition, assignments, stats_for, v, m, target, planned
@@ -5648,19 +5413,15 @@ class SnapshotTable:
             own_stats = self._harvest_stats(data_dir, stats_for, None)
         dv_cands = self._recordable_dv_candidates(selection)
 
-        def edit(m: dict) -> dict:
-            out = (
-                dict(m) if data_dir is None
-                else self._with_data_dir(m, data_dir, target, own_stats)
-            )
-            if dv_cands is not None:
-                out["dv_candidates"] = {
-                    **m.get("dv_candidates", {}), dv_dir: dv_cands,
-                }
-            out["delete_dirs"] = m.get("delete_dirs", []) + [dv_dir]
-            return out
-
-        return edit, info
+        files = {
+            **self._with_data_dir(m, data_dir, target, own_stats),
+            "delete_dirs": m.get("delete_dirs", []) + [dv_dir],
+        }
+        if dv_cands is not None:
+            files["dv_candidates"] = {
+                **m.get("dv_candidates", {}), dv_dir: dv_cands,
+            }
+        return files, info
 
     def _write_eq(
         self, cols, rows_of, op, stats_for, v, m, target, planned
@@ -5699,15 +5460,10 @@ class SnapshotTable:
             own_stats = self._harvest_stats(data_dir, stats_for, None)
             info = {"mode": "merge-on-read"}
 
-        def edit(m: dict) -> dict:
-            out = (
-                dict(m) if data_dir is None
-                else self._with_data_dir(m, data_dir, target, own_stats)
-            )
-            out["eq_deletes"] = m.get("eq_deletes", []) + [entry]
-            return out
-
-        return edit, info
+        return {
+            **self._with_data_dir(m, data_dir, target, own_stats),
+            "eq_deletes": m.get("eq_deletes", []) + [entry],
+        }, info
 
     @staticmethod
     def _dir_ids(fids: dict, target: T.StructType) -> dict:
@@ -5716,13 +5472,14 @@ class SnapshotTable:
         return {f.name: fids[f.name] for f in target.fields if f.name in fids}
 
     def _with_data_dir(
-        self, m: dict, d: str, target: T.StructType, own_stats: dict
+        self, m: dict, d: str | None, target: T.StructType, own_stats: dict
     ) -> dict:
-        """``m`` plus one unpartitioned data dir ``d`` written under
-        ``target`` — the append edit of the merge-on-read UPDATE and
-        MERGE upsert."""
+        """The file-set edit adding one unpartitioned data dir ``d``
+        written under ``target`` to ``m`` (none when ``d`` is None) — the
+        append of the merge-on-read UPDATE and MERGE upsert."""
+        if d is None:
+            return {}
         out = {
-            **m,
             "data_dirs": m["data_dirs"] + [d],
             "partition_specs": {**m.get("partition_specs", {}), d: []},
             "dir_schemas": {**m.get("dir_schemas", {}), d: target.jsonValue()},
@@ -5736,23 +5493,12 @@ class SnapshotTable:
             out["file_stats"] = {**m.get("file_stats", {}), d: own_stats}
         return out
 
-    def _publish_dml(self, v: int, m: dict, tag: str, edit) -> int:
-        """The one commit build of every row-level DML: refuse a head
-        that moved since the pin, apply ``edit`` to the pinned manifest
-        ``m`` (no re-read: the head check proves ``m`` is the parent)
-        and stamp it as ``m``'s child. ``m`` is the shared parsed
-        manifest, so the stamp goes on a copy, and the txn ledger is
-        ``m``'s own (``edit`` rebuilds only the file-set keys)."""
-        wm = self._watermarks_of(m)
-
-        def build(parent: int | None, read_manifest) -> dict:
-            if parent != v:
-                raise CommitConflict(
-                    f"planned against v{v}, head is v{parent}"
-                )
-            return self._child_of({**edit(m), "txn_watermarks": wm}, v, tag)
-
-        return self.protocol.commit(build)
+    def _publish_dml(self, v: int, m: dict, tag: str, files) -> int:
+        """The one commit of every row-level DML: the file-set edit
+        ``files`` pinned to the manifest ``m`` of version ``v`` it was
+        planned against — a head that moved since refuses with
+        ``CommitConflict``, and the build reads no manifest."""
+        return self._commit(Edit(tag, files, pin=(v, m)))
 
     # ----------------------------------------------------------- cleanup
 
@@ -6564,13 +6310,13 @@ def sql_with_time_travel(
         return view
 
     def sub_meta(m: "re.Match[str]") -> str:
-        name, kind = m.group(1), m.group(2).lower()
-        t = tables.get(name)
-        if t is None:
+        name, kind = registered.get(m.group(1).lower()), m.group(2).lower()
+        if name is None:
             raise ValueError(
                 f"metadata table references unregistered snapshot "
-                f"table '{name}' (registered: {sorted(tables)})"
+                f"table '{m.group(1)}' (registered: {sorted(tables)})"
             )
+        t = tables[name]
         ver = int(m.group(3)) if m.group(3) else None
         view = f"__meta_{name.replace('.', '_')}_{kind}" + (
             f"_v{ver}" if ver is not None else ""
@@ -6610,10 +6356,12 @@ def sql_with_time_travel(
                 # a DOTTED registry name (the reference's verbatim
                 # catalog.schema.table references) cannot be a temp-view
                 # name — substitute a sanitized single-part view into the
-                # statement text (outside literals) and register that
+                # statement text (outside literals) and register that;
+                # any spelling the parse counted as this leaf (names
+                # resolve case-insensitively, as the leaves count them)
                 view = "__nsv_" + re.sub(r"\W", "_", name)
                 rewritten = _sub_outside_literals(
-                    re.compile(rf"\b{re.escape(name)}\b"),
+                    re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE),
                     lambda _m, _v=view: _v,
                     rewritten,
                 )

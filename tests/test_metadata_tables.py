@@ -108,6 +108,16 @@ def test_metadata_table_errors(spark, eng):
     )
 
 
+def test_metadata_table_name_resolves_case_insensitively(spark, eng):
+    """``T$files`` reads the table registered as ``t``, as ``FROM T``
+    does (it raised "unregistered snapshot table 'T'")."""
+    e, _t = eng
+    want = e.sql("SELECT count(*) AS n FROM t$files").collect()[0]["n"]
+    assert want > 0
+    assert e.sql("SELECT count(*) AS n FROM T$files").collect()[0]["n"] == want
+    assert e.sql("SELECT count(*) AS n FROM T$History").collect()[0]["n"] == 2
+
+
 def test_files_table_reads_through_spilled_stats(spark, tmp_path):
     e = Engine(spark=spark)
     t = SnapshotTable(spark, str(tmp_path / "sp"))

@@ -584,6 +584,23 @@ def test_table_changes_name_resolves_case_insensitively(spark, tt_two):
     assert rows("SELECT * FROM TABLE_CHANGES(/* c */ 'Tt', 2)") == want[1:]
 
 
+@pytest.mark.parametrize(
+    "spelling", ["SELECT count(*) AS n FROM cat.sch.d",
+                 "SELECT count(*) AS n FROM CAT.SCH.D"],
+)
+def test_dotted_head_name_resolves_case_insensitively(
+    spark, tt_two, spelling
+):
+    """A dotted registry name is spliced as a single-part view; the
+    splice matches every spelling the parse counts as that leaf, so an
+    upper-case reference reads the head like the registered lower-case
+    one (it failed with REQUIRES_SINGLE_PART_NAMESPACE)."""
+    from oss_data_lake_spark.sources.snapshots import sql_with_time_travel
+
+    df = sql_with_time_travel(spark, spelling, {"cat.sch.d": tt_two})
+    assert df.collect()[0]["n"] == 2
+
+
 def test_typed_timestamp_literal_under_non_utc_session_zone(spark, tt_two):
     """``TIMESTAMP '...'`` resolves the instant its text names: an
     explicit offset is honored and a naive literal is UTC, whatever the
